@@ -16,11 +16,9 @@ object RetentionJob {
 
   private def segKeysOf(storage: StorageBackend): (Vector[String], Vector[String]) = {
     val keys = storage.listKeys("")
-    val manifested = keys.filter(_.endsWith(s".${ObjectKey.Suffix.Manifest.value}"))
-      .map(_.stripSuffix(s".${ObjectKey.Suffix.Manifest.value}"))
     val logs = keys.filter(_.endsWith(s".${ObjectKey.Suffix.Log.value}"))
       .map(_.stripSuffix(s".${ObjectKey.Suffix.Log.value}"))
-    (manifested, logs)
+    (ObjectKey.committedSegments(keys), logs)
   }
 
   /** Delete whole segments selected by predicate (e.g. by base offset or

@@ -15,7 +15,8 @@ import graft.sources.{ObjectKey, StorageBackends}
   * Per segment, in severity order (first failure wins):
   *
   *  1. `manifest-unreadable` — JSON parse / incompatible codec or wrap
-  *     algorithm / unknown key id;
+  *     algorithm / unknown key id: the read spec is resolved here, uncached
+  *     ([[SegmentFetchJob.resolve]]), so the audit sees the stored manifest;
   *  2. `log-missing` / `log-size-mismatch` — object gone, or its size
   *     differs from the chunk index's transformed extent (truncated or
   *     padded upload);
@@ -53,8 +54,8 @@ object ScrubJob {
     def bad(issue: String, chunks: Int = 0, bytes: Long = 0L) =
       SegmentScrub(segKey, ok = false, issue, chunks, bytes, 0L)
 
-    val manifest =
-      try SegmentFetchJob.loadManifest(storage, segKey)
+    val (manifest, spec) =
+      try SegmentFetchJob.resolve(storage, cfg, segKey)
       catch { case e: Exception => return bad(s"manifest-unreadable: ${e.getMessage}") }
     val chunks = manifest.chunkIndex.chunks
     val nChunks = chunks.size
@@ -81,7 +82,7 @@ object ScrubJob {
 
     val originalSize = manifest.chunkIndex.originalFileSize.toLong
     val original =
-      try SegmentFetchJob.fetchRange(storage, cfg, segKey, BytesRange(0, originalSize - 1))
+      try SegmentFetchJob.readRange(storage, segKey, manifest, spec, BytesRange(0, originalSize - 1))
       catch { case e: Exception => return bad(s"detransform-failed: ${e.getMessage}", nChunks) }
     if (original.length.toLong != originalSize)
       return bad(s"length-mismatch: detransformed ${original.length} != manifest $originalSize",
@@ -100,10 +101,7 @@ object ScrubJob {
   def run(spark: SparkSession, cfg: SegmentJobConfig,
           verifyWire: Boolean = false): DataFrame = {
     import spark.implicits._
-    val storage = StorageBackends.forRoot(cfg.storageRoot)
-    val segKeys = storage.listKeys("")
-      .filter(_.endsWith(s".${ObjectKey.Suffix.Manifest.value}"))
-      .map(_.stripSuffix(s".${ObjectKey.Suffix.Manifest.value}"))
+    val segKeys = ObjectKey.committedSegments(StorageBackends.forRoot(cfg.storageRoot), "")
     val cfgB = cfg
     val wire = verifyWire
     spark.createDataset(segKeys)

@@ -47,6 +47,16 @@ final case class SegmentJobConfig(
 
   def keyPair: java.security.KeyPair = RsaKeyRing.deserialize(rsaPublicKey, rsaPrivateKey)
   def ring: RsaKeyRing = new RsaKeyRing(Map(keyId -> keyPair), keyId, wrapAlg)
+
+  /** SHA-256 (base64) of the key id and key bytes: the key-material part of
+    * every read-cache key, so readers holding different keys never share a
+    * cached data key or plaintext. */
+  lazy val keyDigest: String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    md.update(keyId.getBytes("UTF-8")); md.update(0.toByte)
+    md.update(rsaPublicKey); md.update(rsaPrivateKey)
+    java.util.Base64.getEncoder.encodeToString(md.digest())
+  }
 }
 
 object SegmentJobConfig {
@@ -252,9 +262,17 @@ object SegmentCompressionChecker {
   *   - [[chunksAsDataFrame]]: the analytic path — chunk metadata as rows for
   *     distributed re-processing; the range predicate prunes before any
   *     byte is fetched.
+  *
+  * This object is the engine's one manifest stage: [[resolve]] turns a
+  * segment key into its (manifest, read spec), [[readSpec]] caches that,
+  * and [[readChunk]] is the one chunk fetch + detransform. Every read path
+  * (direct and prefetching DSv2 reads, the chunk DataFrame, scrub) goes
+  * through them.
   */
 object SegmentFetchJob {
 
+  /** Uncached manifest parse, for readers that need no data key (stats,
+    * chunk listing). */
   def loadManifest(storage: StorageBackend, segKey: String): SegmentManifest =
     SegmentManifest.fromJson(new String(
       storage.fetchBytes(s"$segKey.${ObjectKey.Suffix.Manifest.value}"), "UTF-8"))
@@ -270,7 +288,12 @@ object SegmentFetchJob {
   private val ReadableWrapAlgs = Set(
     SegmentManifest.WrapAlgOaepSha3512, SegmentManifest.WrapAlgOaepSha256)
 
-  private def specOf(m: SegmentManifest, cfg: SegmentJobConfig): TransformSpec = {
+  /** Manifest → read spec, uncached: load, validate, RSA-unwrap the data
+    * key. ScrubJob calls this directly so an audit sees the store as it is
+    * now; serving reads go through the cached [[readSpec]]. */
+  def resolve(storage: StorageBackend, cfg: SegmentJobConfig,
+              segKey: String): (SegmentManifest, TransformSpec) = {
+    val m = loadManifest(storage, segKey)
     // The self-describing fields exist precisely so incompatibility fails
     // HERE with a clear message instead of as a BadPaddingException /
     // unknown-tag error mid-detransform (e.g. a manifest written by the
@@ -286,36 +309,46 @@ object SegmentFetchJob {
             s"(this engine unwraps: ${ReadableWrapAlgs.mkString(", ")})")
     }
     val key = m.encryption.map(e => cfg.ring.unwrapDataKey(e.keyId, e.wrappedDataKey, e.wrapAlg))
-    TransformSpec(m.chunkIndex.originalChunkSize, m.compression, key,
-      m.encryption.map(_.aad).getOrElse(Array.emptyByteArray), m.compressionCodec)
+    (m, TransformSpec(m.chunkIndex.originalChunkSize, m.compression, key,
+      m.encryption.map(_.aad).getOrElse(Array.emptyByteArray), m.compressionCodec))
   }
 
   /** Serving-path manifest cache mirroring the reference's
     * `MemorySegmentManifestCache` (C6/R10, default 1000 entries): segments
     * are immutable, so (parsed manifest + RSA-unwrapped data key) are
     * cacheable forever — re-parsing JSON and, worse, an RSA private-key op
-    * per point read otherwise dominates small-range latency. */
+    * per point read otherwise dominates small-range latency. Keyed by
+    * (root, [[SegmentJobConfig.keyDigest]], segment): the cached spec holds
+    * a data key unwrapped with one config's private key, so a reader with
+    * other key material must miss and unwrap for itself. */
   private final val ManifestCacheEntries = 1000
   private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (SegmentManifest, TransformSpec)]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String, String), (SegmentManifest, TransformSpec)]()
 
-  /** Mutating the map from inside a `computeIfAbsent` mapping function
-    * violates the ConcurrentHashMap contract (two threads evicting on
-    * different bins can deadlock), so the miss path loads OUTSIDE the map
-    * operation and publishes with `putIfAbsent`. Concurrent misses may load
-    * the same manifest twice — manifests are immutable, so both loads
-    * produce the same value and first-publish wins; a benign trade against
-    * the deadlock. */
-  private def cachedManifestSpec(storage: graft.sources.StorageBackend, cfg: SegmentJobConfig,
-                                 segKey: String): (SegmentManifest, TransformSpec) = {
-    val key = (cfg.storageRoot, segKey)
+  /** [[resolve]] through the bounded cache. Mutating the map from inside a
+    * `computeIfAbsent` mapping function violates the ConcurrentHashMap
+    * contract (two threads evicting on different bins can deadlock), so the
+    * miss path loads OUTSIDE the map operation and publishes with
+    * `putIfAbsent`. Concurrent misses may load the same manifest twice —
+    * manifests are immutable, so both loads produce the same value and
+    * first-publish wins; a benign trade against the deadlock. */
+  def readSpec(storage: StorageBackend, cfg: SegmentJobConfig,
+               segKey: String): (SegmentManifest, TransformSpec) = {
+    val key = (cfg.storageRoot, cfg.keyDigest, segKey)
     val hit = manifestCache.get(key)
     if (hit != null) return hit
-    val m = loadManifest(storage, segKey)
-    val loaded = (m, specOf(m, cfg))
+    val loaded = resolve(storage, cfg, segKey)
     if (manifestCache.size() >= ManifestCacheEntries) manifestCache.clear()
     val prev = manifestCache.putIfAbsent(key, loaded)
     if (prev != null) prev else loaded
+  }
+
+  /** Fetch chunk `c` of segment `segKey` (one ranged GET) and detransform
+    * it, size-checked against the index. */
+  def readChunk(storage: StorageBackend, segKey: String, c: Chunk,
+                spec: TransformSpec): Array[Byte] = {
+    val raw = storage.fetchRangeBytes(s"$segKey.${ObjectKey.Suffix.Log.value}", c.transformedRange)
+    TransformPipeline.detransform(Iterator.single(raw), Vector(c), spec).next()
   }
 
   /** Serving path: fetch original bytes [from, to] of one segment. The range
@@ -324,26 +357,20 @@ object SegmentFetchJob {
     fetchRange(StorageBackends.forRoot(cfg.storageRoot), cfg, segKey, range)
 
   /** Same, over an already-resolved backend — callers iterating many
-    * segments (ScrubJob) resolve once and thread the handle through, so
-    * per-segment work never re-hits the provider registry. */
-  def fetchRange(storage: graft.sources.StorageBackend, cfg: SegmentJobConfig,
+    * segments resolve once and thread the handle through, so per-segment
+    * work never re-hits the provider registry. */
+  def fetchRange(storage: StorageBackend, cfg: SegmentJobConfig,
                  segKey: String, range: BytesRange): Array[Byte] = {
-    val (m, cachedSpec) = cachedManifestSpec(storage, cfg, segKey)
+    val (m, spec) = readSpec(storage, cfg, segKey)
+    readRange(storage, segKey, m, spec, range)
+  }
+
+  /** [[fetchRange]] over an already-resolved (manifest, spec). */
+  private[graft] def readRange(storage: StorageBackend, segKey: String, m: SegmentManifest,
+                               spec: TransformSpec, range: BytesRange): Array[Byte] = {
     val clamped = BytesRange(range.from, math.min(range.to, m.chunkIndex.originalFileSize - 1L))
     val chunks = m.chunkIndex.chunksForRange(clamped)
     if (chunks.isEmpty) return Array.emptyByteArray
-    val spec = cachedSpec
-    val logKey = s"$segKey.${ObjectKey.Suffix.Log.value}"
-    // Interruption-as-cancellation (ref KafkaRemoteStorageManager.java:
-    // 470-480, 532-546): the broker cancels in-flight fetches by
-    // interrupting the serving thread — that is a RESULT (empty stream),
-    // not an error. Checked between chunks so a cancelled multi-chunk
-    // fetch stops paying for decrypt/decompress it will throw away.
-    val fetched = chunks.iterator.map { c =>
-      if (Thread.currentThread().isInterrupted)
-        throw new InterruptedException("fetch cancelled")
-      storage.fetchRangeBytes(logKey, c.transformedRange)
-    }
     // Each detransformed chunk's overlap with the clamped range is copied
     // straight into the preallocated result — ONE copy per byte served
     // (r10; the old BAOS + toByteArray + copyOfRange path copied every
@@ -352,15 +379,22 @@ object SegmentFetchJob {
     // adjudication note).
     val out = new Array[Byte](clamped.size.toInt)
     var outPos = 0
-    var origPos = chunks.head.originalPosition.toLong
-    try TransformPipeline.detransform(fetched, chunks, spec).foreach { plain =>
+    try chunks.foreach { c =>
+      // Interruption-as-cancellation (ref KafkaRemoteStorageManager.java:
+      // 470-480, 532-546): the broker cancels in-flight fetches by
+      // interrupting the serving thread — that is a RESULT (empty stream),
+      // not an error. Checked between chunks so a cancelled multi-chunk
+      // fetch stops paying for decrypt/decompress it will throw away.
+      if (Thread.currentThread().isInterrupted)
+        throw new InterruptedException("fetch cancelled")
+      val plain = readChunk(storage, segKey, c, spec)
+      val origPos = c.originalPosition.toLong
       val from = math.max(origPos, clamped.from)
       val to = math.min(origPos + plain.length - 1, clamped.to)
       if (to >= from) {
         System.arraycopy(plain, (from - origPos).toInt, out, outPos, (to - from + 1).toInt)
         outPos += (to - from + 1).toInt
       }
-      origPos += plain.length
     }
     catch { case _: InterruptedException => return Array.emptyByteArray }
     out
@@ -371,10 +405,7 @@ object SegmentFetchJob {
     * ready for range-predicate pruning and distributed fetch. */
   def chunksAsDataFrame(spark: SparkSession, cfg: SegmentJobConfig): DataFrame = {
     import spark.implicits._
-    val storage = StorageBackends.forRoot(cfg.storageRoot)
-    val segKeys = storage.listKeys("")
-      .filter(_.endsWith(s".${ObjectKey.Suffix.Manifest.value}"))
-      .map(_.stripSuffix(s".${ObjectKey.Suffix.Manifest.value}"))
+    val segKeys = ObjectKey.committedSegments(StorageBackends.forRoot(cfg.storageRoot), "")
     val cfgB = cfg
     spark.createDataset(segKeys)
       .mapPartitions { it =>
@@ -401,16 +432,9 @@ object SegmentFetchJob {
       .as[(String, Int)]
       .mapPartitions { it =>
         val st = StorageBackends.forRoot(cfgB.storageRoot)
-        val manifests = scala.collection.mutable.HashMap.empty[String, (SegmentManifest, TransformSpec)]
         it.map { case (segKey, chunkId) =>
-          val (m, spec) = manifests.getOrElseUpdate(segKey, {
-            val mm = loadManifest(st, segKey)
-            (mm, specOf(mm, cfgB))
-          })
-          val chunk = m.chunkIndex.chunks(chunkId)
-          val raw = st.fetchRangeBytes(s"$segKey.${ObjectKey.Suffix.Log.value}", chunk.transformedRange)
-          val plain = TransformPipeline.detransform(Iterator.single(raw), Vector(chunk), spec).next()
-          (segKey, chunkId, plain)
+          val (m, spec) = readSpec(st, cfgB, segKey)
+          (segKey, chunkId, readChunk(st, segKey, m.chunkIndex.chunks(chunkId), spec))
         }
       }
       .toDF("segment_key", "chunk_id", "bytes")

@@ -138,30 +138,26 @@ final class DiskChunkCache(dir: Path, maxWeightBytes: Long) {
 /** Read-through chunk fetcher with prefetch: on access to chunk k of a
   * segment, eagerly schedules the chunks covering the next
   * `prefetchMaxBytes` original bytes (`ChunkCache.java:159-180`,
-  * `chunksForRange`-based). */
+  * `chunksForRange`-based). This class caches detransformed CHUNKS only;
+  * the manifest, its validation and the unwrapped data key come from the
+  * engine's one bounded manifest cache
+  * ([[graft.operators.SegmentFetchJob.readSpec]]), and each chunk load is
+  * [[graft.operators.SegmentFetchJob.readChunk]]. */
 final class CachingChunkFetcher(
     cfg: graft.operators.SegmentJobConfig,
     cache: LruByteCache,
     prefetchMaxBytes: Long = 0L,
     prefetchThreads: Int = 4) {
   import graft.core._
-  import graft.core.transform._
   import graft.operators.SegmentFetchJob
 
   private val storage = StorageBackends.forRoot(cfg.storageRoot)
   private val pool = Executors.newFixedThreadPool(prefetchThreads, r => {
     val t = new Thread(r, "graft-prefetch"); t.setDaemon(true); t
   })
-  private val manifests = new ConcurrentHashMap[String, SegmentManifest]()
 
   private def manifest(segKey: String): SegmentManifest =
-    manifests.computeIfAbsent(segKey, k => SegmentFetchJob.loadManifest(storage, k))
-
-  private def spec(m: SegmentManifest): TransformSpec = {
-    val key = m.encryption.map(e => cfg.ring.unwrapDataKey(e.keyId, e.wrappedDataKey, e.wrapAlg))
-    TransformSpec(m.chunkIndex.originalChunkSize, m.compression, key,
-      m.encryption.map(_.aad).getOrElse(Array.emptyByteArray), m.compressionCodec)
-  }
+    SegmentFetchJob.readSpec(storage, cfg, segKey)._1
 
   /** Whole segment assembled chunk-by-chunk through the cache — the DSv2
     * partition reader's entry. Unlike one monolithic ranged GET, each
@@ -193,10 +189,8 @@ final class CachingChunkFetcher(
   }
 
   private def loadChunk(segKey: String, chunkId: Int): Array[Byte] = {
-    val m = manifest(segKey)
-    val chunk = m.chunkIndex.chunks(chunkId)
-    val raw = storage.fetchRangeBytes(s"$segKey.${ObjectKey.Suffix.Log.value}", chunk.transformedRange)
-    TransformPipeline.detransform(Iterator.single(raw), Vector(chunk), spec(m)).next()
+    val (m, spec) = SegmentFetchJob.readSpec(storage, cfg, segKey)
+    SegmentFetchJob.readChunk(storage, segKey, m.chunkIndex.chunks(chunkId), spec)
   }
 
   private def schedulePrefetch(segKey: String, afterChunk: Int): Unit = {

@@ -28,4 +28,15 @@ object ObjectKey {
   def allKeys(prefix: String, topic: String, topicId: String, partition: Int,
               baseOffset: Long, segmentId: String): Seq[String] =
     Suffix.all.map(s => key(prefix, topic, topicId, partition, baseOffset, segmentId, s))
+
+  /** Committed segment keys (suffix stripped) among listed object keys: the
+    * manifest is uploaded last, so a segment is committed iff its manifest
+    * exists. */
+  def committedSegments(keys: Vector[String]): Vector[String] =
+    keys.filter(_.endsWith(s".${Suffix.Manifest.value}"))
+      .map(_.stripSuffix(s".${Suffix.Manifest.value}"))
+
+  /** One LIST under `prefix`, reduced to its committed segment keys. */
+  def committedSegments(storage: StorageBackend, prefix: String): Vector[String] =
+    committedSegments(storage.listKeys(prefix))
 }

@@ -83,8 +83,10 @@ object GraftSegments {
                                 * executor-shared [[graft.sources.CachingChunkFetcher]]
                                 * (C2): chunk-granular cache + background
                                 * prefetch of this many original bytes ahead
-                                * of the consumer. 0 (default) = one direct
-                                * ranged fetch per segment. */
+                                * of the consumer. 0 (default) = direct
+                                * ranged fetches ([[SegmentFetchJob.fetchRange]]).
+                                * Both resolve manifests through the same
+                                * validated, bounded [[SegmentFetchJob.readSpec]]. */
                               prefetchBytes: Long = 0L,
                               /** Executor-wide chunk-cache budget for the
                                 * prefetch path. */
@@ -169,12 +171,14 @@ object GraftSegments {
 
 /** Executor-lifetime chunk cache + prefetcher registry for the DSv2 read
   * path (C2 wiring, r4 verdict task 8): one [[graft.sources.LruByteCache]]
-  * + [[graft.sources.CachingChunkFetcher]] per (root, key material,
-  * prefetch, budget) tuple, shared by every partition reader in the JVM —
-  * so a segment fetched by one task (or a previous query) is served from
-  * memory for the next, and prefetch threads overlap fetch+detransform
-  * with the consumer. Keyed by the full config: two sources on the same
-  * root with different keys or budgets never share entries. */
+  * of detransformed chunks + [[graft.sources.CachingChunkFetcher]] per
+  * (root, [[SegmentJobConfig.keyDigest]], prefetch, budget) tuple, shared
+  * by every partition reader in the JVM — so a segment fetched by one task
+  * (or a previous query) is served from memory for the next, and prefetch
+  * threads overlap fetch+detransform with the consumer. Two sources on the
+  * same root with different keys or budgets never share entries. Manifests
+  * are not cached here: they come from [[SegmentFetchJob.readSpec]], the
+  * same bounded cache the direct path uses. */
 private[graft] object SegmentsReadCache {
   import java.util.concurrent.ConcurrentHashMap
   private val fetchers =
@@ -182,10 +186,7 @@ private[graft] object SegmentsReadCache {
 
   def forConf(cfg: graft.operators.SegmentJobConfig, prefetchBytes: Long,
               cacheBytes: Long): (graft.sources.LruByteCache, graft.sources.CachingChunkFetcher) = {
-    val keyHash = java.util.Base64.getEncoder.encodeToString(
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(cfg.rsaPublicKey ++ cfg.rsaPrivateKey))
-    fetchers.computeIfAbsent(s"${cfg.storageRoot}#$keyHash#$prefetchBytes#$cacheBytes", _ => {
+    fetchers.computeIfAbsent(s"${cfg.storageRoot}#${cfg.keyDigest}#$prefetchBytes#$cacheBytes", _ => {
       val cache = new graft.sources.LruByteCache(cacheBytes)
       (cache, new graft.sources.CachingChunkFetcher(cfg, cache, prefetchBytes))
     })
@@ -349,34 +350,29 @@ object SegmentsScan {
   @volatile private[graft] var lastPlannedPartitions: Int = -1
 
   /** Driver-side manifest KEY listing (strings only, no bytes), filtered
-    * by the prunable segment_key shapes — shared by the row scan and the
-    * aggregate scan. */
+    * by the prunable segment_key shapes and sorted — shared by the row
+    * scan, its size estimate and the aggregate scan. */
   private[v2] def listSegments(conf: GraftSegments.SourceConf,
-                               filters: Array[Filter]): Array[String] = {
-    val storage = conf.storage
-    val manifestSuffix = "." + graft.sources.ObjectKey.Suffix.Manifest.value
-    storage.listKeys(conf.prefix)
-      .filter(_.endsWith(manifestSuffix))
-      .map(_.dropRight(manifestSuffix.length))
-      .filter(key => filters.forall {
-        case EqualTo("segment_key", v: String)  => key == v
-        case In("segment_key", vs)              => vs.exists(_ == key)
-        case StringStartsWith("segment_key", p) => key.startsWith(p)
-        case _                                  => true
-      })
-      .sorted
-      .toArray
+                               filters: Array[Filter]): Array[String] =
+    graft.sources.ObjectKey.committedSegments(conf.storage, conf.prefix)
+      .filter(keyKeep(filters)).sorted.toArray
+
+  /** The segment_key prune predicate: can a segment with this key satisfy
+    * every prunable `segment_key` filter? Other filters pass. */
+  private[v2] def keyKeep(filters: Array[Filter])(key: String): Boolean = filters.forall {
+    case EqualTo("segment_key", v: String)  => key == v
+    case In("segment_key", vs)              => vs.exists(_ == key)
+    case StringStartsWith("segment_key", p) => key.startsWith(p)
+    case _                                  => true
   }
 
   /** Per-key manifest `RecordStats`, if the manifest parses and carries
-    * stats (reference-written manifests may not). */
+    * stats (reference-written manifests may not). Uncached: each call is
+    * one manifest GET. */
   private[v2] def statsOf(conf: GraftSegments.SourceConf,
-                          key: String): Option[graft.core.RecordStats] = {
-    val manifestSuffix = "." + graft.sources.ObjectKey.Suffix.Manifest.value
-    try graft.core.SegmentManifest.fromJson(new String(
-      conf.storage.fetchBytes(s"$key$manifestSuffix"), "UTF-8")).recordStats
+                          key: String): Option[graft.core.RecordStats] =
+    try SegmentFetchJob.loadManifest(conf.storage, key).recordStats
     catch { case _: Exception => None }
-  }
 
   private[v2] def statsCount(conf: GraftSegments.SourceConf, key: String): Option[Long] =
     statsOf(conf, key).map(_.count)
@@ -454,16 +450,6 @@ object SegmentsScan {
     else keys.filter(k => statsKeep(statsFilters, memo.getOrElseUpdate(k, statsOf(conf, k))))
   }
 
-  /** The prunable-filter predicate over one segment key — shared by the
-    * listing and by the offset path's post-boundary runtime pruning. */
-  private[v2] def runtimeKeepFn(filters: Array[Filter]): String => Boolean =
-    key => filters.forall {
-      case EqualTo("segment_key", v: String)  => key == v
-      case In("segment_key", vs)              => vs.exists(_ == key)
-      case StringStartsWith("segment_key", p) => key.startsWith(p)
-      case _                                  => true
-    }
-
   /** pushOffset's validating walk: true iff sorted-key manifests carry
     * stats all the way past `offset` rows (so an exact skip is plannable).
     * Small manifest GETs only, and only up to the skip boundary; counts
@@ -507,12 +493,8 @@ final class SegmentsScan(conf: GraftSegments.SourceConf, required: StructType,
   override def estimateStatistics(): Statistics = new Statistics {
     private lazy val bytes: Long = {
       val storage = conf.storage
-      val manifestSuffix = "." + graft.sources.ObjectKey.Suffix.Manifest.value
       val logSuffix = "." + graft.sources.ObjectKey.Suffix.Log.value
-      storage.listKeys(conf.prefix)
-        .filter(_.endsWith(manifestSuffix))
-        .map(_.dropRight(manifestSuffix.length))
-        .filter(keep)
+      SegmentsScan.listSegments(conf, pruning ++ runtimeFilters)
         .map(k => try storage.size(s"$k$logSuffix") catch { case _: Exception => 0L })
         .sum
     }
@@ -534,13 +516,6 @@ final class SegmentsScan(conf: GraftSegments.SourceConf, required: StructType,
 
   override def filter(filters: Array[Filter]): Unit =
     runtimeFilters = filters
-
-  private def keep(key: String): Boolean = (pruning ++ runtimeFilters).forall {
-    case EqualTo("segment_key", v: String)  => key == v
-    case In("segment_key", vs)              => vs.exists(_ == key)
-    case StringStartsWith("segment_key", p) => key.startsWith(p)
-    case _                                  => true
-  }
 
   /** Driver-side planning: manifest KEY LISTING only (strings; no manifest
     * is parsed, no byte fetched until an executor runs its partition) —
@@ -595,8 +570,8 @@ final class SegmentsScan(conf: GraftSegments.SourceConf, required: StructType,
             else { boundary = true; kept += ((k, offset - skipped)) }
           }
         }
-        val rtKeep = SegmentsScan.runtimeKeepFn(runtimeFilters)
-        val surviving = kept.result().filter { case (k, _) => rtKeep(k) }
+        val surviving = kept.result()
+          .filter { case (k, _) => SegmentsScan.keyKeep(runtimeFilters)(k) }
         firstSkip = surviving.headOption.map(_._2).getOrElse(0L)
         surviving.map(_._1)
       }
@@ -992,9 +967,7 @@ final class SegmentsAggReader(conf: GraftSegments.SourceConf,
 
   private lazy val row: InternalRow = {
     conf.ensureBackend()
-    val storage = conf.storage
-    val manifest = graft.core.SegmentManifest.fromJson(new String(
-      storage.fetchBytes(s"$segKey.${graft.sources.ObjectKey.Suffix.Manifest.value}"), "UTF-8"))
+    val manifest = SegmentFetchJob.loadManifest(conf.storage, segKey)
     val stats: graft.core.RecordStats = manifest.recordStats match {
       case Some(rs) => statsOnlyReads.incrementAndGet(); rs
       case None =>

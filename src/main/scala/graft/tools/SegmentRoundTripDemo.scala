@@ -1,15 +1,14 @@
 package graft.tools
 
 import graft.core._
-import graft.core.transform._
-import graft.core.security._
+import graft.operators.{IndexTransform, SegmentFetchJob, SegmentJobConfig, SegmentUploadJob}
 import graft.sources._
 
 /** Usage example / smoke CLI for the segment layer: tier a real file out to a
-  * [[graft.sources.FileSystemStorage]] with compression+encryption, then serve
-  * a byte range back via the manifest — the end-to-end semantics of
-  * SURVEY.md §3.1/§3.2 (copyLogSegmentData + fetchLogSegment), driven through
-  * the library's public API only.
+  * [[graft.sources.FileSystemStorage]] with compression (when it pays) and
+  * encryption, then serve a byte range back via the manifest — the
+  * end-to-end semantics of SURVEY.md §3.1/§3.2 (copyLogSegmentData +
+  * fetchLogSegment), driven through the library's public API only.
   *
   * Args: [inputFile] [storageDir]; defaults exercise testdata.
   */
@@ -22,66 +21,50 @@ object SegmentRoundTripDemo {
     val payload = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(input))
     println(s"segment bytes: ${payload.length}")
 
-    // Write path: data key, chunk+compress+encrypt, upload log + manifest.
-    val ring = RsaKeyRing.generate("k1")
-    val dk = AesEncryptionProvider.createDataKeyAndAAD()
-    val spec = TransformSpec(4096, compression = true, encryptionKey = Some(dk.dataKey), aad = dk.aad)
-    val seg = TransformPipeline.transform(payload, spec)
-    println(s"chunks: ${seg.chunks.size}, transformed: ${seg.index.transformedFileSize} bytes, index: ${seg.index.getClass.getSimpleName}")
-
-    val logKey = ObjectKey.key("", "topic", "tid", 0, 0L, "seg1", ObjectKey.Suffix.Log)
-    val manKey = ObjectKey.key("", "topic", "tid", 0, 0L, "seg1", ObjectKey.Suffix.Manifest)
-    storage.uploadBytes(seg.concatenated, logKey)
-    val (kid, wrapped) = ring.wrapDataKey(dk.dataKey)
-    storage.uploadBytes(
-      SegmentManifest(seg.index, None, compression = true,
-        Some(EncryptionMetadata(kid, wrapped, dk.aad))).toJson.getBytes("UTF-8"), manKey)
+    // Write path: chunk + compress (when it pays) + encrypt, upload log,
+    // indexes and manifest (last) — the library's own tier-out.
+    val cfg = SegmentJobConfig.withGeneratedKeys(root).copy(chunkSize = 4096)
+    val segKey = ObjectKey.filePrefix("topic", "tid", 0, 0L, "seg1")
+    val idx = IndexTransform.SegmentIndexData(
+      offset = Array.tabulate[Byte](64)(_.toByte),
+      timestamp = Array.tabulate[Byte](48)(i => (i * 2).toByte),
+      producerSnapshot = Array.tabulate[Byte](32)(i => (i + 5).toByte),
+      leaderEpoch = Array.tabulate[Byte](8)(_.toByte),
+      transaction = None)
+    val up = SegmentUploadJob.uploadOne(storage, cfg.ring, None, cfg, segKey, payload, Some(idx))
+    require(up.success, up.error)
+    println(s"chunks: ${up.n_chunks}, transformed: ${up.transformed_size} bytes, " +
+      s"compressed: ${up.compressed}")
     println(s"uploaded: ${storage.listKeys("").mkString(", ")}")
 
-    // Read path: manifest fetch -> chunk planning -> ranged GETs -> detransform -> slice.
-    val m = SegmentManifest.fromJson(new String(storage.fetchBytes(manKey), "UTF-8"))
-    val dataKey = ring.unwrapDataKey(m.encryption.get.keyId, m.encryption.get.wrappedDataKey)
+    // Read path: manifest → read spec (validated, key unwrapped) → chunk
+    // planning → ranged GETs → detransform → slice.
+    val (m, spec) = SegmentFetchJob.readSpec(storage, cfg, segKey)
     val want = BytesRange(math.min(100000L, payload.length / 2L), math.max(math.min(179999L, payload.length - 1L), 0L))
     val chunks = m.chunkIndex.chunksForRange(want)
     if (chunks.isEmpty) {
       println(s"range $want covers no chunks (empty segment) — nothing to fetch"); return
     }
-    println(s"range $want covers ${chunks.size} chunks (${chunks.head.id}..${chunks.last.id})")
-    val spec2 = TransformSpec(4096, m.compression, Some(dataKey), m.encryption.get.aad)
-    val fetched = chunks.map(c => storage.fetchRangeBytes(logKey, c.transformedRange))
-    val joined = TransformPipeline.detransform(fetched.iterator, chunks, spec2).toVector.flatten.toArray
-    val skip = (want.from - chunks.head.originalPosition).toInt
-    val sliced = joined.slice(skip, skip + want.size.toInt)
+    println(s"range $want covers ${chunks.size} chunks (${chunks.head.id}..${chunks.last.id}), " +
+      s"index: ${m.chunkIndex.getClass.getSimpleName}")
+    val sliced = SegmentFetchJob.fetchRange(storage, cfg, segKey, want)
     val expected = payload.slice(want.from.toInt, want.to.toInt + 1)
     println(s"byte-equal: ${java.util.Arrays.equals(sliced, expected)} (${sliced.length} bytes)")
 
     // Index files (T10/R9): encrypted-not-compressed, running positions.
-    {
-      import graft.operators.IndexTransform
-      val idx = IndexTransform.SegmentIndexData(
-        offset = Array.tabulate[Byte](64)(_.toByte),
-        timestamp = Array.tabulate[Byte](48)(i => (i * 2).toByte),
-        producerSnapshot = Array.tabulate[Byte](32)(i => (i + 5).toByte),
-        leaderEpoch = Array.tabulate[Byte](8)(_.toByte),
-        transaction = None)
-      val si = IndexTransform.upload(storage, "topic-tid/0/00000000000000000000-seg1", idx, Some(dk.dataKey), dk.aad)
-      val back = IndexTransform.fetch(storage, "topic-tid/0/00000000000000000000-seg1", si,
-        "timestamp", Some(dk.dataKey), dk.aad)
-      println(s"index round trip: positions ${si.offset.position}/${si.timestamp.position}/" +
-        s"${si.producerSnapshot.position}/${si.leaderEpoch.position}, " +
-        s"timestamp index byte-equal: ${back.exists(_.sameElements(idx.timestamp))}")
-    }
+    val si = m.segmentIndexes.get
+    val back = IndexTransform.fetch(storage, segKey, si, "timestamp", spec.encryptionKey, spec.aad)
+    println(s"index round trip: positions ${si.offset.position}/${si.timestamp.position}/" +
+      s"${si.producerSnapshot.position}/${si.leaderEpoch.position}, " +
+      s"timestamp index byte-equal: ${back.exists(_.sameElements(idx.timestamp))}")
 
     // Tamper probe: corrupting the stored object must fail decryption loudly.
+    val logKey = s"$segKey.${ObjectKey.Suffix.Log.value}"
     val corrupt = storage.fetchBytes(logKey)
     val hit = chunks.head.transformedPosition + chunks.head.transformedSize / 2
     corrupt(hit) = (corrupt(hit) ^ 0xFF).toByte
     storage.uploadBytes(corrupt, logKey)
-    val res = scala.util.Try {
-      val again = chunks.map(c => storage.fetchRangeBytes(logKey, c.transformedRange))
-      // toVector forces every decrypt (Iterator.size would short-circuit via knownSize)
-      TransformPipeline.detransform(again.iterator, chunks, spec2).toVector
-    }
+    val res = scala.util.Try(SegmentFetchJob.fetchRange(storage, cfg, segKey, want))
     println(s"tampered fetch: ${if (res.isFailure) s"rejected (${res.failed.get.getClass.getSimpleName})" else "SILENTLY SUCCEEDED (BUG)"}")
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.core.BytesRange
 import graft.operators._
-import graft.sources.{CachingChunkFetcher, FileSystemStorage, LruByteCache}
+import graft.sources.{CachingChunkFetcher, FileSystemStorage, LruByteCache, ObjectKey}
 import graft.streaming.SegmentIngestStream
 
 /** Smoke CLI for the streaming tier-out + serving layer: drop segment files
@@ -39,12 +39,12 @@ object StreamingIngestDemo {
       trigger = Trigger.AvailableNow())
     q.awaitTermination(180000)
     val storage = FileSystemStorage(store)
-    println(s"ingested manifests: ${storage.listKeys("").count(_.endsWith(".rsm-manifest"))}, triggers processed: ${q.recentProgress.length}")
+    println(s"ingested manifests: ${ObjectKey.committedSegments(storage, "").size}, triggers processed: ${q.recentProgress.length}")
 
     // replay over same checkpoint -> no duplicate work
     val q2 = SegmentIngestStream.start(spark, watch, ckpt, cfg, trigger = Trigger.AvailableNow())
     q2.awaitTermination(60000)
-    println(s"after checkpoint replay: ${storage.listKeys("").count(_.endsWith(".rsm-manifest"))} manifests (unchanged)")
+    println(s"after checkpoint replay: ${ObjectKey.committedSegments(storage, "").size} manifests (unchanged)")
 
     // serving path through the prefetching cache
     val cache = new LruByteCache(16 * 1024 * 1024)

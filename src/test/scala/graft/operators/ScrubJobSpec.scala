@@ -72,8 +72,16 @@ class ScrubJobSpec extends SparkSpec {
     val (cfg, _) = freshStore()
     val mf = Paths.get(cfg.storageRoot, "scrub-seg-01.rsm-manifest")
     Files.writeString(mf, "{ not json")
+    // parseable but incompatible: an unknown key-wrap algorithm
+    val storage = FileSystemStorage(cfg.storageRoot)
+    val m2 = SegmentFetchJob.loadManifest(storage, "scrub-seg-02")
+    val badWrap = m2.copy(encryption = m2.encryption.map(_.copy(wrapAlg = "RSA-OAEP-SHA1")))
+    storage.uploadBytes(badWrap.toJson.getBytes("UTF-8"), "scrub-seg-02.rsm-manifest")
     val m = scrubMap(cfg)
     assert(m("scrub-seg-01")._2.startsWith("manifest-unreadable"), m("scrub-seg-01")._2)
+    assert(m("scrub-seg-02")._2.startsWith("manifest-unreadable: incompatible key-wrap algorithm"),
+      m("scrub-seg-02")._2)
+    assert(m("scrub-seg-00")._1)
   }
 
   test("verifyWire: real Kafka wire passes with batch count; garbage payload flagged") {

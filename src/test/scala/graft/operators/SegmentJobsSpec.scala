@@ -117,27 +117,51 @@ class SegmentJobsSpec extends SparkSpec {
     val segKey = manifestKey.stripSuffix(".rsm-manifest")
     val m = SegmentManifest.fromJson(new String(storage.fetchBytes(manifestKey), "UTF-8"))
 
+    // Both DSv2 read paths must reject an incompatible manifest the same
+    // way: the direct ranged fetch, and the read.prefetch.bytes chunk
+    // fetcher. Each bad manifest
+    // sits on a copy of the segment under a fresh key; a manifest that
+    // fails validation is never cached, so every path re-reads it.
+    val prefetching = graft.sources.v2.SegmentsReadCache.forConf(cfg, 4096L, 1L << 20)._2
+    val paths: Seq[(String, String => Any)] = Seq(
+      "direct" -> (k => SegmentFetchJob.fetchRange(cfg, k, BytesRange(0, 10))),
+      "prefetch" -> (k => prefetching.segmentBytes(k)))
+    def rejects(bad: SegmentManifest, suffix: String, message: String): Unit = {
+      storage.uploadBytes(bad.toJson.getBytes("UTF-8"), s"$segKey-$suffix.rsm-manifest")
+      storage.uploadBytes(storage.fetchBytes(s"$segKey.log"), s"$segKey-$suffix.log")
+      paths.foreach { case (name, read) =>
+        val e = intercept[IllegalStateException](read(s"$segKey-$suffix"))
+        assert(e.getMessage.contains(message), s"$name path: ${e.getMessage}")
+      }
+    }
+
     // foreign key-wrap algorithm (SHA3-512 — the reference's — is readable
-    // since r3, so use a genuinely unknown one) — exercised via a copied
-    // segment under a fresh key (the manifest cache keys by segment, so the
-    // original's cached spec is not consulted)
-    val badWrap = m.copy(encryption = m.encryption.map(_.copy(wrapAlg = "RSA-OAEP-SHA1")))
-    storage.uploadBytes(badWrap.toJson.getBytes("UTF-8"), s"$segKey-wrap.rsm-manifest")
-    storage.uploadBytes(storage.fetchBytes(s"$segKey.log"), s"$segKey-wrap.log")
-    val e2 = intercept[IllegalStateException](
-      SegmentFetchJob.fetchRange(cfg, s"$segKey-wrap", BytesRange(0, 10)))
-    assert(e2.getMessage.contains("incompatible key-wrap algorithm"))
+    // since r3, so use a genuinely unknown one)
+    rejects(m.copy(encryption = m.encryption.map(_.copy(wrapAlg = "RSA-OAEP-SHA1"))),
+      "wrap", "incompatible key-wrap algorithm")
 
     // foreign codec this engine genuinely has no decoder for ("zstd" used to
     // live here — it is now a first-class readable codec, tested below)
-    val badCodec = m.copy(compressionCodec = "snappy")
-    storage.uploadBytes(badCodec.toJson.getBytes("UTF-8"), s"$segKey-z.rsm-manifest")
-    storage.uploadBytes(storage.fetchBytes(s"$segKey.log"), s"$segKey-z.log")
-    if (badCodec.compression) {
-      val e3 = intercept[IllegalStateException](
-        SegmentFetchJob.fetchRange(cfg, s"$segKey-z", BytesRange(0, 10)))
-      assert(e3.getMessage.contains("incompatible compression codec"))
-    }
+    assert(m.compression, "segment 0 is the compressible one")
+    rejects(m.copy(compressionCodec = "snappy"), "z", "incompatible compression codec")
+  }
+
+  test("the manifest cache is scoped by key material: a wrong key pair never reads a warm segment") {
+    val in = tmpDir("graft-wrongkey-in")
+    val store = tmpDir("graft-wrongkey-store")
+    val segs = makeSegments(in, 1, 20000)
+    val cfgA = SegmentJobConfig.withGeneratedKeys(store).copy(chunkSize = 4096)
+    assert(SegmentUploadJob.run(spark, in, cfgA).collect().forall(_.getAs[Boolean]("success")))
+    val (segKey, payload) = segs.head
+    // key A warms the serving cache with the segment's unwrapped data key
+    val whole = BytesRange(0, payload.length - 1L)
+    assert(java.util.Arrays.equals(SegmentFetchJob.fetchRange(cfgA, segKey, whole), payload))
+    // key B (same root, same key id, other key pair) must unwrap for itself — and fail
+    val cfgB = SegmentJobConfig.withGeneratedKeys(store).copy(chunkSize = 4096)
+    assert(!cfgB.rsaPrivateKey.sameElements(cfgA.rsaPrivateKey))
+    intercept[Exception](SegmentFetchJob.fetchRange(cfgB, segKey, whole))
+    // key A still reads
+    assert(java.util.Arrays.equals(SegmentFetchJob.fetchRange(cfgA, segKey, whole), payload))
   }
 
   test("zstd-codec segments upload and serve ranged fetches byte-identically") {
