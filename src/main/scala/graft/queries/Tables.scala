@@ -60,18 +60,23 @@ object Tables {
     * of every plan construction — a repeated driver-side filesystem
     * metadata call for a value that never changes within a run (the bench
     * corpora are immutable; a table that grows past one split between
-    * queries of one session is not a supported shape). */
+    * queries of one session is not a supported shape). A failed probe is
+    * NOT memoized: it answers "unknown size, never spread" for this plan
+    * only, so one transient filesystem error cannot turn the spread off
+    * for the rest of the session. */
   private val inputBytesCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  private def inputBytes(s: SparkSession, path: String): Long =
-    inputBytesCache.computeIfAbsent(path, { _ =>
+  private[graft] def inputBytes(s: SparkSession, path: String): Long =
+    Option(inputBytesCache.get(path)).map(_.longValue).getOrElse {
       try {
         val p = new org.apache.hadoop.fs.Path(path)
         val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.getContentSummary(p).getLength
-      } catch { case _: Throwable => Long.MaxValue } // unknown size: never spread
-    })
+        val n = fs.getContentSummary(p).getLength
+        inputBytesCache.put(path, n)
+        n
+      } catch { case _: Exception => Long.MaxValue } // unknown size: never spread
+    }
 
   private def maxSplitBytes(s: SparkSession): Long =
     try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(

@@ -36,21 +36,30 @@ object RowSchema {
     StructField("key_raw", BinaryType, nullable = true),
     StructField("value_raw", BinaryType, nullable = true)))
 
+  /** Field `i` of [[kafkaStruct]] for record `r` of batch `b` — the one
+    * definition of the record metadata, shared by [[kafkaRow]] and the
+    * DSv2 reader's Catalyst writer (which asks only for the fields a
+    * query requires). */
+  def kafkaValue(b: KafkaWireCodec.Batch, r: KafkaWireCodec.Record, partition: Int, i: Int): Any =
+    i match {
+      case 0  => partition
+      case 1  => b.baseOffset + r.offsetDelta
+      case 2  => b.baseTimestamp + r.timestampDelta
+      case 3  => b.byteOffset
+      case 4  => b.baseOffset
+      case 5  => b.partitionLeaderEpoch
+      case 6  => b.magic.toInt
+      case 7  => b.timestampType
+      case 8  => b.compressionType
+      case 9  => b.maxTimestamp
+      case 10 => b.producerId
+      case 11 => b.producerEpoch.toInt
+      case 12 => b.baseSequence
+      case _  => throw new IndexOutOfBoundsException(s"kafka field $i")
+    }
+
   def kafkaRow(b: KafkaWireCodec.Batch, r: KafkaWireCodec.Record, partition: Int): Row =
-    Row(
-      partition,
-      b.baseOffset + r.offsetDelta,
-      b.baseTimestamp + r.timestampDelta,
-      b.byteOffset,
-      b.baseOffset,
-      b.partitionLeaderEpoch,
-      b.magic.toInt,
-      b.timestampType,
-      b.compressionType,
-      b.maxTimestamp,
-      b.producerId,
-      b.producerEpoch.toInt,
-      b.baseSequence)
+    Row.fromSeq(Seq.tabulate(kafkaStruct.length)(kafkaValue(b, r, partition, _)))
 
   def recordRow(b: KafkaWireCodec.Batch, r: KafkaWireCodec.Record, partition: Int): Row =
     Row(

@@ -1,7 +1,8 @@
 package graft.records
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.api.java.UDF1
+import org.apache.spark.sql.functions.udf
 
 /** I2 as a library operator: materialize typed columns from registry-framed
   * raw bytes. Rows whose payload has no/unknown envelope keep `null` in the
@@ -10,26 +11,25 @@ import org.apache.spark.sql.types.StructType
   */
 object TypedDecode {
 
-  /** Append `outCol` (struct typed by `schemaId`'s registry schema) decoded
-    * from `rawCol`. Runs as a narrow map — registry schemas are parsed once
-    * per executor (the registry caches per-JVM). */
+  /** `outCol` (typed by `schemaId`'s registry schema) decoded from `rawCol`,
+    * replacing a column of that name if `df` already has one. Any top-level
+    * Avro schema works: records decode to structs, primitives to their
+    * Spark type. The decode is a column expression, so the plan stays
+    * visible to the optimizer: column pruning reaches the source (a query
+    * on `value.x` scans only `rawCol`) and the rest of the row is never
+    * deserialized. Registry schemas are parsed once per executor (the
+    * registry caches per JVM). */
   def withDecoded(df: DataFrame, registry: SchemaRegistry, schemaId: Int,
                   rawCol: String = "value_raw", outCol: String = "value"): DataFrame = {
     val schema = registry.lookup(schemaId)
       .getOrElse(throw new IllegalArgumentException(s"unknown schema id $schemaId"))
-    val sparkType = AvroLite.toSparkType(schema)
-    val outSchema = StructType(df.schema.fields :+
-      org.apache.spark.sql.types.StructField(outCol, sparkType, nullable = true))
-    val rawIdx = df.schema.fieldIndex(rawCol)
-    val reg = registry
-    val rdd = df.rdd.map { r =>
-      val raw = r.getAs[Array[Byte]](rawIdx)
-      val decoded = reg.decode(raw) match {
-        case Some((id, v)) if id == schemaId => v
-        case _ => null
-      }
-      Row.fromSeq(r.toSeq :+ decoded)
+    val decode: UDF1[Array[Byte], Any] = raw => registry.decode(raw) match {
+      case Some((id, v)) if id == schemaId => v
+      case _ => null
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
+    df.withColumn(outCol, udf(decode, AvroLite.toSparkType(schema)).withName(UdfName)(df.col(rawCol)))
   }
+
+  /** Name of the decode in query plans. */
+  val UdfName = "graft_typed_decode"
 }

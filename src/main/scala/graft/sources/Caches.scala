@@ -1,7 +1,8 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, Executors, TimeUnit, TimeoutException}
+import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, Executors, RejectedExecutionException,
+  TimeUnit, TimeoutException}
 import scala.jdk.CollectionConverters._
 
 /** Cache statistics mirroring the reference's Caffeine stats surface
@@ -199,13 +200,15 @@ final class CachingChunkFetcher(
     if (afterChunk + 1 >= chunks.size) return
     val start = chunks(afterChunk + 1).originalPosition.toLong
     val range = BytesRange(start, math.min(start + prefetchMaxBytes - 1, m.chunkIndex.originalFileSize - 1L))
-    m.chunkIndex.chunksForRange(range).foreach { c =>
+    // a shut-down pool (fetcher evicted from its registry while a reader
+    // still holds it) rejects the task: no prefetch, the read goes on
+    try m.chunkIndex.chunksForRange(range).foreach { c =>
       pool.submit(new Runnable {
         def run(): Unit =
           try cache.getOrLoad(s"$segKey#${c.id}")(loadChunk(segKey, c.id))
           catch { case _: Throwable => () }
       })
-    }
+    } catch { case _: RejectedExecutionException => () }
   }
 
   def shutdown(): Unit = pool.shutdown()

@@ -6,6 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min}
@@ -15,6 +17,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, Greate
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.Row
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.BytesRange
 import graft.operators.{SegmentFetchJob, SegmentJobConfig}
@@ -178,22 +181,40 @@ object GraftSegments {
   * threads overlap fetch+detransform with the consumer. Two sources on the
   * same root with different keys or budgets never share entries. Manifests
   * are not cached here: they come from [[SegmentFetchJob.readSpec]], the
-  * same bounded cache the direct path uses. */
+  * same bounded cache the direct path uses.
+  *
+  * Bounded: at most [[MaxFetchers]] tuples live at once, least recently
+  * used first out. An evicted fetcher's prefetch pool is shut down and its
+  * cache dropped with it; a reader still holding it keeps reading (chunk
+  * loads run on the caller), only without prefetch. */
 private[graft] object SegmentsReadCache {
-  import java.util.concurrent.ConcurrentHashMap
-  private val fetchers =
-    new ConcurrentHashMap[String, (graft.sources.LruByteCache, graft.sources.CachingChunkFetcher)]()
+  val MaxFetchers = 4
+
+  private type Entry = (graft.sources.LruByteCache, graft.sources.CachingChunkFetcher)
+  private val fetchers = new java.util.LinkedHashMap[String, Entry](8, 0.75f, true)
 
   def forConf(cfg: graft.operators.SegmentJobConfig, prefetchBytes: Long,
-              cacheBytes: Long): (graft.sources.LruByteCache, graft.sources.CachingChunkFetcher) = {
-    fetchers.computeIfAbsent(s"${cfg.storageRoot}#${cfg.keyDigest}#$prefetchBytes#$cacheBytes", _ => {
+              cacheBytes: Long): Entry = fetchers.synchronized {
+    val id = s"${cfg.storageRoot}#${cfg.keyDigest}#$prefetchBytes#$cacheBytes"
+    var e = fetchers.get(id)
+    if (e == null) {
       val cache = new graft.sources.LruByteCache(cacheBytes)
-      (cache, new graft.sources.CachingChunkFetcher(cfg, cache, prefetchBytes))
-    })
+      e = (cache, new graft.sources.CachingChunkFetcher(cfg, cache, prefetchBytes))
+      fetchers.put(id, e)
+      val it = fetchers.values().iterator()
+      while (fetchers.size > MaxFetchers) { it.next()._2.shutdown(); it.remove() }
+    }
+    e
   }
 
-  /** Test hook: drop every cached fetcher (fake backends re-register roots). */
-  private[graft] def reset(): Unit = fetchers.clear()
+  def size: Int = fetchers.synchronized(fetchers.size)
+
+  /** Test hook: shut down and drop every cached fetcher (fake backends
+    * re-register roots). */
+  private[graft] def reset(): Unit = fetchers.synchronized {
+    fetchers.values().forEach(_._2.shutdown())
+    fetchers.clear()
+  }
 }
 
 final class SegmentsTable(conf: GraftSegments.SourceConf) extends Table
@@ -804,17 +825,18 @@ final class SegmentsReaderFactory(conf: GraftSegments.SourceConf, required: Stru
 }
 
 /** Executor-side: detransform one segment, parse the Kafka wire, emit only
-  * the required (possibly nested-pruned) fields. `skipRows` > 0 carries a
-  * pushed OFFSET's in-segment remainder: the wire is parsed (records are
-  * length-prefixed, there is no index into the middle of a batch) but the
-  * first `skipRows` rows are dropped before any Catalyst conversion. */
+  * the required (possibly nested-pruned) fields as Catalyst values — no
+  * external `Row` is built and no type converter runs per record. The
+  * column writers are resolved from `required` once per reader
+  * ([[SegmentsReader.writer]]). `skipRows` > 0 carries a pushed OFFSET's
+  * in-segment remainder: the wire is parsed (records are length-prefixed,
+  * there is no index into the middle of a batch) but the first `skipRows`
+  * records are dropped before any column is written. */
 final class SegmentsReader(conf: GraftSegments.SourceConf, required: StructType, segKey: String,
                            skipRows: Long = 0L)
     extends PartitionReader[InternalRow] {
 
-  private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(required)
-  private val kafkaFieldIdx: Map[String, Int] =
-    RowSchema.kafkaStruct.fieldNames.zipWithIndex.toMap
+  private val write = SegmentsReader.writer(required, segKey)
 
   private lazy val iter: Iterator[InternalRow] = {
     conf.ensureBackend() // executor-side transport registration
@@ -835,26 +857,7 @@ final class SegmentsReader(conf: GraftSegments.SourceConf, required: StructType,
           toSkip -= d
           b.records.iterator.drop(d)
         }
-      rs.map { r =>
-        val full = RowSchema.recordRow(b, r, 0)
-        val vals = required.fields.map { f =>
-          f.name match {
-            case "segment_key" => segKey
-            case "kafka" =>
-              val kfull = full.getStruct(0)
-              f.dataType match { // nested pruning: project requested kafka.* only
-                case st: StructType =>
-                  Row.fromSeq(st.fieldNames.toSeq.map(n => kfull.get(kafkaFieldIdx(n))))
-                case _ => kfull
-              }
-            case "headers"   => full.get(1)
-            case "key_raw"   => full.get(2)
-            case "value_raw" => full.get(3)
-            case other => throw new IllegalStateException(s"unknown column $other")
-          }
-        }
-        toCatalyst(Row.fromSeq(vals.toSeq)).asInstanceOf[InternalRow]
-      }
+      rs.map(write(b, _))
     }
   }
 
@@ -862,6 +865,49 @@ final class SegmentsReader(conf: GraftSegments.SourceConf, required: StructType,
   override def next(): Boolean = { if (iter.hasNext) { current = iter.next(); true } else false }
   override def get(): InternalRow = current
   override def close(): Unit = ()
+}
+
+object SegmentsReader {
+  /** The record → `InternalRow` writer for a required schema: one column
+    * writer per required field, in `required`'s order, each producing the
+    * Catalyst value of its field (`UTF8String`, nested `InternalRow`,
+    * `ArrayData`, raw `Array[Byte]`). Nested selections — a pruned
+    * `kafka` struct, a pruned `headers` element struct — resolve to source
+    * ordinals here, by name, so their order never matters. The record's
+    * partition is 0, as in [[graft.records.SegmentToRows]]. */
+  private[v2] def writer(required: StructType,
+                         segKey: String): (KafkaWireCodec.Batch, KafkaWireCodec.Record) => InternalRow = {
+    type Col = (KafkaWireCodec.Batch, KafkaWireCodec.Record) => Any
+    def fields(t: DataType): Array[String] = t.asInstanceOf[StructType].fieldNames
+    val key = UTF8String.fromString(segKey)
+    val cols: Array[Col] = required.fields.map { f =>
+      f.name match {
+        case "segment_key" => (_, _) => key
+        case "kafka" =>
+          val idx = fields(f.dataType).map(RowSchema.kafkaStruct.fieldIndex)
+          (b, r) => {
+            val vs = new Array[Any](idx.length)
+            var i = 0
+            while (i < idx.length) { vs(i) = RowSchema.kafkaValue(b, r, 0, idx(i)); i += 1 }
+            new GenericInternalRow(vs)
+          }
+        case "headers" =>
+          val isKey = fields(f.dataType.asInstanceOf[ArrayType].elementType).map(_ == "key")
+          (_, r) => new GenericArrayData(r.headers.map { h =>
+            new GenericInternalRow(isKey.map[Any](k => if (k) UTF8String.fromString(h.key) else h.value))
+          }.toArray[Any])
+        case "key_raw"   => (_, r) => r.key
+        case "value_raw" => (_, r) => r.value
+        case other => throw new IllegalStateException(s"unknown column $other")
+      }
+    }
+    (b, r) => {
+      val vs = new Array[Any](cols.length)
+      var i = 0
+      while (i < cols.length) { vs(i) = cols(i)(b, r); i += 1 }
+      new GenericInternalRow(vs)
+    }
+  }
 }
 
 // ---------------------------------------------------------------------------
@@ -989,7 +1035,7 @@ final class SegmentsAggReader(conf: GraftSegments.SourceConf,
       case MaxTs => if (stats.count == 0L) null else stats.maxTimestamp
     }
     val keyCol =
-      if (spec.groupByKey) Seq(org.apache.spark.unsafe.types.UTF8String.fromString(segKey))
+      if (spec.groupByKey) Seq(UTF8String.fromString(segKey))
       else Nil
     InternalRow.fromSeq(keyCol ++ spec.cols.map(v))
   }

@@ -21,6 +21,16 @@ class PlanChecksSpec extends SparkSpec {
         "scan spread; unset SPARK_GRAFT_NO_SPREAD to run them")
   }
 
+  test("scan-spread size probe: a failed probe is not memoized") {
+    // a path that does not exist yet answers "unknown" (never spread); once
+    // it exists the next probe must see its real size, not the sentinel
+    val dir = java.nio.file.Files.createTempDirectory("spread-probe")
+    val path = dir.resolve("late.parquet")
+    assert(Tables.inputBytes(spark, path.toString) == Long.MaxValue)
+    java.nio.file.Files.write(path, new Array[Byte](1234))
+    assert(Tables.inputBytes(spark, path.toString) == 1234L)
+  }
+
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 

@@ -150,6 +150,55 @@ class RecordTableSpec extends SparkSpec {
     assert(typed.filter(col("value").isNull && col("value_raw").isNotNull).count() == 4)
   }
 
+  test("TypedDecode is one column expression: evaluated once per row, existing outCol replaced") {
+    val registry = SchemaRegistry(Files.createTempDirectory("td-plan").toString)
+    registry.register(3,
+      """{"type":"record","name":"v","fields":[{"name":"s","type":"string"},{"name":"n","type":"long"}]}""")
+    val out = new java.io.ByteArrayOutputStream()
+    val values = (0 until 6).map(i => registry.encode(3, org.apache.spark.sql.Row(s"s$i", i.toLong)))
+    out.write(writeBatch(buildBatch(0L, 100L, values.map(v => (kb("k"), v, Seq.empty[Header])))))
+    val rows = SegmentToRows.fromSegmentBytes(spark, Seq((0, out.toByteArray)))
+    // two fields of the decoded struct: CollapseProject must not inline the
+    // decode into each of them
+    val typed = TypedDecode.withDecoded(rows, registry, 3)
+      .select(col("value.s").as("s"), (col("value.n") * 2).as("n2"))
+    def decodes[P <: org.apache.spark.sql.catalyst.plans.QueryPlan[P]](plan: P): Int =
+      plan.collect { case p => p.expressions.map(_.collect {
+        case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF
+          if u.udfName.contains(TypedDecode.UdfName) => u
+      }.size).sum }.sum
+    assert(decodes(typed.queryExecution.optimizedPlan) == 1, typed.queryExecution.optimizedPlan)
+    assert(decodes(typed.queryExecution.executedPlan) == 1, typed.queryExecution.executedPlan)
+    assert(typed.collect().map(r => r.getString(0) -> r.getLong(1)).toSet ==
+      (0 until 6).map(i => s"s$i" -> 2L * i).toSet)
+    // an existing outCol is replaced in place, not duplicated
+    val replaced = TypedDecode.withDecoded(rows.withColumn("value", lit("stale")), registry, 3)
+    assert(replaced.columns.count(_ == "value") == 1)
+    assert(replaced.schema("value").dataType.isInstanceOf[org.apache.spark.sql.types.StructType])
+    assert(replaced.select("value.s").collect().map(_.getString(0)).toSet == (0 until 6).map(i => s"s$i").toSet)
+  }
+
+  test("TypedDecode with a non-record top-level schema") {
+    val registry = SchemaRegistry(Files.createTempDirectory("td-prim").toString)
+    registry.register(5, """"string"""")
+    registry.register(6, """{"type":"array","items":"long"}""")
+    val out = new java.io.ByteArrayOutputStream()
+    val values = Seq(registry.encode(5, "alpha"), registry.encode(6, Seq(1L, 2L)), kb("raw"),
+      registry.encode(5, "beta"))
+    out.write(writeBatch(buildBatch(0L, 100L, values.map(v => (kb("k"), v, Seq.empty[Header])))))
+    val rows = SegmentToRows.fromSegmentBytes(spark, Seq((0, out.toByteArray)))
+    val strings = TypedDecode.withDecoded(rows, registry, 5, outCol = "s")
+    assert(strings.schema("s").dataType == org.apache.spark.sql.types.StringType)
+    assert(strings.orderBy("kafka.offset").select("s").collect().map(_.getString(0)).toSeq ==
+      Seq("alpha", null, null, "beta")) // foreign id and no envelope -> null
+    val longs = TypedDecode.withDecoded(rows, registry, 6, outCol = "xs")
+    assert(longs.schema("xs").dataType ==
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType))
+    assert(longs.filter(col("xs").isNotNull).select("xs").collect().map(_.getSeq[Long](0)).toSeq ==
+      Seq(Seq(1L, 2L)))
+    assert(longs.filter(col("value_raw").isNotNull).count() == 4) // raw column kept
+  }
+
   test("schema evolution on append: add nullable column, widen") {
     import org.apache.spark.sql.types._
     val tableDir = Files.createTempDirectory("graft-table3").toString

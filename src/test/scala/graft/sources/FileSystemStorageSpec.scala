@@ -114,18 +114,18 @@ class FileSystemStorageSpec extends AnyFunSuite {
             s.delete(key)
             i += 1
           } catch { case t: Throwable => failure.compareAndSet(null, t) }
-        })
+        }, s"churn-writer-$w")
       }
       writers.foreach(_.start())
-      // Deadline-tolerant shape (r13, VERDICT r12 "What's wrong" #4): this
-      // box has multi-second whole-JVM stall windows. A minimum ITERATION
-      // count keeps the race coverage meaningful when a stall eats the
-      // wall-clock budget, and the joins are UNBOUNDED — the old join(5000)
-      // could expire during a stall and leave a live writer racing the
-      // fixture's directory teardown (DirectoryNotEmptyException in
-      // cleanup, the driver's r12 flake). Writers do bounded work per loop
-      // and re-check `stop`, so an unbounded join terminates promptly once
-      // the JVM is scheduled again.
+      // Deadline-tolerant shape (r13): a host can stall the whole JVM for
+      // seconds. A minimum ITERATION count keeps the race coverage
+      // meaningful when a stall eats the wall-clock budget, and the joins
+      // are generous — a short join(5000) could expire during a stall and
+      // leave a live writer racing the fixture's directory teardown
+      // (DirectoryNotEmptyException in cleanup). Writers do bounded work
+      // per loop and re-check `stop`, so they end promptly once the JVM is
+      // scheduled again; a writer still alive after 300 s is hung, and the
+      // test fails with a thread dump instead of hanging the suite.
       val deadline = System.nanoTime() + 2_000_000_000L
       var iters = 0
       try while (System.nanoTime() < deadline || iters < 50) {
@@ -134,7 +134,15 @@ class FileSystemStorageSpec extends AnyFunSuite {
         iters += 1
       } finally {
         stop.set(true)
-        writers.foreach(_.join())
+        val joinBy = System.nanoTime() + 300_000_000_000L
+        writers.foreach(w => w.join(math.max(1L, (joinBy - System.nanoTime()) / 1000000L)))
+        if (writers.exists(_.isAlive)) {
+          import scala.jdk.CollectionConverters._
+          fail(s"${writers.count(_.isAlive)} churn writer(s) still alive after 300 s; threads:\n" +
+            Thread.getAllStackTraces.asScala.map { case (t, st) =>
+              s"${t.getName} ${t.getState}" + st.mkString("\n  at ", "\n  at ", "")
+            }.mkString("\n"))
+        }
       }
       assert(failure.get() == null, s"writer failed: ${failure.get()}")
     }

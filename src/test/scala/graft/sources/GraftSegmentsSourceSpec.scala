@@ -742,6 +742,166 @@ class GraftSegmentsSourceSpec extends SparkSpec {
     while (!surplusCached && System.nanoTime() < deadline) Thread.sleep(10)
     assert(surplusCached, "prefetch should cache the next chunk without a request for it")
   }
+
+  // --- the reader writes Catalyst rows directly: parity with the parse ---
+
+  /** Three segments of three batches each (offsets 0..71, contiguous),
+    * with every value shape the writer handles: null keys, headers with a
+    * null value, empty headers, registry-framed and plain values, distinct
+    * batch metadata per batch. Chunked at 512 bytes so the prefetch path
+    * spans several chunks per segment. */
+  private def richSetup(): (String, SegmentJobConfig, Vector[String], graft.records.SchemaRegistry) = {
+    val registry = graft.records.SchemaRegistry(Files.createTempDirectory("dsv2-reg").toString)
+    registry.register(7,
+      """{"type":"record","name":"e","fields":[{"name":"s","type":"string"},{"name":"n","type":"long"}]}""")
+    val in = Files.createTempDirectory("dsv2-rich-in").toString
+    val store = Files.createTempDirectory("dsv2-rich-store").toString
+    (0 until 3).foreach { s =>
+      val out = new java.io.ByteArrayOutputStream()
+      (0 until 3).foreach { b =>
+        val base = s * 24L + b * 8L
+        val recs = (0 until 8).map { i =>
+          val o = base + i
+          val key = if (o % 4 == 0) null else kb(s"k$o")
+          val value =
+            if (o % 2 == 0) registry.encode(7, org.apache.spark.sql.Row(s"s${o % 5}", o))
+            else kb(s"plain-$o" * 3)
+          val headers = (o % 3).toInt match {
+            case 0 => Seq.empty[Header]
+            case 1 => Seq(Header("h1", kb(s"a$o")), Header("h2", null))
+            case _ => Seq(Header("t", kb("x")))
+          }
+          (key, value, headers)
+        }
+        out.write(writeBatch(buildBatch(base, 1700000000000L + base * 10, recs,
+          producerId = 40L + b, producerEpoch = b.toShort, baseSequence = b * 8,
+          partitionLeaderEpoch = s)))
+      }
+      Files.write(java.nio.file.Paths.get(in, f"seg$s%03d.log"), out.toByteArray)
+    }
+    val cfg = SegmentJobConfig.withGeneratedKeys(store).copy(chunkSize = 512)
+    assert(SegmentUploadJob.run(spark, in, cfg).collect().forall(_.getAs[Boolean]("success")))
+    val keys = FileSystemStorage(store).listKeys("")
+      .filter(_.endsWith(".log")).map(_.dropRight(".log".length)).sorted
+    (store, cfg, keys, registry)
+  }
+
+  /** The same rows through the external-Row parse of each segment's
+    * detransformed payload, in the source's full schema. */
+  private def parsed(cfg: SegmentJobConfig, keys: Seq[String]) =
+    keys.map { k =>
+      val raw = graft.operators.SegmentFetchJob.fetchRange(cfg, k,
+        graft.core.BytesRange(0L, Long.MaxValue - 1L))
+      graft.records.SegmentToRows.fromSegmentBytes(spark, Seq((0, raw)))
+        .select(lit(k).as("segment_key") +: graft.records.RowSchema.rawSchema.fieldNames.map(col): _*)
+    }.reduce(_ unionByName _)
+
+  /** Rows as comparable values: binary as byte sequences, nested rows and
+    * arrays element-wise. */
+  private def canon(v: Any): Any = v match {
+    case b: Array[Byte] => b.toSeq
+    case r: org.apache.spark.sql.Row => r.toSeq.map(canon)
+    case xs: scala.collection.Seq[_] => xs.map(canon)
+    case x => x
+  }
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(r => canon(r).toString).toSeq.sorted
+
+  test("reader rows equal SegmentToRows: full schema, nested pruning, null keys and header values") {
+    val (store, cfg, keys, _) = richSetup()
+    val source = reader(store, cfg).load()
+    val want = parsed(cfg, keys)
+    assert(source.schema == want.schema)
+    assert(rowsOf(want).size == 72)
+    def same(q: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit =
+      assert(rowsOf(q(source)) == rowsOf(q(want)))
+    same(identity)
+    // nested kafka.* selection out of declaration order, top-level columns
+    // out of order too; the scan must read the pruned struct
+    val nested = (df: org.apache.spark.sql.DataFrame) => df.select(col("value_raw"),
+      col("kafka.batch_producer_id"), col("kafka.timestamp"), col("segment_key"),
+      col("kafka.offset"), col("kafka.batch_partition_leader_epoch"))
+    same(nested)
+    val kafkaRead = nested(source).queryExecution.sparkPlan.collectLeaves().head
+      .output.find(_.name == "kafka").get.dataType
+      .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSet
+    assert(kafkaRead == Set("batch_producer_id", "timestamp", "offset", "batch_partition_leader_epoch"),
+      s"kafka struct not pruned: $kafkaRead")
+    // header fields alone (nested pruning inside the array element), a null
+    // header value and null keys among them
+    same(_.select(col("kafka.offset"), col("headers.value").as("hv"), col("key_raw")))
+    same(_.select(col("headers.key").as("hk"), col("headers")))
+    assert(source.filter(col("key_raw").isNull).count() == 18)
+    assert(source.select(explode(col("headers")).as("h")).filter(col("h.value").isNull).count() == 24)
+  }
+
+  test("reader rows equal SegmentToRows under a pushed OFFSET and on the prefetch path") {
+    val (store, cfg, keys, _) = richSetup()
+    val want = parsed(cfg, keys)
+    val pfx = keys.head.take(3)
+    // 30 = segment 0 (24 rows) dropped at planning + 6 rows of segment 1's
+    // first batch skipped by its reader; 45 skips into segment 1's last batch
+    Seq(30, 45).foreach { skip =>
+      graft.sources.v2.SegmentsScan.lastPlannedPartitions = -1
+      val got = reader(store, cfg).option("prefix", pfx).load().offset(skip)
+      assert(got.queryExecution.executedPlan.toString.contains(s"offset=$skip"),
+        got.queryExecution.executedPlan.toString)
+      assert(rowsOf(got) == rowsOf(want.orderBy(col("kafka.offset")).offset(skip)))
+      assert(graft.sources.v2.SegmentsScan.lastPlannedPartitions == 2)
+    }
+    graft.sources.v2.SegmentsReadCache.reset()
+    val viaPrefetch = reader(store, cfg).option("read.prefetch.bytes", "4096").load()
+    assert(rowsOf(viaPrefetch) == rowsOf(want))
+    assert(rowsOf(viaPrefetch.select(col("kafka.offset"), col("value_raw"))) ==
+      rowsOf(want.select(col("kafka.offset"), col("value_raw"))))
+    graft.sources.v2.SegmentsReadCache.reset()
+  }
+
+  test("TypedDecode over the source: the scan reads only the raw column") {
+    val (store, cfg, keys, registry) = richSetup()
+    def query(df: org.apache.spark.sql.DataFrame) =
+      graft.records.TypedDecode.withDecoded(df, registry, 7)
+        .groupBy(col("value.s").as("s")).agg(count(lit(1)).as("c"), sum(col("value.n")).as("n"))
+    val got = query(reader(store, cfg).load())
+    val leaf = got.queryExecution.sparkPlan.collectLeaves().head
+    assert(leaf.output.map(_.name) == Seq("value_raw"), s"scan reads ${leaf.output.map(_.name)}")
+    assert(rowsOf(got) == rowsOf(query(parsed(cfg, keys))))
+    // 36 plain (odd-offset) values decode to null, never dropped
+    assert(got.collect().map(r => Option(r.getString(0)) -> r.getLong(1)).toMap.apply(None) == 36L)
+  }
+
+  test("read cache registry is bounded: evicted fetchers' prefetch threads end") {
+    import scala.jdk.CollectionConverters._
+    import graft.sources.v2.SegmentsReadCache
+    SegmentsReadCache.reset()
+    def prefetchThreads: Int =
+      Thread.getAllStackTraces.keySet.asScala.count(t => t.getName == "graft-prefetch" && t.isAlive)
+    val baseline = prefetchThreads
+    val (store, cfg, _, _) = richSetup()
+    val roots = (0 until SegmentsReadCache.MaxFetchers + 2).map { i =>
+      val root = Files.createTempDirectory(s"dsv2-root$i")
+      val src = java.nio.file.Paths.get(store)
+      val walk = Files.walk(src)
+      try walk.iterator.asScala.foreach { p =>
+        val to = root.resolve(src.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+      } finally walk.close()
+      root.toString
+    }
+    roots.foreach { root =>
+      val n = reader(root, cfg).option("read.prefetch.bytes", "4096").load()
+        .select(col("kafka.offset")).collect().length
+      assert(n == 72)
+      assert(SegmentsReadCache.size <= SegmentsReadCache.MaxFetchers)
+    }
+    // each live fetcher owns at most 4 prefetch threads; evicted pools are
+    // shut down, so their idle threads exit
+    val bound = baseline + 4 * SegmentsReadCache.MaxFetchers
+    val deadline = System.nanoTime() + 10_000_000_000L
+    while (prefetchThreads > bound && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(prefetchThreads <= bound, s"$prefetchThreads prefetch threads alive, bound $bound")
+    SegmentsReadCache.reset()
+  }
 }
 
 /** One shared in-memory service per cloud, like an SDK's bucket handle —
