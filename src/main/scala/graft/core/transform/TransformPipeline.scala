@@ -20,14 +20,7 @@ final case class TransformSpec(
 
 /** Result of transforming one segment: transformed chunk payloads (in id
   * order) plus the sealed [[ChunkIndex]]. */
-final case class TransformedSegment(chunks: Vector[Array[Byte]], index: ChunkIndex) {
-  def concatenated: Array[Byte] = {
-    val out = new Array[Byte](chunks.iterator.map(_.length).sum)
-    var off = 0
-    chunks.foreach { c => System.arraycopy(c, 0, out, off, c.length); off += c.length }
-    out
-  }
-}
+final case class TransformedSegment(chunks: Vector[Array[Byte]], index: ChunkIndex)
 
 /** The write-path finisher + read-path detransform, mirroring
   * `TransformFinisher.java:47-199` and `BaseDetransformChunkEnumeration.java`.

@@ -91,7 +91,7 @@ object ScrubJob {
     val batches =
       if (!verifyWire) 0L
       else
-        try graft.records.KafkaWireCodec.parseSegment(original).size.toLong
+        try graft.records.KafkaWireCodec.batches(original).size.toLong
         catch { case e: Exception => return bad(s"wire-invalid: ${e.getMessage}", nChunks, originalSize) }
 
     SegmentScrub(segKey, ok = true, "", nChunks, originalSize, batches)

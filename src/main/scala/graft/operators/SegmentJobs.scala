@@ -1,5 +1,9 @@
 package graft.operators
 
+import java.io.{ByteArrayInputStream, InputStream, SequenceInputStream}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
@@ -159,20 +163,25 @@ object SegmentUploadJob {
     * agree bit-for-bit. None when the payload is not parseable Kafka wire
     * (arbitrary bytes are legal payloads for tooling/tests). */
   private[graft] def recordStatsOf(payload: Array[Byte]): Option[RecordStats] =
-    try {
-      var n = 0L
-      var minOff = Long.MaxValue; var maxOff = Long.MinValue
-      var minTs = Long.MaxValue; var maxTs = Long.MinValue
-      for (b <- graft.records.KafkaWireCodec.parseSegment(payload); r <- b.records) {
-        n += 1
-        val off = b.baseOffset + r.offsetDelta
-        val ts = b.baseTimestamp + r.timestampDelta
-        if (off < minOff) minOff = off; if (off > maxOff) maxOff = off
-        if (ts < minTs) minTs = ts; if (ts > maxTs) maxTs = ts
-      }
-      if (n == 0L) Some(RecordStats(0L, 0L, -1L, 0L, -1L))
-      else Some(RecordStats(n, minOff, maxOff, minTs, maxTs))
-    } catch { case scala.util.control.NonFatal(_) => None }
+    try Some(recordStats(payload))
+    catch { case scala.util.control.NonFatal(_) => None }
+
+  /** [[recordStatsOf]], throwing the wire parse's error (bad CRC,
+    * truncation) when the payload is not valid Kafka wire. */
+  private[graft] def recordStats(payload: Array[Byte]): RecordStats = {
+    var n = 0L
+    var minOff = Long.MaxValue; var maxOff = Long.MinValue
+    var minTs = Long.MaxValue; var maxTs = Long.MinValue
+    for (b <- graft.records.KafkaWireCodec.batches(payload); r <- b.records) {
+      n += 1
+      val off = b.baseOffset + r.offsetDelta
+      val ts = b.baseTimestamp + r.timestampDelta
+      if (off < minOff) minOff = off; if (off > maxOff) maxOff = off
+      if (ts < minTs) minTs = ts; if (ts > maxTs) maxTs = ts
+    }
+    if (n == 0L) RecordStats(0L, 0L, -1L, 0L, -1L)
+    else RecordStats(n, minOff, maxOff, minTs, maxTs)
+  }
 
   def uploadOne(
       storage: StorageBackend,
@@ -197,9 +206,11 @@ object SegmentUploadJob {
       val spec = TransformSpec(cfg.chunkSize, doCompress, dk.map(_.dataKey),
         dk.map(_.aad).getOrElse(Array.emptyByteArray), cfg.compressionCodec)
       val seg = TransformPipeline.transform(payload, spec)
-      val body = seg.concatenated
-      limiter.foreach(_.acquire(body.length.toLong))
-      storage.uploadBytes(body, logKey)
+      val logSize = seg.index.transformedFileSize
+      limiter.foreach(_.acquire(logSize))
+      // the chunks go up as one stream: no segment-sized concatenation
+      val chunks = seg.chunks.iterator.map(c => new ByteArrayInputStream(c): InputStream)
+      storage.upload(new SequenceInputStream(chunks.asJavaEnumeration), logKey)
       // T10: index files — encrypted (same data key) but never compressed.
       val segmentIndexes = indexes.map(ix =>
         IndexTransform.upload(storage, segKey, ix, dk.map(_.dataKey),
@@ -216,8 +227,8 @@ object SegmentUploadJob {
           .map(i => i.position.toLong + i.size).foldLeft(0L)(math.max)
       }.getOrElse(0L)
       val wire = SegmentCustomMetadata.serialize(SegmentCustomMetadata.forUpload(
-        body.length.toLong + indexesExtent + manifestBytes.length, "", segKey))
-      UploadResult(segKey, payload.length.toLong, seg.index.transformedFileSize,
+        logSize + indexesExtent + manifestBytes.length, "", segKey))
+      UploadResult(segKey, payload.length.toLong, logSize,
         seg.index.chunkCount, doCompress, cfg.encryption, success = true, error = "",
         custom_metadata = wire)
     } catch {

@@ -1,6 +1,6 @@
 package graft.records
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
@@ -68,7 +68,7 @@ object BatchCompression {
   private[records] def maxDecompressed(compressedLen: Int): Long =
     math.min(math.max(4096L * compressedLen, 64L << 20), 1L << 30)
 
-  private def readBounded(in: java.io.InputStream, compressedLen: Int): Array[Byte] = {
+  private def readBounded(in: InputStream, compressedLen: Int): Array[Byte] = {
     val limit = maxDecompressed(compressedLen)
     val out = new ByteArrayOutputStream(math.min(compressedLen.toLong * 4 + 64, 1L << 20).toInt)
     val buf = new Array[Byte](64 * 1024)
@@ -84,21 +84,31 @@ object BatchCompression {
     out.toByteArray
   }
 
-  def decompress(codec: Int, payload: Array[Byte]): Array[Byte] = codec match {
-    case None => payload
-    case Gzip =>
-      val in = new GZIPInputStream(new ByteArrayInputStream(payload))
-      try readBounded(in, payload.length) finally in.close()
-    case Snappy =>
-      val in = new SnappyInputStream(new ByteArrayInputStream(payload))
-      try readBounded(in, payload.length) finally in.close()
-    case Lz4 => Lz4Frame.decompress(payload)
-    case Zstd =>
+  def decompress(codec: Int, payload: Array[Byte]): Array[Byte] = {
+    val b = decompressed(codec, payload, 0, payload.length)
+    if (b.position() == 0 && b.limit() == b.array().length) b.array()
+    else java.util.Arrays.copyOfRange(b.array(), b.position(), b.limit())
+  }
+
+  /** The body of the batch payload `src[off, off + len)`: a buffer whose
+    * remaining bytes are the decompressed records. Codec none wraps `src`
+    * without a copy, and LZ4 decodes into one array; the batch parser
+    * reads straight from the buffer. */
+  private[records] def decompressed(codec: Int, src: Array[Byte], off: Int, len: Int): ByteBuffer = {
+    def stream(wrap: InputStream => InputStream): ByteBuffer = {
+      val in = wrap(new ByteArrayInputStream(src, off, len))
+      try ByteBuffer.wrap(readBounded(in, len)) finally in.close()
+    }
+    codec match {
+      case None => ByteBuffer.wrap(src, off, len)
+      case Gzip => stream(new GZIPInputStream(_))
+      case Snappy => stream(new SnappyInputStream(_))
+      case Lz4 => Lz4Frame.decompress(src, off, len, maxDecompressed(len))
       // streaming read: decodes frames with OR without the embedded
       // content size (foreign producers use streaming writers that omit it)
-      val in = new ZstdInputStream(new ByteArrayInputStream(payload))
-      try readBounded(in, payload.length) finally in.close()
-    case other => throw new IllegalArgumentException(s"unsupported compression codec $other")
+      case Zstd => stream(new ZstdInputStream(_))
+      case other => throw new IllegalArgumentException(s"unsupported compression codec $other")
+    }
   }
 }
 
@@ -158,8 +168,12 @@ private[records] object Lz4Frame {
     out.toByteArray
   }
 
-  def decompress(payload: Array[Byte]): Array[Byte] = {
-    val buf = ByteBuffer.wrap(payload).order(ByteOrder.LITTLE_ENDIAN)
+  /** Decode the frame `src[off, off + len)` into one array, each block
+    * straight into place; the result is a buffer over its first
+    * content-length bytes. `cap` is the decompression-bomb cap, checked
+    * against the declared content size up front and after every block. */
+  def decompress(src: Array[Byte], off: Int, len: Int, cap: Long): ByteBuffer = {
+    val buf = ByteBuffer.wrap(src, off, len).order(ByteOrder.LITTLE_ENDIAN)
     require(buf.remaining() >= 7, "LZ4 frame too short")
     require(buf.getInt() == Magic, "not an LZ4 frame (bad magic)")
     val descStart = buf.position()
@@ -176,19 +190,15 @@ private[records] object Lz4Frame {
     val contentSize = if (hasContentSize) buf.getLong() else -1L
     val descLen = buf.position() - descStart
     val hc = buf.get() & 0xFF
-    val computedHc = (xx.hash(payload, descStart, descLen, 0) >> 8) & 0xFF
+    val computedHc = (xx.hash(src, descStart, descLen, 0) >> 8) & 0xFF
     require(hc == computedHc, f"LZ4 frame header checksum mismatch: stored 0x$hc%02x computed 0x$computedHc%02x")
 
     val decomp = factory.safeDecompressor()
-    // running bomb cap: the declared content size is only verified after a
-    // full decode, so enforce the growth bound block-by-block as well
-    val limit = BatchCompression.maxDecompressed(payload.length)
-    require(contentSize < 0 || contentSize <= limit,
-      s"LZ4 frame declares $contentSize bytes from a ${payload.length}-byte payload (decompression bomb?)")
-    val out = new ByteArrayOutputStream(
-      if (contentSize >= 0 && contentSize <= Int.MaxValue) contentSize.toInt else maxBlock)
-    val block = new Array[Byte](maxBlock)
-    var produced = 0L
+    require(contentSize < 0 || contentSize <= cap,
+      s"LZ4 frame declares $contentSize bytes from a $len-byte payload (decompression bomb?)")
+    // every block decodes into at least maxBlock bytes of room
+    var out = new Array[Byte]((math.max(contentSize, 0L) + maxBlock).toInt)
+    var produced = 0
     var endSeen = false
     while (!endSeen) {
       require(buf.remaining() >= 4, "truncated LZ4 frame (missing end mark)")
@@ -196,35 +206,37 @@ private[records] object Lz4Frame {
       if (sizeWord == 0) endSeen = true
       else {
         val stored = (sizeWord & 0x80000000) != 0
-        val len = sizeWord & 0x7FFFFFFF
-        require(len <= maxBlock, s"LZ4 block size $len exceeds frame max $maxBlock")
-        require(buf.remaining() >= len, "truncated LZ4 block")
-        val off = buf.position()
-        buf.position(off + len)
+        val blockLen = sizeWord & 0x7FFFFFFF
+        require(blockLen <= maxBlock, s"LZ4 block size $blockLen exceeds frame max $maxBlock")
+        require(buf.remaining() >= blockLen, "truncated LZ4 block")
+        val at = buf.position()
+        buf.position(at + blockLen)
         if (blockChecksum) {
           val bc = buf.getInt()
-          val computed = xx.hash(payload, off, len, 0)
+          val computed = xx.hash(src, at, blockLen, 0)
           require(bc == computed, "LZ4 block checksum mismatch")
         }
-        if (stored) { produced += len; out.write(payload, off, len) }
-        else {
-          val n = decomp.decompress(payload, off, len, block, 0)
-          produced += n
-          out.write(block, 0, n)
-        }
-        require(produced <= limit,
-          s"decompressed LZ4 frame exceeds $limit bytes from a ${payload.length}-byte payload (decompression bomb?)")
+        if (out.length - produced < maxBlock)
+          out = java.util.Arrays.copyOf(out,
+            math.min(math.max(out.length.toLong * 2, produced.toLong + maxBlock), cap + maxBlock).toInt)
+        val n =
+          if (stored) { System.arraycopy(src, at, out, produced, blockLen); blockLen }
+          else decomp.decompress(src, at, blockLen, out, produced, maxBlock)
+        produced += n
+        // running bomb cap: the declared content size is only verified
+        // after a full decode, so enforce the bound block by block as well
+        require(produced <= cap,
+          s"decompressed LZ4 frame exceeds $cap bytes from a $len-byte payload (decompression bomb?)")
       }
     }
-    val result = out.toByteArray
     if (contentChecksum) {
       require(buf.remaining() >= 4, "truncated LZ4 frame (missing content checksum)")
       val cc = buf.getInt()
-      val computed = xx.hash(result, 0, result.length, 0)
+      val computed = xx.hash(out, 0, produced, 0)
       require(cc == computed, "LZ4 frame content checksum mismatch")
     }
-    require(contentSize < 0 || contentSize == result.length.toLong,
-      s"LZ4 frame content size mismatch: declared $contentSize got ${result.length}")
-    result
+    require(contentSize < 0 || contentSize == produced.toLong,
+      s"LZ4 frame content size mismatch: declared $contentSize got $produced")
+    ByteBuffer.wrap(out, 0, produced)
   }
 }

@@ -79,21 +79,33 @@ object KafkaWireCodec {
     } catch { case _: Exception => None }
   }
 
-  /** Parse all batches of a segment (I1's outer loop). */
-  def parseSegment(segment: Array[Byte]): Vector[Batch] = {
-    val out = Vector.newBuilder[Batch]
-    var pos = 0
-    while (pos + 12 <= segment.length) {
+  /** The batches of a segment, parsed one per `next()` (I1's outer loop):
+    * a reader holds one batch of records at a time, never the whole
+    * segment's.
+    *
+    * Validation is lazy, per batch. A CRC, magic or truncation error in
+    * batch k throws when batch k is reached, so a full scan still fails
+    * and never returns short data; a consumer that stops before batch k
+    * never sees that error. Use [[parseSegment]] to validate every batch
+    * up front. */
+  def batches(segment: Array[Byte]): Iterator[Batch] = new Iterator[Batch] {
+    private var pos = 0
+    override def hasNext: Boolean = pos + 12 <= segment.length
+    override def next(): Batch = {
+      if (!hasNext) throw new NoSuchElementException("no more batches in segment")
       val buf = ByteBuffer.wrap(segment, pos, segment.length - pos)
       val baseOffset = buf.getLong()
       val batchLength = buf.getInt()
       val total = 12 + batchLength
       require(pos + total <= segment.length, s"truncated batch at $pos")
-      out += parseBatch(segment, pos, baseOffset, batchLength)
+      val b = parseBatch(segment, pos, baseOffset, batchLength)
       pos += total
+      b
     }
-    out.result()
   }
+
+  /** Parse and validate all batches of a segment. */
+  def parseSegment(segment: Array[Byte]): Vector[Batch] = batches(segment).toVector
 
   private def parseBatch(segment: Array[Byte], start: Int, baseOffset: Long, batchLength: Int): Batch = {
     val buf = ByteBuffer.wrap(segment, start + 12, batchLength)
@@ -116,10 +128,7 @@ object KafkaWireCodec {
     val producerEpoch = buf.getShort()
     val baseSequence = buf.getInt()
     val recordCount = buf.getInt()
-    val payload = new Array[Byte](buf.remaining())
-    buf.get(payload)
-    val body = BatchCompression.decompress(attributes & 0x07, payload)
-    val rbuf = ByteBuffer.wrap(body)
+    val rbuf = BatchCompression.decompressed(attributes & 0x07, segment, buf.position(), buf.remaining())
     val records = Vector.tabulate(recordCount)(_ => parseRecord(rbuf))
     Batch(baseOffset, partitionLeaderEpoch, magic, attributes, lastOffsetDelta,
       baseTimestamp, maxTimestamp, producerId, producerEpoch, baseSequence, records, start)

@@ -78,7 +78,7 @@ object SegmentToRows {
   def fromSegmentBytes(spark: SparkSession, segments: Seq[(Int, Array[Byte])]): DataFrame = {
     val rows = spark.sparkContext.parallelize(segments, math.max(segments.size, 1))
       .flatMap { case (partition, bytes) =>
-        KafkaWireCodec.parseSegment(bytes).iterator.flatMap(b =>
+        KafkaWireCodec.batches(bytes).flatMap(b =>
           b.records.iterator.map(r => RowSchema.recordRow(b, r, partition)))
       }
     spark.createDataFrame(rows, RowSchema.rawSchema)
@@ -103,7 +103,7 @@ object SegmentToRows {
       val fs = hp.getFileSystem(conf.value)
       val in = fs.open(hp)
       val bytes = try in.readAllBytes() finally in.close()
-      KafkaWireCodec.parseSegment(bytes).iterator.flatMap(b =>
+      KafkaWireCodec.batches(bytes).flatMap(b =>
         b.records.iterator.map(r => RowSchema.recordRow(b, r, partition)))
     }
     spark.createDataFrame(rows, RowSchema.rawSchema)
@@ -115,7 +115,7 @@ object SegmentToRows {
       .select("content").rdd
       .flatMap { row =>
         val bytes = row.getAs[Array[Byte]](0)
-        KafkaWireCodec.parseSegment(bytes).iterator.flatMap(b =>
+        KafkaWireCodec.batches(bytes).flatMap(b =>
           b.records.iterator.map(r => RowSchema.recordRow(b, r, partition)))
       }
     spark.createDataFrame(rows, RowSchema.rawSchema)

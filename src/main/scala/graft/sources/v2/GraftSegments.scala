@@ -48,7 +48,8 @@ import graft.sources.StorageBackends
   *  - **Reading**: executor-side ranged fetch + detransform through the
   *    manifest-described pipeline ([[SegmentFetchJob.fetchRange]] — zstd /
   *    LZ4 / deflate, AES-GCM, RSA-wrapped keys), then the Kafka wire
-  *    parse ([[KafkaWireCodec.parseSegment]], CRC-verified). Decryption
+  *    parse ([[KafkaWireCodec.batches]]), one CRC-verified batch at a time
+  *    as rows are pulled, so a task holds one batch of records. Decryption
   *    keys arrive via options (base64 DER) — a deployment would plug a
   *    KMS here; the wiring is identical.
   *
@@ -831,7 +832,15 @@ final class SegmentsReaderFactory(conf: GraftSegments.SourceConf, required: Stru
   * ([[SegmentsReader.writer]]). `skipRows` > 0 carries a pushed OFFSET's
   * in-segment remainder: the wire is parsed (records are length-prefixed,
   * there is no index into the middle of a batch) but the first `skipRows`
-  * records are dropped before any column is written. */
+  * records are dropped before any column is written.
+  *
+  * Lazy and per batch: the whole segment is fetched and detransformed
+  * before the first row (every chunk's GCM tag and size is checked), but
+  * the wire is parsed one batch per pull ([[KafkaWireCodec.batches]]). A
+  * CRC or truncation error in batch k fails the task when batch k is
+  * reached, so a full scan fails and never returns short data; a query
+  * that stops earlier (a LIMIT) never reaches batch k and does not fail
+  * on it. */
 final class SegmentsReader(conf: GraftSegments.SourceConf, required: StructType, segKey: String,
                            skipRows: Long = 0L)
     extends PartitionReader[InternalRow] {
@@ -847,7 +856,7 @@ final class SegmentsReader(conf: GraftSegments.SourceConf, required: StructType,
       else
         SegmentFetchJob.fetchRange(conf.jobConfig, segKey, BytesRange(0L, Long.MaxValue - 1L))
     var toSkip = skipRows
-    KafkaWireCodec.parseSegment(bytes).iterator.flatMap { b =>
+    KafkaWireCodec.batches(bytes).flatMap { b =>
       // batch-level skip of a pushed OFFSET's remainder: drop whole-batch
       // prefixes cheaply, zero overhead on the skip-free (common) path
       val rs =
@@ -1023,9 +1032,11 @@ final class SegmentsAggReader(conf: GraftSegments.SourceConf,
         payloadFallbackReads.incrementAndGet()
         val bytes = SegmentFetchJob.fetchRange(conf.jobConfig, segKey,
           BytesRange(0L, Long.MaxValue - 1L))
-        graft.operators.SegmentUploadJob.recordStatsOf(bytes).getOrElse(
-          throw new IllegalStateException(
-            s"segment $segKey has neither manifest recordStats nor parseable payload"))
+        try graft.operators.SegmentUploadJob.recordStats(bytes)
+        catch {
+          case scala.util.control.NonFatal(e) => throw new IllegalStateException(
+            s"segment $segKey has neither manifest recordStats nor parseable payload: ${e.getMessage}", e)
+        }
     }
     def v(c: AggCol): Any = c match {
       case CountAll => stats.count

@@ -148,6 +148,42 @@ class TransformsEndToEndSpec extends AnyFunSuite {
       java.util.Arrays.copyOfRange(payload, chunkSize - 100, chunkSize + 101)))
   }
 
+  /** Ciphertext ‖ tag from one JCE `doFinal`: the pre-slicing writer. */
+  private def oneShotEncrypt(input: Array[Byte], iv: Array[Byte]): Array[Byte] = {
+    import javax.crypto.Cipher
+    import javax.crypto.spec.{GCMParameterSpec, SecretKeySpec}
+    val c = Cipher.getInstance("AES/GCM/NoPadding")
+    c.init(Cipher.ENCRYPT_MODE, new SecretKeySpec(key, "AES"), new GCMParameterSpec(Transforms.GcmTagLengthBits, iv))
+    c.updateAAD(aad)
+    c.doFinal(input)
+  }
+
+  test("sliced GCM encrypt is byte-identical to a one-shot JCE doFinal at slice boundaries") {
+    for (n <- Seq(0, 1, 8191, 8192, 8193, 4 << 20, (4 << 20) + 5)) {
+      // a fixed IV per length: JCE refuses to reuse key + IV for encryption
+      val iv = java.nio.ByteBuffer.allocate(Transforms.GcmIvLength).putInt(0, n).array()
+      val plain = new Array[Byte](n)
+      new Random(n.toLong).nextBytes(plain)
+      val sliced = Transforms.encryptWithIv(plain, key, aad, iv)
+      assert(sliced.length == Transforms.GcmIvLength + n + Transforms.GcmTagLength, s"length at $n")
+      assert(java.util.Arrays.equals(sliced, iv ++ oneShotEncrypt(plain, iv)),
+        s"ciphertext differs at $n")
+      assert(java.util.Arrays.equals(Transforms.decrypt(sliced, key, aad), plain), s"decrypt at $n")
+    }
+  }
+
+  test("a chunk written by one-shot GCM decrypts, and a flipped ciphertext byte fails the tag") {
+    val iv = Array.tabulate[Byte](Transforms.GcmIvLength)(i => (100 - i).toByte)
+    val plain = original.take(3 * 8192 + 17)
+    val chunk = iv ++ oneShotEncrypt(plain, iv)
+    assert(java.util.Arrays.equals(Transforms.decrypt(chunk, key, aad), plain))
+    for (written <- Seq(chunk, Transforms.encryptWithIv(plain, key, aad, iv))) {
+      val bad = written.clone()
+      bad(Transforms.GcmIvLength + 9000) = (bad(Transforms.GcmIvLength + 9000) ^ 0x01).toByte
+      intercept[javax.crypto.AEADBadTagException](Transforms.decrypt(bad, key, aad))
+    }
+  }
+
   test("chunked stream reader handles partial reads") {
     // a stream that returns 1 byte at a time
     val in = new java.io.InputStream {

@@ -109,4 +109,24 @@ class ScrubJobSpec extends SparkSpec {
     assert(!rows("junk-seg").getAs[Boolean]("ok"))
     assert(rows("junk-seg").getAs[String]("issue").startsWith("wire-invalid"))
   }
+
+  test("verifyWire: a bad CRC in the last batch is still wire-invalid") {
+    val store = Files.createTempDirectory("graft-scrub-crc").toString
+    val cfg = SegmentJobConfig.withGeneratedKeys(store).copy(chunkSize = 2048)
+    import graft.records.KafkaWireCodec
+    val batches = (0 until 3).map { b =>
+      KafkaWireCodec.writeBatch(KafkaWireCodec.buildBatch(b * 10L, 1700000000000L + b,
+        (0 until 10).map(i =>
+          (s"k$b-$i".getBytes("UTF-8"), s"v$b-$i".getBytes("UTF-8"), Seq.empty[KafkaWireCodec.Header]))))
+    }
+    val seg = batches.reduce(_ ++ _)
+    val last = seg.length - batches.last.length
+    seg(last + 30) = (seg(last + 30) ^ 0xFF).toByte // inside the last batch's records
+    SegmentUploadJob.uploadOne(FileSystemStorage(store), cfg.ring, None, cfg, "crc-seg", seg)
+    val m = scrubMap(cfg, verifyWire = true)
+    assert(m("crc-seg")._1 == false)
+    assert(m("crc-seg")._2.startsWith("wire-invalid") && m("crc-seg")._2.contains("CRC mismatch"),
+      m("crc-seg")._2)
+    assert(scrubMap(cfg)("crc-seg")._1, "without verifyWire the chunk checks pass")
+  }
 }

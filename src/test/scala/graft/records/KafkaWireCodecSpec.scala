@@ -2,6 +2,7 @@ package graft.records
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
+import java.nio.ByteBuffer
 import graft.testkit.Props.forAllN
 import KafkaWireCodec._
 
@@ -186,6 +187,103 @@ class KafkaWireCodecSpec extends AnyFunSuite {
     val framed = BatchCompression.compress(CodecLz4, data)
     framed(4) = (framed(4) ^ 0x10).toByte // toggle block-checksum flag
     intercept[IllegalArgumentException](BatchCompression.decompress(CodecLz4, framed))
+  }
+
+  /** A batch as comparable values (records carry arrays, which `==`
+    * compares by reference). */
+  private def comparable(b: Batch) =
+    (b.copy(records = Vector.empty), b.records.map(r =>
+      (r.offsetDelta, r.timestampDelta, Option(r.key).map(_.toSeq), Option(r.value).map(_.toSeq),
+        r.headers.map(h => (h.key, Option(h.value).map(_.toSeq))))))
+
+  test("batches streams exactly what parseSegment returns, for every codec fixture") {
+    val mixed = AllCodecs.zipWithIndex.map { case ((codec, _), i) =>
+      writeBatch(buildBatch(i * 10L, 1000L + i,
+        (0 until 3).map(j => (kb(s"k$i-$j"), kb(s"v$i-$j" * 50), Seq(Header("h", null)))),
+        compression = codec))
+    }.reduce(_ ++ _)
+    val nulls = writeBatch(buildBatch(5L, 1000L, Seq((null, kb("v"), Seq.empty), (kb("k"), null, Seq.empty))))
+    val fixtures = AllCodecs.map { case (codec, name) => name -> e2eStyleSegment(codec)._1 } ++
+      Seq("mixed" -> mixed, "nulls" -> nulls, "empty" -> Array.emptyByteArray)
+    fixtures.foreach { case (name, seg) =>
+      assert(batches(seg).toVector.map(comparable) == parseSegment(seg).map(comparable), name)
+    }
+  }
+
+  test("batches is lazy: a bad CRC in the last batch surfaces only when that batch is reached") {
+    val (seg, built) = e2eStyleSegment()
+    val last = built.last.byteOffset
+    seg(last + 30) = (seg(last + 30) ^ 0xFF).toByte
+    val it = batches(seg)
+    (0 until built.size - 1).foreach(i => assert(it.next().baseOffset == built(i).baseOffset))
+    val e = intercept[IllegalArgumentException](it.next())
+    assert(e.getMessage.contains("CRC mismatch"))
+    intercept[IllegalArgumentException](parseSegment(seg))
+  }
+
+  test("LZ4 frame decodes multi-block frames with stored blocks in place, every check intact") {
+    import net.jpountz.lz4.LZ4FrameOutputStream
+    import LZ4FrameOutputStream.{BLOCKSIZE, FLG}
+    val noise = new Array[Byte](140 * 1024); new java.util.Random(3).nextBytes(noise)
+    // compressible, incompressible (stored) and compressible 64 KiB blocks
+    val data = ("block one " * 15000).getBytes("UTF-8") ++ noise ++ ("block three " * 9000).getBytes("UTF-8")
+    def decodeAt(frame: Array[Byte]): Array[Byte] = {
+      // the frame sits inside a larger array, as a batch payload does
+      val padded = Array.fill[Byte](5)(9) ++ frame ++ Array.fill[Byte](3)(9)
+      val b = Lz4Frame.decompress(padded, 5, frame.length, BatchCompression.maxDecompressed(frame.length))
+      java.util.Arrays.copyOfRange(b.array(), b.position(), b.limit())
+    }
+    val ours = Lz4Frame.compress(data)
+    val sizeWords = {
+      val b = ByteBuffer.wrap(ours).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      b.position(7)
+      Iterator.continually(b.getInt()).takeWhile(_ != 0)
+        .map { w => b.position(b.position() + (w & 0x7FFFFFFF)); w }.toVector
+    }
+    assert(sizeWords.size == 7 && sizeWords.exists(_ < 0) && sizeWords.exists(_ > 0),
+      "fixture must hold compressed and stored (high-bit) blocks")
+    assert(java.util.Arrays.equals(decodeAt(ours), data))
+    // a foreign frame: 64 KiB blocks with block + content checksums and
+    // the declared content size
+    val bos = new java.io.ByteArrayOutputStream()
+    val fout = new LZ4FrameOutputStream(bos, BLOCKSIZE.SIZE_64KB, data.length.toLong,
+      FLG.Bits.BLOCK_INDEPENDENCE, FLG.Bits.BLOCK_CHECKSUM, FLG.Bits.CONTENT_CHECKSUM, FLG.Bits.CONTENT_SIZE)
+    fout.write(data); fout.close()
+    val foreign = bos.toByteArray
+    assert(java.util.Arrays.equals(decodeAt(foreign), data))
+    assert(java.util.Arrays.equals(BatchCompression.decompress(CodecLz4, foreign), data))
+    // a flipped byte in the last block's data fails its block checksum
+    val badBlock = foreign.clone()
+    badBlock(foreign.length - 20) = (badBlock(foreign.length - 20) ^ 0x01).toByte
+    intercept[IllegalArgumentException](decodeAt(badBlock))
+    // a flipped content checksum fails after the decode
+    val badContent = foreign.clone()
+    badContent(foreign.length - 1) = (badContent(foreign.length - 1) ^ 0x01).toByte
+    assert(intercept[IllegalArgumentException](decodeAt(badContent)).getMessage.contains("content checksum"))
+    // a declared content size one byte short of the blocks' total fails:
+    // patch the size field (bytes 6-13) and re-seal the header checksum
+    val patched = foreign.clone()
+    ByteBuffer.wrap(patched).order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(6, data.length - 1L)
+    val xx = net.jpountz.xxhash.XXHashFactory.fastestInstance().hash32()
+    patched(14) = ((xx.hash(patched, 4, 10, 0) >> 8) & 0xFF).toByte
+    assert(intercept[IllegalArgumentException](decodeAt(patched)).getMessage.contains("content size mismatch"))
+  }
+
+  test("LZ4 bomb cap: a declared size past the cap fails up front, a decode past it fails mid-frame") {
+    val zeros = new Array[Byte](1 << 20)
+    val frame = Lz4Frame.compress(zeros) // 16 blocks of 64 KiB
+    assert(Lz4Frame.decompress(frame, 0, frame.length, 1L << 20).remaining() == (1 << 20))
+    val e = intercept[IllegalArgumentException](Lz4Frame.decompress(frame, 0, frame.length, 256L * 1024))
+    assert(e.getMessage.contains("exceeds 262144 bytes") && e.getMessage.contains("bomb"))
+    import net.jpountz.lz4.LZ4FrameOutputStream
+    val bos = new java.io.ByteArrayOutputStream()
+    val fout = new LZ4FrameOutputStream(bos, LZ4FrameOutputStream.BLOCKSIZE.SIZE_64KB, zeros.length.toLong,
+      LZ4FrameOutputStream.FLG.Bits.BLOCK_INDEPENDENCE, LZ4FrameOutputStream.FLG.Bits.CONTENT_SIZE)
+    fout.write(zeros); fout.close()
+    val declared = bos.toByteArray
+    val d = intercept[IllegalArgumentException](Lz4Frame.decompress(declared, 0, declared.length, 1L << 19))
+    assert(d.getMessage.contains("declares 1048576 bytes"))
+    assert(Lz4Frame.decompress(declared, 0, declared.length, 1L << 20).remaining() == (1 << 20))
   }
 
   test("codec payload round trip law: random bodies, all codecs") {

@@ -675,6 +675,29 @@ class GraftSegmentsSourceSpec extends SparkSpec {
       || String.valueOf(c.getMessage).toLowerCase.contains("tag mismatch")), ex.toString)
   }
 
+  test("a bad CRC in a segment's last batch fails a full scan with the CRC message") {
+    val store = Files.createTempDirectory("dsv2-badcrc").toString
+    val cfg = SegmentJobConfig.withGeneratedKeys(store).copy(chunkSize = 512)
+    val batches = (0 until 3).map { b =>
+      writeBatch(buildBatch(b * 10L, 1700000000000L + b,
+        (0 until 10).map(i => (kb(s"k$b-$i"), kb(s"v$b-$i"), Seq.empty[Header]))))
+    }
+    val seg = batches.reduce(_ ++ _)
+    val last = seg.length - batches.last.length
+    seg(last + 30) = (seg(last + 30) ^ 0xFF).toByte // inside the last batch's records
+    val up = SegmentUploadJob.uploadOne(FileSystemStorage(store), cfg.ring, None, cfg, "badcrc", seg)
+    assert(up.success, up.error)
+    // count() answers from the payload (the manifest has no stats for
+    // invalid wire); collect() pulls every row through the scan reader
+    Seq[org.apache.spark.sql.DataFrame => Any](_.count(), _.select("kafka.offset").collect()).foreach { run =>
+      val ex = intercept[org.apache.spark.SparkException](run(reader(store, cfg).load()))
+      val chain = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).take(10).toSeq
+      assert(chain.exists(c => String.valueOf(c.getMessage).contains("CRC mismatch")), ex.toString)
+    }
+    // a query that stops inside the valid first batch never reaches it
+    assert(reader(store, cfg).load().select("kafka.offset").limit(1).collect().length == 1)
+  }
+
   test("round trip preserves batch metadata exactly (vs SegmentToRows on the raw file)") {
     val (store, cfg, keys) = setup()
     val viaSource = reader(store, cfg).load()
