@@ -172,12 +172,15 @@ object SegmentUploadJob {
     var n = 0L
     var minOff = Long.MaxValue; var maxOff = Long.MinValue
     var minTs = Long.MaxValue; var maxTs = Long.MinValue
-    for (b <- graft.records.KafkaWireCodec.batches(payload); r <- b.records) {
-      n += 1
-      val off = b.baseOffset + r.offsetDelta
-      val ts = b.baseTimestamp + r.timestampDelta
-      if (off < minOff) minOff = off; if (off > maxOff) maxOff = off
-      if (ts < minTs) minTs = ts; if (ts > maxTs) maxTs = ts
+    for (b <- graft.records.KafkaWireCodec.batchViews(payload)) {
+      val c = b.cursor
+      while (c.next()) {
+        n += 1
+        val off = b.baseOffset + c.offsetDelta
+        val ts = b.baseTimestamp + c.timestampDelta
+        if (off < minOff) minOff = off; if (off > maxOff) maxOff = off
+        if (ts < minTs) minTs = ts; if (ts > maxTs) maxTs = ts
+      }
     }
     if (n == 0L) RecordStats(0L, 0L, -1L, 0L, -1L)
     else RecordStats(n, minOff, maxOff, minTs, maxTs)

@@ -2,9 +2,14 @@ package graft.records
 
 import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
+import scala.collection.mutable.ArrayBuffer
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, DateTimeUtils, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.array.ByteArrayMethods
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Minimal Avro binary codec + Avro→Spark type conversion, written from the
   * public Avro 1.11 specification — the I2/I4/I12 surface of the reference
@@ -122,8 +127,9 @@ object AvroLite {
   // --- decode (I2) ----------------------------------------------------------
 
   /** Decode an Avro binary payload into Spark-compatible values (Row for
-    * records, java.sql types for temporals). */
-  def decode(schema: Schema, buf: ByteBuffer): Any = schema match {
+    * records, java.sql types for temporals). `field` names the enclosing
+    * record field in the errors of malformed lengths and counts. */
+  def decode(schema: Schema, buf: ByteBuffer, field: String = RootField): Any = schema match {
     case ANull => null
     case ABoolean => buf.get() != 0
     case AInt => Varint.readVarint(buf)
@@ -132,16 +138,11 @@ object AvroLite {
       buf.order(ByteOrder.LITTLE_ENDIAN); val v = buf.getFloat; buf.order(ByteOrder.BIG_ENDIAN); v
     case ADouble =>
       buf.order(ByteOrder.LITTLE_ENDIAN); val v = buf.getDouble; buf.order(ByteOrder.BIG_ENDIAN); v
-    case ABytes => readBytes(buf)
-    case AString => new String(readBytes(buf), "UTF-8")
-    case AUuid => new String(readBytes(buf), "UTF-8")
-    case AFixed(_, size) => { val b = new Array[Byte](size); buf.get(b); b }
-    case ADecimal(p, s, fixedSize) =>
-      val unscaled = fixedSize match {
-        case Some(size) => { val b = new Array[Byte](size); buf.get(b); new java.math.BigInteger(b) }
-        case None => new java.math.BigInteger(readBytes(buf))
-      }
-      new java.math.BigDecimal(unscaled, s)
+    case ABytes => readBytes(buf, readLength(buf, field))
+    case AString | AUuid => new String(readBytes(buf, readLength(buf, field)), "UTF-8")
+    case AFixed(_, size) => readBytes(buf, size)
+    case ADecimal(_, s, fixedSize) =>
+      new java.math.BigDecimal(new java.math.BigInteger(readBytes(buf, decimalLength(buf, fixedSize, field))), s)
     case ADate => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(Varint.readVarint(buf).toLong))
     case ATimeMillis => Varint.readVarint(buf)
     case ATimestampMillis => java.sql.Timestamp.from(java.time.Instant.ofEpochMilli(Varint.readVarlong(buf)))
@@ -151,36 +152,218 @@ object AvroLite {
         Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
     case AArray(items) =>
       val out = Vector.newBuilder[Any]
-      readBlocks(buf)(out += decode(items, buf))
+      readBlocks(buf, field, minBytes(items))(out += decode(items, buf, field))
       out.result()
     case AMap(values) =>
       val out = Map.newBuilder[String, Any]
-      readBlocks(buf)(out += (new String(readBytes(buf), "UTF-8") -> decode(values, buf)))
-      out.result()
-    case AUnionNullable(inner) =>
-      Varint.readVarlong(buf) match {
-        case 0 => null
-        case 1 => decode(inner, buf)
-        case i => throw new IllegalArgumentException(s"union index $i out of range")
+      readBlocks(buf, field, 1 + minBytes(values)) {
+        out += (new String(readBytes(buf, readLength(buf, field)), "UTF-8") -> decode(values, buf, field))
       }
-    case ARecord(_, fields) => Row(fields.map(f => decode(f.schema, buf)): _*)
+      out.result()
+    case AUnionNullable(inner) => if (unionPresent(buf, field)) decode(inner, buf, field) else null
+    case ARecord(_, fields) => Row(fields.map(f => decode(f.schema, buf, f.name)): _*)
   }
 
-  private def readBytes(buf: ByteBuffer): Array[Byte] = {
-    val len = Varint.readVarint(buf)
+  // --- read and skip helpers, shared by both decoders -----------------------
+
+  /** The field name errors report for a top-level value. */
+  private val RootField = "<root>"
+
+  /** The most items one array or map may hold: Spark's array bound. */
+  private val MaxItems: Long = ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH.toLong
+
+  private def malformed(field: String, what: String): Nothing =
+    throw new IllegalArgumentException(s"malformed avro in field '$field': $what")
+
+  /** A bytes or string length prefix, checked against the bytes left. */
+  private def readLength(buf: ByteBuffer, field: String): Int = {
+    val len = Varint.readVarlong(buf)
+    if (len < 0 || len > buf.remaining()) malformed(field, s"length $len, ${buf.remaining()} bytes left")
+    len.toInt
+  }
+
+  private def decimalLength(buf: ByteBuffer, fixedSize: Option[Int], field: String): Int = {
+    val len = fixedSize match {
+      case Some(size) => size
+      case None => readLength(buf, field)
+    }
+    if (len == 0) malformed(field, "empty decimal")
+    len
+  }
+
+  private def readBytes(buf: ByteBuffer, len: Int): Array[Byte] = {
     val b = new Array[Byte](len)
     buf.get(b)
     b
   }
 
-  private def readBlocks(buf: ByteBuffer)(item: => Unit): Unit = {
+  private def skipBytes(buf: ByteBuffer, len: Int, field: String): Unit = {
+    if (len > buf.remaining()) malformed(field, s"$len bytes to skip, ${buf.remaining()} left")
+    buf.position(buf.position() + len)
+  }
+
+  /** A `[null, T]` union's branch: true when T follows. */
+  private def unionPresent(buf: ByteBuffer, field: String): Boolean =
+    Varint.readVarlong(buf) match {
+      case 0 => false
+      case 1 => true
+      case i => malformed(field, s"union index $i out of range")
+    }
+
+  /** The fewest bytes one value of `s` takes on the wire. */
+  private def minBytes(s: Schema): Int = s match {
+    case ANull => 0
+    case AFloat => 4
+    case ADouble => 8
+    case AFixed(_, size) => size
+    case ADecimal(_, _, Some(size)) => size
+    case ARecord(_, fields) => fields.map(f => minBytes(f.schema)).sum
+    case _ => 1 // a varint, a length prefix, a union index or a block count
+  }
+
+  /** Runs `item` once per item of an array or map. A block's count is
+    * checked before any item is read: the items must fit in the bytes left
+    * (`itemBytes` each, at least) and the collection in [[MaxItems]], so a
+    * corrupt count fails at once instead of spinning. With `skipSized`, a
+    * block that declares its byte size (a negative count) is jumped over
+    * without visiting its items. */
+  private def readBlocks(buf: ByteBuffer, field: String, itemBytes: Int,
+                                  skipSized: Boolean = false)(item: => Unit): Unit = {
+    var total = 0L
     var count = Varint.readVarlong(buf)
     while (count != 0) {
-      if (count < 0) { Varint.readVarlong(buf); count = -count } // block size, ignored
-      var i = 0L
-      while (i < count) { item; i += 1 }
+      var sized = false
+      if (count < 0) {
+        if (count == Long.MinValue) malformed(field, s"block count $count")
+        count = -count
+        val size = Varint.readVarlong(buf)
+        if (size < 0 || size > buf.remaining()) malformed(field, s"block size $size, ${buf.remaining()} bytes left")
+        if (skipSized) { buf.position(buf.position() + size.toInt); sized = true }
+      }
+      total += count
+      if (total > MaxItems) malformed(field, s"$total items, more than $MaxItems")
+      if (!sized) {
+        if (count * itemBytes > buf.remaining())
+          malformed(field, s"block of $count items, ${buf.remaining()} bytes left")
+        var i = 0L
+        while (i < count) { item; i += 1 }
+      }
       count = Varint.readVarlong(buf)
     }
+  }
+
+  /** Moves `buf` past one value of `s` without decoding it, using Avro's
+    * length prefixes, fixed sizes and sized blocks. */
+  private def skip(s: Schema, buf: ByteBuffer, field: String): Unit = s match {
+    case ANull => ()
+    case ABoolean => skipBytes(buf, 1, field)
+    case AInt | ALong | ADate | ATimeMillis | ATimestampMillis | ATimestampMicros => Varint.readVarlong(buf)
+    case AFloat => skipBytes(buf, 4, field)
+    case ADouble => skipBytes(buf, 8, field)
+    case ABytes | AString | AUuid | ADecimal(_, _, None) => skipBytes(buf, readLength(buf, field), field)
+    case AFixed(_, size) => skipBytes(buf, size, field)
+    case ADecimal(_, _, Some(size)) => skipBytes(buf, size, field)
+    case AArray(items) => readBlocks(buf, field, minBytes(items), skipSized = true)(skip(items, buf, field))
+    case AMap(values) =>
+      readBlocks(buf, field, 1 + minBytes(values), skipSized = true) {
+        skipBytes(buf, readLength(buf, field), field)
+        skip(values, buf, field)
+      }
+    case AUnionNullable(inner) => if (unionPresent(buf, field)) skip(inner, buf, field)
+    case ARecord(_, fields) => fields.foreach(f => skip(f.schema, buf, f.name))
+  }
+
+  // --- decode straight to Catalyst values -------------------------------------
+
+  /** A decoder from Avro binary straight to Catalyst values: `InternalRow`
+    * for records, `UTF8String`, `ArrayData`, `MapData`, `Decimal`, days
+    * for dates and micros for timestamps. It is built once per schema and
+    * reused for every value; [[TypedDecode]] runs one per task.
+    *
+    * `selected` (ascending field ordinals of a top-level record) prunes the
+    * decode: the result is a row of those fields only, every other field
+    * is skipped by its length prefix, and the fields after the last
+    * selected one are not read at all. The buffer must be little-endian
+    * (Avro's float and double order); varints do not depend on it.
+    * Strings are views over the buffer's array, not copies. */
+  def catalystReader(schema: Schema, selected: Option[Seq[Int]] = None): ByteBuffer => Any =
+    (schema, selected) match {
+      case (ARecord(_, fields), Some(sel)) =>
+        require(sel.nonEmpty && sel == sel.distinct.sorted && sel.last < fields.length,
+          s"selection $sel is not ascending ordinals of ${fields.length} fields")
+        val last = sel.last
+        val width = sel.length
+        val slot = Array.fill(last + 1)(-1)
+        sel.zipWithIndex.foreach { case (f, i) => slot(f) = i }
+        val read = Array.tabulate(last + 1)(i =>
+          if (slot(i) >= 0) catalystReader(fields(i).schema, fields(i).name) else null)
+        val skipped = fields.take(last + 1).toArray
+        buf => {
+          val out = new Array[Any](width)
+          var i = 0
+          while (i <= last) {
+            if (slot(i) >= 0) out(slot(i)) = read(i)(buf) else skip(skipped(i).schema, buf, skipped(i).name)
+            i += 1
+          }
+          new GenericInternalRow(out)
+        }
+      case _ => catalystReader(schema, RootField)
+    }
+
+  private def catalystReader(s: Schema, field: String): ByteBuffer => Any = s match {
+    case ANull => _ => null
+    case ABoolean => buf => buf.get() != 0
+    case AInt | ATimeMillis | ADate => buf => Varint.readVarint(buf)
+    case ALong | ATimestampMicros => buf => Varint.readVarlong(buf)
+    case ATimestampMillis => buf => DateTimeUtils.millisToMicros(Varint.readVarlong(buf))
+    case AFloat => buf => buf.getFloat
+    case ADouble => buf => buf.getDouble
+    case ABytes => buf => readBytes(buf, readLength(buf, field))
+    case AFixed(_, size) => buf => readBytes(buf, size)
+    case AString | AUuid => buf => {
+      val len = readLength(buf, field)
+      val v = UTF8String.fromBytes(buf.array(), buf.arrayOffset() + buf.position(), len)
+      buf.position(buf.position() + len)
+      v
+    }
+    case ADecimal(p, sc, fixedSize) => buf => {
+      val len = decimalLength(buf, fixedSize, field)
+      if (len > buf.remaining()) malformed(field, s"decimal of $len bytes, ${buf.remaining()} left")
+      val unscaled = new java.math.BigInteger(buf.array(), buf.arrayOffset() + buf.position(), len)
+      buf.position(buf.position() + len)
+      val d = Decimal(new java.math.BigDecimal(unscaled, sc))
+      if (!d.changePrecision(p, sc)) malformed(field, s"decimal $d exceeds precision $p")
+      d
+    }
+    case AArray(items) =>
+      val item = catalystReader(items, field)
+      val itemBytes = minBytes(items)
+      buf => {
+        val out = ArrayBuffer.empty[Any]
+        readBlocks(buf, field, itemBytes)(out += item(buf))
+        new GenericArrayData(out.toArray)
+      }
+    case AMap(values) =>
+      val key = catalystReader(AString, field)
+      val value = catalystReader(values, field)
+      val itemBytes = 1 + minBytes(values)
+      buf => {
+        val ks = ArrayBuffer.empty[Any]
+        val vs = ArrayBuffer.empty[Any]
+        readBlocks(buf, field, itemBytes) { ks += key(buf); vs += value(buf) }
+        new ArrayBasedMapData(new GenericArrayData(ks.toArray), new GenericArrayData(vs.toArray))
+      }
+    case AUnionNullable(inner) =>
+      val read = catalystReader(inner, field)
+      buf => if (unionPresent(buf, field)) read(buf) else null
+    case ARecord(_, fields) =>
+      val readers = fields.map(f => catalystReader(f.schema, f.name)).toArray
+      buf => {
+        val out = new Array[Any](readers.length)
+        var i = 0
+        while (i < readers.length) { out(i) = readers(i)(buf); i += 1 }
+        new GenericInternalRow(out)
+      }
   }
 
   // --- encode (I12) ---------------------------------------------------------

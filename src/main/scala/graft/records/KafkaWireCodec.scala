@@ -47,6 +47,170 @@ object KafkaWireCodec {
     def timestampType: Int = (attributes >> 3) & 1
   }
 
+  /** One parsed, CRC-checked batch whose records stay where they are: in
+    * its decompressed buffer (for codec none, the segment itself). Read
+    * them with a [[cursor]]; [[materialize]] builds the [[Batch]]. */
+  final class BatchView private[KafkaWireCodec] (
+      val baseOffset: Long,
+      val partitionLeaderEpoch: Int,
+      val magic: Byte,
+      val attributes: Short,
+      val lastOffsetDelta: Int,
+      val baseTimestamp: Long,
+      val maxTimestamp: Long,
+      val producerId: Long,
+      val producerEpoch: Short,
+      val baseSequence: Int,
+      val recordCount: Int,
+      val byteOffset: Int,
+      payload: ByteBuffer) {
+    def compressionType: Int = attributes & 0x07
+    def timestampType: Int = (attributes >> 3) & 1
+
+    /** A new cursor before this batch's first record. */
+    def cursor: RecordCursor = new RecordCursor(payload, recordCount)
+
+    /** This batch with every record copied out of the buffer. */
+    def materialize: Batch = {
+      val c = cursor
+      val records = Vector.newBuilder[Record]
+      while (c.next()) records += c.record
+      Batch(baseOffset, partitionLeaderEpoch, magic, attributes, lastOffsetDelta, baseTimestamp,
+        maxTimestamp, producerId, producerEpoch, baseSequence, records.result(), byteOffset)
+    }
+  }
+
+  /** A forward cursor over one batch's records, in place in the batch's
+    * decompressed buffer. [[next]] walks one whole record (its deltas, key,
+    * value and every header) and checks it ends where its length prefix
+    * says, but copies nothing: the deltas are fields, and the key, value
+    * and headers are read from their positions only when asked for. So a
+    * reader pays for the columns it selects. The positions are valid until
+    * the next [[next]]. */
+  final class RecordCursor private[KafkaWireCodec] (buf: ByteBuffer, count: Int) {
+    private val array = buf.array()
+    private var pos = buf.arrayOffset() + buf.position()
+    private val limit = buf.arrayOffset() + buf.limit()
+    private var left = count
+    private var keyPos = 0
+    private var keyLen = -1
+    private var valuePos = 0
+    private var valueLen = -1
+    private var headerPos = 0
+    private var headerKeyPos = 0
+    private var headerKeyLen = 0
+    private var headerValuePos = 0
+    private var headerValueLen = -1
+
+    var offsetDelta: Int = 0
+    var timestampDelta: Long = 0L
+    /** Headers of the current record; walk them with [[nextHeader]]. */
+    var headerCount: Int = 0
+
+    /** Moves to the next record; false after the batch's last one. */
+    def next(): Boolean = {
+      if (left <= 0) return false
+      left -= 1
+      val length = varint()
+      val end = pos + length
+      /* attributes (unused in v2) */ byte()
+      timestampDelta = varlong()
+      offsetDelta = varint()
+      keyLen = varint()
+      keyPos = skipBytes(keyLen)
+      valueLen = varint()
+      valuePos = skipBytes(valueLen)
+      headerCount = varint()
+      headerPos = pos
+      var h = 0
+      while (h < headerCount) {
+        val klen = varint()
+        if (klen < 0) malformed(s"negative header key length $klen")
+        skipBytes(klen)
+        skipBytes(varint())
+        h += 1
+      }
+      if (pos != end) malformed(s"record length mismatch: at $pos, expected $end")
+      true
+    }
+
+    // The record walk reads the array directly, not through the ByteBuffer
+    // API: it is the per-record loop of every scan and upload.
+    private def malformed(what: String): Nothing = throw new IllegalArgumentException(what)
+
+    private def byte(): Int = {
+      if (pos >= limit) malformed(s"record runs past the end of its batch at $pos")
+      val b = array(pos) & 0xFF
+      pos += 1
+      b
+    }
+
+    /** A zigzag varlong, as [[Varint.readVarlong]] decodes it. */
+    private def varlong(): Long = {
+      var raw = 0L
+      var shift = 0
+      var b = byte()
+      while ((b & 0x80) != 0) {
+        raw |= (b & 0x7F).toLong << shift
+        shift += 7
+        if (shift > 63) malformed("varlong too long")
+        b = byte()
+      }
+      raw |= b.toLong << shift
+      (raw >>> 1) ^ -(raw & 1)
+    }
+
+    private def varint(): Int = varlong().toInt
+
+    /** Skips a length-prefixed field (none when `len` < 0) and returns
+      * where it starts. */
+    private def skipBytes(len: Int): Int = {
+      val at = pos
+      if (len > 0) {
+        if (len > limit - pos) malformed(s"field of $len bytes, ${limit - pos} left in batch")
+        pos += len
+      }
+      at
+    }
+
+    private def copy(at: Int, len: Int): Array[Byte] =
+      if (len < 0) null else java.util.Arrays.copyOfRange(array, at, at + len)
+
+    /** A copy of the current record's key; null when absent. */
+    def key: Array[Byte] = copy(keyPos, keyLen)
+
+    /** A copy of the current record's value; null when absent. */
+    def value: Array[Byte] = copy(valuePos, valueLen)
+
+    /** Moves to the current record's next header (call it [[headerCount]]
+      * times at most). */
+    def nextHeader(): Unit = {
+      val recordPos = pos
+      pos = headerPos
+      headerKeyLen = varint()
+      headerKeyPos = skipBytes(headerKeyLen)
+      headerValueLen = varint()
+      headerValuePos = skipBytes(headerValueLen)
+      headerPos = pos
+      pos = recordPos
+    }
+
+    /** The current header's UTF-8 key bytes (a copy). */
+    def headerKey: Array[Byte] = copy(headerKeyPos, headerKeyLen)
+
+    /** A copy of the current header's value; null when absent. */
+    def headerValue: Array[Byte] = copy(headerValuePos, headerValueLen)
+
+    /** The current record, copied out: key, value and decoded headers. */
+    def record: Record = {
+      val headers = Vector.tabulate(headerCount) { _ =>
+        nextHeader()
+        Header(new String(headerKey, java.nio.charset.StandardCharsets.UTF_8), headerValue)
+      }
+      Record(offsetDelta, timestampDelta, key, value, headers)
+    }
+  }
+
   val HeaderSize = 61 // baseOffset..recordCount inclusive
   val CodecNone = BatchCompression.None
   val CodecGzip = BatchCompression.Gzip
@@ -80,18 +244,20 @@ object KafkaWireCodec {
   }
 
   /** The batches of a segment, parsed one per `next()` (I1's outer loop):
-    * a reader holds one batch of records at a time, never the whole
-    * segment's.
+    * a reader holds one batch at a time, never the whole segment's.
+    * Records stay in the batch's buffer; read them through
+    * [[BatchView.cursor]].
     *
     * Validation is lazy, per batch. A CRC, magic or truncation error in
     * batch k throws when batch k is reached, so a full scan still fails
     * and never returns short data; a consumer that stops before batch k
-    * never sees that error. Use [[parseSegment]] to validate every batch
-    * up front. */
-  def batches(segment: Array[Byte]): Iterator[Batch] = new Iterator[Batch] {
+    * never sees that error. A record's own length check runs when the
+    * cursor reaches it. Use [[parseSegment]] to validate every batch and
+    * record up front. */
+  def batchViews(segment: Array[Byte]): Iterator[BatchView] = new Iterator[BatchView] {
     private var pos = 0
     override def hasNext: Boolean = pos + 12 <= segment.length
-    override def next(): Batch = {
+    override def next(): BatchView = {
       if (!hasNext) throw new NoSuchElementException("no more batches in segment")
       val buf = ByteBuffer.wrap(segment, pos, segment.length - pos)
       val baseOffset = buf.getLong()
@@ -104,10 +270,13 @@ object KafkaWireCodec {
     }
   }
 
+  /** [[batchViews]], each batch materialized with all its records. */
+  def batches(segment: Array[Byte]): Iterator[Batch] = batchViews(segment).map(_.materialize)
+
   /** Parse and validate all batches of a segment. */
   def parseSegment(segment: Array[Byte]): Vector[Batch] = batches(segment).toVector
 
-  private def parseBatch(segment: Array[Byte], start: Int, baseOffset: Long, batchLength: Int): Batch = {
+  private def parseBatch(segment: Array[Byte], start: Int, baseOffset: Long, batchLength: Int): BatchView = {
     val buf = ByteBuffer.wrap(segment, start + 12, batchLength)
     val partitionLeaderEpoch = buf.getInt()
     val magic = buf.get()
@@ -116,7 +285,7 @@ object KafkaWireCodec {
     val crcStart = buf.position()
     val computed = {
       val c = new CRC32C
-      c.update(segment, start + 12 + (crcStart - (start + 12)), batchLength - (crcStart - (start + 12)))
+      c.update(segment, crcStart, start + 12 + batchLength - crcStart)
       c.getValue.toInt
     }
     require(crc == computed, f"CRC mismatch: stored 0x$crc%08x computed 0x$computed%08x")
@@ -128,34 +297,9 @@ object KafkaWireCodec {
     val producerEpoch = buf.getShort()
     val baseSequence = buf.getInt()
     val recordCount = buf.getInt()
-    val rbuf = BatchCompression.decompressed(attributes & 0x07, segment, buf.position(), buf.remaining())
-    val records = Vector.tabulate(recordCount)(_ => parseRecord(rbuf))
-    Batch(baseOffset, partitionLeaderEpoch, magic, attributes, lastOffsetDelta,
-      baseTimestamp, maxTimestamp, producerId, producerEpoch, baseSequence, records, start)
-  }
-
-  private def parseRecord(buf: ByteBuffer): Record = {
-    val length = Varint.readVarint(buf)
-    val end = buf.position() + length
-    /* attributes (unused in v2) */ buf.get()
-    val timestampDelta = Varint.readVarlong(buf)
-    val offsetDelta = Varint.readVarint(buf)
-    def readBytes(): Array[Byte] = {
-      val len = Varint.readVarint(buf)
-      if (len < 0) null
-      else { val b = new Array[Byte](len); buf.get(b); b }
-    }
-    val key = readBytes()
-    val value = readBytes()
-    val headerCount = Varint.readVarint(buf)
-    val headers = Vector.tabulate(headerCount) { _ =>
-      val klen = Varint.readVarint(buf)
-      val kb = new Array[Byte](klen); buf.get(kb)
-      val v = readBytes()
-      Header(new String(kb, "UTF-8"), v)
-    }
-    require(buf.position() == end, s"record length mismatch: at ${buf.position()}, expected $end")
-    Record(offsetDelta, timestampDelta, key, value, headers)
+    val records = BatchCompression.decompressed(attributes & 0x07, segment, buf.position(), buf.remaining())
+    new BatchView(baseOffset, partitionLeaderEpoch, magic, attributes, lastOffsetDelta, baseTimestamp,
+      maxTimestamp, producerId, producerEpoch, baseSequence, recordCount, start, records)
   }
 
   /** Serialize one batch (I9): lengths and CRC recomputed; all other header

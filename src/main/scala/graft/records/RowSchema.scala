@@ -36,15 +36,16 @@ object RowSchema {
     StructField("key_raw", BinaryType, nullable = true),
     StructField("value_raw", BinaryType, nullable = true)))
 
-  /** Field `i` of [[kafkaStruct]] for record `r` of batch `b` — the one
-    * definition of the record metadata, shared by [[kafkaRow]] and the
-    * DSv2 reader's Catalyst writer (which asks only for the fields a
-    * query requires). */
-  def kafkaValue(b: KafkaWireCodec.Batch, r: KafkaWireCodec.Record, partition: Int, i: Int): Any =
+  /** Field `i` of [[kafkaStruct]] for the record at `offsetDelta` and
+    * `timestampDelta` of batch `b` — the one definition of the record
+    * metadata, shared by [[kafkaRow]] and the DSv2 reader's Catalyst
+    * writer (which asks only for the fields a query requires). */
+  def kafkaValue(b: KafkaWireCodec.BatchView, offsetDelta: Int, timestampDelta: Long,
+                 partition: Int, i: Int): Any =
     i match {
       case 0  => partition
-      case 1  => b.baseOffset + r.offsetDelta
-      case 2  => b.baseTimestamp + r.timestampDelta
+      case 1  => b.baseOffset + offsetDelta
+      case 2  => b.baseTimestamp + timestampDelta
       case 3  => b.byteOffset
       case 4  => b.baseOffset
       case 5  => b.partitionLeaderEpoch
@@ -58,10 +59,10 @@ object RowSchema {
       case _  => throw new IndexOutOfBoundsException(s"kafka field $i")
     }
 
-  def kafkaRow(b: KafkaWireCodec.Batch, r: KafkaWireCodec.Record, partition: Int): Row =
-    Row.fromSeq(Seq.tabulate(kafkaStruct.length)(kafkaValue(b, r, partition, _)))
+  def kafkaRow(b: KafkaWireCodec.BatchView, r: KafkaWireCodec.Record, partition: Int): Row =
+    Row.fromSeq(Seq.tabulate(kafkaStruct.length)(kafkaValue(b, r.offsetDelta, r.timestampDelta, partition, _)))
 
-  def recordRow(b: KafkaWireCodec.Batch, r: KafkaWireCodec.Record, partition: Int): Row =
+  def recordRow(b: KafkaWireCodec.BatchView, r: KafkaWireCodec.Record, partition: Int): Row =
     Row(
       kafkaRow(b, r, partition),
       r.headers.map(h => Row(h.key, h.value)),
@@ -75,12 +76,15 @@ object RowSchema {
   */
 object SegmentToRows {
 
+  private def recordRows(bytes: Array[Byte], partition: Int): Iterator[Row] =
+    KafkaWireCodec.batchViews(bytes).flatMap { b =>
+      val c = b.cursor
+      Iterator.continually(c).takeWhile(_.next()).map(c => RowSchema.recordRow(b, c.record, partition))
+    }
+
   def fromSegmentBytes(spark: SparkSession, segments: Seq[(Int, Array[Byte])]): DataFrame = {
     val rows = spark.sparkContext.parallelize(segments, math.max(segments.size, 1))
-      .flatMap { case (partition, bytes) =>
-        KafkaWireCodec.batches(bytes).flatMap(b =>
-          b.records.iterator.map(r => RowSchema.recordRow(b, r, partition)))
-      }
+      .flatMap { case (partition, bytes) => recordRows(bytes, partition) }
     spark.createDataFrame(rows, RowSchema.rawSchema)
   }
 
@@ -103,8 +107,7 @@ object SegmentToRows {
       val fs = hp.getFileSystem(conf.value)
       val in = fs.open(hp)
       val bytes = try in.readAllBytes() finally in.close()
-      KafkaWireCodec.batches(bytes).flatMap(b =>
-        b.records.iterator.map(r => RowSchema.recordRow(b, r, partition)))
+      recordRows(bytes, partition)
     }
     spark.createDataFrame(rows, RowSchema.rawSchema)
   }
@@ -113,11 +116,7 @@ object SegmentToRows {
   def fromSegmentDir(spark: SparkSession, dir: String, partition: Int = 0): DataFrame = {
     val rows = spark.read.format("binaryFile").load(dir)
       .select("content").rdd
-      .flatMap { row =>
-        val bytes = row.getAs[Array[Byte]](0)
-        KafkaWireCodec.batches(bytes).flatMap(b =>
-          b.records.iterator.map(r => RowSchema.recordRow(b, r, partition)))
-      }
+      .flatMap(row => recordRows(row.getAs[Array[Byte]](0), partition))
     spark.createDataFrame(rows, RowSchema.rawSchema)
   }
 }

@@ -48,7 +48,7 @@ import graft.sources.StorageBackends
   *  - **Reading**: executor-side ranged fetch + detransform through the
   *    manifest-described pipeline ([[SegmentFetchJob.fetchRange]] — zstd /
   *    LZ4 / deflate, AES-GCM, RSA-wrapped keys), then the Kafka wire
-  *    parse ([[KafkaWireCodec.batches]]), one CRC-verified batch at a time
+  *    parse ([[KafkaWireCodec.batchViews]]), one CRC-verified batch at a time
   *    as rows are pulled, so a task holds one batch of records. Decryption
   *    keys arrive via options (base64 DER) — a deployment would plug a
   *    KMS here; the wiring is identical.
@@ -825,19 +825,21 @@ final class SegmentsReaderFactory(conf: GraftSegments.SourceConf, required: Stru
   }
 }
 
-/** Executor-side: detransform one segment, parse the Kafka wire, emit only
+/** Executor-side: detransform one segment, walk the Kafka wire, emit only
   * the required (possibly nested-pruned) fields as Catalyst values — no
   * external `Row` is built and no type converter runs per record. The
   * column writers are resolved from `required` once per reader
-  * ([[SegmentsReader.writer]]). `skipRows` > 0 carries a pushed OFFSET's
-  * in-segment remainder: the wire is parsed (records are length-prefixed,
-  * there is no index into the middle of a batch) but the first `skipRows`
-  * records are dropped before any column is written.
+  * ([[SegmentsReader.writer]]) and read each record in place through a
+  * [[KafkaWireCodec.RecordCursor]]: a key, value or header is copied out
+  * of the batch buffer only when `required` selects it. `skipRows` > 0
+  * carries a pushed OFFSET's in-segment remainder: the first `skipRows`
+  * records are walked and checked (records are length-prefixed, there is
+  * no index into the middle of a batch) but no column is written.
   *
   * Lazy and per batch: the whole segment is fetched and detransformed
   * before the first row (every chunk's GCM tag and size is checked), but
-  * the wire is parsed one batch per pull ([[KafkaWireCodec.batches]]). A
-  * CRC or truncation error in batch k fails the task when batch k is
+  * the wire is parsed one batch per pull ([[KafkaWireCodec.batchViews]]).
+  * A CRC or truncation error in batch k fails the task when batch k is
   * reached, so a full scan fails and never returns short data; a query
   * that stops earlier (a LIMIT) never reaches batch k and does not fail
   * on it. */
@@ -847,7 +849,7 @@ final class SegmentsReader(conf: GraftSegments.SourceConf, required: StructType,
 
   private val write = SegmentsReader.writer(required, segKey)
 
-  private lazy val iter: Iterator[InternalRow] = {
+  private lazy val batches: Iterator[KafkaWireCodec.BatchView] = {
     conf.ensureBackend() // executor-side transport registration
     val bytes =
       if (conf.prefetchBytes > 0)
@@ -855,23 +857,24 @@ final class SegmentsReader(conf: GraftSegments.SourceConf, required: StructType,
           .segmentBytes(segKey)
       else
         SegmentFetchJob.fetchRange(conf.jobConfig, segKey, BytesRange(0L, Long.MaxValue - 1L))
-    var toSkip = skipRows
-    KafkaWireCodec.batches(bytes).flatMap { b =>
-      // batch-level skip of a pushed OFFSET's remainder: drop whole-batch
-      // prefixes cheaply, zero overhead on the skip-free (common) path
-      val rs =
-        if (toSkip <= 0L) b.records.iterator
-        else {
-          val d = math.min(toSkip, b.records.size.toLong).toInt
-          toSkip -= d
-          b.records.iterator.drop(d)
-        }
-      rs.map(write(b, _))
-    }
+    KafkaWireCodec.batchViews(bytes)
   }
 
+  private var batch: KafkaWireCodec.BatchView = _
+  private var cursor: KafkaWireCodec.RecordCursor = _
+  private var toSkip = skipRows
   private var current: InternalRow = _
-  override def next(): Boolean = { if (iter.hasNext) { current = iter.next(); true } else false }
+
+  override def next(): Boolean = {
+    while (cursor == null || !cursor.next()) {
+      if (!batches.hasNext) return false
+      batch = batches.next()
+      cursor = batch.cursor
+      while (toSkip > 0 && cursor.next()) toSkip -= 1
+    }
+    current = write(batch, cursor)
+    true
+  }
   override def get(): InternalRow = current
   override def close(): Unit = ()
 }
@@ -880,13 +883,15 @@ object SegmentsReader {
   /** The record → `InternalRow` writer for a required schema: one column
     * writer per required field, in `required`'s order, each producing the
     * Catalyst value of its field (`UTF8String`, nested `InternalRow`,
-    * `ArrayData`, raw `Array[Byte]`). Nested selections — a pruned
-    * `kafka` struct, a pruned `headers` element struct — resolve to source
-    * ordinals here, by name, so their order never matters. The record's
-    * partition is 0, as in [[graft.records.SegmentToRows]]. */
-  private[v2] def writer(required: StructType,
-                         segKey: String): (KafkaWireCodec.Batch, KafkaWireCodec.Record) => InternalRow = {
-    type Col = (KafkaWireCodec.Batch, KafkaWireCodec.Record) => Any
+    * `ArrayData`, raw `Array[Byte]`) from the cursor's current record.
+    * Nested selections — a pruned `kafka` struct, a pruned `headers`
+    * element struct — resolve to source ordinals here, by name, so their
+    * order never matters; header keys are copied and decoded only when
+    * the element struct selects them. The record's partition is 0, as in
+    * [[graft.records.SegmentToRows]]. */
+  private[v2] def writer(required: StructType, segKey: String)
+      : (KafkaWireCodec.BatchView, KafkaWireCodec.RecordCursor) => InternalRow = {
+    type Col = (KafkaWireCodec.BatchView, KafkaWireCodec.RecordCursor) => Any
     def fields(t: DataType): Array[String] = t.asInstanceOf[StructType].fieldNames
     val key = UTF8String.fromString(segKey)
     val cols: Array[Col] = required.fields.map { f =>
@@ -894,26 +899,37 @@ object SegmentsReader {
         case "segment_key" => (_, _) => key
         case "kafka" =>
           val idx = fields(f.dataType).map(RowSchema.kafkaStruct.fieldIndex)
-          (b, r) => {
+          (b, c) => {
             val vs = new Array[Any](idx.length)
             var i = 0
-            while (i < idx.length) { vs(i) = RowSchema.kafkaValue(b, r, 0, idx(i)); i += 1 }
+            while (i < idx.length) {
+              vs(i) = RowSchema.kafkaValue(b, c.offsetDelta, c.timestampDelta, 0, idx(i))
+              i += 1
+            }
             new GenericInternalRow(vs)
           }
         case "headers" =>
           val isKey = fields(f.dataType.asInstanceOf[ArrayType].elementType).map(_ == "key")
-          (_, r) => new GenericArrayData(r.headers.map { h =>
-            new GenericInternalRow(isKey.map[Any](k => if (k) UTF8String.fromString(h.key) else h.value))
-          }.toArray[Any])
-        case "key_raw"   => (_, r) => r.key
-        case "value_raw" => (_, r) => r.value
+          (_, c) => {
+            val hs = new Array[Any](c.headerCount)
+            var h = 0
+            while (h < hs.length) {
+              c.nextHeader()
+              hs(h) = new GenericInternalRow(isKey.map[Any](k =>
+                if (k) UTF8String.fromBytes(c.headerKey) else c.headerValue))
+              h += 1
+            }
+            new GenericArrayData(hs)
+          }
+        case "key_raw"   => (_, c) => c.key
+        case "value_raw" => (_, c) => c.value
         case other => throw new IllegalStateException(s"unknown column $other")
       }
     }
-    (b, r) => {
+    (b, c) => {
       val vs = new Array[Any](cols.length)
       var i = 0
-      while (i < cols.length) { vs(i) = cols(i)(b, r); i += 1 }
+      while (i < cols.length) { vs(i) = cols(i)(b, c); i += 1 }
       new GenericInternalRow(vs)
     }
   }

@@ -83,4 +83,31 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(topk.queryExecution.executedPlan.toString.contains("GraftTopK"))
     }
   }
+
+  test("typed-decode pruning fires through the extensions path") {
+    withExtensionsSession { s =>
+      import s.implicits._
+      val schema = graft.records.AvroLite.parseSchema(
+        """{"type":"record","name":"r","fields":[{"name":"a","type":"long"},{"name":"b","type":"string"},
+          |{"name":"c","type":"double"}]}""".stripMargin)
+      val payload = {
+        val out = new java.io.ByteArrayOutputStream()
+        out.write(Array[Byte](0, 0, 0, 0, 3))
+        graft.records.AvroLite.encode(schema, org.apache.spark.sql.Row(1L, "x", 2.5), out)
+        out.toByteArray
+      }
+      // an RDD, not a local relation the optimizer would evaluate away
+      val raw = s.createDataFrame(s.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(payload))),
+        org.apache.spark.sql.types.StructType(Seq(org.apache.spark.sql.types.StructField("value_raw",
+          org.apache.spark.sql.types.BinaryType))))
+      // bypass TypedDecode.withDecoded, which registers the rule at runtime
+      val decode = org.apache.spark.sql.GraftSqlBridge.column(graft.records.TypedDecodeExpr(
+        org.apache.spark.sql.GraftSqlBridge.expression(raw.col("value_raw")), 3, schema))
+      val q = raw.withColumn("value", decode).select($"value.c", $"value.a")
+      val decodes = q.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case d: graft.records.TypedDecodeExpr => d }))
+      assert(decodes.map(_.selected) == Seq(Some(Seq(0, 2))), q.queryExecution.optimizedPlan)
+      assert(q.as[(Double, Long)].collect().toSeq == Seq((2.5, 1L)))
+    }
+  }
 }

@@ -114,4 +114,39 @@ class AvroLiteSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](table.mergeSchemas(
       StructType(Seq(StructField("a", StringType))), StructType(Seq(StructField("a", IntegerType)))))
   }
+
+  test("malformed lengths and counts fail fast, naming the field, in every decoder") {
+    def wire(f: java.io.ByteArrayOutputStream => Unit): ByteBuffer = {
+      val out = new java.io.ByteArrayOutputStream()
+      f(out)
+      out.write(Array.fill[Byte](8)(0), 0, 8) // trailing bytes: the counts, not a short buffer, are wrong
+      ByteBuffer.wrap(out.toByteArray).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    }
+    def everyDecoder(schemaJson: String, field: String, buf: => ByteBuffer): Unit = {
+      val schema = parseSchema(schemaJson)
+      val decoders: Seq[ByteBuffer => Any] = Seq(decode(schema, _), catalystReader(schema),
+        catalystReader(schema, Some(Seq(1)))) // the bad field 0 is skipped, not decoded
+      decoders.foreach { d =>
+        val t0 = System.nanoTime()
+        val e = intercept[IllegalArgumentException](d(buf))
+        assert(e.getMessage.contains(s"'$field'"), e.getMessage)
+        assert(System.nanoTime() - t0 < 5000000000L, "a corrupt count must fail at once")
+      }
+    }
+    def rec(field: String, t: String) =
+      s"""{"type":"record","name":"r","fields":[{"name":"$field","type":$t},{"name":"after","type":"int"}]}"""
+    everyDecoder(rec("payload", "\"bytes\""), "payload", wire(Varint.writeVarlong(-3L, _)))
+    everyDecoder(rec("name", "\"string\""), "name", wire(Varint.writeVarlong(1L << 40, _)))
+    everyDecoder(rec("nulls", """{"type":"array","items":"null"}"""), "nulls",
+      wire(Varint.writeVarlong(1L << 62, _)))
+    everyDecoder(rec("sized", """{"type":"array","items":"null"}"""), "sized", wire { out =>
+      Varint.writeVarlong(-(1L << 62), out); Varint.writeVarlong(0L, out) })
+    everyDecoder(rec("longs", """{"type":"array","items":"long"}"""), "longs",
+      wire(Varint.writeVarlong(1000L, _))) // 1000 items cannot fit in 8 bytes
+    everyDecoder(rec("m", """{"type":"map","values":"null"}"""), "m", wire(Varint.writeVarlong(1L << 62, _)))
+    // a legitimate array of nulls still decodes
+    val ok = wire { out => Varint.writeVarlong(3L, out); Varint.writeVarlong(0L, out); Varint.writeVarint(7, out) }
+    assert(decode(parseSchema(rec("nulls", """{"type":"array","items":"null"}""")), ok) ==
+      Row(Vector(null, null, null), 7))
+  }
 }

@@ -210,6 +210,73 @@ class KafkaWireCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("the record cursor reads every written record in place, for every codec") {
+    AllCodecs.foreach { case (codec, name) =>
+      val (seg, built) = e2eStyleSegment(codec)
+      val views = batchViews(seg).toVector
+      assert(views.size == built.size, name)
+      views.zip(built).foreach { case (v, b) =>
+        assert((v.baseOffset, v.byteOffset, v.recordCount, v.producerId, v.compressionType) ==
+          (b.baseOffset, b.byteOffset, b.records.size, b.producerId, codec), name)
+        val c = v.cursor
+        b.records.foreach { r =>
+          assert(c.next(), name)
+          assert((c.offsetDelta, c.timestampDelta) == (r.offsetDelta, r.timestampDelta), name)
+          assert(java.util.Arrays.equals(c.key, r.key) && java.util.Arrays.equals(c.value, r.value), name)
+          assert(c.headerCount == r.headers.size, name)
+          r.headers.foreach { h =>
+            c.nextHeader()
+            assert(new String(c.headerKey, "UTF-8") == h.key, name)
+            assert(java.util.Arrays.equals(c.headerValue, h.value), name)
+          }
+        }
+        assert(!c.next() && !c.next(), name)
+      }
+    }
+  }
+
+  /** `batch` with its CRC recomputed after an edit. */
+  private def withCrc(batch: Array[Byte]): Array[Byte] = {
+    val c = new java.util.zip.CRC32C
+    c.update(batch, 21, batch.length - 21)
+    ByteBuffer.wrap(batch).putInt(17, c.getValue.toInt)
+    batch
+  }
+
+  test("the cursor checks each record's length, walking headers it does not decode") {
+    val good = writeBatch(buildBatch(0L, 1L, Seq(
+      (kb("k0"), kb("v0"), Seq(Header("h", kb("ZZ")))),
+      (kb("k1"), kb("v1"), Seq.empty))))
+    val bad = good.clone()
+    val at = bad.indexOfSlice(kb("ZZ")) - 1
+    assert(bad(at) == 4) // zigzag varint of the header value's length 2
+    bad(at) = 2 // now 1: the header walk ends one byte short of the record
+    withCrc(bad)
+    val c = batchViews(bad).next().cursor
+    val e = intercept[IllegalArgumentException](c.next())
+    assert(e.getMessage.contains("record length mismatch"))
+    intercept[IllegalArgumentException](parseSegment(bad))
+    intercept[IllegalArgumentException](graft.operators.SegmentUploadJob.recordStats(bad))
+  }
+
+  test("recordStats over the cursor equals the stats of the materialized records") {
+    def viaRecords(seg: Array[Byte]): graft.core.RecordStats = {
+      val offTs = parseSegment(seg).flatMap(b =>
+        b.records.map(r => (b.baseOffset + r.offsetDelta, b.baseTimestamp + r.timestampDelta)))
+      if (offTs.isEmpty) graft.core.RecordStats(0L, 0L, -1L, 0L, -1L)
+      else graft.core.RecordStats(offTs.size.toLong, offTs.map(_._1).min, offTs.map(_._1).max,
+        offTs.map(_._2).min, offTs.map(_._2).max)
+    }
+    val shuffled = writeBatch(buildBatch(100L, 5000L, (0 until 5).map(i => (kb(s"k$i"), kb(s"v$i"), Seq.empty)),
+      timestampDeltaPerRecord = -7L))
+    val fixtures = AllCodecs.map { case (codec, name) => name -> e2eStyleSegment(codec)._1 } ++
+      Seq("empty" -> Array.emptyByteArray, "descending-ts" -> shuffled,
+        "nulls" -> writeBatch(buildBatch(5L, 1000L, Seq((null, kb("v"), Seq.empty), (kb("k"), null, Seq.empty)))))
+    fixtures.foreach { case (name, seg) =>
+      assert(graft.operators.SegmentUploadJob.recordStats(seg) == viaRecords(seg), name)
+    }
+  }
+
   test("batches is lazy: a bad CRC in the last batch surfaces only when that batch is reached") {
     val (seg, built) = e2eStyleSegment()
     val last = built.last.byteOffset

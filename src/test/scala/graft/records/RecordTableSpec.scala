@@ -163,10 +163,7 @@ class RecordTableSpec extends SparkSpec {
     val typed = TypedDecode.withDecoded(rows, registry, 3)
       .select(col("value.s").as("s"), (col("value.n") * 2).as("n2"))
     def decodes[P <: org.apache.spark.sql.catalyst.plans.QueryPlan[P]](plan: P): Int =
-      plan.collect { case p => p.expressions.map(_.collect {
-        case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF
-          if u.udfName.contains(TypedDecode.UdfName) => u
-      }.size).sum }.sum
+      plan.collect { case p => p.expressions.map(_.collect { case d: TypedDecodeExpr => d }.size).sum }.sum
     assert(decodes(typed.queryExecution.optimizedPlan) == 1, typed.queryExecution.optimizedPlan)
     assert(decodes(typed.queryExecution.executedPlan) == 1, typed.queryExecution.executedPlan)
     assert(typed.collect().map(r => r.getString(0) -> r.getLong(1)).toSet ==

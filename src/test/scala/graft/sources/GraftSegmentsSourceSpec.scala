@@ -773,7 +773,8 @@ class GraftSegmentsSourceSpec extends SparkSpec {
     * null value, empty headers, registry-framed and plain values, distinct
     * batch metadata per batch. Chunked at 512 bytes so the prefetch path
     * spans several chunks per segment. */
-  private def richSetup(): (String, SegmentJobConfig, Vector[String], graft.records.SchemaRegistry) = {
+  private def richSetup(codec: Int = CodecNone)
+      : (String, SegmentJobConfig, Vector[String], graft.records.SchemaRegistry) = {
     val registry = graft.records.SchemaRegistry(Files.createTempDirectory("dsv2-reg").toString)
     registry.register(7,
       """{"type":"record","name":"e","fields":[{"name":"s","type":"string"},{"name":"n","type":"long"}]}""")
@@ -798,7 +799,7 @@ class GraftSegmentsSourceSpec extends SparkSpec {
         }
         out.write(writeBatch(buildBatch(base, 1700000000000L + base * 10, recs,
           producerId = 40L + b, producerEpoch = b.toShort, baseSequence = b * 8,
-          partitionLeaderEpoch = s)))
+          partitionLeaderEpoch = s, compression = codec)))
       }
       Files.write(java.nio.file.Paths.get(in, f"seg$s%03d.log"), out.toByteArray)
     }
@@ -856,6 +857,23 @@ class GraftSegmentsSourceSpec extends SparkSpec {
     same(_.select(col("headers.key").as("hk"), col("headers")))
     assert(source.filter(col("key_raw").isNull).count() == 18)
     assert(source.select(explode(col("headers")).as("h")).filter(col("h.value").isNull).count() == 24)
+  }
+
+  test("reader rows equal SegmentToRows for every batch codec, and with headers.key alone") {
+    Seq(CodecNone, CodecGzip, CodecSnappy, CodecLz4, CodecZstd).foreach { codec =>
+      val (store, cfg, keys, _) = richSetup(codec)
+      val source = reader(store, cfg).load()
+      val want = parsed(cfg, keys)
+      assert(rowsOf(source) == rowsOf(want), s"codec $codec")
+      val keysOnly = (df: org.apache.spark.sql.DataFrame) =>
+        df.select(col("kafka.offset"), col("headers.key").as("hk"))
+      assert(rowsOf(keysOnly(source)) == rowsOf(keysOnly(want)), s"codec $codec")
+      val element = keysOnly(source).queryExecution.sparkPlan.collectLeaves().head
+        .output.find(_.name == "headers").get.dataType
+        .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
+        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq
+      assert(element == Seq("key"), s"headers element not pruned: $element")
+    }
   }
 
   test("reader rows equal SegmentToRows under a pushed OFFSET and on the prefetch path") {
