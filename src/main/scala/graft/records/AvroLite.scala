@@ -280,14 +280,19 @@ object AvroLite {
     * for dates and micros for timestamps. It is built once per schema and
     * reused for every value; [[TypedDecode]] runs one per task.
     *
-    * `selected` (ascending field ordinals of a top-level record) prunes the
-    * decode: the result is a row of those fields only, every other field
-    * is skipped by its length prefix, and the fields after the last
-    * selected one are not read at all. The buffer must be little-endian
+    * `selected` (ascending field ordinals of a top-level record, nullable
+    * or not) prunes the decode: the result is a row of those fields only
+    * (null for a null record), every other field is skipped by its length
+    * prefix, and the fields after the last selected one are not read at
+    * all. The buffer must be little-endian
     * (Avro's float and double order); varints do not depend on it.
     * Strings are views over the buffer's array, not copies. */
   def catalystReader(schema: Schema, selected: Option[Seq[Int]] = None): ByteBuffer => Any =
     (schema, selected) match {
+      case (_, None) => catalystReader(schema, RootField)
+      case (AUnionNullable(inner), _) =>
+        val read = catalystReader(inner, selected)
+        buf => if (unionPresent(buf, RootField)) read(buf) else null
       case (ARecord(_, fields), Some(sel)) =>
         require(sel.nonEmpty && sel == sel.distinct.sorted && sel.last < fields.length,
           s"selection $sel is not ascending ordinals of ${fields.length} fields")
@@ -307,7 +312,8 @@ object AvroLite {
           }
           new GenericInternalRow(out)
         }
-      case _ => catalystReader(schema, RootField)
+      case (_, Some(sel)) =>
+        throw new IllegalArgumentException(s"selection $sel needs a record schema, not $schema")
     }
 
   private def catalystReader(s: Schema, field: String): ByteBuffer => Any = s match {

@@ -87,10 +87,8 @@ object KafkaWireCodec {
     * and headers are read from their positions only when asked for. So a
     * reader pays for the columns it selects. The positions are valid until
     * the next [[next]]. */
-  final class RecordCursor private[KafkaWireCodec] (buf: ByteBuffer, count: Int) {
-    private val array = buf.array()
-    private var pos = buf.arrayOffset() + buf.position()
-    private val limit = buf.arrayOffset() + buf.limit()
+  final class RecordCursor private[KafkaWireCodec] (batch: ByteBuffer, count: Int) {
+    private val buf = batch.duplicate()
     private var left = count
     private var keyPos = 0
     private var keyLen = -1
@@ -111,70 +109,43 @@ object KafkaWireCodec {
     def next(): Boolean = {
       if (left <= 0) return false
       left -= 1
-      val length = varint()
-      val end = pos + length
-      /* attributes (unused in v2) */ byte()
-      timestampDelta = varlong()
-      offsetDelta = varint()
-      keyLen = varint()
+      val length = Varint.readVarint(buf)
+      val end = buf.position() + length
+      /* attributes (unused in v2) */ buf.get()
+      timestampDelta = Varint.readVarlong(buf)
+      offsetDelta = Varint.readVarint(buf)
+      keyLen = Varint.readVarint(buf)
       keyPos = skipBytes(keyLen)
-      valueLen = varint()
+      valueLen = Varint.readVarint(buf)
       valuePos = skipBytes(valueLen)
-      headerCount = varint()
-      headerPos = pos
+      headerCount = Varint.readVarint(buf)
+      headerPos = buf.position()
       var h = 0
       while (h < headerCount) {
-        val klen = varint()
-        if (klen < 0) malformed(s"negative header key length $klen")
+        val klen = Varint.readVarint(buf)
+        require(klen >= 0, s"negative header key length $klen")
         skipBytes(klen)
-        skipBytes(varint())
+        skipBytes(Varint.readVarint(buf))
         h += 1
       }
-      if (pos != end) malformed(s"record length mismatch: at $pos, expected $end")
+      require(buf.position() == end, s"record length mismatch: at ${buf.position()}, expected $end")
       true
     }
-
-    // The record walk reads the array directly, not through the ByteBuffer
-    // API: it is the per-record loop of every scan and upload.
-    private def malformed(what: String): Nothing = throw new IllegalArgumentException(what)
-
-    private def byte(): Int = {
-      if (pos >= limit) malformed(s"record runs past the end of its batch at $pos")
-      val b = array(pos) & 0xFF
-      pos += 1
-      b
-    }
-
-    /** A zigzag varlong, as [[Varint.readVarlong]] decodes it. */
-    private def varlong(): Long = {
-      var raw = 0L
-      var shift = 0
-      var b = byte()
-      while ((b & 0x80) != 0) {
-        raw |= (b & 0x7F).toLong << shift
-        shift += 7
-        if (shift > 63) malformed("varlong too long")
-        b = byte()
-      }
-      raw |= b.toLong << shift
-      (raw >>> 1) ^ -(raw & 1)
-    }
-
-    private def varint(): Int = varlong().toInt
 
     /** Skips a length-prefixed field (none when `len` < 0) and returns
       * where it starts. */
     private def skipBytes(len: Int): Int = {
-      val at = pos
+      val at = buf.position()
       if (len > 0) {
-        if (len > limit - pos) malformed(s"field of $len bytes, ${limit - pos} left in batch")
-        pos += len
+        require(len <= buf.remaining(), s"field of $len bytes, ${buf.remaining()} left in batch")
+        buf.position(at + len)
       }
       at
     }
 
     private def copy(at: Int, len: Int): Array[Byte] =
-      if (len < 0) null else java.util.Arrays.copyOfRange(array, at, at + len)
+      if (len < 0) null
+      else java.util.Arrays.copyOfRange(buf.array(), buf.arrayOffset() + at, buf.arrayOffset() + at + len)
 
     /** A copy of the current record's key; null when absent. */
     def key: Array[Byte] = copy(keyPos, keyLen)
@@ -185,14 +156,14 @@ object KafkaWireCodec {
     /** Moves to the current record's next header (call it [[headerCount]]
       * times at most). */
     def nextHeader(): Unit = {
-      val recordPos = pos
-      pos = headerPos
-      headerKeyLen = varint()
+      val recordPos = buf.position()
+      buf.position(headerPos)
+      headerKeyLen = Varint.readVarint(buf)
       headerKeyPos = skipBytes(headerKeyLen)
-      headerValueLen = varint()
+      headerValueLen = Varint.readVarint(buf)
       headerValuePos = skipBytes(headerValueLen)
-      headerPos = pos
-      pos = recordPos
+      headerPos = buf.position()
+      buf.position(recordPos)
     }
 
     /** The current header's UTF-8 key bytes (a copy). */

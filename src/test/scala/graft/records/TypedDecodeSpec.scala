@@ -176,6 +176,21 @@ class TypedDecodeSpec extends SparkSpec {
     assert(rowsOf(whole) == rowsOf(viaRows(reg, 7, payloads).select(col("value"), col("value.event_type").as("t"))))
   }
 
+  test("a nullable top-level record prunes like a record, inline and through a Project") {
+    val reg = SchemaRegistry(Files.createTempDirectory("typed-decode-opt").toString)
+    reg.register(8,
+      """["null",{"type":"record","name":"r","fields":[
+        |{"name":"a","type":"long"},{"name":"b","type":"string"},{"name":"c","type":"double"}]}]""".stripMargin)
+    val payloads = (0 until 50).map(i => reg.encode(8, if (i % 7 == 0) null else Row(i.toLong, s"b${i % 4}", i * 0.5)))
+    val inline = (df: DataFrame) => df.select(col("value.b").as("b"))
+    val grouped = (df: DataFrame) => df.groupBy(col("value.b").as("b")).agg(sum(col("value.c")).as("c"))
+    Seq(inline, grouped).foreach { q =>
+      val got = q(TypedDecode.withDecoded(raw(payloads), reg, 8))
+      assert(decodes(got).map(_.selected.isDefined) == Seq(true), got.queryExecution.optimizedPlan)
+      assert(rowsOf(got) == rowsOf(q(viaRows(reg, 8, payloads))))
+    }
+  }
+
   test("the rule leaves a plan without the decode untouched") {
     val df = spark.range(10).select((col("id") * 2).as("x")).groupBy("x").count()
     val plan = df.queryExecution.optimizedPlan
