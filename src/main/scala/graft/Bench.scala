@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: every SparkEntry query against
@@ -107,17 +109,20 @@ object Bench {
     // ≥1 s absolute labels the query `suspect_stall` in both artifacts.
     // Label only, never a gate trip: a real regression this large would
     // reproduce in the next leg, a stall won't.
-    val sfShortNow = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val stallRef: Map[String, Double] =
-      try {
-        val txt = java.nio.file.Files.readString(java.nio.file.Paths.get("BENCH_DETAIL.json"))
-        val sfRef = """"sf"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(txt).map(_.group(1))
-        // only a same-SF reference is comparable (a /tmp/sf1 replica run
-        // must not be judged against the committed sf0.1 detail)
-        if (sfRef.exists(r => java.nio.file.Paths.get(r).getFileName.toString == sfShortNow))
-          parseCanaryJson(txt).flatMap { case (k, v) => v.toDoubleOption.map(k -> _) }
-        else Map.empty
-      } catch { case _: Throwable => Map.empty }
+    // When no usable reference exists the sensor is off, and says so on
+    // stderr (stdout keeps its one-line contract).
+    val stallDetail = java.nio.file.Paths.get("BENCH_DETAIL.json").toAbsolutePath
+    val stallRef: Map[String, Double] = {
+      val ref =
+        try stallReference(java.nio.file.Files.readString(stallDetail),
+          java.nio.file.Paths.get(sfDir).getFileName.toString)
+        catch {
+          case _: java.nio.file.NoSuchFileException => Left("is missing")
+          case e: Exception => Left(s"is unreadable (${e.getMessage})")
+        }
+      ref.left.foreach(why => System.err.println(s"[bench] stall sensor off: $stallDetail $why"))
+      ref.getOrElse(Map.empty)
+    }
 
     // Warm-up: one full pass over every query (JMH-style — the reference
     // bench runs 4 warmup iterations; we run 1). First-touch costs (JIT,
@@ -524,6 +529,29 @@ object Bench {
         mn.exists(m => m >= 1.0 && ref.get(name).exists(r => r > 0 && m > 5.0 * r))
       } => name
     }
+
+  /** The stall sensor's reference from a committed detail file's text:
+    * the per-query minima of its `queries` object, or why there is none —
+    * the text is not JSON, has no `queries` object, or was written for
+    * another SF (a /tmp/sf1 replica run must not be judged against the
+    * committed sf0.1 detail; SFs compare by directory name). */
+  private[graft] def stallReference(detail: String, sfShort: String)
+      : Either[String, Map[String, Double]] = {
+    val root =
+      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(detail)
+      catch { case e: Exception => return Left(s"is not JSON (${e.getMessage.takeWhile(_ != '\n')})") }
+    val sfRef = Option(root.get("sf")).map(_.asText)
+    val queries = Option(root.get("queries")).filter(_.isObject)
+    if (!sfRef.exists(r => java.nio.file.Paths.get(r).getFileName.toString == sfShort))
+      Left(s"was written for sf '${sfRef.getOrElse("")}', this run is '$sfShort'")
+    else queries match {
+      case None => Left("has no queries object")
+      case Some(q) =>
+        Right(q.properties.asScala.iterator.collect {
+          case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble
+        }.toMap)
+    }
+  }
 
   /** Queries whose passes strictly increase AND whose last pass is >3× the
     * first — the inside-one-query signature of load ramping up during the

@@ -82,7 +82,8 @@ object ScrubJob {
 
     val originalSize = manifest.chunkIndex.originalFileSize.toLong
     val original =
-      try SegmentFetchJob.readRange(storage, segKey, manifest, spec, BytesRange(0, originalSize - 1))
+      try SegmentFetchJob.readRange(manifest, BytesRange(0, originalSize - 1))(
+        SegmentFetchJob.readChunk(storage, segKey, _, spec))
       catch { case e: Exception => return bad(s"detransform-failed: ${e.getMessage}", nChunks) }
     if (original.length.toLong != originalSize)
       return bad(s"length-mismatch: detransformed ${original.length} != manifest $originalSize",

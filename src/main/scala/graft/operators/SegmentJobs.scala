@@ -376,12 +376,15 @@ object SegmentFetchJob {
   def fetchRange(storage: StorageBackend, cfg: SegmentJobConfig,
                  segKey: String, range: BytesRange): Array[Byte] = {
     val (m, spec) = readSpec(storage, cfg, segKey)
-    readRange(storage, segKey, m, spec, range)
+    readRange(m, range)(readChunk(storage, segKey, _, spec))
   }
 
-  /** [[fetchRange]] over an already-resolved (manifest, spec). */
-  private[graft] def readRange(storage: StorageBackend, segKey: String, m: SegmentManifest,
-                               spec: TransformSpec, range: BytesRange): Array[Byte] = {
+  /** Original bytes `range` of a segment with manifest `m`, assembled from
+    * its detransformed chunks as `chunk` returns them: a direct
+    * [[readChunk]] ([[fetchRange]], scrub) or the prefetching chunk cache.
+    * The range is clamped to the segment size. */
+  private[graft] def readRange(m: SegmentManifest, range: BytesRange)
+                              (chunk: Chunk => Array[Byte]): Array[Byte] = {
     val clamped = BytesRange(range.from, math.min(range.to, m.chunkIndex.originalFileSize - 1L))
     val chunks = m.chunkIndex.chunksForRange(clamped)
     if (chunks.isEmpty) return Array.emptyByteArray
@@ -401,7 +404,7 @@ object SegmentFetchJob {
       // fetch stops paying for decrypt/decompress it will throw away.
       if (Thread.currentThread().isInterrupted)
         throw new InterruptedException("fetch cancelled")
-      val plain = readChunk(storage, segKey, c, spec)
+      val plain = chunk(c)
       val origPos = c.originalPosition.toLong
       val from = math.max(origPos, clamped.from)
       val to = math.min(origPos + plain.length - 1, clamped.to)

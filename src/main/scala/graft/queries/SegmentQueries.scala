@@ -156,7 +156,7 @@ object SegmentQueries {
     * OUTPUT is `spark.read.format("graft-segments")` filtered to a
     * timestamp range — the "what happened since yesterday" ops query. The
     * scan prunes segments by manifest stats bounds
-    * ([[graft.sources.v2.SegmentsScan.statsPrune]]): at 100 TB the range
+    * ([[graft.sources.v2.SegmentCatalog.statsPrune]]): at 100 TB the range
     * plans only the segments whose interval intersects, fetching none of
     * the rest (partition-count assertions live in GraftSegmentsSourceSpec;
     * this row makes the pruned read oracle-visible — DuckDB recomputes the

@@ -530,7 +530,7 @@ object TextQueries {
   /** Drop every cached edge relation for `s` (r13, VERDICT r12 "What's
     * wrong" #1): the bench's untimed warm-up pass populated this cache, so
     * the TIMED g-queries never paid their shared derivation (pay-zero,
-    * where the sanctioned shape was pay-once-reuse). Bench/QuickBench call
+    * where the sanctioned shape was pay-once-reuse). Bench and ScaleProbe call
     * this before EVERY timed pass — with a min-of-passes methodology any
     * coarser clearing still lets passes 2+ reuse pass 1's entries and the
     * min report pay-zero — so each per-query second is the full

@@ -165,21 +165,13 @@ final class CachingChunkFetcher(
     * chunk access schedules prefetch of the next `prefetchMaxBytes`, so
     * fetch+detransform of chunk k+1.. overlaps the consumer's work on
     * chunk k (2 pool threads + the caller), and re-scans of a cached
-    * segment touch storage zero times. */
-  def segmentBytes(segKey: String): Array[Byte] = {
-    val m = manifest(segKey)
-    val n = m.chunkIndex.chunks.size
-    if (n == 0) return Array.emptyByteArray
-    val out = new java.io.ByteArrayOutputStream(
-      math.min(m.chunkIndex.originalFileSize, Int.MaxValue.toLong - 8).toInt)
-    var i = 0
-    while (i < n) {
-      val b = getChunk(segKey, i)
-      out.write(b, 0, b.length)
-      i += 1
-    }
-    out.toByteArray
-  }
+    * segment touch storage zero times. Assembled by the direct path's own
+    * loop ([[graft.operators.SegmentFetchJob.readRange]]): one copy per
+    * byte into a preallocated array, and the same interruption check
+    * between chunks — an interrupted reader gets an empty segment. */
+  def segmentBytes(segKey: String): Array[Byte] =
+    SegmentFetchJob.readRange(manifest(segKey), BytesRange(0L, Long.MaxValue - 1L))(
+      c => getChunk(segKey, c.id))
 
   /** Detransformed chunk bytes, cached; triggers prefetch of the following
     * byte range. */

@@ -56,12 +56,14 @@ final class FileSystemStorage(root: Path) extends StorageBackend {
     while (tmp == null) {
       // createDirectories is also racy: it creates path segments one at a
       // time, and a concurrent prune of a just-created intermediate makes
-      // the next segment's createDirectory throw NoSuchFileException.
+      // the next segment's createDirectory throw NoSuchFileException. A
+      // segment that exists when created but is pruned before its
+      // is-a-directory check throws FileAlreadyExistsException instead.
       try {
         Files.createDirectories(target.getParent)
         tmp = Files.createTempFile(target.getParent, ".upload-", ".tmp")
       } catch {
-        case e: java.nio.file.NoSuchFileException =>
+        case e @ (_: java.nio.file.NoSuchFileException | _: java.nio.file.FileAlreadyExistsException) =>
           attempts += 1; if (attempts > 16) throw e
       }
     }

@@ -31,10 +31,14 @@ import graft.sources.StorageBackends
   * analytic fetch path (`RemoteStorageManager.fetchLogSegment` + record
   * parse) restated as a Catalyst-integrated source:
   *
-  *  - **Planning**: one [[InputPartition]] per stored segment (manifest
-  *    listing, driver-side key strings only — never bytes). At 100 TB the
-  *    unit of parallelism is the segment, the same unit the storage layer
-  *    writes, so executor fan-out matches data layout with no shuffle.
+  *  - **Planning**: one [[InputPartition]] per stored segment, planned
+  *    on the driver through one per-scan [[SegmentCatalog]]: one LIST of
+  *    the prefix (key strings only — never bytes), and at most one
+  *    manifest GET and one `.log` `size()` per listed key, shared by the
+  *    size estimate, stats pruning, the LIMIT / OFFSET walks and runtime
+  *    re-plans. At 100 TB the unit of parallelism is the segment, the same
+  *    unit the storage layer writes, so executor fan-out matches data
+  *    layout with no shuffle.
   *  - **Partition pruning**: filters on `segment_key` (equality, IN,
   *    prefix) prune segments at PLAN time — the object-store analogue of
   *    partition pruning; a `startswith(segment_key, 'topicA-')` scan never
@@ -242,7 +246,13 @@ final class SegmentsScanBuilder(conf: GraftSegments.SourceConf)
   private var pushedAgg: Option[SegmentsAggScan.AggSpec] = None
   private var limitOpt: Option[Int] = None
   private var topNReversed: Boolean = false
-  private var offsetOpt: Option[Int] = None
+
+  /** The scan's one driver-side [[SegmentCatalog]]: every plan-time read
+    * (the offset walk, size estimate, stats pruning, limit walk, runtime
+    * re-plan, aggregate partitions) goes through it. Made on first use,
+    * which Spark orders after `pushFilters`, so its listing is cut by the
+    * final `pruning`. */
+  private lazy val catalog = new SegmentCatalog(conf, pruning)
 
   /** OFFSET pushdown (r7): `LIMIT l OFFSET o` pages through the tiered log
     * without refetching earlier pages — segments whose manifest
@@ -253,16 +263,16 @@ final class SegmentsScanBuilder(conf: GraftSegments.SourceConf)
     * so acceptance is gated on (a) the same append-ordered single-
     * partition `prefix` contract topN uses (the skip must be a
     * deterministic key-ordered prefix), (b) ascending order (a DESC topN
-    * already reversed the walk), and (c) a validating driver walk: every
-    * manifest in the skip range must carry stats — one stats-less segment
-    * and we refuse, leaving Spark's own Offset operator in place. */
-  private val statsMemo = scala.collection.mutable.HashMap.empty[String, Long]
+    * already reversed the walk), and (c) the catalog's one walk
+    * ([[SegmentCatalog.offsetSkip]]): every manifest in the skip range
+    * must carry stats — one stats-less segment and we refuse, leaving
+    * Spark's own Offset operator in place. The walk's result is where
+    * planning starts; it is not walked again. */
+  private var offsetSkip: Option[SegmentsScan.OffsetSkip] = None
 
   override def pushOffset(offset: Int): Boolean = {
-    val ok = conf.prefix.nonEmpty && !topNReversed &&
-      SegmentsScan.offsetCoveredByStats(conf, pruning, offset, statsMemo)
-    if (ok) offsetOpt = Some(offset)
-    ok
+    if (conf.prefix.nonEmpty && !topNReversed) offsetSkip = catalog.offsetSkip(offset)
+    offsetSkip.isDefined
   }
 
   /** LIMIT pushdown (r7): `LIMIT n` plans only enough segments to cover n
@@ -303,7 +313,7 @@ final class SegmentsScanBuilder(conf: GraftSegments.SourceConf)
       }) &&
       // an accepted OFFSET is an ascending-prefix promise — refuse a DESC
       // topN after it rather than skip from the wrong end
-      !(offsetOpt.isDefined &&
+      !(offsetSkip.isDefined &&
         orders(0).direction() == SortDirection.DESCENDING)
     if (sortable) {
       limitOpt = Some(limit)
@@ -357,9 +367,9 @@ final class SegmentsScanBuilder(conf: GraftSegments.SourceConf)
     }
 
   override def build(): Scan = pushedAgg match {
-    case Some(spec) => new SegmentsAggScan(conf, pruning, spec)
+    case Some(spec) => new SegmentsAggScan(conf, catalog, spec)
     case None => new SegmentsScan(conf, required, pruning, limitOpt, topNReversed,
-      offsetOpt, statsMemo.toMap)
+      offsetSkip, catalog)
   }
 }
 
@@ -371,13 +381,11 @@ object SegmentsScan {
     * otherwise invisible outside BatchScanExec internals. */
   @volatile private[graft] var lastPlannedPartitions: Int = -1
 
-  /** Driver-side manifest KEY listing (strings only, no bytes), filtered
-    * by the prunable segment_key shapes and sorted — shared by the row
-    * scan, its size estimate and the aggregate scan. */
-  private[v2] def listSegments(conf: GraftSegments.SourceConf,
-                               filters: Array[Filter]): Array[String] =
-    graft.sources.ObjectKey.committedSegments(conf.storage, conf.prefix)
-      .filter(keyKeep(filters)).sorted.toArray
+  /** Where a pushed OFFSET of `rows` rows ends over the sorted listing:
+    * `from` is the index of the first segment not skipped whole, `inFirst`
+    * the rows to skip inside it. `from` = the listing's length when the
+    * offset covers the whole store. */
+  final case class OffsetSkip(rows: Int, from: Int, inFirst: Long)
 
   /** The segment_key prune predicate: can a segment with this key satisfy
     * every prunable `segment_key` filter? Other filters pass. */
@@ -387,17 +395,6 @@ object SegmentsScan {
     case StringStartsWith("segment_key", p) => key.startsWith(p)
     case _                                  => true
   }
-
-  /** Per-key manifest `RecordStats`, if the manifest parses and carries
-    * stats (reference-written manifests may not). Uncached: each call is
-    * one manifest GET. */
-  private[v2] def statsOf(conf: GraftSegments.SourceConf,
-                          key: String): Option[graft.core.RecordStats] =
-    try SegmentFetchJob.loadManifest(conf.storage, key).recordStats
-    catch { case _: Exception => None }
-
-  private[v2] def statsCount(conf: GraftSegments.SourceConf, key: String): Option[Long] =
-    statsOf(conf, key).map(_.count)
 
   private[v2] def isKeyPrunable(f: Filter): Boolean = f match {
     case EqualTo("segment_key", _: String)  => true
@@ -456,52 +453,94 @@ object SegmentsScan {
           }
         }
     }
+}
+
+/** The driver-side segment catalog of ONE scan — the plan-time twin of the
+  * executors' manifest cache ([[SegmentFetchJob.readSpec]]). It holds the
+  * sorted, `segment_key`-pruned listing, taken once; one per-key memo of
+  * manifest `RecordStats`; and one per-key memo of `.log` sizes. A batch
+  * query therefore LISTs its prefix once and reads each manifest and each
+  * size at most once, however many planning steps ask. The micro-batch
+  * stream re-lists on every trigger ([[list]]) but shares both memos:
+  * committed manifests and logs are immutable, so a memoized answer never
+  * goes stale, and the listing stays the source of truth for what exists.
+  * Lives as long as its scan; nothing is shared across queries. */
+private[v2] final class SegmentCatalog(conf: GraftSegments.SourceConf, pruning: Array[Filter]) {
+  private lazy val storage = conf.storage
+  private val stats = new scala.collection.concurrent.TrieMap[String, Option[graft.core.RecordStats]]
+  private val sizes = new scala.collection.concurrent.TrieMap[String, Long]
+  private val logSuffix = "." + graft.sources.ObjectKey.Suffix.Log.value
+
+  /** A fresh listing: one LIST under `prefix`, cut by the prunable
+    * `segment_key` filters, sorted. Key strings only, no bytes. */
+  def list(): Array[String] =
+    graft.sources.ObjectKey.committedSegments(storage, conf.prefix)
+      .filter(SegmentsScan.keyKeep(pruning)).sorted.toArray
+
+  /** The batch scan's listing, taken once. */
+  lazy val keys: Array[String] = list()
+
+  /** Manifest `RecordStats`, if the manifest parses and carries stats
+    * (reference-written manifests may not). One GET per key; a failed
+    * read is remembered as None too. */
+  def statsOf(key: String): Option[graft.core.RecordStats] =
+    stats.getOrElseUpdate(key,
+      try SegmentFetchJob.loadManifest(storage, key).recordStats
+      catch { case _: Exception => None })
+
+  def count(key: String): Option[Long] = statsOf(key).map(_.count)
+
+  /** The `.log` object's size from storage metadata (one `size()` per
+    * key). A failed call is not remembered, so the next ask retries. */
+  def logSize(key: String): Option[Long] =
+    sizes.get(key).orElse {
+      try { val v = storage.size(key + logSuffix); sizes.put(key, v); Some(v) }
+      catch { case _: Exception => None }
+    }
 
   /** Segment skipping on manifest stats: drop keys whose `RecordStats`
-    * interval provably misses every stats-prunable filter. One small
-    * manifest GET per surviving key-listed segment (memoized per scan),
-    * driver-side, no log byte — at 100 TB a time-range query's planning
+    * interval provably misses every stats-prunable filter. Driver-side,
+    * manifests only, no log byte — at 100 TB a time-range query's planning
     * I/O is manifests only, and its execution fetches just the matching
     * segments. */
-  private[v2] def statsPrune(conf: GraftSegments.SourceConf, keys: Array[String],
-                             filters: Array[Filter],
-                             memo: scala.collection.concurrent.Map[String, Option[graft.core.RecordStats]])
-      : Array[String] = {
-    val statsFilters = filters.filter(isStatsPrunable)
-    if (statsFilters.isEmpty) keys
-    else keys.filter(k => statsKeep(statsFilters, memo.getOrElseUpdate(k, statsOf(conf, k))))
+  def statsPrune(ks: Array[String], filters: Array[Filter]): Array[String] = {
+    val statsFilters = filters.filter(SegmentsScan.isStatsPrunable)
+    if (statsFilters.isEmpty) ks
+    else ks.filter(k => SegmentsScan.statsKeep(statsFilters, statsOf(k)))
   }
 
-  /** pushOffset's validating walk: true iff sorted-key manifests carry
-    * stats all the way past `offset` rows (so an exact skip is plannable).
-    * Small manifest GETs only, and only up to the skip boundary; counts
-    * gathered here land in `memo` so planInputPartitions' boundary walk
-    * re-reads nothing (halves driver planning I/O on large skips). */
-  private[v2] def offsetCoveredByStats(conf: GraftSegments.SourceConf,
-                                       filters: Array[Filter], offset: Int,
-                                       memo: scala.collection.mutable.Map[String, Long])
-      : Boolean = {
-    conf.ensureBackend()
-    val it = listSegments(conf, filters).iterator
+  /** pushOffset's one walk over [[keys]]: where a skip of `offset` rows
+    * ends, or None when a manifest inside the skip range carries no stats
+    * (an exact skip is then unplannable). Stats are read only up to the
+    * segment the skip ends in — an offset ending exactly on a segment
+    * boundary asks nothing of the next one. */
+  def offsetSkip(offset: Int): Option[SegmentsScan.OffsetSkip] = {
+    var i = 0
     var covered = 0L
-    while (it.hasNext && covered < offset) {
-      val k = it.next()
-      statsCount(conf, k) match {
-        case Some(c) => memo.put(k, c); covered += c
-        case None    => return false
+    while (i < keys.length && covered < offset) {
+      count(keys(i)) match {
+        case None => return None
+        case Some(c) if covered + c > offset =>
+          return Some(SegmentsScan.OffsetSkip(offset, i, offset - covered))
+        case Some(c) => covered += c; i += 1
       }
     }
-    covered >= offset || !it.hasNext // an offset past the store is fine: skip = everything
+    Some(SegmentsScan.OffsetSkip(offset, i, 0L)) // an offset past the store skips everything
   }
 }
 
-final class SegmentsScan(conf: GraftSegments.SourceConf, required: StructType,
+final class SegmentsScan private[v2] (conf: GraftSegments.SourceConf, required: StructType,
                          pruning: Array[Filter],
-                         limitOpt: Option[Int] = None,
-                         limitFromEnd: Boolean = false,
-                         offsetOpt: Option[Int] = None,
-                         statsMemo: Map[String, Long] = Map.empty) extends Scan with Batch
+                         limitOpt: Option[Int],
+                         limitFromEnd: Boolean,
+                         offsetSkip: Option[SegmentsScan.OffsetSkip],
+                         catalog: SegmentCatalog) extends Scan with Batch
     with SupportsRuntimeFiltering with SupportsReportStatistics {
+
+  /** An unlimited scan over its own catalog (the streaming entry). */
+  def this(conf: GraftSegments.SourceConf, required: StructType, pruning: Array[Filter]) =
+    this(conf, required, pruning, None, false, None, new SegmentCatalog(conf, pruning))
+
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
@@ -513,13 +552,9 @@ final class SegmentsScan(conf: GraftSegments.SourceConf, required: StructType,
     * minus compression — a conservative under/over estimate is fine for
     * join-strategy selection, exactness is not the contract. */
   override def estimateStatistics(): Statistics = new Statistics {
-    private lazy val bytes: Long = {
-      val storage = conf.storage
-      val logSuffix = "." + graft.sources.ObjectKey.Suffix.Log.value
-      SegmentsScan.listSegments(conf, pruning ++ runtimeFilters)
-        .map(k => try storage.size(s"$k$logSuffix") catch { case _: Exception => 0L })
-        .sum
-    }
+    private lazy val bytes: Long =
+      catalog.keys.filter(SegmentsScan.keyKeep(runtimeFilters))
+        .map(k => catalog.logSize(k).getOrElse(0L)).sum
     override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
   }
@@ -539,65 +574,31 @@ final class SegmentsScan(conf: GraftSegments.SourceConf, required: StructType,
   override def filter(filters: Array[Filter]): Unit =
     runtimeFilters = filters
 
-  /** Driver-side planning: manifest KEY LISTING only (strings; no manifest
-    * is parsed, no byte fetched until an executor runs its partition) —
-    * except under a pushed LIMIT, where manifests are walked in sorted-key
-    * order and planning stops once their `RecordStats` counts cover the
-    * limit (small manifest GETs only; a stats-less manifest contributes an
-    * unknown count, so the walk keeps going — correct, just less pruned;
-    * Spark's own limit still applies on top). */
-  /** Manifest record count, served from pushOffset's validation memo when
-    * that walk already fetched it. */
-  private def segStats(k: String): Option[Long] =
-    statsMemo.get(k).orElse(SegmentsScan.statsCount(conf, k))
-
-  /** Per-scan memo for the stats-pruning manifest reads (segment skipping
-    * on offset/timestamp range filters): one GET per key per scan, shared
-    * by re-plans (AQE) and the streaming listing. */
-  private val pruneMemo =
-    new scala.collection.concurrent.TrieMap[String, Option[graft.core.RecordStats]]
-
+  /** Driver-side planning over the catalog's listing, in sorted-key order:
+    *  1. a pushed OFFSET drops the segments pushOffset's walk skipped
+    *     whole, and its remainder rides the boundary segment as a row skip;
+    *  2. runtime `segment_key` filters and stats pruning drop keys;
+    *  3. a pushed LIMIT / topN keeps only the segments whose `RecordStats`
+    *     counts cover it, walked from the matching end (a stats-less
+    *     manifest contributes an unknown count, so the walk keeps going —
+    *     correct, just less pruned; Spark's own limit still applies on top).
+    * No byte is fetched until an executor runs its partition; manifests
+    * are read only for stats pruning and the limit walk, each at most once
+    * per scan, re-plans included. */
   override def planInputPartitions(): Array[InputPartition] = {
-    conf.ensureBackend()
-    // Pushed OFFSET (r7): drop whole segments below the skip boundary,
-    // carry the remainder into the first planned partition as a row skip.
-    // The boundary is computed over the STATIC listing — the same one
-    // pushOffset's validating walk proved stats-covered — because the
+    // The OFFSET boundary was computed over the STATIC listing, because the
     // offset's row semantics must not move when a join later injects a
-    // runtime segment_key filter. Runtime filters are applied AFTER the
-    // boundary, to the kept segments only: they approximate the join's
-    // own row filter, which sits ABOVE the offset, so dropping post-skip
-    // segments the join cannot match is safe while re-deriving the skip
-    // over a runtime-shrunk list would drop the wrong rows.
-    val offset = offsetOpt.map(_.toLong).getOrElse(0L)
-    var skipped = 0L
-    var firstSkip = 0L
-    val keys =
-      if (offset == 0L)
-        SegmentsScan.statsPrune(conf,
-          SegmentsScan.listSegments(conf, pruning ++ runtimeFilters), pruning, pruneMemo)
-      else {
-        val statics = SegmentsScan.listSegments(conf, pruning)
-        val it = statics.iterator
-        val kept = Array.newBuilder[(String, Long)] // (key, rows to skip in it)
-        var boundary = false
-        while (it.hasNext) {
-          val k = it.next()
-          if (boundary) kept += ((k, 0L))
-          else {
-            val c = segStats(k).getOrElse(
-              throw new IllegalStateException(
-                s"offset pushdown planned over stats-less manifest $k"))
-            if (skipped + c <= offset) skipped += c
-            else { boundary = true; kept += ((k, offset - skipped)) }
-          }
-        }
-        val surviving = kept.result()
-          .filter { case (k, _) => SegmentsScan.keyKeep(runtimeFilters)(k) }
-        firstSkip = surviving.headOption.map(_._2).getOrElse(0L)
-        surviving.map(_._1)
-      }
-    val afterOffset = keys
+    // runtime segment_key filter. Runtime filters apply to the kept
+    // segments only: they approximate the join's own row filter, which
+    // sits ABOVE the offset, so dropping post-skip segments the join
+    // cannot match is safe, while re-deriving the skip over a
+    // runtime-shrunk list would drop the wrong rows. (Spark pushes no
+    // offset under a residual filter, so `pruning` has no stats filter
+    // when an offset is set.)
+    val skip = offsetSkip.getOrElse(SegmentsScan.OffsetSkip(0, 0, 0L))
+    val boundary = catalog.keys.lift(skip.from)
+    val kept = catalog.statsPrune(
+      catalog.keys.drop(skip.from).filter(SegmentsScan.keyKeep(runtimeFilters)), pruning)
     val chosen = limitOpt match {
       case Some(n) =>
         val picked = Array.newBuilder[String]
@@ -605,21 +606,19 @@ final class SegmentsScan(conf: GraftSegments.SourceConf, required: StructType,
         // (Spark combines them plan-shape-dependently) — covering
         // offset + n from the boundary over-plans at worst, never under
         var covered = 0L
-        val target = n.toLong + offset
+        val target = n.toLong + skip.rows
         var satisfied = false
         // TopN DESC walks from the high-offset end of the sorted keys
-        val it = (if (limitFromEnd) afterOffset.reverseIterator else afterOffset.iterator)
+        val it = if (limitFromEnd) kept.reverseIterator else kept.iterator
         while (it.hasNext && !satisfied) {
           val k = it.next(); picked += k
-          segStats(k)
-            .foreach { c => covered += c; satisfied = covered >= target }
+          catalog.count(k).foreach { c => covered += c; satisfied = covered >= target }
         }
         picked.result()
-      case None => afterOffset
+      case None => kept
     }
-    val parts = chosen.zipWithIndex.map { case (k, i) =>
-      SegmentPartition(k, if (i == 0 && !limitFromEnd) firstSkip else 0L): InputPartition
-    }
+    val parts = chosen.map(k =>
+      SegmentPartition(k, if (boundary.contains(k)) skip.inFirst else 0L): InputPartition)
     SegmentsScan.lastPlannedPartitions = parts.length
     parts
   }
@@ -642,24 +641,24 @@ final class SegmentsScan(conf: GraftSegments.SourceConf, required: StructType,
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new SegmentsMicroBatchStream(this)
 
-  // the stream's own listing: never limit-truncated (a pushed batch LIMIT
-  // must not shorten a micro-batch offset range). Stats pruning applies —
-  // manifests are immutable once written, so the pruned listing is as
-  // deterministic as the raw one and a timestamp-bounded replay skips
-  // non-matching segments entirely. Spark pushes no filters into
-  // micro-batch scans, so the replay bounds arrive as source OPTIONS
-  // (`stream.startingTimestamp` / `stream.endingTimestamp`) synthesized
-  // into stats filters here (r9).
+  // the stream's own listing, re-taken on every trigger and never
+  // limit-truncated (a pushed batch LIMIT must not shorten a micro-batch
+  // offset range). Stats pruning applies — manifests are immutable once
+  // written, so the pruned listing is as deterministic as the raw one and
+  // a timestamp-bounded replay skips non-matching segments entirely. Spark
+  // pushes no filters into micro-batch scans, so the replay bounds arrive
+  // as source OPTIONS (`stream.startingTimestamp` /
+  // `stream.endingTimestamp`) synthesized into stats filters here (r9).
   private[v2] def segmentKeys(): Array[String] = {
     val bounds: Array[Filter] =
       (conf.streamStartingTimestamp.map(v =>
           GreaterThanOrEqual("kafka.timestamp", v): Filter) ++
         conf.streamEndingTimestamp.map(v =>
           LessThanOrEqual("kafka.timestamp", v): Filter)).toArray
-    SegmentsScan.statsPrune(conf,
-      SegmentsScan.listSegments(conf, pruning ++ runtimeFilters),
-      pruning ++ bounds, pruneMemo)
+    catalog.statsPrune(catalog.list(), pruning ++ bounds)
   }
+
+  private[v2] def segmentCatalog: SegmentCatalog = catalog
 
   private[v2] def readerFactory(): PartitionReaderFactory = createReaderFactory()
 
@@ -669,7 +668,7 @@ final class SegmentsScan(conf: GraftSegments.SourceConf, required: StructType,
     val pr = if (pruning.isEmpty) "" else pruning.mkString(" prunedBy=[", ", ", "]")
     val lm = limitOpt.map(n =>
       if (limitFromEnd) s" topN=$n(from-end)" else s" limit=$n").getOrElse("")
-    val off = offsetOpt.map(o => s" offset=$o").getOrElse("")
+    val off = offsetSkip.map(o => s" offset=${o.rows}").getOrElse("")
     s"graft-segments root=${conf.root} prefix='${conf.prefix}'$pr$lm$off"
   }
 }
@@ -727,7 +726,8 @@ final class SegmentsMicroBatchStream(scan: SegmentsScan)
     * for an object store): `stream.maxSegmentsPerTrigger` caps the batch by
     * partition count, `stream.maxBytesPerTrigger` by the Σ of `.log` object
     * sizes — decided from storage METADATA only (one `size()` HEAD per
-    * candidate key, no payload fetched, no manifest parsed). The byte cap
+    * candidate key, remembered for the stream's life by the scan's
+    * [[SegmentCatalog]]; no payload fetched, no manifest parsed). The byte cap
     * always admits at least one segment past `start`, so a segment larger
     * than the cap still makes progress instead of stalling the stream. */
   override def getDefaultReadLimit: ReadLimit = {
@@ -756,8 +756,6 @@ final class SegmentsMicroBatchStream(scan: SegmentsScan)
       .reduceOption(_ min _)
     val maxBytes = ls.collect { case b: ReadMaxBytes => b.maxBytes() }
       .reduceOption(_ min _)
-    val logSuffix = "." + graft.sources.ObjectKey.Suffix.Log.value
-    lazy val storage = { scan.sourceConf.ensureBackend(); scan.sourceConf.storage }
     var end = a
     var bytes = 0L
     var stop = false
@@ -769,12 +767,11 @@ final class SegmentsMicroBatchStream(scan: SegmentsScan)
         // unlimited. Conservative instead: stop admitting for this trigger
         // (progress guarantee intact — the first segment past `start` is
         // always admitted, sized or not).
-        val sz = maxBytes.fold(Some(0L): Option[Long])(_ =>
-          try Some(storage.size(keys(end) + logSuffix)) catch { case _: Exception => None })
+        val sz = maxBytes.fold(Some(0L): Option[Long])(_ => scan.segmentCatalog.logSize(keys(end)))
         sz match {
           case None =>
             SegmentsMicroBatchStream.log.warn(
-              s"graft-segments: size(${keys(end)}$logSuffix) failed; admitting " +
+              s"graft-segments: size(${keys(end)}.log) failed; admitting " +
                 (if (end == a) "it alone (progress guarantee) and " else "") +
                 "no further segments this trigger (stream.maxBytesPerTrigger " +
                 "cannot be enforced without metadata)")
@@ -995,7 +992,7 @@ object SegmentsAggScan {
   * column then one LongType per aggregate. Segments without stats (the
   * reference's own manifests) fall back to an exact payload parse of JUST
   * that segment — correctness never depends on the stats being present. */
-final class SegmentsAggScan(conf: GraftSegments.SourceConf, pruning: Array[Filter],
+final class SegmentsAggScan private[v2] (conf: GraftSegments.SourceConf, catalog: SegmentCatalog,
                             spec: SegmentsAggScan.AggSpec) extends Scan with Batch {
   import SegmentsAggScan._
 
@@ -1008,8 +1005,7 @@ final class SegmentsAggScan(conf: GraftSegments.SourceConf, pruning: Array[Filte
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val parts = SegmentsScan.listSegments(conf, pruning)
-      .map(SegmentPartition(_): InputPartition)
+    val parts = catalog.keys.map(SegmentPartition(_): InputPartition)
     SegmentsScan.lastPlannedPartitions = parts.length
     parts
   }

@@ -138,6 +138,18 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.suspectStallQueries(runs, Map.empty).isEmpty)
   }
 
+  test("stall reference: query minima only, and a reason whenever the sensor is off") {
+    val detail = """{"metric":"total","value":54.6,"queries":{"a01_sketches":0.95,"b01_bm25":0.22},""" +
+      """"sf":"/root/testdata/sf0.1","passes":3,"transform_mbps":812.5}"""
+    assert(Bench.stallReference(detail, "sf0.1") ==
+      Right(Map("a01_sketches" -> 0.95, "b01_bm25" -> 0.22)))
+    // another SF's detail, no queries object, or not JSON at all: off, with the reason
+    assert(Bench.stallReference(detail, "sf1").left.exists(_.contains("sf0.1")))
+    assert(Bench.stallReference("""{"sf":"sf0.1","value":1.0}""", "sf0.1") ==
+      Left("has no queries object"))
+    assert(Bench.stallReference("{truncated", "sf0.1").left.exists(_.startsWith("is not JSON")))
+  }
+
   test("ramping load still trips through the relative statistics") {
     assert(Bench.contendedVerdict(medianSpread = 2.5, worsening = 0.1,
       maxLoad = 2.0, cpus = 32, canaryNow = 5000, canaryBest = 5074))

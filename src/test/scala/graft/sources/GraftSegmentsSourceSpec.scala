@@ -242,6 +242,26 @@ class GraftSegmentsSourceSpec extends SparkSpec {
     assert(plan.contains("offset=12"), "offset must be pushed under the join:\n" + plan.take(2000))
   }
 
+  test("offset pushdown: an OFFSET ending on a segment boundary needs no stats past it") {
+    val (store, cfg, keys) = setup()
+    val pfx = keys.head.take(3)
+    // segment 1 as a reference-written manifest (no recordStats): OFFSET 10
+    // skips segment 0 whole and starts at segment 1's first row, so no
+    // count of segment 1 is needed to plan it
+    val mPath = java.nio.file.Paths.get(store, keys(1) + "." + ObjectKey.Suffix.Manifest.value)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = mapper.readTree(Files.readAllBytes(mPath))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.remove("recordStats")
+    Files.write(mPath, mapper.writeValueAsBytes(node))
+    graft.sources.v2.SegmentsScan.lastPlannedPartitions = -1
+    val got = reader(store, cfg).option("prefix", pfx).load().offset(10)
+      .select("kafka.offset").collect().map(_.getLong(0)).sorted
+    assert(got.toSeq == (10L until 30L))
+    assert(graft.sources.v2.SegmentsScan.lastPlannedPartitions == 2,
+      s"offset 10 must plan segments 1 and 2, planned ${graft.sources.v2.SegmentsScan.lastPlannedPartitions}")
+  }
+
   test("runtime filtering: a broadcast join on segment_key prunes partitions at RUN time (r6)") {
     import spark.implicits._
     val (store, cfg, keys) = setup()
@@ -267,6 +287,43 @@ class GraftSegmentsSourceSpec extends SparkSpec {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("RuntimeFilters") || plan.toLowerCase.contains("dynamicpruning"),
       "expected a runtime filter on the BatchScan:\n" + plan.take(3000))
+  }
+
+  test("driver planning I/O: one LIST per query, at most one manifest GET and one size() per key") {
+    import spark.implicits._
+    val (store, cfg, keys) = setup()
+    StorageBackends.register(DriverIo.Scheme, r => new DriverIo(r.stripPrefix(s"${DriverIo.Scheme}://")))
+    val root = s"${DriverIo.Scheme}://$store"
+    val pfx = keys.head.take(3)
+    val T0 = 1700000000000L
+    val dimDir = Files.createTempDirectory("dsv2-dim-io").toString
+    keys.zipWithIndex.map { case (k, i) => (k, i.toLong) }.toDF("segment_key", "pick")
+      .write.mode("overwrite").parquet(dimDir)
+    val wanted = spark.read.parquet(dimDir).where(col("pick") === 0L).select("segment_key")
+    val shapes: Seq[(String, org.apache.spark.sql.DataFrame, Int)] = Seq(
+      ("row scan", reader(root, cfg).load(), 30),
+      ("kafka.timestamp range", reader(root, cfg).load().where(col("kafka.timestamp") >= T0 + 20), 10),
+      ("LIMIT", reader(root, cfg).load().limit(5), 5),
+      ("OFFSET + LIMIT with prefix", reader(root, cfg).option("prefix", pfx).load().offset(12).limit(5), 5),
+      ("runtime-filtered segment_key join",
+        reader(root, cfg).load().join(broadcast(wanted), "segment_key"), 10))
+    val seen =
+      try shapes.map { case (name, df, rows) =>
+        DriverIo.reset()
+        val q = df.select("kafka.offset")
+        q.queryExecution.optimizedPlan.stats // the planner's size estimate, as a join would ask
+        assert(q.collect().length == rows, name)
+        name -> DriverIo.snapshot()
+      } finally StorageBackends.unregister(DriverIo.Scheme)
+    seen.foreach { case (name, (lists, gets, sizes)) =>
+      info(s"$name: LIST $lists, manifest GETs per key ${gets.values.toSeq.sorted.mkString("[", ",", "]")}, " +
+        s"size() per key ${sizes.values.toSeq.sorted.mkString("[", ",", "]")}")
+    }
+    seen.foreach { case (name, (lists, gets, sizes)) =>
+      assert(lists == 1, s"$name: $lists LISTs")
+      assert(gets.values.forall(_ <= 1), s"$name: manifest GETs per key $gets")
+      assert(sizes.values.forall(_ <= 1), s"$name: size() calls per key $sizes")
+    }
   }
 
   test("estimateStatistics: pruned scans report the pruned byte size (r6)") {
@@ -967,4 +1024,41 @@ class FakeGcsProvider extends StorageBackends.Provider {
 class FakeAzureProvider extends StorageBackends.Provider {
   override def scheme: String = "azure"
   override def create(root: String): StorageBackend = new AzureBlobStorage(FakeCloud.azure)
+}
+
+/** A local store that counts the storage calls made outside Spark tasks
+  * (`TaskContext.get == null`): the driver's planning I/O, per query. */
+final class DriverIo(dir: String) extends StorageBackend {
+  private val fs = FileSystemStorage(dir)
+  private def onDriver = org.apache.spark.TaskContext.get == null
+  override def upload(in: java.io.InputStream, key: String): Long = fs.upload(in, key)
+  override def fetch(key: String): java.io.InputStream = {
+    if (onDriver && key.endsWith(s".${ObjectKey.Suffix.Manifest.value}")) DriverIo.bump(DriverIo.gets, key)
+    fs.fetch(key)
+  }
+  override def fetchRange(key: String, range: graft.core.BytesRange): java.io.InputStream =
+    fs.fetchRange(key, range)
+  override def delete(key: String): Unit = fs.delete(key)
+  override def exists(key: String): Boolean = fs.exists(key)
+  override def size(key: String): Long = {
+    if (onDriver) DriverIo.bump(DriverIo.sizes, key)
+    fs.size(key)
+  }
+  override def listKeys(prefix: String): Vector[String] = {
+    if (onDriver) DriverIo.lists.incrementAndGet()
+    fs.listKeys(prefix)
+  }
+}
+
+object DriverIo {
+  val Scheme = "driverio"
+  private val lists = new java.util.concurrent.atomic.AtomicInteger
+  private val gets = scala.collection.concurrent.TrieMap.empty[String, Int]
+  private val sizes = scala.collection.concurrent.TrieMap.empty[String, Int]
+  private def bump(m: scala.collection.concurrent.TrieMap[String, Int], key: String): Unit =
+    m.synchronized(m.update(key, m.getOrElse(key, 0) + 1))
+  def reset(): Unit = { lists.set(0); gets.clear(); sizes.clear() }
+  /** (LIST calls, manifest GETs per manifest key, size() calls per key). */
+  def snapshot(): (Int, Map[String, Int], Map[String, Int]) =
+    (lists.get, gets.toMap, sizes.toMap)
 }
