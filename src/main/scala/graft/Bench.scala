@@ -750,10 +750,10 @@ object Bench {
     * (~1.3 ms) are paid; there is no per-request setup left to amortize
     * (cipher instances are thread-pooled, the manifest+unwrapped-key pair
     * is cached, and r10 removed the extra output copies — one copy per
-    * byte served). Two real levers exist and both are shipped: the chunk
-    * cache (warm reads 1800+ MB/s, C1-C4) and a smaller configured
-    * chunkSize for point-read-heavy workloads (1 MiB chunks quarter the
-    * amplification at ~0.5% size overhead). Cold-JVM caveat measured
+    * byte served). Two real levers exist: `persist()` of a scan that is
+    * read again (SURVEY C1-C4) and a smaller configured chunkSize for
+    * point-read-heavy workloads (1 MiB chunks quarter the amplification
+    * at ~0.5% size overhead). Cold-JVM caveat measured
     * while adjudicating: the JDK only compiles the GCM intrinsic stubs
     * after thousands of cipher calls, so a fresh serving JVM decrypts at
     * ~60 MB/s until ~10k chunks have passed — the bench measures the warm
@@ -780,31 +780,9 @@ object Bench {
       }
       range.size / 1e6 / best
     }
-    // C2-wired read path (DSv2 `read.prefetch.bytes`): chunk-granular cache
-    // + 2 background prefetch threads overlapping fetch+detransform with
-    // the consumer. Cold = cache dropped per pass (pipelining win only);
-    // warm = second scan of a cached segment (storage untouched).
-    val pfCache = new graft.sources.LruByteCache(256L << 20)
-    val pf = new graft.sources.CachingChunkFetcher(cfg, pfCache, 16L * 1024 * 1024)
-    def timePf(dropCache: Boolean): Double = {
-      pf.segmentBytes("bench-seg") // warm JIT + manifest
-      var best = Double.MaxValue
-      (1 to 3).foreach { _ =>
-        if (dropCache) pfCache.invalidateAll()
-        val t0 = System.nanoTime()
-        pf.segmentBytes("bench-seg")
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      }
-      size / 1e6 / best
-    }
-    val cold = timePf(dropCache = true)
-    val warm = timePf(dropCache = false)
-    pf.shutdown()
     Seq(
       "full_comp_enc" -> time(BytesRange(0, size - 1L)),
-      "subrange_1mib_comp_enc" -> time(BytesRange(10 * 1024 * 1024L, 11 * 1024 * 1024L - 1)),
-      "full_prefetch_cold" -> cold,
-      "full_prefetch_warm" -> warm)
+      "subrange_1mib_comp_enc" -> time(BytesRange(10 * 1024 * 1024L, 11 * 1024 * 1024L - 1)))
   }
 
   /** The JMH grid at 10 MiB content: chunk {100 KiB, 1 MiB, 5 MiB} ×

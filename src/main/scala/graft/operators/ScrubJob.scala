@@ -82,8 +82,7 @@ object ScrubJob {
 
     val originalSize = manifest.chunkIndex.originalFileSize.toLong
     val original =
-      try SegmentFetchJob.readRange(manifest, BytesRange(0, originalSize - 1))(
-        SegmentFetchJob.readChunk(storage, segKey, _, spec))
+      try SegmentFetchJob.readRange(storage, segKey, manifest, spec, BytesRange(0, originalSize - 1))
       catch { case e: Exception => return bad(s"detransform-failed: ${e.getMessage}", nChunks) }
     if (original.length.toLong != originalSize)
       return bad(s"length-mismatch: detransformed ${original.length} != manifest $originalSize",

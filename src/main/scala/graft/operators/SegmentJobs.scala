@@ -280,7 +280,7 @@ object SegmentCompressionChecker {
   * This object is the engine's one manifest stage: [[resolve]] turns a
   * segment key into its (manifest, read spec), [[readSpec]] caches that,
   * and [[readChunk]] is the one chunk fetch + detransform. Every read path
-  * (direct and prefetching DSv2 reads, the chunk DataFrame, scrub) goes
+  * (the DSv2 reader, the chunk DataFrame, scrub) goes
   * through them.
   */
 object SegmentFetchJob {
@@ -376,15 +376,16 @@ object SegmentFetchJob {
   def fetchRange(storage: StorageBackend, cfg: SegmentJobConfig,
                  segKey: String, range: BytesRange): Array[Byte] = {
     val (m, spec) = readSpec(storage, cfg, segKey)
-    readRange(m, range)(readChunk(storage, segKey, _, spec))
+    readRange(storage, segKey, m, spec, range)
   }
 
-  /** Original bytes `range` of a segment with manifest `m`, assembled from
-    * its detransformed chunks as `chunk` returns them: a direct
-    * [[readChunk]] ([[fetchRange]], scrub) or the prefetching chunk cache.
-    * The range is clamped to the segment size. */
-  private[graft] def readRange(m: SegmentManifest, range: BytesRange)
-                              (chunk: Chunk => Array[Byte]): Array[Byte] = {
+  /** Original bytes `range` of a segment with manifest `m` and transform
+    * `spec`, assembled from its chunks as [[readChunk]] fetches and
+    * detransforms them. The range is clamped to the segment size. Callers
+    * resolve `(m, spec)` themselves: [[fetchRange]] through the
+    * [[readSpec]] cache, scrub uncached through [[resolve]]. */
+  private[graft] def readRange(storage: StorageBackend, segKey: String, m: SegmentManifest,
+                               spec: TransformSpec, range: BytesRange): Array[Byte] = {
     val clamped = BytesRange(range.from, math.min(range.to, m.chunkIndex.originalFileSize - 1L))
     val chunks = m.chunkIndex.chunksForRange(clamped)
     if (chunks.isEmpty) return Array.emptyByteArray
@@ -404,7 +405,7 @@ object SegmentFetchJob {
       // fetch stops paying for decrypt/decompress it will throw away.
       if (Thread.currentThread().isInterrupted)
         throw new InterruptedException("fetch cancelled")
-      val plain = chunk(c)
+      val plain = readChunk(storage, segKey, c, spec)
       val origPos = c.originalPosition.toLong
       val from = math.max(origPos, clamped.from)
       val to = math.min(origPos + plain.length - 1, clamped.to)

@@ -111,12 +111,4 @@ object SegmentToRows {
     }
     spark.createDataFrame(rows, RowSchema.rawSchema)
   }
-
-  /** Read every `*.log` under `dir` as one segment per file. */
-  def fromSegmentDir(spark: SparkSession, dir: String, partition: Int = 0): DataFrame = {
-    val rows = spark.read.format("binaryFile").load(dir)
-      .select("content").rdd
-      .flatMap(row => recordRows(row.getAs[Array[Byte]](0), partition))
-    spark.createDataFrame(rows, RowSchema.rawSchema)
-  }
 }

@@ -87,18 +87,6 @@ object GraftSegments {
   final case class SourceConf(root: String, prefix: String,
                               rsaPublicKeyB64: String, rsaPrivateKeyB64: String,
                               backendProvider: String = "",
-                              /** >0 routes partition reads through the
-                                * executor-shared [[graft.sources.CachingChunkFetcher]]
-                                * (C2): chunk-granular cache + background
-                                * prefetch of this many original bytes ahead
-                                * of the consumer. 0 (default) = direct
-                                * ranged fetches ([[SegmentFetchJob.fetchRange]]).
-                                * Both resolve manifests through the same
-                                * validated, bounded [[SegmentFetchJob.readSpec]]. */
-                              prefetchBytes: Long = 0L,
-                              /** Executor-wide chunk-cache budget for the
-                                * prefetch path. */
-                              cacheBytes: Long = 256L << 20,
                               /** Streaming admission control (0 = unlimited):
                                 * cap each micro-batch at this many segments /
                                 * this many `.log` payload bytes (metadata
@@ -166,59 +154,12 @@ object GraftSegments {
         Option(o.get("rsaPublicKeyB64")).getOrElse(""),
         Option(o.get("rsaPrivateKeyB64")).getOrElse(""),
         Option(o.get("backend.provider")).getOrElse(""),
-        Option(o.get("read.prefetch.bytes")).map(_.toLong).getOrElse(0L),
-        Option(o.get("read.cache.bytes")).map(_.toLong).getOrElse(256L << 20),
         Option(o.get("stream.maxSegmentsPerTrigger")).map(_.toInt).getOrElse(0),
         Option(o.get("stream.maxBytesPerTrigger")).map(_.toLong).getOrElse(0L),
         Option(o.get("encryption")).map(_.toBoolean),
         Option(o.get("stream.startingTimestamp")).map(_.toLong),
         Option(o.get("stream.endingTimestamp")).map(_.toLong))
     }
-  }
-}
-
-/** Executor-lifetime chunk cache + prefetcher registry for the DSv2 read
-  * path (C2 wiring, r4 verdict task 8): one [[graft.sources.LruByteCache]]
-  * of detransformed chunks + [[graft.sources.CachingChunkFetcher]] per
-  * (root, [[SegmentJobConfig.keyDigest]], prefetch, budget) tuple, shared
-  * by every partition reader in the JVM — so a segment fetched by one task
-  * (or a previous query) is served from memory for the next, and prefetch
-  * threads overlap fetch+detransform with the consumer. Two sources on the
-  * same root with different keys or budgets never share entries. Manifests
-  * are not cached here: they come from [[SegmentFetchJob.readSpec]], the
-  * same bounded cache the direct path uses.
-  *
-  * Bounded: at most [[MaxFetchers]] tuples live at once, least recently
-  * used first out. An evicted fetcher's prefetch pool is shut down and its
-  * cache dropped with it; a reader still holding it keeps reading (chunk
-  * loads run on the caller), only without prefetch. */
-private[graft] object SegmentsReadCache {
-  val MaxFetchers = 4
-
-  private type Entry = (graft.sources.LruByteCache, graft.sources.CachingChunkFetcher)
-  private val fetchers = new java.util.LinkedHashMap[String, Entry](8, 0.75f, true)
-
-  def forConf(cfg: graft.operators.SegmentJobConfig, prefetchBytes: Long,
-              cacheBytes: Long): Entry = fetchers.synchronized {
-    val id = s"${cfg.storageRoot}#${cfg.keyDigest}#$prefetchBytes#$cacheBytes"
-    var e = fetchers.get(id)
-    if (e == null) {
-      val cache = new graft.sources.LruByteCache(cacheBytes)
-      e = (cache, new graft.sources.CachingChunkFetcher(cfg, cache, prefetchBytes))
-      fetchers.put(id, e)
-      val it = fetchers.values().iterator()
-      while (fetchers.size > MaxFetchers) { it.next()._2.shutdown(); it.remove() }
-    }
-    e
-  }
-
-  def size: Int = fetchers.synchronized(fetchers.size)
-
-  /** Test hook: shut down and drop every cached fetcher (fake backends
-    * re-register roots). */
-  private[graft] def reset(): Unit = fetchers.synchronized {
-    fetchers.values().forEach(_._2.shutdown())
-    fetchers.clear()
   }
 }
 
@@ -545,16 +486,16 @@ final class SegmentsScan private[v2] (conf: GraftSegments.SourceConf, required: 
   override def toBatch: Batch = this
 
   /** Planner-visible size estimate (r6): Σ `.log` object sizes over the
-    * statically-pruned segment set — one metadata `size()` per segment,
-    * no byte fetched. Joins against a pruned segments scan can then
-    * broadcast correctly instead of defaulting to a shuffle (an unknown-
-    * size v2 scan is assumed huge). Transformed size ≥ original payload
-    * minus compression — a conservative under/over estimate is fine for
-    * join-strategy selection, exactness is not the contract. */
+    * segments this scan plans ([[plannedKeys]]) — one metadata `size()`
+    * per planned segment, no byte fetched, so a stats-pruned or LIMITed
+    * scan reports only what it will read. Joins against a pruned segments
+    * scan can then broadcast correctly instead of defaulting to a shuffle
+    * (an unknown-size v2 scan is assumed huge). Transformed size ≥
+    * original payload minus compression — a conservative under/over
+    * estimate is fine for join-strategy selection, exactness is not the
+    * contract. */
   override def estimateStatistics(): Statistics = new Statistics {
-    private lazy val bytes: Long =
-      catalog.keys.filter(SegmentsScan.keyKeep(runtimeFilters))
-        .map(k => catalog.logSize(k).getOrElse(0L)).sum
+    private lazy val bytes: Long = plannedKeys().map(k => catalog.logSize(k).getOrElse(0L)).sum
     override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
   }
@@ -574,32 +515,34 @@ final class SegmentsScan private[v2] (conf: GraftSegments.SourceConf, required: 
   override def filter(filters: Array[Filter]): Unit =
     runtimeFilters = filters
 
-  /** Driver-side planning over the catalog's listing, in sorted-key order:
+  private val skip = offsetSkip.getOrElse(SegmentsScan.OffsetSkip(0, 0, 0L))
+
+  /** The segments this scan reads, chosen on the driver over the catalog's
+    * listing, in sorted-key order:
     *  1. a pushed OFFSET drops the segments pushOffset's walk skipped
-    *     whole, and its remainder rides the boundary segment as a row skip;
+    *     whole;
     *  2. runtime `segment_key` filters and stats pruning drop keys;
     *  3. a pushed LIMIT / topN keeps only the segments whose `RecordStats`
     *     counts cover it, walked from the matching end (a stats-less
     *     manifest contributes an unknown count, so the walk keeps going —
     *     correct, just less pruned; Spark's own limit still applies on top).
-    * No byte is fetched until an executor runs its partition; manifests
-    * are read only for stats pruning and the limit walk, each at most once
-    * per scan, re-plans included. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    // The OFFSET boundary was computed over the STATIC listing, because the
-    // offset's row semantics must not move when a join later injects a
-    // runtime segment_key filter. Runtime filters apply to the kept
-    // segments only: they approximate the join's own row filter, which
-    // sits ABOVE the offset, so dropping post-skip segments the join
-    // cannot match is safe, while re-deriving the skip over a
-    // runtime-shrunk list would drop the wrong rows. (Spark pushes no
-    // offset under a residual filter, so `pruning` has no stats filter
-    // when an offset is set.)
-    val skip = offsetSkip.getOrElse(SegmentsScan.OffsetSkip(0, 0, 0L))
-    val boundary = catalog.keys.lift(skip.from)
+    * Manifests are read only for stats pruning and the limit walk, each at
+    * most once per scan (the catalog memoizes), however often the size
+    * estimate and re-plans ask.
+    *
+    * The OFFSET boundary was computed over the STATIC listing, because the
+    * offset's row semantics must not move when a join later injects a
+    * runtime segment_key filter. Runtime filters apply to the kept
+    * segments only: they approximate the join's own row filter, which
+    * sits ABOVE the offset, so dropping post-skip segments the join
+    * cannot match is safe, while re-deriving the skip over a
+    * runtime-shrunk list would drop the wrong rows. (Spark pushes no
+    * offset under a residual filter, so `pruning` has no stats filter
+    * when an offset is set.) */
+  private def plannedKeys(): Array[String] = {
     val kept = catalog.statsPrune(
       catalog.keys.drop(skip.from).filter(SegmentsScan.keyKeep(runtimeFilters)), pruning)
-    val chosen = limitOpt match {
+    limitOpt match {
       case Some(n) =>
         val picked = Array.newBuilder[String]
         // a pushed limit may or may not already include the offset rows
@@ -617,7 +560,14 @@ final class SegmentsScan private[v2] (conf: GraftSegments.SourceConf, required: 
         picked.result()
       case None => kept
     }
-    val parts = chosen.map(k =>
+  }
+
+  /** One partition per [[plannedKeys]] key; a pushed OFFSET's remainder
+    * rides the boundary segment as a row skip. No byte is fetched until an
+    * executor runs its partition. */
+  override def planInputPartitions(): Array[InputPartition] = {
+    val boundary = catalog.keys.lift(skip.from)
+    val parts = plannedKeys().map(k =>
       SegmentPartition(k, if (boundary.contains(k)) skip.inFirst else 0L): InputPartition)
     SegmentsScan.lastPlannedPartitions = parts.length
     parts
@@ -848,13 +798,8 @@ final class SegmentsReader(conf: GraftSegments.SourceConf, required: StructType,
 
   private lazy val batches: Iterator[KafkaWireCodec.BatchView] = {
     conf.ensureBackend() // executor-side transport registration
-    val bytes =
-      if (conf.prefetchBytes > 0)
-        SegmentsReadCache.forConf(conf.jobConfig, conf.prefetchBytes, conf.cacheBytes)._2
-          .segmentBytes(segKey)
-      else
-        SegmentFetchJob.fetchRange(conf.jobConfig, segKey, BytesRange(0L, Long.MaxValue - 1L))
-    KafkaWireCodec.batchViews(bytes)
+    KafkaWireCodec.batchViews(
+      SegmentFetchJob.fetchRange(conf.jobConfig, segKey, BytesRange(0L, Long.MaxValue - 1L)))
   }
 
   private var batch: KafkaWireCodec.BatchView = _

@@ -5,12 +5,12 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.core.BytesRange
 import graft.operators._
-import graft.sources.{CachingChunkFetcher, FileSystemStorage, LruByteCache, ObjectKey}
+import graft.sources.{FileSystemStorage, ObjectKey}
 import graft.streaming.SegmentIngestStream
 
 /** Smoke CLI for the streaming tier-out + serving layer: drop segment files
-  * into a watch dir, run the ingest stream (AvailableNow), serve ranges back
-  * through the prefetching cache, then run retention + orphan GC.
+  * into a watch dir, run the ingest stream (AvailableNow), serve a range back
+  * through the ranged fetch, then run retention + orphan GC.
   */
 object StreamingIngestDemo {
   def main(args: Array[String]): Unit = {
@@ -46,18 +46,10 @@ object StreamingIngestDemo {
     q2.awaitTermination(60000)
     println(s"after checkpoint replay: ${ObjectKey.committedSegments(storage, "").size} manifests (unchanged)")
 
-    // serving path through the prefetching cache
-    val cache = new LruByteCache(16 * 1024 * 1024)
-    val fetcher = new CachingChunkFetcher(cfg, cache, prefetchMaxBytes = 16384)
+    // serving path: one ranged fetch
     val segKey = storage.listKeys("").find(k => k.contains("seg02") && k.endsWith(".log")).get.stripSuffix(".log")
     val got = SegmentFetchJob.fetchRange(cfg, segKey, BytesRange(123, 4567))
     println(s"served range byte-equal: ${java.util.Arrays.equals(got, java.util.Arrays.copyOfRange(payloads(2), 123, 4568))}")
-    fetcher.getChunk(segKey, 0)
-    Thread.sleep(500)
-    val s1 = cache.stats
-    fetcher.getChunk(segKey, 1) // prefetch should have warmed this
-    val s2 = cache.stats
-    println(s"prefetch warmed next chunk: ${s2.hits > s1.hits} (cache size ${cache.size}, hits ${s2.hits})")
 
     // topic ingest: .log Kafka segments stream into a record table
     {
@@ -84,7 +76,6 @@ object StreamingIngestDemo {
     val ret = RetentionJob.deleteSegments(cfg, k => k.contains("seg00") || k.contains("seg01"))
     println(s"gc orphans: ${gc.orphansDeleted}, retention deleted segments: ${ret.segmentsDeleted} objects: ${ret.objectsDeleted}")
     println(s"remaining logs: ${storage.listKeys("").count(_.endsWith(".log"))}")
-    fetcher.shutdown()
     spark.stop()
   }
 }

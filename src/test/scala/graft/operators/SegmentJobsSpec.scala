@@ -117,22 +117,16 @@ class SegmentJobsSpec extends SparkSpec {
     val segKey = manifestKey.stripSuffix(".rsm-manifest")
     val m = SegmentManifest.fromJson(new String(storage.fetchBytes(manifestKey), "UTF-8"))
 
-    // Both DSv2 read paths must reject an incompatible manifest the same
-    // way: the direct ranged fetch, and the read.prefetch.bytes chunk
-    // fetcher. Each bad manifest
-    // sits on a copy of the segment under a fresh key; a manifest that
-    // fails validation is never cached, so every path re-reads it.
-    val prefetching = graft.sources.v2.SegmentsReadCache.forConf(cfg, 4096L, 1L << 20)._2
-    val paths: Seq[(String, String => Any)] = Seq(
-      "direct" -> (k => SegmentFetchJob.fetchRange(cfg, k, BytesRange(0, 10))),
-      "prefetch" -> (k => prefetching.segmentBytes(k)))
+    // The ranged fetch (the DSv2 reader's one path) must reject an
+    // incompatible manifest with a clear message. Each bad manifest sits on
+    // a copy of the segment under a fresh key; a manifest that fails
+    // validation is never cached, so every read re-reads it.
     def rejects(bad: SegmentManifest, suffix: String, message: String): Unit = {
       storage.uploadBytes(bad.toJson.getBytes("UTF-8"), s"$segKey-$suffix.rsm-manifest")
       storage.uploadBytes(storage.fetchBytes(s"$segKey.log"), s"$segKey-$suffix.log")
-      paths.foreach { case (name, read) =>
-        val e = intercept[IllegalStateException](read(s"$segKey-$suffix"))
-        assert(e.getMessage.contains(message), s"$name path: ${e.getMessage}")
-      }
+      val e = intercept[IllegalStateException](
+        SegmentFetchJob.fetchRange(cfg, s"$segKey-$suffix", BytesRange(0, 10)))
+      assert(e.getMessage.contains(message), e.getMessage)
     }
 
     // foreign key-wrap algorithm (SHA3-512 — the reference's — is readable

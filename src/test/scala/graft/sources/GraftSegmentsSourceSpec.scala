@@ -324,6 +324,11 @@ class GraftSegmentsSourceSpec extends SparkSpec {
       assert(gets.values.forall(_ <= 1), s"$name: manifest GETs per key $gets")
       assert(sizes.values.forall(_ <= 1), s"$name: size() calls per key $sizes")
     }
+    // the size estimate asks size() of the planned segments only
+    Seq("kafka.timestamp range" -> keys.last, "LIMIT" -> keys.head).foreach { case (name, planned) =>
+      val sized = seen.toMap.apply(name)._3.keySet
+      assert(sized == Set(s"$planned.log"), s"$name: size() on $sized, plans only $planned")
+    }
   }
 
   test("estimateStatistics: pruned scans report the pruned byte size (r6)") {
@@ -334,12 +339,21 @@ class GraftSegmentsSourceSpec extends SparkSpec {
       }.get
       rel.computeStats().sizeInBytes.toLong
     }
+    val T0 = 1700000000000L
     val full = statsOf(reader(store, cfg).load())
-    val one = statsOf(reader(store, cfg).load().where(col("segment_key") === keys.head))
     val logSizes = keys.map(k => graft.sources.FileSystemStorage(store).size(s"$k.log"))
     assert(full == logSizes.sum, s"full-scan estimate $full != sum of log sizes ${logSizes.sum}")
-    assert(one == logSizes.head, s"pruned estimate $one != pruned log size ${logSizes.head}")
-    assert(one < full)
+    // each pruned shape reports the size of exactly the segment it plans:
+    // segment_key pruning, stats pruning (only the last segment's
+    // timestamps reach T0 + 20), and a LIMIT the first segment covers
+    Seq(
+      ("segment_key", reader(store, cfg).load().where(col("segment_key") === keys.head), 0),
+      ("kafka.timestamp range", reader(store, cfg).load().where(col("kafka.timestamp") >= T0 + 20), 2),
+      ("LIMIT", reader(store, cfg).load().limit(5), 0)).foreach { case (name, df, planned) =>
+      val est = statsOf(df)
+      assert(est == logSizes(planned), s"$name: estimate $est != planned log size ${logSizes(planned)}")
+      assert(est < full, name)
+    }
   }
 
   test("column pruning: metadata-only scans never materialize payloads") {
@@ -768,68 +782,13 @@ class GraftSegmentsSourceSpec extends SparkSpec {
     assert(viaSource == viaParse)
   }
 
-  test("read.prefetch.bytes: C2 chunk cache serves re-scans; prefetch pulls surplus chunks") {
-    import graft.sources.v2.SegmentsReadCache
-    SegmentsReadCache.reset()
-    // fatter records than setup()'s so each segment spans SEVERAL 512-byte
-    // chunks (the whole point of chunk-granular caching)
-    val in = Files.createTempDirectory("dsv2-pf-in").toString
-    val store = Files.createTempDirectory("dsv2-pf-store").toString
-    (0 until 3).foreach { s =>
-      val out = new java.io.ByteArrayOutputStream()
-      val base = s * 10L
-      val recs = (0 until 10).map(i =>
-        (kb(s"k${base + i}"), kb(s"v${base + i}" * 60), Seq.empty[Header]))
-      out.write(writeBatch(buildBatch(base, 1700000000000L + base, recs)))
-      Files.write(java.nio.file.Paths.get(in, f"seg$s%03d.log"), out.toByteArray)
-    }
-    val cfg = SegmentJobConfig.withGeneratedKeys(store).copy(chunkSize = 512, compression = false)
-    assert(SegmentUploadJob.run(spark, in, cfg).collect().forall(_.getAs[Boolean]("success")))
-    val keys = FileSystemStorage(store).listKeys("")
-      .filter(_.endsWith(".log")).map(_.dropRight(".log".length)).sorted
-    val prefetch = 1L << 20
-
-    // first scan fills the executor-shared chunk cache; rows decode intact
-    val df = reader(store, cfg).option("read.prefetch.bytes", prefetch.toString).load()
-    val got = df.select(col("kafka.offset"), col("value_raw").cast("string")).collect()
-    assert(got.map(_.getLong(0)).toSet == (0L until 30L).toSet)
-    got.foreach(r => assert(r.getString(1) == s"v${r.getLong(0)}" * 60))
-    val (cache, fetcher) = SegmentsReadCache.forConf(
-      SegmentJobConfig(storageRoot = store,
-        rsaPublicKey = cfg.rsaPublicKey, rsaPrivateKey = cfg.rsaPrivateKey),
-      prefetch, 256L << 20)
-    // chunkSize=512 → multiple chunks per segment, all cached after the scan
-    val cachedSegs = cache.cachedKeys.map(_.takeWhile(_ != '#')).toSet
-    assert(cachedSegs == keys.toSet, s"cache holds $cachedSegs")
-    assert(cache.cachedKeys.exists(_.endsWith("#1")), "multi-chunk segments expected")
-
-    // re-scan: storage is never touched again (no new cache loads).
-    // NOTE: must be a ROW-path read — a bare count() would ride the r7
-    // aggregate pushdown and answer from manifests without touching the
-    // chunk cache at all (see the aggregate pushdown tests)
-    val before = cache.stats
-    assert(reader(store, cfg).option("read.prefetch.bytes", prefetch.toString)
-      .load().select(col("kafka.offset")).collect().length == 30)
-    val after = cache.stats
-    assert(after.misses == before.misses, "re-scan must not reload from storage")
-    assert(after.hits > before.hits, "re-scan must be served by the cache")
-
-    // surplus: ask ONLY for chunk 0 — prefetch brings chunk 1 in the background
-    cache.invalidateAll()
-    fetcher.getChunk(keys.head, 0)
-    val deadline = System.nanoTime() + 2_000_000_000L
-    def surplusCached = cache.cachedKeys.contains(s"${keys.head}#1")
-    while (!surplusCached && System.nanoTime() < deadline) Thread.sleep(10)
-    assert(surplusCached, "prefetch should cache the next chunk without a request for it")
-  }
-
   // --- the reader writes Catalyst rows directly: parity with the parse ---
 
   /** Three segments of three batches each (offsets 0..71, contiguous),
     * with every value shape the writer handles: null keys, headers with a
     * null value, empty headers, registry-framed and plain values, distinct
-    * batch metadata per batch. Chunked at 512 bytes so the prefetch path
-    * spans several chunks per segment. */
+    * batch metadata per batch. Chunked at 512 bytes so each segment's
+    * read spans several chunks. */
   private def richSetup(codec: Int = CodecNone)
       : (String, SegmentJobConfig, Vector[String], graft.records.SchemaRegistry) = {
     val registry = graft.records.SchemaRegistry(Files.createTempDirectory("dsv2-reg").toString)
@@ -933,7 +892,7 @@ class GraftSegmentsSourceSpec extends SparkSpec {
     }
   }
 
-  test("reader rows equal SegmentToRows under a pushed OFFSET and on the prefetch path") {
+  test("reader rows equal SegmentToRows under a pushed OFFSET") {
     val (store, cfg, keys, _) = richSetup()
     val want = parsed(cfg, keys)
     val pfx = keys.head.take(3)
@@ -947,12 +906,6 @@ class GraftSegmentsSourceSpec extends SparkSpec {
       assert(rowsOf(got) == rowsOf(want.orderBy(col("kafka.offset")).offset(skip)))
       assert(graft.sources.v2.SegmentsScan.lastPlannedPartitions == 2)
     }
-    graft.sources.v2.SegmentsReadCache.reset()
-    val viaPrefetch = reader(store, cfg).option("read.prefetch.bytes", "4096").load()
-    assert(rowsOf(viaPrefetch) == rowsOf(want))
-    assert(rowsOf(viaPrefetch.select(col("kafka.offset"), col("value_raw"))) ==
-      rowsOf(want.select(col("kafka.offset"), col("value_raw"))))
-    graft.sources.v2.SegmentsReadCache.reset()
   }
 
   test("TypedDecode over the source: the scan reads only the raw column") {
@@ -966,39 +919,6 @@ class GraftSegmentsSourceSpec extends SparkSpec {
     assert(rowsOf(got) == rowsOf(query(parsed(cfg, keys))))
     // 36 plain (odd-offset) values decode to null, never dropped
     assert(got.collect().map(r => Option(r.getString(0)) -> r.getLong(1)).toMap.apply(None) == 36L)
-  }
-
-  test("read cache registry is bounded: evicted fetchers' prefetch threads end") {
-    import scala.jdk.CollectionConverters._
-    import graft.sources.v2.SegmentsReadCache
-    SegmentsReadCache.reset()
-    def prefetchThreads: Int =
-      Thread.getAllStackTraces.keySet.asScala.count(t => t.getName == "graft-prefetch" && t.isAlive)
-    val baseline = prefetchThreads
-    val (store, cfg, _, _) = richSetup()
-    val roots = (0 until SegmentsReadCache.MaxFetchers + 2).map { i =>
-      val root = Files.createTempDirectory(s"dsv2-root$i")
-      val src = java.nio.file.Paths.get(store)
-      val walk = Files.walk(src)
-      try walk.iterator.asScala.foreach { p =>
-        val to = root.resolve(src.relativize(p).toString)
-        if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
-      } finally walk.close()
-      root.toString
-    }
-    roots.foreach { root =>
-      val n = reader(root, cfg).option("read.prefetch.bytes", "4096").load()
-        .select(col("kafka.offset")).collect().length
-      assert(n == 72)
-      assert(SegmentsReadCache.size <= SegmentsReadCache.MaxFetchers)
-    }
-    // each live fetcher owns at most 4 prefetch threads; evicted pools are
-    // shut down, so their idle threads exit
-    val bound = baseline + 4 * SegmentsReadCache.MaxFetchers
-    val deadline = System.nanoTime() + 10_000_000_000L
-    while (prefetchThreads > bound && System.nanoTime() < deadline) Thread.sleep(20)
-    assert(prefetchThreads <= bound, s"$prefetchThreads prefetch threads alive, bound $bound")
-    SegmentsReadCache.reset()
   }
 }
 
