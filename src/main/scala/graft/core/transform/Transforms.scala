@@ -1,6 +1,6 @@
 package graft.core.transform
 
-import java.io.{ByteArrayOutputStream, InputStream}
+import java.io.ByteArrayOutputStream
 import java.nio.ByteBuffer
 import java.util.zip.{Deflater, Inflater}
 import javax.crypto.Cipher
@@ -16,35 +16,6 @@ import com.github.luben.zstd.{Zstd, ZstdCompressCtx}
   * narrow `mapPartitions` stages with no shuffle.
   */
 object Transforms {
-
-  /** Chunking scan: split a stream into `chunkSize`-byte arrays; `chunkSize
-    * == 0` disables chunking (whole stream = one chunk). Ref
-    * `BaseTransformChunkEnumeration.java:29-98`. */
-  def chunked(in: InputStream, chunkSize: Int): Iterator[Array[Byte]] = {
-    require(chunkSize >= 0, s"chunkSize must be non-negative, $chunkSize given")
-    if (chunkSize == 0) {
-      val all = in.readAllBytes()
-      if (all.isEmpty) Iterator.empty else Iterator.single(all)
-    } else
-      new Iterator[Array[Byte]] {
-        private var nextChunk: Array[Byte] = null
-        private var eof = false
-        private def advance(): Unit = if (nextChunk == null && !eof) {
-          val buf = new Array[Byte](chunkSize)
-          var off = 0
-          var n = 0
-          while (off < chunkSize && { n = in.read(buf, off, chunkSize - off); n != -1 }) off += n
-          if (off == 0) eof = true
-          else nextChunk = if (off == chunkSize) buf else java.util.Arrays.copyOf(buf, off)
-        }
-        def hasNext: Boolean = { advance(); nextChunk != null }
-        def next(): Array[Byte] = {
-          advance()
-          if (nextChunk == null) throw new NoSuchElementException
-          val c = nextChunk; nextChunk = null; c
-        }
-      }
-  }
 
   /** Split a whole in-memory segment into chunks (Spark-side path, where the
     * payload is already a `BinaryType` column value). */

@@ -159,58 +159,6 @@ object GraftDsl {
 
   import org.apache.spark.sql.DataFrame
 
-  /** Tune the band-join rules from a MEASURED density sample of the band
-    * axis (r6, VERDICT r5 task 3: measured per-bin counts, not row
-    * density): ONE aggregate over w-wide bins computes the SIZE-BIASED
-    * mean bin population Σc²/Σc — the expected window population seen by
-    * a uniformly-random probe. On a uniform axis it equals the uniform
-    * rows-per-window estimate; on a clustered axis it is larger exactly
-    * where the uniform estimate undercounts (a probe is more likely to
-    * land in a crowded window). Sets BOTH knobs:
-    *   - `spark.graft.rangebin.subdivisions` for [[graft.plans.RangeBinJoin]]
-    *     (k = rowsPerWindow / TargetRowsPerBin, candidate-slop control);
-    *   - `spark.graft.rangebin.rowsPerWindow` for
-    *     [[graft.plans.BandAggPushdown]] (k = √(2·rpw), full-bin /
-    *     boundary work balance).
-    * Call before running a band join (the i02 pattern); returns the
-    * RangeBinJoin k for observability. Sparse axes keep the classic
-    * two-bin plan (k = 1). */
-  def tuneRangeBins(axis: DataFrame, axisCol: Column, windowWidth: Long): Int = {
-    val s = axis.sparkSession
-    // size-biased mean over w-wide bins: one partial-agged groupBy whose
-    // key count is bounded by axis-span/w, then a 3-value reduce
-    val perBin = axis.groupBy((axisCol - pmod(axisCol, lit(windowWidth)))
-        .divide(lit(windowWidth)).cast("long").as("graft_w_bin"))
-      .agg(count(lit(1)).as("c"))
-    val st = perBin.agg(sum(col("c") * col("c")), sum(col("c")),
-      max(col("c"))).head()
-    val (k, rpw, maxWin) =
-      if (st.isNullAt(1) || st.getLong(1) == 0L) (1, 0.0, 0.0)
-      else {
-        val sizeBiased = st.getLong(0).toDouble / st.getLong(1)
-        // any width-w window intersects at most TWO w-wide bins, so
-        // 2·max(c) soundly bounds every window's population — the
-        // magnitude half of BandAggPushdown's AVG 2⁵³ exactness guard
-        (graft.plans.RangeBinJoin.chooseSubdivisions(sizeBiased), sizeBiased,
-          2.0 * st.getLong(2))
-      }
-    s.conf.set(graft.plans.RangeBinJoin.SubdivisionsKey, k.toString)
-    s.conf.set(graft.plans.BandAggPushdown.RowsPerWindowKey, rpw.toString)
-    s.conf.set(graft.plans.BandTuning.MaxRowsPerWindowKey, maxWin.toString)
-    // record WHAT was measured (r8 + r9): the rules trust these
-    // session-global values only for a band on the same (axis, width) AND
-    // the same dataset — the canonicalized plan of the sampled frame is
-    // recorded and compared against the band's x side at rule time, so a
-    // tune on one table never leaks into a same-named axis of another
-    // table; any mismatch falls back to lazy sampling of the plan at hand
-    val fp = graft.plans.BandTuning.axisFingerprint(axisCol.toString, windowWidth)
-    s.conf.set(graft.plans.BandTuning.TuneAxisKey, fp)
-    // the OPTIMIZED form: band rules compare at optimizer time, where
-    // projections are collapsed — analyzed-form wrappers would never match
-    graft.plans.BandTuning.recordTunedPlan(s, fp, axis.queryExecution.optimizedPlan)
-    k
-  }
-
   /** Fold `keys` (long-valued) into a serialized bloom filter with one
     * map-side-combined aggregate — the build side of the q21/d10 pattern.
     * The returned bytes are a broadcastable fixed-size pre-filter whatever

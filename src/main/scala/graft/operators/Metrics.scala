@@ -23,12 +23,6 @@ object Metrics {
       sum(col("transformed_size")).as("bytes-out"),
       sum(when(col("success"), 0L).otherwise(1L)).as("errors"))
 
-  /** Instrument any fetch/scan frame with requested-bytes accounting. */
-  def observeFetch(df: DataFrame, bytesCol: String): DataFrame =
-    df.observe("segment-fetch",
-      count(lit(1)).as("chunks"),
-      sum(length(col(bytesCol))).as("requested-bytes"))
-
   /** Collects observed metrics per named observation point. */
   final class Collector extends QueryExecutionListener {
     val seen: TrieMap[String, Map[String, Any]] = TrieMap.empty

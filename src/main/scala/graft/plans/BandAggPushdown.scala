@@ -151,11 +151,11 @@ private[plans] object BandPatterns {
   * w-wide bins: the expected window population seen by a random probe,
   * robust to clustering where a uniform-density estimate undercounts) —
   * via k = √(2·rpw) clamped to [[MinSubdivisions]]..[[MaxSubdivisions]].
-  * The measurement arrives either from the explicit
-  * `GraftDsl.tuneRangeBins` pre-flight (session confs, takes precedence)
-  * or, since r7, LAZILY at planning time via [[BandTuning.density]] —
-  * the naive band join tunes itself. With sampling disabled and no conf,
-  * [[DefaultSubdivisions]] (cost within 2× of optimal for rpw ≲ 10⁵).
+  * The measurement is taken LAZILY at planning time on the join's own x
+  * side by [[BandTuning.density]], the only source of band tuning — the
+  * naive band join tunes itself. With sampling disabled (density
+  * unknown), [[DefaultSubdivisions]] (cost within 2× of optimal for
+  * rpw ≲ 10⁵).
   *
   * Registered BEFORE [[RangeBinJoin]] in the same batch: when this rule
   * fires, the boundary join carries a bin equi-key, so RangeBinJoin
@@ -165,7 +165,6 @@ private[plans] object BandPatterns {
 object BandAggPushdown extends Rule[LogicalPlan] with PredicateHelper {
   import BandPatterns._
 
-  val RowsPerWindowKey = "spark.graft.rangebin.rowsPerWindow"
   val DefaultSubdivisions = 64
   val MinSubdivisions = 8
   val MaxSubdivisions = 1024
@@ -181,9 +180,9 @@ object BandAggPushdown extends Rule[LogicalPlan] with PredicateHelper {
     * cheaper than the decomposition's extra stages (two scans per side +
     * the bin-table shuffle) — measured at the 10× events replica: rpw 139
     * → enumeration 0.6 s vs decomposition 1.1 s; rpw 1399 → enumeration
-    * 4.1 s vs decomposition 2.3 s. When rows-per-window is UNKNOWN (no
-    * tuneRangeBins sample) the rule decomposes: at 100 TB the
-    * quadratic-pair risk dominates the fixed overhead. */
+    * 4.1 s vs decomposition 2.3 s. When rows-per-window is UNKNOWN
+    * (sampling off) the rule decomposes: at 100 TB the quadratic-pair
+    * risk dominates the fixed overhead. */
   val MinRowsPerWindowKey = "spark.graft.rangebin.aggPushdownMinRpw"
   val DefaultMinRowsPerWindow = 512.0
 
@@ -279,23 +278,12 @@ object BandAggPushdown extends Rule[LogicalPlan] with PredicateHelper {
       p.find(_.expressions.exists(!_.deterministic)).isEmpty
     if (!planDeterministic(xSide) || !planDeterministic(ySide)) return None
 
-    // measured density: explicit tuneRangeBins confs win — but ONLY for
-    // the (axis, width) they were measured on (r8 fingerprint gate: a
-    // stale maxRowsPerWindow from a sparser axis must not feed the AVG
-    // guard below); unset or mismatched, sample lazily at planning time
-    // (BandTuning, r7) so the naive formulation gets the same crossover +
-    // k without a pre-flight call
-    val trustConfs = BandTuning.confsApplyTo(conf, xSide, band.x, band.width)
-    val confRpw = if (trustConfs) conf.getConfString(RowsPerWindowKey, "") else ""
-    val confMaxWin =
-      if (trustConfs) conf.getConfString(BandTuning.MaxRowsPerWindowKey, "") else ""
-    lazy val sampledDensity = BandTuning.density(xSide, band.x, band.width)
-    val rpw: Option[Double] =
-      if (confRpw.nonEmpty) Some(confRpw.toDouble)
-      else sampledDensity.map(_.rowsPerWindow)
-    val maxWin: Option[Double] =
-      if (confMaxWin.nonEmpty) Some(confMaxWin.toDouble)
-      else sampledDensity.map(_.maxWindowRows)
+    // measured density of THIS x side, sampled lazily at planning time
+    // (BandTuning): the crossover, k and the AVG guard below all read a
+    // fresh measurement of the plan being rewritten
+    val density = BandTuning.density(xSide, band.x, band.width)
+    val rpw = density.map(_.rowsPerWindow)
+    val maxWin = density.map(_.maxWindowRows)
     // cost crossover on the measured density (see MinRowsPerWindowKey);
     // UNKNOWN density still decomposes — at 100 TB the quadratic-pair
     // risk dominates the decomposition's fixed overhead

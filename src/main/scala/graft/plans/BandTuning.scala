@@ -8,13 +8,14 @@ import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.types._
 
-/** Lazy, planning-time band-axis sampling (r7, VERDICT r6 task 2): the
-  * measured-density tuning `GraftDsl.tuneRangeBins` provides as a manual
-  * pre-flight, folded into the optimizer path — a user-written naive band
-  * join gets measured sub-binning and the [[BandAggPushdown]] crossover
-  * without remembering to call anything.
+/** Lazy, planning-time band-axis sampling: the ONE source of the band-join
+  * tuning parameters. [[RangeBinJoin]] takes its sub-bin count from it,
+  * [[BandAggPushdown]] its cost crossover, its sub-bin count and the AVG
+  * exactness guard's window bound — so a user-written naive band join gets
+  * measured sub-binning and the decomposition crossover without any
+  * pre-flight call, and every parameter is a measurement of the very plan
+  * the rule rewrites. There are no per-axis tuning session confs.
   *
   * On first sight of a band predicate per (x-side plan, axis expression,
   * window width) in a session, [[RangeBinJoin]] / [[BandAggPushdown]] call
@@ -31,10 +32,7 @@ import org.apache.spark.sql.types._
   *
   * Results are cached per (session, canonicalized plan, canonicalized
   * expression, width), so fixed-point optimizer iterations and repeated
-  * runs of the same query sample once. An EXPLICIT `tuneRangeBins` call
-  * (which writes the session confs) always takes precedence — the rules
-  * consult the confs first and only fall back to lazy sampling — so
-  * pre-tuned queries plan exactly as before.
+  * runs of the same query sample once.
   *
   * The nested sample executes a real (tiny-output) Spark job from inside
   * an optimizer rule; [[inSample]] makes that re-entrancy-safe: while a
@@ -47,50 +45,6 @@ object BandTuning {
   /** Kill-switch for lazy planning-time sampling (default on). */
   val AutoSampleKey = "spark.graft.rangebin.autoSample"
 
-  /** Upper bound on any single window's row population (2·max per-bin
-    * count) — written by `GraftDsl.tuneRangeBins`, read by
-    * [[BandAggPushdown]]'s AVG 2⁵³ exactness guard. */
-  val MaxRowsPerWindowKey = "spark.graft.rangebin.maxRowsPerWindow"
-
-  /** Fingerprint of the (axis, width) the explicit `tuneRangeBins` confs
-    * were measured on (r8, advisor): the session confs are global, so a
-    * tune on a sparse axis must not leak into a later band query on a
-    * denser axis in the same session — the AVG 2⁵³ guard would read the
-    * stale small `maxRowsPerWindow` and wrongly admit a lossy
-    * decomposition. Rules trust the value confs only when this
-    * fingerprint matches the band at hand ([[confsApplyTo]]); manually
-    * set confs (no fingerprint) keep the pre-r8 always-trusted contract. */
-  val TuneAxisKey = "spark.graft.rangebin.tuneAxis"
-
-  /** Canonical `<axisName>/w=<width>` fingerprint. Named axes (the
-    * tuneRangeBins contract takes a column) fingerprint by
-    * case-insensitive name; a non-named band-x expression at rule time
-    * then never matches — conservative: the rule falls back to lazy
-    * sampling rather than trusting confs measured elsewhere. */
-  def axisFingerprint(e: Expression, w: Long): String =
-    axisFingerprint(e match {
-      case n: NamedExpression => n.name
-      case other => scala.util.Try(other.sql).getOrElse(other.toString)
-    }, w)
-
-  /** Name-form fingerprint — the DSL side hands the user-facing column
-    * string (a simple `col("us")` renders as its name; anything more
-    * complex never matches a rule-side attribute, which is the safe
-    * direction). */
-  def axisFingerprint(name: String, w: Long): String =
-    s"${name.toLowerCase(java.util.Locale.ROOT)}/w=$w"
-
-  /** Canonicalized plan each explicit tune was measured on, keyed by
-    * (session UUID, axis fingerprint) — the DATASET-identity half of the
-    * conf gate (r9, advisor): the name/width fingerprint alone still let a
-    * tune on one table feed a band query on a DIFFERENT table whose axis
-    * happened to share the column name and window width (any two tables
-    * with a `us` micros column and a 1 h window), leaking a stale small
-    * `maxRowsPerWindow` into [[BandAggPushdown]]'s AVG 2⁵³ exactness
-    * guard. Recorded by `GraftDsl.tuneRangeBins`; absent for manually-set
-    * confs (which keep their always-trusted contract). */
-  private val tunedPlans = new ConcurrentHashMap[String, LogicalPlan]()
-
   /** Stable per-session id via WEAK keys: a closed session's entries
     * become unreachable with it (no eviction hook needed), and unlike
     * identityHashCode a minted UUID can never alias a dead session's
@@ -99,100 +53,6 @@ object BandTuning {
     new java.util.WeakHashMap[SparkSession, String]())
   private def sessionId(s: SparkSession): String =
     sessionIds.computeIfAbsent(s, _ => java.util.UUID.randomUUID().toString)
-
-  /** Record the plan an explicit tune sampled (DSL side). */
-  def recordTunedPlan(s: SparkSession, fingerprint: String, plan: LogicalPlan): Unit = {
-    if (tunedPlans.size > 1024) tunedPlans.clear() // resample > leak
-    tunedPlans.put(sessionId(s) + "/" + fingerprint, plan.canonicalized)
-  }
-
-  /** Do the session's explicit tuning confs apply to this band? True when
-    * no fingerprint is recorded (manual conf set) or BOTH halves match:
-    * the (axis name, width) fingerprint AND the dataset — the band's
-    * x-side plan must equal (or contain as a subtree) the canonicalized
-    * plan the tune actually measured. Any mismatch returns false and the
-    * rules fall back to lazy sampling of the plan at hand — never a
-    * correctness risk, only a resample. */
-  def confsApplyTo(conf: org.apache.spark.sql.internal.SQLConf,
-                   xSide: LogicalPlan, x: Expression, w: Long): Boolean = {
-    val fp = conf.getConfString(TuneAxisKey, "")
-    if (fp.isEmpty) return true
-    if (fp != axisFingerprint(x, w)) return false
-    val tuned = SparkSession.getActiveSession
-      .flatMap(s => Option(tunedPlans.get(sessionId(s) + "/" + fp)))
-    tuned match {
-      case None => true // fingerprint set by hand, no recorded plan
-      case Some(tp) =>
-        // tier 1 — the rule sees the join's x side, which may wrap the
-        // tuned frame in row-REDUCING unary operators (filter/project/
-        // limit/...): strip those and compare. A blanket subtree search
-        // would be unsound — a join or generator ABOVE the tuned plan can
-        // multiply rows past the measured density, exactly what the
-        // maxRowsPerWindow upper bound must never survive.
-        val xc = xSide.canonicalized
-        xc == tp || stripRowReducing(xc) == tp || sameSourceRowSubset(tp, xc)
-    }
-  }
-
-  /** Peel row-reducing UNARY wrappers (each output row maps to ≥0 input
-    * rows of the child — per-window counts only shrink through them). */
-  private def stripRowReducing(p: LogicalPlan): LogicalPlan = p match {
-    case f: Filter => stripRowReducing(f.child)
-    case pr: Project => stripRowReducing(pr.child)
-    case a: SubqueryAlias => stripRowReducing(a.child)
-    case l: GlobalLimit => stripRowReducing(l.child)
-    case l: LocalLimit => stripRowReducing(l.child)
-    case s: Sort => stripRowReducing(s.child)
-    case d: Deduplicate => stripRowReducing(d.child)
-    case other => other
-  }
-
-  /** Tier 2 of the dataset gate: strict canonical equality breaks under
-    * column pruning (the optimizer rewrites the scan's read schema, so
-    * the query-time leaf no longer equals the tuned one). Sound coarser
-    * identity: the tune measured the FULL source (nothing but projections
-    * and aliases above identified file/catalog leaves), and the x side
-    * reads exactly the same source set through ROW-REDUCING operators
-    * only (filter/project/limit/sort/dedup) — any such x side has
-    * per-window counts ≤ the measured ones, so the tuned
-    * `maxRowsPerWindow` stays a valid UPPER bound for the AVG 2⁵³
-    * exactness guard (and `rowsPerWindow` at worst overestimates, a
-    * crossover/perf choice, never correctness). A join/aggregate/
-    * generator anywhere on the x side, or any unidentified leaf
-    * (in-memory relations), fails the tier and the rules resample. */
-  private def sameSourceRowSubset(tuned: LogicalPlan, x: LogicalPlan): Boolean = {
-    def leafSource(p: LogicalPlan): Option[String] = p match {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            Some("fs:" + fs.location.rootPaths.map(_.toString).sorted.mkString(","))
-          case _ => None
-        }
-      case v2: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
-        Some("v2:" + v2.identifier.map(_.toString).getOrElse(v2.table.name()))
-      case _ => None
-    }
-    def sources(p: LogicalPlan): Option[Set[String]] = {
-      val ids = p.collectLeaves().map(leafSource)
-      if (ids.nonEmpty && ids.forall(_.isDefined)) Some(ids.flatten.toSet) else None
-    }
-    val tunedFullSource = !tuned.exists {
-      case _: Project | _: SubqueryAlias => false
-      case l if l.children.isEmpty => false
-      case _ => true
-    }
-    val xRowReducing = !x.exists {
-      case _: Filter | _: Project | _: SubqueryAlias | _: GlobalLimit |
-           _: LocalLimit | _: Sort | _: Deduplicate => false
-      case l if l.children.isEmpty => false
-      case _ => true
-    }
-    tunedFullSource && xRowReducing &&
-      ((sources(tuned), sources(x)) match {
-        case (Some(a), Some(b)) => a == b
-        case _ => false
-      })
-  }
 
   /** One axis sample: size-biased mean + sound max window population. */
   final case class Density(rowsPerWindow: Double, maxWindowRows: Double)
@@ -222,7 +82,7 @@ object BandTuning {
 
   /** Test hook: forget all samples (a fresh session UUID also isolates). */
   def clearCache(): Unit = {
-    densityCache.clear(); maxAbsCache.clear(); tunedPlans.clear()
+    densityCache.clear(); maxAbsCache.clear()
   }
 
   private def cacheKey(s: SparkSession, plan: LogicalPlan, e: Expression,

@@ -56,23 +56,20 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   */
 object RangeBinJoin extends Rule[LogicalPlan] with PredicateHelper {
 
-  /** Sub-binning knob: bins of width ceil(w/k) instead of w. At high axis
+  /** Sub-binning: bins of width ceil(w/k) instead of w. At high axis
     * density, w-wide bins admit ~2× the true pairs as candidates (the
     * adjacent-bin slop spans a full extra window); k sub-bins shrink the
     * slop to ~w/k at the cost of exploding the y side to ceil(w/b)+1 rows
-    * — cheap when y is the SMALLER side (the band-probe norm). Set
-    * per-session from a density sample (one count/min/max aggregate; see
-    * `RelationalQueries.i02BandJoinAuto`) — the r4 10× scale probe showed
-    * fixed-width bins degrading as values densify (ratio 6.7× at 10×). */
-  val SubdivisionsKey = "spark.graft.rangebin.subdivisions"
-
-  /** Rows-per-bin target a density sample should aim for when choosing k:
-    * k = ceil(rowsPerWindow / TargetRowsPerBin), clamped to [1, 64]. The
-    * y side explodes to just k+1 rows, so sub-binning is nearly free;
-    * candidate slop over the true band pairs is (1 + 1/k)/2 of the k=1
-    * plan, so k only needs to be modestly above 1 to reclaim most of it —
-    * 256 engages once a window holds more than a few bin-loads while
-    * leaving sparse axes (and the sf0.1 bench) on the classic plan. */
+    * — cheap when y is the SMALLER side (the band-probe norm). The r4 10×
+    * scale probe showed fixed-width bins degrading as values densify
+    * (ratio 6.7× at 10×), so k follows the x side's measured density
+    * ([[BandTuning.density]]): k = ceil(rowsPerWindow / TargetRowsPerBin),
+    * clamped to [1, 64]. The y side explodes to just k+1 rows, so
+    * sub-binning is nearly free; candidate slop over the true band pairs
+    * is (1 + 1/k)/2 of the k=1 plan, so k only needs to be modestly above 1
+    * to reclaim most of it — 256 engages once a window holds more than a
+    * few bin-loads while leaving sparse axes (and the sf0.1 bench) on the
+    * classic plan. */
   val TargetRowsPerBin = 256L
 
   def chooseSubdivisions(rowsPerWindow: Double): Int =
@@ -82,10 +79,18 @@ object RangeBinJoin extends Rule[LogicalPlan] with PredicateHelper {
     * [[BandPatterns]]; this rule only needs the (x, y, w) triple. */
   private type Band = BandPatterns.Band
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(_, _, Inner | Cross, Some(cond), _) if j.resolved =>
-      findBand(j, cond).map(rewrite(j, _)).getOrElse(j)
-  }
+  override def apply(plan: LogicalPlan): LogicalPlan = binBands(plan, None)
+
+  /** Rewrite every band join of `plan` at a FIXED sub-bin count — the entry
+    * tests use to reach any k without shaping an axis of that density. */
+  private[plans] def withSubdivisions(plan: LogicalPlan, k: Int): LogicalPlan =
+    binBands(plan, Some(k))
+
+  private def binBands(plan: LogicalPlan, fixedK: Option[Int]): LogicalPlan =
+    plan.transformUp {
+      case j @ Join(_, _, Inner | Cross, Some(cond), _) if j.resolved =>
+        findBand(j, cond).map(rewrite(j, _, fixedK)).getOrElse(j)
+    }
 
   private def findBand(j: Join, cond: Expression): Option[Band] = {
     val conjuncts = splitConjunctivePredicates(cond)
@@ -102,25 +107,15 @@ object RangeBinJoin extends Rule[LogicalPlan] with PredicateHelper {
   private def floorDiv(e: Expression, w: Long): Expression =
     BandPatterns.floorDiv(e, w)
 
-  private def rewrite(j: Join, band: Band): LogicalPlan = {
+  private def rewrite(j: Join, band: Band, fixedK: Option[Int]): LogicalPlan = {
     val xOnLeft = band.x.references.subsetOf(j.left.outputSet)
     val (xSide, ySide) = if (xOnLeft) (j.left, j.right) else (j.right, j.left)
 
-    // bin width b = ceil(w/k). Explicit conf (tuneRangeBins pre-flight)
-    // wins when its axis fingerprint matches this band (r8 gate — a k
-    // tuned for another axis/width is noise here); unset or mismatched,
-    // LAZILY sample the axis density at planning time (BandTuning, r7) so
-    // the naive formulation gets measured sub-binning too; no session and
-    // sampling off → k=1, the classic two-bin plan
-    val confK =
-      if (BandTuning.confsApplyTo(conf, xSide, band.x, band.width))
-        conf.getConfString(SubdivisionsKey, "")
-      else ""
-    val k = confK match {
-      case "" => BandTuning.density(xSide, band.x, band.width)
-        .map(d => chooseSubdivisions(d.rowsPerWindow)).getOrElse(1)
-      case s => math.max(1, s.toInt)
-    }
+    // bin width b = ceil(w/k), k from the x side's density sampled lazily
+    // at planning time (BandTuning); no session and sampling off → k=1,
+    // the classic two-bin plan
+    val k = fixedK.getOrElse(BandTuning.density(xSide, band.x, band.width)
+      .map(d => chooseSubdivisions(d.rowsPerWindow)).getOrElse(1))
     val b = math.max(1L, (band.width + k - 1) / k)
     // x ∈ [y−w, y) ⟹ floor(x/b) ∈ [floor((y−w)/b), floor(y/b)] ⊇-safely
     // [floor(y/b)−m, floor(y/b)] with m = ceil(w/b); each matching pair

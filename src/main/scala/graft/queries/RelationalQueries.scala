@@ -380,10 +380,10 @@ object RelationalQueries {
     val winUs = 3600L * 1000000
     val acts = events(s, d)
       .select(unix_micros(col("ts")).as("us"), col("event_id").as("act_id"))
-    // NO pre-flight (r8, VERDICT r7 task 4): this is the PRODUCTION path —
-    // BandTuning samples the axis density lazily at planning time
-    // (proven plan-identical to the tuneRangeBins pre-flight in
-    // PlanChecksSpec), so the bench measures what a user actually gets.
+    // NO pre-flight: this is the PRODUCTION path — BandTuning samples the
+    // axis density lazily at planning time (PlanChecksSpec locks i02 to
+    // the bare naive shape's plan), so the bench measures what a user
+    // actually gets.
     // Pin the r6 cost crossover to its default: BandAggPushdown decomposes
     // only when the measured density clears it (i04 forces 0 in the same
     // session, so the knob is set explicitly here, not inherited)
@@ -421,7 +421,6 @@ object RelationalQueries {
     val winUs = 3600L * 1000000
     val acts = events(s, d)
       .select(unix_micros(col("ts")).as("us"), col("event_id").as("act_id"))
-    graft.functions.GraftDsl.tuneRangeBins(acts, col("us"), winUs)
     s.conf.set(graft.plans.BandAggPushdown.MinRowsPerWindowKey, "0")
     val errors = events(s, d).filter(col("event_type") === "error")
       .select(col("event_id").as("err_id"), col("user_id"),
@@ -448,10 +447,8 @@ object RelationalQueries {
     val acts = events(s, d).select(unix_micros(col("ts")).as("us"),
       expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
     // decomposition forced, but density/max-window come from the LAZY
-    // planning-time sampler (r8 — no tuneRangeBins pre-flight): the AVG
-    // 2⁵³ exactness guard runs on a fresh sample of THIS axis, never on
-    // session confs tuned elsewhere (the r8 fingerprint gate enforces the
-    // same for any confs that do linger)
+    // planning-time sampler: the AVG 2⁵³ exactness guard runs on a fresh
+    // sample of THIS axis
     s.conf.set(graft.plans.BandAggPushdown.MinRowsPerWindowKey, "0")
     val errors = events(s, d).filter(col("event_type") === "error")
       .select(col("event_id").as("err_id"), unix_micros(col("ts")).as("err_us"))

@@ -349,6 +349,4 @@ object KafkaWireCodec {
   }
 
   def gzip(b: Array[Byte]): Array[Byte] = BatchCompression.compress(CodecGzip, b)
-
-  def gunzip(b: Array[Byte]): Array[Byte] = BatchCompression.decompress(CodecGzip, b)
 }

@@ -8,15 +8,6 @@ import java.nio.ByteBuffer
   * specifications (Kafka protocol guide; Avro 1.11 spec).
   */
 object Varint {
-  def writeUnsignedVarint(v: Int, out: ByteArrayOutputStream): Unit = {
-    var x = v
-    while ((x & 0xFFFFFF80) != 0) {
-      out.write((x & 0x7F) | 0x80)
-      x >>>= 7
-    }
-    out.write(x)
-  }
-
   def writeVarint(v: Int, out: ByteArrayOutputStream): Unit =
     writeUnsignedVarlong(((v << 1) ^ (v >> 31)).toLong & 0xFFFFFFFFL, out)
 
@@ -30,18 +21,6 @@ object Varint {
       x >>>= 7
     }
     out.write(x.toInt)
-  }
-
-  def readUnsignedVarint(buf: ByteBuffer): Int = {
-    var value = 0
-    var i = 0
-    var b = 0
-    while ({ b = buf.get() & 0xFF; (b & 0x80) != 0 }) {
-      value |= (b & 0x7F) << i
-      i += 7
-      require(i <= 28, "varint too long")
-    }
-    value | (b << i)
   }
 
   def readVarint(buf: ByteBuffer): Int = {
@@ -64,9 +43,5 @@ object Varint {
       require(i <= 63, "varlong too long")
     }
     value | b.toLong << i
-  }
-
-  def sizeOfVarint(v: Int): Int = {
-    val tmp = new ByteArrayOutputStream(5); writeVarint(v, tmp); tmp.size()
   }
 }

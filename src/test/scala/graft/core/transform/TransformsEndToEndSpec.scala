@@ -183,18 +183,4 @@ class TransformsEndToEndSpec extends AnyFunSuite {
       intercept[javax.crypto.AEADBadTagException](Transforms.decrypt(bad, key, aad))
     }
   }
-
-  test("chunked stream reader handles partial reads") {
-    // a stream that returns 1 byte at a time
-    val in = new java.io.InputStream {
-      private var i = 0
-      override def read(): Int = if (i >= 5000) -1 else { val b = original(i); i += 1; b & 0xFF }
-      override def read(buf: Array[Byte], off: Int, len: Int): Int = {
-        val b = read(); if (b == -1) -1 else { buf(off) = b.toByte; 1 }
-      }
-    }
-    val chunks = Transforms.chunked(in, 1024).toVector
-    assert(chunks.map(_.length) == Vector(1024, 1024, 1024, 1024, 904))
-    assert(java.util.Arrays.equals(chunks.flatten.toArray, original.take(5000)))
-  }
 }

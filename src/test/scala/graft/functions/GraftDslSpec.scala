@@ -90,37 +90,6 @@ class GraftDslSpec extends SparkSpec {
     assert(r.nonEmpty && r.forall(_.getDouble(0) == 1.0))
   }
 
-  test("tuneRangeBins: measured size-biased density sets both band-join knobs (r6)") {
-    import spark.implicits._
-    try {
-      // 100k rows uniform over a 100k span, window 10k → every w-bin holds
-      // exactly 10000 rows → size-biased mean Σc²/Σc = 10000
-      val dense = spark.range(100000L).toDF("t")
-      val k = tuneRangeBins(dense, col("t"), 10000L)
-      assert(k == graft.plans.RangeBinJoin.chooseSubdivisions(10000.0))
-      assert(k > 1)
-      assert(spark.conf.get(graft.plans.RangeBinJoin.SubdivisionsKey) == k.toString)
-      assert(spark.conf.get(graft.plans.BandAggPushdown.RowsPerWindowKey).toDouble == 10000.0)
-      // CLUSTERED axis: same row count and span, all rows in one window —
-      // the uniform estimate would say ~100 rows/window, the size-biased
-      // sample sees the real 100k-deep hot window (the r5 blind spot)
-      val clustered = spark.range(100000L).selectExpr("id % 10000 AS t")
-        .union(Seq(10000000L).toDF("t"))
-      assert(tuneRangeBins(clustered, col("t"), 10000L) ==
-        graft.plans.RangeBinJoin.chooseSubdivisions(
-          (100000.0 * 100000.0 + 1.0) / 100001.0))
-      // sparse axis keeps the classic plan
-      val sparse = Seq(0L, 1000000L).toDF("t")
-      assert(tuneRangeBins(sparse, col("t"), 10L) == 1)
-      assert(spark.conf.get(graft.plans.BandAggPushdown.RowsPerWindowKey).toDouble == 1.0)
-      // empty input: no crash, k = 1
-      assert(tuneRangeBins(dense.limit(0), col("t"), 10L) == 1)
-    } finally {
-      spark.conf.unset(graft.plans.RangeBinJoin.SubdivisionsKey)
-      spark.conf.unset(graft.plans.BandAggPushdown.RowsPerWindowKey)
-    }
-  }
-
   test("buildBloom + bloomMightContain: no false negatives, real selectivity") {
     graft.plans.GraftFunctions.register(spark)
     import spark.implicits._

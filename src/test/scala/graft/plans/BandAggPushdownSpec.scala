@@ -3,6 +3,7 @@ package graft.plans
 import graft.testkit.SparkSpec
 import graft.testkit.Props.forAllN
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
@@ -33,13 +34,6 @@ class BandAggPushdownSpec extends SparkSpec {
   private def forceOn(): Unit = {
     GraftFunctions.register(spark)
     spark.conf.set(BandAggPushdown.MinRowsPerWindowKey, "0")
-    // the session is shared across suites: clear every explicit-tuning
-    // conf a sibling (tuneRangeBins) may have left, so these tests
-    // exercise the r7 lazy-sampling path
-    spark.conf.unset(BandAggPushdown.RowsPerWindowKey)
-    spark.conf.unset(BandTuning.MaxRowsPerWindowKey)
-    spark.conf.unset(RangeBinJoin.SubdivisionsKey)
-    spark.conf.unset(BandTuning.TuneAxisKey)
   }
 
   private def probe = (0L until 150L).map(i => (i, i * 7 % 97)).toDF("pid", "px")
@@ -114,104 +108,65 @@ class BandAggPushdownSpec extends SparkSpec {
     assert(!p4.contains("graft_full_bin"), p4.take(2000))
   }
 
-  test("cost crossover: measured density below the threshold keeps the enumeration plan") {
+  private def countBand(w: Long) = probe.join(build, $"bx" >= $"px" - w && $"bx" < $"px")
+    .groupBy($"pid").agg(count($"bid").as("n"))
+
+  private def defaultCrossover(): Unit = {
     GraftFunctions.register(spark)
     spark.conf.set(BandAggPushdown.MinRowsPerWindowKey,
       BandAggPushdown.DefaultMinRowsPerWindow.toString)
-    spark.conf.set(BandAggPushdown.RowsPerWindowKey, "10.0") // sparse axis
-    try {
-      val p = physical(probe.join(build, $"bx" >= $"px" - 10L && $"bx" < $"px")
-        .groupBy($"pid").agg(count($"bid").as("n")))
-      assert(!p.contains("graft_full_bin"), p.take(2000))
-      assert(p.contains("graft_bin"), "RangeBinJoin must still linearize:\n" + p.take(2000))
-    } finally spark.conf.unset(BandAggPushdown.RowsPerWindowKey)
   }
 
-  test("fingerprint gate: tuning confs from ANOTHER axis are ignored, matching ones trusted (r8)") {
-    GraftFunctions.register(spark)
-    spark.conf.set(BandAggPushdown.MinRowsPerWindowKey,
-      BandAggPushdown.DefaultMinRowsPerWindow.toString)
-    // confs claim a dense axis (would decompose) but were "measured" on a
-    // different (axis, width): the rule must fall back to lazy sampling,
-    // and this axis's TRUE density (≈10 rows/window) is below the
-    // crossover → enumeration plan, stale conf NOT trusted
-    spark.conf.set(BandAggPushdown.RowsPerWindowKey, "1000000.0")
-    spark.conf.set(BandTuning.MaxRowsPerWindowKey, "1000000.0")
-    spark.conf.set(BandTuning.TuneAxisKey, BandTuning.axisFingerprint("other_axis", 999L))
+  test("cost crossover: measured density below the threshold keeps the enumeration plan") {
+    // the build axis holds ~40 rows per 10-wide window, well below 512
+    defaultCrossover()
+    val p = physical(countBand(10L))
+    assert(!p.contains("graft_full_bin"), p.take(2000))
+    assert(p.contains("graft_bin"), "RangeBinJoin must still linearize:\n" + p.take(2000))
+  }
+
+  test("leftover band-tuning session confs are ignored: the measured density decides") {
+    // confs a removed pre-flight used to write, set by hand: claiming a
+    // dense axis they would push the aggregate past the crossover; the
+    // rules read only the density they measure on this plan
+    defaultCrossover()
+    val stale = Seq("spark.graft.rangebin.rowsPerWindow", "spark.graft.rangebin.maxRowsPerWindow")
+    stale.foreach(spark.conf.set(_, "1e6"))
     try {
       BandTuning.clearCache()
-      def q = physical(probe.join(build, $"bx" >= $"px" - 10L && $"bx" < $"px")
-        .groupBy($"pid").agg(count($"bid").as("n")))
-      assert(!q.contains("graft_full_bin"),
-        "mismatched fingerprint must NOT trust the stale dense-axis conf:\n" + q.take(2000))
-      // same confs re-stamped for THIS band's (axis, width): trusted again
-      spark.conf.set(BandTuning.TuneAxisKey, BandTuning.axisFingerprint("bx", 10L))
-      assert(q.contains("graft_full_bin"),
-        "matching fingerprint must trust the explicit conf:\n" + q.take(2000))
-    } finally {
-      spark.conf.unset(BandAggPushdown.RowsPerWindowKey)
-      spark.conf.unset(BandTuning.MaxRowsPerWindowKey)
-      spark.conf.unset(BandTuning.TuneAxisKey)
-    }
+      val p = physical(countBand(10L))
+      assert(!p.contains("graft_full_bin"),
+        "a hand-set rowsPerWindow must not override the measured density:\n" + p.take(2000))
+      assert(p.contains("graft_bin"), p.take(2000))
+      assert(sortedRows(countBand(10L)) == withoutRules(sortedRows(countBand(10L))))
+    } finally stale.foreach(spark.conf.unset)
   }
 
-  test("dataset gate: a tune measured on one table is not trusted for a same-named axis of ANOTHER table (r9)") {
-    GraftFunctions.register(spark)
-    spark.conf.set(BandAggPushdown.MinRowsPerWindowKey,
-      BandAggPushdown.DefaultMinRowsPerWindow.toString)
-    // lazy sampling OFF: the explicit-tune confs are the ONLY density
-    // source, so plan shape directly reveals whether they were trusted
+  test("unknown density (sampling off): count decomposes at the default k, long AVG enumerates") {
+    forceOn()
     spark.conf.set(BandTuning.AutoSampleKey, "false")
     try {
       BandTuning.clearCache()
-      // INT value columns: the AVG guard's |value| bound is static by
-      // type, so (with sampling off) the MEASURED maxRowsPerWindow from
-      // the tune confs is the guard's only variable — plan shape isolates
-      // exactly whether those confs were trusted. Parquet-backed tables:
-      // the dataset identity must survive the optimizer's column pruning,
-      // which rewrites in-memory relations beyond strict plan equality —
-      // file scans match through their source location (the tier the 100 TB
-      // deployment rides).
-      val tmp = java.nio.file.Files.createTempDirectory("band-dsgate").toString
-      // a DENSE axis table: every bx in [0,20) ⇒ ~1000 rows per w=10 bin,
-      // clear of the decomposition crossover (DefaultMinRowsPerWindow=512)
-      (0L until 20000L).map(i => (i, i % 20, (i % 5).toInt))
-        .toDF("bid", "bx", "bv").write.parquet(s"$tmp/dense")
-      val denseT = spark.read.parquet(s"$tmp/dense")
-      graft.functions.GraftDsl.tuneRangeBins(denseT, $"bx", 10L)
-      def q(x: DataFrame) = physical(probe.join(x, $"bx" >= $"px" - 10L && $"bx" < $"px")
-        .groupBy($"pid").agg(avg($"bv").as("a")))
-      // same dataset (plan-identical x side): confs trusted → the AVG 2⁵³
-      // guard has its measured maxRowsPerWindow → decomposition fires
-      assert(q(denseT).contains("graft_full_bin"),
-        "tuned dataset must trust its own confs:\n" + q(denseT).take(2000))
-      // x side even WRAPPED in a filter still contains the tuned plan
-      assert(q(denseT.filter($"bid" >= 0L)).contains("graft_full_bin"),
-        "a filtered view of the tuned dataset still matches:\n" +
-          q(denseT.filter($"bid" >= 0L)).take(2000))
-      // DIFFERENT table, same axis name bx and width 10: the r8
-      // name/width fingerprint alone would trust the stale dense
-      // maxRowsPerWindow into the AVG exactness guard — the r9 dataset
-      // identity must reject it (and with sampling off, no maxWin ⇒ the
-      // AVG guard falls back to enumeration)
-      (0L until 400L).map(i => (i, i * 11 % 103, (i % 5).toInt))
-        .toDF("bid", "bx", "bv").write.parquet(s"$tmp/sparse")
-      val sparseT = spark.read.parquet(s"$tmp/sparse")
-      assert(!q(sparseT).contains("graft_full_bin"),
-        "another table with a same-named axis must NOT inherit the tune:\n" +
-          q(sparseT).take(2000))
-      // a JOIN on the x side can multiply rows past the measured density —
-      // the row-subset tier must reject it even over the same source
-      val joined = denseT.join(denseT.select($"bid"), "bid")
-      assert(!q(joined).contains("graft_full_bin"),
-        "a row-multiplying x side over the tuned source must resample:\n" +
-          q(joined).take(2000))
+      // w = 1000: a measured k (rpw 400 → k = 29 → b = 35) and the default
+      // k (64 → b = 16) give different bin widths, so the plan shows which
+      val w = 1000L
+      val q = countBand(w)
+      val widths = q.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case Pmod(_, Literal(b: Long, _), _) => b
+      })).toSet
+      val defaultB = (w + BandAggPushdown.DefaultSubdivisions - 1) / BandAggPushdown.DefaultSubdivisions
+      assert(physical(q).contains("graft_full_bin"), physical(q).take(2000))
+      assert(widths == Set(defaultB), s"bin widths $widths, expected only $defaultB")
+      assert(sortedRows(q) == withoutRules(sortedRows(countBand(w))))
+      // AVG over a LONG column needs a measured max-window-rows for its
+      // 2⁵³ guard: none without sampling, so the rule keeps enumeration
+      def avgQ = probe.join(build, $"bx" >= $"px" - 10L && $"bx" < $"px")
+        .groupBy($"pid").agg(avg($"bv").as("a"))
+      assert(build.schema("bv").dataType == org.apache.spark.sql.types.LongType)
+      assert(!physical(avgQ).contains("graft_full_bin"), physical(avgQ).take(2000))
+      assert(sortedRows(avgQ) == withoutRules(sortedRows(avgQ)))
     } finally {
       spark.conf.unset(BandTuning.AutoSampleKey)
-      spark.conf.unset(BandAggPushdown.RowsPerWindowKey)
-      spark.conf.unset(BandTuning.MaxRowsPerWindowKey)
-      spark.conf.unset(RangeBinJoin.SubdivisionsKey)
-      spark.conf.unset(BandTuning.TuneAxisKey)
       BandTuning.clearCache()
     }
   }

@@ -1,7 +1,8 @@
 package graft.plans
 
 import graft.testkit.SparkSpec
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod}
 import org.apache.spark.sql.functions._
 
 /** RangeBinJoin: band joins auto-binned to equi-joins; guarded rewrites. */
@@ -52,18 +53,21 @@ class RangeBinJoinSpec extends SparkSpec {
 
   test("stats-driven sub-binning (k>1): same results, still no nested loop") {
     GraftFunctions.register(spark)
-    val expected = withoutRule(sortedRows(
-      probe.join(build, $"bx" >= $"px" - 10L && $"bx" < $"px")))
+    def q = probe.join(build, $"bx" >= $"px" - 10L && $"bx" < $"px")
+    val expected = withoutRule(sortedRows(q))
+    val naive = withoutRule(q.queryExecution.optimizedPlan)
     // widths that divide evenly and widths that don't; k past the width
     for (k <- Seq(2, 3, 4, 7, 64)) {
-      spark.conf.set(RangeBinJoin.SubdivisionsKey, k.toString)
-      try {
-        def q = probe.join(build, $"bx" >= $"px" - 10L && $"bx" < $"px")
-        val plan = physical(q)
-        assert(!plan.contains("BroadcastNestedLoopJoin") && plan.contains("graft_bin"),
-          s"k=$k lost the rewrite:\n$plan")
-        assert(sortedRows(q) == expected, s"k=$k changed the results")
-      } finally spark.conf.unset(RangeBinJoin.SubdivisionsKey)
+      val rewritten = RangeBinJoin.withSubdivisions(naive, k)
+      val widths = rewritten.flatMap(_.expressions.flatMap(_.collect {
+        case Pmod(_, Literal(b: Long, _), _) => b
+      })).toSet
+      assert(widths == Set((10L + k - 1) / k), s"k=$k binned at widths $widths")
+      val df = GraftSqlBridge.ofRows(spark, rewritten)
+      val plan = physical(df)
+      assert(!plan.contains("BroadcastNestedLoopJoin") && plan.contains("graft_bin"),
+        s"k=$k lost the rewrite:\n$plan")
+      assert(sortedRows(df) == expected, s"k=$k changed the results")
     }
   }
 

@@ -109,11 +109,11 @@ class PlanChecksSpec extends SparkSpec {
     assert(p.contains("graft_bin"), "expected the rule's bin columns:\n" + p.take(3000))
   }
 
-  test("i02 without tuneRangeBins: lazy planning-time sampling plans identically to the pre-flight") {
+  test("i02 plans identically to the bare naive shape") {
     import org.apache.spark.sql.functions._
     graft.plans.GraftFunctions.register(spark)
     val winUs = 3600L * 1000000
-    // the i02 body, with NO tuning pre-flight — how a naive user writes it
+    // the i02 body without its preamble — how a naive user writes it
     def shape(): org.apache.spark.sql.DataFrame = {
       val acts = Tables.events(spark, d)
         .select(unix_micros(col("ts")).as("us"), col("event_id").as("act_id"))
@@ -127,18 +127,15 @@ class PlanChecksSpec extends SparkSpec {
     def norm(p: String): String =
       p.replaceAll("#\\d+L?", "#x").replaceAll("\\*\\(\\d+\\)", "*")
         .replaceAll("plan_id=\\d+", "plan_id=x")
-    // tuned: the full i02 preamble (explicit tuneRangeBins + crossover conf)
-    val tuned = norm(plan(RelationalQueries.i02BandJoinAuto(spark, d)
+    // the production query (its preamble pins the crossover conf), then
+    // the bare shape against a cleared sample cache, so it measures anew
+    val i02 = norm(plan(RelationalQueries.i02BandJoinAuto(spark, d)
       .select(col("n_window"))))
-    // auto: clear every tuning conf and the sample cache; plan the bare shape
-    spark.conf.unset(graft.plans.RangeBinJoin.SubdivisionsKey)
-    spark.conf.unset(graft.plans.BandAggPushdown.RowsPerWindowKey)
-    spark.conf.unset(graft.plans.BandTuning.MaxRowsPerWindowKey)
     graft.plans.BandTuning.clearCache()
-    val auto = norm(plan(shape().select(col("n_window"))))
-    assert(auto.contains("graft_bin"), "lazy sampling must still linearize:\n" + auto.take(3000))
-    assert(auto == tuned,
-      s"auto-sampled plan differs from the tuneRangeBins plan:\n--- tuned:\n${tuned.take(3000)}\n--- auto:\n${auto.take(3000)}")
+    val bare = norm(plan(shape().select(col("n_window"))))
+    assert(bare.contains("graft_bin"), "lazy sampling must still linearize:\n" + bare.take(3000))
+    assert(bare == i02,
+      s"bare-shape plan differs from i02's:\n--- i02:\n${i02.take(3000)}\n--- bare:\n${bare.take(3000)}")
   }
 
   test("w01: as-of join is one window pass, one shuffle") {
