@@ -3,6 +3,7 @@ package graft.core
 import java.util.Base64
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
+import graft.core.transform.Transforms
 
 /** `(position, size)` of one Kafka index inside the concatenated `indexes`
   * object (ref `manifest/SegmentIndexV1.java`). */
@@ -64,14 +65,16 @@ final case class SegmentManifest(
     segmentIndexes: Option[SegmentIndexes],
     compression: Boolean,
     encryption: Option[EncryptionMetadata],
-    /** Self-describing chunk codec (when `compression`): this engine writes
-      * "lz4" by default (in-repo block codec) and, selectably, "zstd" —
-      * raw frames byte-compatible with the reference's write path
+    /** Self-describing chunk codec (when `compression`), one of
+      * [[Transforms.Codecs]]: the upload job writes "zstd" by
+      * default — raw frames byte-compatible with the reference's write path
       * (`CompressionChunkEnumeration.java:52-62`, via the zstd-jni that
-      * ships with Spark). Declaring the codec in the manifest makes the
+      * ships with Spark) — and "lz4" or "deflate" when configured. The
+      * case-class default "lz4" is what pre-r3 manifests without the field
+      * were written with. Declaring the codec in the manifest makes the
       * boundary explicit: a reader without a codec sees its name and can
       * reject cleanly instead of failing mid-detransform. */
-    compressionCodec: String = SegmentManifest.CodecLz4Name,
+    compressionCodec: String = Transforms.CodecNameLz4,
     /** Exact record stats for metadata-only aggregates (see
       * [[RecordStats]]); None when the writer could not parse the payload
       * as Kafka wire, or for reference-written manifests. */
@@ -82,9 +85,6 @@ final case class SegmentManifest(
 
 object SegmentManifest {
   val Version = "1"
-  val CodecLz4Name = "lz4"
-  val CodecZstdName = "zstd"
-  val CodecDeflateName = "deflate"
   val WrapAlgOaepSha256: String = security.RsaKeyRing.WrapAlgSha256
   val WrapAlgOaepSha3512: String = security.RsaKeyRing.WrapAlgSha3512
 
@@ -168,13 +168,8 @@ object SegmentManifest {
         // 0x28B52FFD (683M chunks).
         val raw = unb64(ci.get("transformedChunks").asText())
         val codecBytes =
-          if (raw.length >= 4 && raw(0) == 0x28.toByte && raw(1) == 0xB5.toByte &&
-              raw(2) == 0x2F.toByte && raw(3) == 0xFD.toByte) {
-            val sz = com.github.luben.zstd.Zstd.decompressedSize(raw)
-            require(sz >= 0 && sz <= MaxTransformedChunksBytes,
-              s"invalid transformedChunks decompressed size $sz")
-            com.github.luben.zstd.Zstd.decompress(raw, sz.toInt)
-          } else raw
+          if (Transforms.isZstdFrame(raw)) Transforms.decompressZstd(raw, 0, MaxTransformedChunksBytes)
+          else raw
         VariableSizeChunkIndex(
           ci.get("originalChunkSize").asInt(),
           ci.get("originalFileSize").asInt(),
@@ -219,7 +214,7 @@ object SegmentManifest {
     SegmentManifest(chunkIndex, segmentIndexes, root.get("compression").asBoolean(), encryption,
       Option(root.get("compressionCodec")).filter(!_.isNull).map(_.asText()).getOrElse(
         // the reference's only codec is zstd; our pre-r3 manifests were lz4
-        if (isReference) CodecZstdName else CodecLz4Name),
+        if (isReference) Transforms.CodecNameZstd else Transforms.CodecNameLz4),
       recordStats)
   }
 }

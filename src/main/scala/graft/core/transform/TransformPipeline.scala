@@ -43,10 +43,12 @@ object TransformPipeline {
     c
   }
 
-  def detransformChunk(chunk: Array[Byte], spec: TransformSpec): Array[Byte] = {
+  /** Inverse of [[transformChunk]] for a chunk whose index entry says
+    * `originalSize` bytes; decompression is bounded by it. */
+  def detransformChunk(chunk: Array[Byte], spec: TransformSpec, originalSize: Int): Array[Byte] = {
     var c = chunk
     spec.encryptionKey.foreach { key => c = Transforms.decrypt(c, key, spec.aad) }
-    if (spec.compression) c = Transforms.decompress(c)
+    if (spec.compression) c = Transforms.decompress(c, originalSize)
     c
   }
 
@@ -99,7 +101,12 @@ object TransformPipeline {
       val meta = expectedIt.next()
       require(c.length == meta.transformedSize,
         s"chunk ${meta.id}: read ${c.length} bytes, index declares ${meta.transformedSize}")
-      val plain = detransformChunk(c, spec)
+      val plain =
+        try detransformChunk(c, spec, meta.originalSize)
+        catch {
+          case e: IllegalArgumentException =>
+            throw new IllegalArgumentException(s"chunk ${meta.id}: ${e.getMessage}", e)
+        }
       require(plain.length == meta.originalSize,
         s"chunk ${meta.id}: detransformed to ${plain.length} bytes, index declares ${meta.originalSize}")
       plain

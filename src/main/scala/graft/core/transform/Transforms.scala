@@ -7,7 +7,8 @@ import javax.crypto.Cipher
 import javax.crypto.spec.{GCMParameterSpec, SecretKeySpec}
 import java.security.SecureRandom
 
-import com.github.luben.zstd.{Zstd, ZstdCompressCtx}
+import com.github.luben.zstd.{Zstd, ZstdCompressCtx, ZstdException}
+import net.jpountz.lz4.{LZ4Exception, LZ4Factory}
 
 /** Write-path / read-path chunk transforms, as idiomatic Scala `Iterator`
   * pipelines (the reference composes Java `Enumeration` decorators —
@@ -34,12 +35,11 @@ object Transforms {
   // the same zstd-jni ships with Spark's jars, so "zstd" below is WIRE-
   // COMPATIBLE with reference-written chunks: a raw zstd frame, content size
   // embedded in the frame header (no graft prefix), discriminated on read by
-  // the zstd magic number. The in-repo codecs (LZ4 block, Deflate) keep the
-  // graft layout: int32 content-size prefix + codec tag byte. Default codec
-  // is LZ4 — zlib caps the write path near ~80 MB/s at any level, the wrong
-  // speed class for a throughput-bound, rate-limited tiering path; Deflate
-  // stays readable and selectable for ratio-sensitive cold data; zstd is
-  // selectable for interop and near-LZ4 speed at better ratios.
+  // the zstd magic number. The other codecs keep the graft layout: int32
+  // content-size prefix + codec tag byte. "lz4" is the public LZ4 block
+  // format through lz4-java (Spark ships it; the record layer's LZ4 frames
+  // use the same factory). The write default is zstd (`SegmentJobConfig`);
+  // lz4 and deflate stay selectable, and every form stays readable.
 
   private final val CodecDeflate: Byte = 0
   private final val CodecLz4: Byte = 1
@@ -49,15 +49,38 @@ object Transforms {
   final val CodecNameDeflate = "deflate"
   final val CodecNameZstd = "zstd"
 
+  private val compressors: Map[String, Array[Byte] => Array[Byte]] = Map(
+    CodecNameLz4 -> compress, CodecNameZstd -> compressZstd, CodecNameDeflate -> (compressDeflate(_)))
+
+  /** The chunk codecs: what [[compressWith]] writes, and what a manifest's
+    * `compressionCodec` must name to be read ("deflate" covers the tagged
+    * and the legacy layout; "zstd" covers reference-written frames). */
+  val Codecs: Set[String] = compressors.keySet
+
+  private val lz4 = LZ4Factory.fastestInstance()
+
   /** First 4 bytes of every zstd frame (RFC 8878 §3.1.1, little-endian magic
     * 0xFD2FB528). A graft-prefixed chunk starting with these bytes would
     * declare a 0x28B52FFD-byte (651 MiB) content size — far beyond any real
     * chunk; [[compress]]/[[compressDeflate]] still reject that one aliasing
     * size outright so the discrimination is exact, not probabilistic. */
   private final val ZstdMagicAliasSize = 0x28B52FFD
-  private def isZstdFrame(c: Array[Byte]): Boolean =
+  private[graft] def isZstdFrame(c: Array[Byte]): Boolean =
     c.length >= 4 && c(0) == 0x28.toByte && c(1) == 0xB5.toByte &&
       c(2) == 0x2F.toByte && c(3) == 0xFD.toByte
+
+  /** The content of one zstd frame, decoded in one shot into the size its
+    * header declares (the reference's read,
+    * `DecompressionChunkEnumeration.java:42-46`) — once that size is
+    * checked to lie in [minSize, maxSize], so a corrupt header fails before
+    * the allocation. */
+  private[graft] def decompressZstd(frame: Array[Byte], minSize: Long, maxSize: Long): Array[Byte] = {
+    val declared = Zstd.decompressedSize(frame)
+    require(declared >= minSize && declared <= maxSize,
+      s"zstd frame declares $declared content bytes, expected [$minSize, $maxSize]")
+    try Zstd.decompress(frame, declared.toInt)
+    catch { case e: ZstdException => throw new IllegalArgumentException(s"corrupt zstd frame: ${e.getMessage}", e) }
+  }
 
   private def requireUnambiguousSize(n: Int): Unit =
     require(n != ZstdMagicAliasSize,
@@ -67,13 +90,9 @@ object Transforms {
   /** Dispatch by manifest codec name (write path). The read path needs no
     * codec argument: [[decompress]] is self-describing via tag byte / zstd
     * magic. */
-  def compressWith(chunk: Array[Byte], codec: String): Array[Byte] = codec match {
-    case CodecNameLz4 => compress(chunk)
-    case CodecNameZstd => compressZstd(chunk)
-    case CodecNameDeflate => compressDeflate(chunk)
-    case other => throw new IllegalArgumentException(
-      s"unknown compression codec '$other' (expected $CodecNameLz4, $CodecNameZstd or $CodecNameDeflate)")
-  }
+  def compressWith(chunk: Array[Byte], codec: String): Array[Byte] =
+    compressors.getOrElse(codec, throw new IllegalArgumentException(
+      s"unknown compression codec '$codec' (expected one of ${Codecs.mkString(", ")})"))(chunk)
 
   /** Per-thread context reuse — same rationale as [[cipherPool]]: the context
     * allocates window + workspace buffers once; `compress` emits one complete
@@ -97,13 +116,14 @@ object Transforms {
     ctx.compress(chunk)
   }
 
+  /** `[int32 content size][tag 1][LZ4 block]`. */
   def compress(chunk: Array[Byte]): Array[Byte] = {
     requireUnambiguousSize(chunk.length)
-    val packed = Lz4.compress(chunk)
-    val out = new Array[Byte](5 + packed.length)
+    val compressor = lz4.fastCompressor()
+    val out = new Array[Byte](5 + compressor.maxCompressedLength(chunk.length))
     ByteBuffer.wrap(out).putInt(chunk.length).put(CodecLz4)
-    System.arraycopy(packed, 0, out, 5, packed.length)
-    out
+    val n = compressor.compress(chunk, 0, chunk.length, out, 5, out.length - 5)
+    java.util.Arrays.copyOf(out, 5 + n)
   }
 
   def compressDeflate(chunk: Array[Byte], level: Int = Deflater.BEST_SPEED): Array[Byte] = {
@@ -123,20 +143,24 @@ object Transforms {
     } finally deflater.end()
   }
 
-  def decompress(chunk: Array[Byte]): Array[Byte] = {
-    if (isZstdFrame(chunk)) {
-      // Reference-written (or our zstd-codec) chunk: content size from the
-      // frame header, exact-size one-shot decompress — the same read the
-      // reference does (`DecompressionChunkEnumeration.java:42-46`).
-      val declared = Zstd.decompressedSize(chunk)
-      require(declared >= 0 && declared <= Int.MaxValue,
-        s"invalid zstd decompressed size: $declared")
-      return Zstd.decompress(chunk, declared.toInt)
-    }
-    val contentSize = ByteBuffer.wrap(chunk, 0, 4).getInt()
+  /** Decompress one chunk whose content is `originalSize` bytes (its index
+    * entry). The size the chunk itself declares — its prefix, or the zstd
+    * frame header — must equal that before anything is allocated, so a
+    * corrupt size fails with an `IllegalArgumentException` instead of a
+    * `NegativeArraySizeException` or an `OutOfMemoryError`. */
+  def decompress(chunk: Array[Byte], originalSize: Int): Array[Byte] = {
+    if (isZstdFrame(chunk)) return decompressZstd(chunk, originalSize, originalSize)
+    require(chunk.length >= 5, s"compressed chunk of ${chunk.length} bytes has no size prefix and codec tag")
+    val declared = ByteBuffer.wrap(chunk, 0, 4).getInt()
+    require(declared == originalSize, s"size prefix declares $declared content bytes, expected $originalSize")
     chunk(4) match {
-      case CodecLz4 => Lz4.decompress(chunk, 5, chunk.length, contentSize)
-      case CodecDeflate => inflate(chunk, 5, contentSize)
+      case CodecLz4 =>
+        val out = new Array[Byte](originalSize)
+        val n = try lz4.safeDecompressor().decompress(chunk, 5, chunk.length - 5, out, 0, originalSize)
+        catch { case e: LZ4Exception => throw new IllegalArgumentException(s"corrupt LZ4 block: $e", e) }
+        require(n == originalSize, s"corrupt LZ4 block: produced $n of $originalSize bytes")
+        out
+      case CodecDeflate => inflate(chunk, 5, originalSize)
       // Legacy layout (pre-codec-tag builds): 4-byte size prefix, zlib
       // stream starting AT offset 4 — its first byte is the CMF header,
       // whose low nibble is always 8 (deflate), never colliding with tags
@@ -144,7 +168,7 @@ object Transforms {
       // failing with "unknown codec tag 120". New segments also carry the
       // codec in the manifest (`compression_codec`), making the format
       // self-describing going forward.
-      case cmf if (cmf & 0x0F) == 8 => inflate(chunk, 4, contentSize)
+      case cmf if (cmf & 0x0F) == 8 => inflate(chunk, 4, originalSize)
       case other => throw new IllegalArgumentException(
         s"unknown codec tag $other (not LZ4=1, Deflate=0, or a legacy zlib header)")
     }

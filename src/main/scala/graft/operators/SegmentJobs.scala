@@ -27,12 +27,12 @@ final case class SegmentJobConfig(
     rsaPublicKey: Array[Byte] = Array.emptyByteArray,
     rsaPrivateKey: Array[Byte] = Array.emptyByteArray,
     uploadRateBytesPerSec: Option[Long] = None,
-    /** Chunk codec for the write path. Default "zstd": raw frames byte-
-      * compatible with reference-written segments, and the fastest lane in
-      * the bench matrix (≈1.4 GB/s vs ≈0.75 GB/s for the in-repo LZ4 at
-      * 1 MiB chunks, with better ratios). "lz4" and "deflate" remain
-      * selectable; reads are self-describing regardless. */
-    compressionCodec: String = SegmentManifest.CodecZstdName,
+    /** Chunk codec for the write path, one of [[Transforms.Codecs]].
+      * Default "zstd": raw frames byte-compatible with reference-written
+      * segments, with better ratios than "lz4" (lz4-java's block codec) or
+      * "deflate", which stay selectable; reads are self-describing
+      * regardless. */
+    compressionCodec: String = Transforms.CodecNameZstd,
     /** Key-wrap algorithm for NEW segments (reads follow each manifest's
       * declared `wrapAlg`): the reference's SHA3-512 by default. */
     wrapAlg: String = SegmentManifest.WrapAlgOaepSha3512
@@ -48,6 +48,8 @@ final case class SegmentJobConfig(
     require(r >= SegmentJobConfig.MinUploadRate && r <= SegmentJobConfig.MaxUploadRate,
       s"uploadRateBytesPerSec must be in [${SegmentJobConfig.MinUploadRate}, " +
         s"${SegmentJobConfig.MaxUploadRate}] (1 MiB/s to 1 GB/s), got $r"))
+  require(Transforms.Codecs.contains(compressionCodec),
+    s"compressionCodec must be one of ${Transforms.Codecs.mkString(", ")}, got '$compressionCodec'")
 
   def keyPair: java.security.KeyPair = RsaKeyRing.deserialize(rsaPublicKey, rsaPrivateKey)
   def ring: RsaKeyRing = new RsaKeyRing(Map(keyId -> keyPair), keyId, wrapAlg)
@@ -291,12 +293,6 @@ object SegmentFetchJob {
     SegmentManifest.fromJson(new String(
       storage.fetchBytes(s"$segKey.${ObjectKey.Suffix.Manifest.value}"), "UTF-8"))
 
-  /** Codec names this engine can decompress (manifest `compressionCodec`);
-    * "deflate" covers both tagged and legacy layouts; "zstd" covers raw
-    * frames, including segments written by the reference. */
-  private val ReadableCodecs = Set(
-    SegmentManifest.CodecLz4Name, SegmentManifest.CodecDeflateName, SegmentManifest.CodecZstdName)
-
   /** Key-wrap algorithms this engine can unwrap: the reference's SHA3-512
     * parameters (default since r3) plus pre-r3 SHA-256 blobs. */
   private val ReadableWrapAlgs = Set(
@@ -312,10 +308,10 @@ object SegmentFetchJob {
     // HERE with a clear message instead of as a BadPaddingException /
     // unknown-tag error mid-detransform (e.g. a manifest written by the
     // reference: zstd frames, RSA-OAEP-SHA3-512 wrapped keys).
-    if (m.compression && !ReadableCodecs.contains(m.compressionCodec))
+    if (m.compression && !Transforms.Codecs.contains(m.compressionCodec))
       throw new IllegalStateException(
         s"incompatible compression codec '${m.compressionCodec}' " +
-          s"(this engine reads: ${ReadableCodecs.mkString(", ")})")
+          s"(this engine reads: ${Transforms.Codecs.mkString(", ")})")
     m.encryption.foreach { e =>
       if (!ReadableWrapAlgs.contains(e.wrapAlg))
         throw new IllegalStateException(

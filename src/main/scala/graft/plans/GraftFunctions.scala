@@ -2,32 +2,47 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 // graft's one registration module: what the engine adds to a Spark session
-// (optimizer rules, the top-k strategy, SQL functions) is listed here, in
-// GraftFunctions.register and in GraftExtensions.
+// (optimizer rules, the top-k strategy, SQL functions) is listed once here,
+// and both GraftFunctions.register and GraftExtensions install from it.
 
 /** Runtime registration for sessions created without extensions (the
   * Verify/Bench sessions, and any session a
   * [[graft.records.TypedDecode.withDecoded]] query runs in). Idempotent. */
 object GraftFunctions {
+
+  /** Optimizer rules, in order. ORDER matters: BandAggPushdown must see the
+    * raw band join BEFORE RangeBinJoin adds its bin equi-key (which
+    * disables both rules); PruneTypedDecode narrows graft_typed_decode to
+    * the fields a query extracts. */
+  private[plans] val rules: Seq[Rule[LogicalPlan]] = Seq(BandAggPushdown, RangeBinJoin, PruneTypedDecode)
+
+  /** SQL functions: name, the expression class (for `DESCRIBE FUNCTION`),
+    * builder. */
+  private[plans] val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("bitset_jaccard", classOf[BitsetJaccard], exprs => BitsetJaccard(exprs(0), exprs(1))),
+    ("bitset_contain", classOf[BitsetContain], exprs => BitsetContain(exprs(0), exprs(1))),
+    ("tokens_to_bitset", classOf[TokensToBitset], exprs => TokensToBitset(exprs(0), exprs(1))),
+    ("tokens_to_hashbits", classOf[TokensToHashBitset], exprs => TokensToHashBitset(exprs(0), exprs(1))),
+    ("vec_dot", classOf[VecDot], exprs => VecDot(exprs(0), exprs(1))),
+    ("mg_sketch", classOf[MisraGriesSketch],
+      exprs => MisraGriesSketch(exprs(0), exprs(1)).toAggregateExpression()),
+    // Spark's OWN codegen'd bloom-probe expression (what InjectRuntimeFilter
+    // plants), registered for explicit use: the engine's always-on bloom
+    // semi-join (q21) probes inside whole-stage codegen instead of a Scala
+    // UDF. Args: (serialized util.sketch.BloomFilter binary, long value).
+    ("graft_might_contain", classOf[BloomFilterMightContain],
+      exprs => BloomFilterMightContain(exprs(0), exprs(1))))
+
   def register(spark: SparkSession): Unit = {
-    // band-join auto-binning (see RangeBinJoin) + aggregate pushdown
-    // through band joins (BandAggPushdown) for sessions built without
-    // spark.sql.extensions; idempotent across repeated register() calls.
-    // ORDER matters: BandAggPushdown must see the raw band join BEFORE
-    // RangeBinJoin adds its bin equi-key (which disables both rules).
-    if (!spark.experimental.extraOptimizations.contains(BandAggPushdown))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ BandAggPushdown
-    if (!spark.experimental.extraOptimizations.contains(RangeBinJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RangeBinJoin
-    // narrows graft_typed_decode to the fields a query extracts
-    if (!spark.experimental.extraOptimizations.contains(PruneTypedDecode))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PruneTypedDecode
+    rules.foreach { r =>
+      if (!spark.experimental.extraOptimizations.contains(r))
+        spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ r
+    }
     if (!spark.experimental.extraStrategies.contains(TopKStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ TopKStrategy
@@ -37,56 +52,20 @@ object GraftFunctions {
     // "SimpleFunctionRegistry: The function X replaced a previously
     // registered function" it emits per function per register() call —
     // which polluted every bench/verify artifact tail (VERDICT r8 #5).
-    def tempFn(name: String)(builder: Seq[Expression] => Expression): Unit =
+    functions.foreach { case (name, _, builder) =>
       if (!reg.functionExists(FunctionIdentifier(name)))
         reg.createOrReplaceTempFunction(name, builder, "scala_udf")
-    tempFn("bitset_jaccard")(exprs => BitsetJaccard(exprs(0), exprs(1)))
-    tempFn("bitset_contain")(exprs => BitsetContain(exprs(0), exprs(1)))
-    tempFn("tokens_to_bitset")(exprs => TokensToBitset(exprs(0), exprs(1)))
-    tempFn("tokens_to_hashbits")(exprs => TokensToHashBitset(exprs(0), exprs(1)))
-    tempFn("vec_dot")(exprs => VecDot(exprs(0), exprs(1)))
-    tempFn("mg_sketch")(exprs =>
-      MisraGriesSketch(exprs(0), exprs(1)).toAggregateExpression())
-    // Spark's OWN codegen'd bloom-probe expression (what InjectRuntimeFilter
-    // plants), registered for explicit use: the engine's always-on bloom
-    // semi-join (q21) probes inside whole-stage codegen instead of a Scala
-    // UDF. Args: (serialized util.sketch.BloomFilter binary, long value).
-    tempFn("graft_might_contain")(exprs =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1)))
+    }
   }
 }
 
 /** `--conf spark.sql.extensions=graft.plans.GraftExtensions` wiring. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => BandAggPushdown)
-    ext.injectOptimizerRule(_ => RangeBinJoin)
-    ext.injectOptimizerRule(_ => PruneTypedDecode)
+    GraftFunctions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
     ext.injectPlannerStrategy(_ => TopKStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("bitset_jaccard"),
-      new ExpressionInfo(classOf[BitsetJaccard].getName, "bitset_jaccard"),
-      (exprs: Seq[Expression]) => BitsetJaccard(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("bitset_contain"),
-      new ExpressionInfo(classOf[BitsetContain].getName, "bitset_contain"),
-      (exprs: Seq[Expression]) => BitsetContain(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("tokens_to_bitset"),
-      new ExpressionInfo(classOf[TokensToBitset].getName, "tokens_to_bitset"),
-      (exprs: Seq[Expression]) => TokensToBitset(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("tokens_to_hashbits"),
-      new ExpressionInfo(classOf[TokensToHashBitset].getName, "tokens_to_hashbits"),
-      (exprs: Seq[Expression]) => TokensToHashBitset(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("mg_sketch"),
-      new ExpressionInfo(classOf[MisraGriesSketch].getName, "mg_sketch"),
-      (exprs: Seq[Expression]) =>
-        MisraGriesSketch(exprs(0), exprs(1)).toAggregateExpression()))
+    GraftFunctions.functions.foreach { case (name, cls, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
   }
 }

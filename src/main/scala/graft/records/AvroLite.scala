@@ -176,7 +176,7 @@ object AvroLite {
     throw new IllegalArgumentException(s"malformed avro in field '$field': $what")
 
   /** A bytes or string length prefix, checked against the bytes left. */
-  private def readLength(buf: ByteBuffer, field: String): Int = {
+  private[records] def readLength(buf: ByteBuffer, field: String): Int = {
     val len = Varint.readVarlong(buf)
     if (len < 0 || len > buf.remaining()) malformed(field, s"length $len, ${buf.remaining()} bytes left")
     len.toInt
@@ -191,7 +191,7 @@ object AvroLite {
     len
   }
 
-  private def readBytes(buf: ByteBuffer, len: Int): Array[Byte] = {
+  private[records] def readBytes(buf: ByteBuffer, len: Int): Array[Byte] = {
     val b = new Array[Byte](len)
     buf.get(b)
     b
@@ -211,7 +211,7 @@ object AvroLite {
     }
 
   /** The fewest bytes one value of `s` takes on the wire. */
-  private def minBytes(s: Schema): Int = s match {
+  private[records] def minBytes(s: Schema): Int = s match {
     case ANull => 0
     case AFloat => 4
     case ADouble => 8
@@ -221,13 +221,23 @@ object AvroLite {
     case _ => 1 // a varint, a length prefix, a union index or a block count
   }
 
-  /** Runs `item` once per item of an array or map. A block's count is
-    * checked before any item is read: the items must fit in the bytes left
-    * (`itemBytes` each, at least) and the collection in [[MaxItems]], so a
-    * corrupt count fails at once instead of spinning. With `skipSized`, a
-    * block that declares its byte size (a negative count) is jumped over
-    * without visiting its items. */
-  private def readBlocks(buf: ByteBuffer, field: String, itemBytes: Int,
+  /** Checks a block's item `count` before any item is read: the items must
+    * fit in `bytesLeft` (`itemBytes` each, at least) and the running total
+    * in [[MaxItems]], so a corrupt count fails at once instead of spinning.
+    * Returns the new total. */
+  private[records] def checkCount(field: String, total: Long, count: Long,
+                                  itemBytes: Int, bytesLeft: Int): Long = {
+    if (count < 0) malformed(field, s"block count $count")
+    if (count > MaxItems - total) malformed(field, s"$total + $count items, more than $MaxItems")
+    if (count * itemBytes > bytesLeft) malformed(field, s"block of $count items, $bytesLeft bytes left")
+    total + count
+  }
+
+  /** Runs `item` once per item of an array or map, each block's count
+    * checked by [[checkCount]]. With `skipSized`, a block that declares its
+    * byte size (a negative count) is jumped over without visiting its
+    * items. */
+  private[records] def readBlocks(buf: ByteBuffer, field: String, itemBytes: Int,
                                   skipSized: Boolean = false)(item: => Unit): Unit = {
     var total = 0L
     var count = Varint.readVarlong(buf)
@@ -240,11 +250,8 @@ object AvroLite {
         if (size < 0 || size > buf.remaining()) malformed(field, s"block size $size, ${buf.remaining()} bytes left")
         if (skipSized) { buf.position(buf.position() + size.toInt); sized = true }
       }
-      total += count
-      if (total > MaxItems) malformed(field, s"$total items, more than $MaxItems")
+      total = checkCount(field, total, count, if (sized) 0 else itemBytes, buf.remaining())
       if (!sized) {
-        if (count * itemBytes > buf.remaining())
-          malformed(field, s"block of $count items, ${buf.remaining()} bytes left")
         var i = 0L
         while (i < count) { item; i += 1 }
       }

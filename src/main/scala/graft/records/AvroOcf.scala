@@ -63,17 +63,11 @@ object AvroOcf {
     buf.get(magic)
     require(java.util.Arrays.equals(magic, Magic),
       s"not an Avro OCF: magic ${magic.toVector}")
+    // the metadata is an Avro map<bytes>: a key and a value length at least
     val meta = Map.newBuilder[String, Array[Byte]]
-    var count = Varint.readVarlong(buf)
-    while (count != 0) {
-      if (count < 0) { Varint.readVarlong(buf); count = -count }
-      var i = 0L
-      while (i < count) {
-        val k = new String(readBytes(buf), "UTF-8")
-        meta += (k -> readBytes(buf))
-        i += 1
-      }
-      count = Varint.readVarlong(buf)
+    AvroLite.readBlocks(buf, MetaField, itemBytes = 2) {
+      val k = new String(readBytes(buf, MetaField), "UTF-8")
+      meta += (k -> readBytes(buf, MetaField))
     }
     val metaMap = meta.result()
     val schemaJson = new String(metaMap.getOrElse("avro.schema",
@@ -85,9 +79,12 @@ object AvroOcf {
     val sync = new Array[Byte](16)
     buf.get(sync)
     val rows = Vector.newBuilder[Any]
+    val rowBytes = AvroLite.minBytes(schema)
+    var total = 0L
     while (buf.remaining() > 0) {
       val n = Varint.readVarlong(buf)
-      Varint.readVarlong(buf) // block byte length (payload is self-delimiting)
+      val blockBytes = AvroLite.readLength(buf, RowsField)
+      total = AvroLite.checkCount(RowsField, total, n, rowBytes, blockBytes)
       var i = 0L
       while (i < n) { rows += AvroLite.decode(schema, buf); i += 1 }
       val blockSync = new Array[Byte](16)
@@ -102,10 +99,10 @@ object AvroOcf {
     out.write(b, 0, b.length)
   }
 
-  private def readBytes(buf: ByteBuffer): Array[Byte] = {
-    val len = Varint.readVarint(buf)
-    val b = new Array[Byte](len)
-    buf.get(b)
-    b
-  }
+  /** The field names malformed-input errors report. */
+  private val MetaField = "<ocf metadata>"
+  private val RowsField = "<ocf rows>"
+
+  private def readBytes(buf: ByteBuffer, field: String): Array[Byte] =
+    AvroLite.readBytes(buf, AvroLite.readLength(buf, field))
 }

@@ -81,7 +81,7 @@ class SegmentManifestSpec extends AnyFunSuite {
         """"segmentIndexes":null,"compression":true,""" +
         """"encryption":{"keyId":"k","dataKey":"AQI=","aad":"Aw=="}}"""
     val m = SegmentManifest.fromJson(legacy)
-    assert(m.compressionCodec == SegmentManifest.CodecLz4Name)
+    assert(m.compressionCodec == graft.core.transform.Transforms.CodecNameLz4)
     assert(m.encryption.get.wrapAlg == SegmentManifest.WrapAlgOaepSha256)
   }
 

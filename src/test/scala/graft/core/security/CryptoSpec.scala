@@ -164,5 +164,8 @@ class CryptoSpec extends AnyFunSuite {
     assert(e4.getMessage.contains("1 GB/s"))
     SegmentJobConfig("/tmp/x", uploadRateBytesPerSec = Some(1048576L))
     SegmentJobConfig("/tmp/x", uploadRateBytesPerSec = Some(1000000000L))
+    val e5 = intercept[IllegalArgumentException](SegmentJobConfig("/tmp/x", compressionCodec = "snappy"))
+    assert(e5.getMessage.contains("compressionCodec") && e5.getMessage.contains("snappy"))
+    Seq("lz4", "zstd", "deflate").foreach(c => SegmentJobConfig("/tmp/x", compressionCodec = c))
   }
 }

@@ -87,6 +87,39 @@ class TransformsEndToEndSpec extends AnyFunSuite {
     }
   }
 
+  test("strict read: a compressed chunk declaring another size than its index entry fails before decoding") {
+    val src = original.take(100)
+    val spec = TransformSpec(1024, compression = true, encryptionKey = None)
+    def le32(v: Int) = java.nio.ByteBuffer.allocate(4).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(v).array()
+    def prefixed(chunk: Array[Byte], declared: Int) = {
+      val b = chunk.clone(); java.nio.ByteBuffer.wrap(b).putInt(0, declared); b
+    }
+    // RFC 8878 frame: magic, a single-segment header with a 4-byte content
+    // size, then one last raw block holding 4 bytes
+    def zstdDeclaring(declared: Int) =
+      Array[Byte](0x28, 0xB5.toByte, 0x2F, 0xFD.toByte, 0xA0.toByte) ++ le32(declared) ++
+        Array[Byte](0x21, 0, 0) ++ src.take(4)
+    assert(java.util.Arrays.equals(Transforms.decompress(zstdDeclaring(4), 4), src.take(4)))
+    // the declared size matches, but the frame holds fewer bytes
+    intercept[IllegalArgumentException](Transforms.decompress(zstdDeclaring(5), 5))
+
+    val huge = Int.MaxValue - 255
+    val corrupt = Seq(
+      prefixed(Transforms.compress(src), -5) -> -5L,
+      prefixed(Transforms.compress(src), huge) -> huge.toLong,
+      prefixed(Transforms.compressDeflate(src), -5) -> -5L,
+      prefixed(Transforms.compressDeflate(src), huge) -> huge.toLong,
+      zstdDeclaring(huge) -> huge.toLong,
+      zstdDeclaring(101) -> 101L)
+    corrupt.foreach { case (chunk, declared) =>
+      val meta = Chunk(3, 0, src.length, 0, chunk.length)
+      val e = intercept[IllegalArgumentException](
+        TransformPipeline.detransform(Iterator.single(chunk), Vector(meta), spec).next())
+      assert(e.getMessage.startsWith("chunk 3:") && e.getMessage.contains(s"declares $declared content bytes"),
+        e.getMessage)
+    }
+  }
+
   test("negative chunk size fails fast (no silent infinite grouped loop)") {
     intercept[IllegalArgumentException](
       Transforms.chunkedBytes(Array[Byte](1, 2, 3), -5).toVector)

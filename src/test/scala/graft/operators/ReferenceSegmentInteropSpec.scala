@@ -90,7 +90,7 @@ class ReferenceSegmentInteropSpec extends AnyFunSuite {
       rsaPrivateKey = RsaKeyRing.serializePrivate(kp.getPrivate))
 
     val m = SegmentFetchJob.loadManifest(storage, "ref-seg")
-    assert(m.compressionCodec == SegmentManifest.CodecZstdName) // inferred from layout
+    assert(m.compressionCodec == graft.core.transform.Transforms.CodecNameZstd) // inferred from layout
     assert(m.encryption.get.keyId == "kek-1")
     assert(m.encryption.get.wrapAlg == SegmentManifest.WrapAlgOaepSha3512)
     assert(m.chunkIndex.chunkCount == transformed.length)

@@ -163,14 +163,14 @@ class SegmentJobsSpec extends SparkSpec {
     val store = tmpDir("graft-zstd-store")
     val segs = makeSegments(in, 2, 30000)
     val cfg = SegmentJobConfig.withGeneratedKeys(store)
-      .copy(chunkSize = 4096, compressionCodec = graft.core.SegmentManifest.CodecZstdName)
+      .copy(chunkSize = 4096, compressionCodec = graft.core.transform.Transforms.CodecNameZstd)
     assert(SegmentUploadJob.run(spark, in, cfg).collect().forall(_.getAs[Boolean]("success")))
     val storage = FileSystemStorage(store)
     // Compressed manifests must declare zstd (seg 0 is the compressible one).
     val codecs = storage.listKeys("").filter(_.endsWith(".rsm-manifest")).map { k =>
       graft.core.SegmentManifest.fromJson(new String(storage.fetchBytes(k), "UTF-8"))
     }.filter(_.compression).map(_.compressionCodec)
-    assert(codecs.nonEmpty && codecs.forall(_ == graft.core.SegmentManifest.CodecZstdName))
+    assert(codecs.nonEmpty && codecs.forall(_ == graft.core.transform.Transforms.CodecNameZstd))
     // Byte-identity against the original payloads across range shapes.
     segs.foreach { case (segKey, payload) =>
       val full = SegmentFetchJob.fetchRange(cfg, segKey, BytesRange(0, payload.length - 1L))

@@ -47,6 +47,22 @@ class GraftExtensionsSpec extends AnyFunSuite {
           "bitset_jaccard(X'0F', X'03') AS j").head()
       assert(r.getDouble(0) == 11.0)
       assert(r.getDouble(1) == 0.5) // |{0..1}∩{0..3}| / |{0..3}|
+      // graft_might_contain, through SQL and through GraftDsl, agrees with
+      // the bloom filter it probes
+      val bloom = org.apache.spark.util.sketch.BloomFilter.create(100, 0.01)
+      Seq(3L, 42L, 77L).foreach(bloom.putLong)
+      val out = new java.io.ByteArrayOutputStream()
+      bloom.writeTo(out)
+      val bytes = out.toByteArray
+      val hex = bytes.map(b => f"${b & 0xFF}%02X").mkString
+      val keys = 0L until 200L
+      val viaSql = s.sql(s"SELECT id, graft_might_contain(X'$hex', id) FROM range(200) ORDER BY id")
+        .collect().map(_.getBoolean(1)).toSeq
+      val viaDsl = s.range(200).orderBy("id")
+        .select(graft.functions.GraftDsl.bloomMightContain(bytes, org.apache.spark.sql.functions.col("id")))
+        .collect().map(_.getBoolean(0)).toSeq
+      assert(viaSql == keys.map(bloom.mightContainLong) && viaDsl == viaSql)
+      assert(viaSql(42))
     }
   }
 
