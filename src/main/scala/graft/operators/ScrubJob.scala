@@ -57,17 +57,14 @@ object ScrubJob {
     val (manifest, spec) =
       try SegmentFetchJob.resolve(storage, cfg, segKey)
       catch { case e: Exception => return bad(s"manifest-unreadable: ${e.getMessage}") }
-    val chunks = manifest.chunkIndex.chunks
-    val nChunks = chunks.size
+    val nChunks = manifest.chunkIndex.chunks.size
 
     val logKey = s"$segKey.${ObjectKey.Suffix.Log.value}"
     if (!storage.exists(logKey)) return bad("log-missing", nChunks)
-    val transformedExtent =
-      if (chunks.isEmpty) 0L
-      else chunks.last.transformedPosition.toLong + chunks.last.transformedSize
     val logSize = storage.size(logKey)
-    if (logSize != transformedExtent)
-      return bad(s"log-size-mismatch: stored $logSize != manifest $transformedExtent", nChunks)
+    val transformedSize = manifest.chunkIndex.transformedFileSize
+    if (logSize != transformedSize)
+      return bad(s"log-size-mismatch: stored $logSize != manifest $transformedSize", nChunks)
 
     manifest.segmentIndexes.foreach { si =>
       val idxKey = s"$segKey.${ObjectKey.Suffix.Indexes.value}"

@@ -34,11 +34,11 @@ import graft.sources.StorageBackends
   *  - **Planning**: one [[InputPartition]] per stored segment, planned
   *    on the driver through one per-scan [[SegmentCatalog]]: one LIST of
   *    the prefix (key strings only — never bytes), and at most one
-  *    manifest GET and one `.log` `size()` per listed key, shared by the
-  *    size estimate, stats pruning, the LIMIT / OFFSET walks and runtime
-  *    re-plans. At 100 TB the unit of parallelism is the segment, the same
-  *    unit the storage layer writes, so executor fan-out matches data
-  *    layout with no shuffle.
+  *    manifest GET per listed key, shared by the statistics, stats
+  *    pruning, the LIMIT / OFFSET walks and runtime re-plans. At 100 TB
+  *    the unit of parallelism is the segment, the same unit the storage
+  *    layer writes, so executor fan-out matches data layout with no
+  *    shuffle.
   *  - **Partition pruning**: filters on `segment_key` (equality, IN,
   *    prefix) prune segments at PLAN time — the object-store analogue of
   *    partition pruning; a `startswith(segment_key, 'topicA-')` scan never
@@ -89,8 +89,9 @@ object GraftSegments {
                               backendProvider: String = "",
                               /** Streaming admission control (0 = unlimited):
                                 * cap each micro-batch at this many segments /
-                                * this many `.log` payload bytes (metadata
-                                * `size()` sums — no byte fetched to decide).
+                                * this many stored `.log` bytes (Σ of the
+                                * manifests' transformed sizes — no payload
+                                * fetched to decide).
                                 * A backfill of 40 000 tiered segments then
                                 * drains as bounded, checkpointable batches
                                 * instead of one giant catch-up batch. */
@@ -398,19 +399,18 @@ object SegmentsScan {
 
 /** The driver-side segment catalog of ONE scan — the plan-time twin of the
   * executors' manifest cache ([[SegmentFetchJob.readSpec]]). It holds the
-  * sorted, `segment_key`-pruned listing, taken once; one per-key memo of
-  * manifest `RecordStats`; and one per-key memo of `.log` sizes. A batch
-  * query therefore LISTs its prefix once and reads each manifest and each
-  * size at most once, however many planning steps ask. The micro-batch
-  * stream re-lists on every trigger ([[list]]) but shares both memos:
-  * committed manifests and logs are immutable, so a memoized answer never
-  * goes stale, and the listing stays the source of truth for what exists.
-  * Lives as long as its scan; nothing is shared across queries. */
+  * sorted, `segment_key`-pruned listing, taken once, and one per-key memo
+  * of [[SegmentCatalog.Summary]]: what planning needs of a manifest, read
+  * with one GET. A batch query therefore LISTs its prefix once and reads
+  * each manifest at most once, however many planning steps ask, and never
+  * asks storage for an object's size. The micro-batch stream re-lists on
+  * every trigger ([[list]]) but shares the memo: committed manifests are
+  * immutable, so a memoized answer never goes stale, and the listing stays
+  * the source of truth for what exists. Lives as long as its scan; nothing
+  * is shared across queries. */
 private[v2] final class SegmentCatalog(conf: GraftSegments.SourceConf, pruning: Array[Filter]) {
   private lazy val storage = conf.storage
-  private val stats = new scala.collection.concurrent.TrieMap[String, Option[graft.core.RecordStats]]
-  private val sizes = new scala.collection.concurrent.TrieMap[String, Long]
-  private val logSuffix = "." + graft.sources.ObjectKey.Suffix.Log.value
+  private val summaries = new scala.collection.concurrent.TrieMap[String, Option[SegmentCatalog.Summary]]
 
   /** A fresh listing: one LIST under `prefix`, cut by the prunable
     * `segment_key` filters, sorted. Key strings only, no bytes. */
@@ -421,23 +421,23 @@ private[v2] final class SegmentCatalog(conf: GraftSegments.SourceConf, pruning: 
   /** The batch scan's listing, taken once. */
   lazy val keys: Array[String] = list()
 
+  /** The segment's manifest summary: one GET per key. None when the
+    * manifest cannot be read or parsed, and that answer is remembered too,
+    * so a stream's offset space cannot shift when a transient failure
+    * later clears. */
+  def summaryOf(key: String): Option[SegmentCatalog.Summary] =
+    summaries.getOrElseUpdate(key,
+      try {
+        val m = SegmentFetchJob.loadManifest(storage, key)
+        Some(SegmentCatalog.Summary(m.recordStats, m.chunkIndex.originalFileSize.toLong,
+          m.chunkIndex.transformedFileSize))
+      } catch { case _: Exception => None })
+
   /** Manifest `RecordStats`, if the manifest parses and carries stats
-    * (reference-written manifests may not). One GET per key; a failed
-    * read is remembered as None too. */
-  def statsOf(key: String): Option[graft.core.RecordStats] =
-    stats.getOrElseUpdate(key,
-      try SegmentFetchJob.loadManifest(storage, key).recordStats
-      catch { case _: Exception => None })
+    * (reference-written manifests may not). */
+  def statsOf(key: String): Option[graft.core.RecordStats] = summaryOf(key).flatMap(_.stats)
 
   def count(key: String): Option[Long] = statsOf(key).map(_.count)
-
-  /** The `.log` object's size from storage metadata (one `size()` per
-    * key). A failed call is not remembered, so the next ask retries. */
-  def logSize(key: String): Option[Long] =
-    sizes.get(key).orElse {
-      try { val v = storage.size(key + logSuffix); sizes.put(key, v); Some(v) }
-      catch { case _: Exception => None }
-    }
 
   /** Segment skipping on manifest stats: drop keys whose `RecordStats`
     * interval provably misses every stats-prunable filter. Driver-side,
@@ -470,6 +470,16 @@ private[v2] final class SegmentCatalog(conf: GraftSegments.SourceConf, pruning: 
   }
 }
 
+private[v2] object SegmentCatalog {
+  /** What planning reads of one manifest: its `RecordStats`, if any, and
+    * the segment's decoded (`originalBytes`) and stored, i.e. compressed
+    * and encrypted, (`storedBytes`) sizes from its chunk index. Not the
+    * manifest itself: a stream's catalog lives as long as the stream, and
+    * chunk tables and wrapped keys would grow with it. */
+  final case class Summary(stats: Option[graft.core.RecordStats], originalBytes: Long,
+                           storedBytes: Long)
+}
+
 final class SegmentsScan private[v2] (conf: GraftSegments.SourceConf, required: StructType,
                          pruning: Array[Filter],
                          limitOpt: Option[Int],
@@ -485,19 +495,28 @@ final class SegmentsScan private[v2] (conf: GraftSegments.SourceConf, required: 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
-  /** Planner-visible size estimate (r6): Σ `.log` object sizes over the
-    * segments this scan plans ([[plannedKeys]]) — one metadata `size()`
-    * per planned segment, no byte fetched, so a stats-pruned or LIMITed
-    * scan reports only what it will read. Joins against a pruned segments
-    * scan can then broadcast correctly instead of defaulting to a shuffle
-    * (an unknown-size v2 scan is assumed huge). Transformed size ≥
-    * original payload minus compression — a conservative under/over
-    * estimate is fine for join-strategy selection, exactness is not the
-    * contract. */
+  /** Planner-visible statistics of the segments this scan plans
+    * ([[plannedKeys]]), from the catalog's manifest summaries only:
+    *  - `sizeInBytes`: Σ decoded (original) segment bytes — the size the
+    *    rows are made from, not the compressed and encrypted stored size,
+    *    so a topic that compresses well does not look small to join
+    *    selection. An unreadable manifest adds 0.
+    *  - `numRows`: the rows the scan emits — Σ `RecordStats` counts, less
+    *    a pushed OFFSET's in-segment skip when the boundary segment is
+    *    planned. Empty unless every planned manifest carries stats.
+    * A stats-pruned or LIMITed scan reports only what it will read, so a
+    * join against it can broadcast instead of defaulting to a shuffle (an
+    * unknown-size v2 scan is assumed huge). */
   override def estimateStatistics(): Statistics = new Statistics {
-    private lazy val bytes: Long = plannedKeys().map(k => catalog.logSize(k).getOrElse(0L)).sum
+    private lazy val (bytes, rows) = {
+      val planned = plannedKeys()
+      val emitted = planned.map(k => catalog.count(k).map(_ - skipRowsOf(k)))
+      (planned.map(k => catalog.summaryOf(k).fold(0L)(_.originalBytes)).sum,
+        Option.when(emitted.forall(_.isDefined))(emitted.flatten.sum))
+    }
     override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
-    override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
+    override def numRows(): java.util.OptionalLong =
+      rows.fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
   }
 
   /** Runtime (join-driven) segment pruning — DSv2 dynamic partition
@@ -516,6 +535,11 @@ final class SegmentsScan private[v2] (conf: GraftSegments.SourceConf, required: 
     runtimeFilters = filters
 
   private val skip = offsetSkip.getOrElse(SegmentsScan.OffsetSkip(0, 0, 0L))
+
+  /** Rows a pushed OFFSET skips inside segment `k`: its remainder on the
+    * boundary segment, 0 elsewhere. */
+  private def skipRowsOf(k: String): Long =
+    if (catalog.keys.lift(skip.from).contains(k)) skip.inFirst else 0L
 
   /** The segments this scan reads, chosen on the driver over the catalog's
     * listing, in sorted-key order:
@@ -566,9 +590,7 @@ final class SegmentsScan private[v2] (conf: GraftSegments.SourceConf, required: 
     * rides the boundary segment as a row skip. No byte is fetched until an
     * executor runs its partition. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val boundary = catalog.keys.lift(skip.from)
-    val parts = plannedKeys().map(k =>
-      SegmentPartition(k, if (boundary.contains(k)) skip.inFirst else 0L): InputPartition)
+    val parts = plannedKeys().map(k => SegmentPartition(k, skipRowsOf(k)): InputPartition)
     SegmentsScan.lastPlannedPartitions = parts.length
     parts
   }
@@ -639,20 +661,37 @@ final case class SegmentCountOffset(n: Long, last: String = "")
 }
 
 object SegmentCountOffset {
+  /** A checkpointed offset, validated: a JSON object needs an integral
+    * `n` in [0, Int.MaxValue] (it indexes the sorted listing), and a
+    * non-empty `last` only with `n` > 0 (it names the n-th key). Anything
+    * else fails here with a descriptive error instead of a raw exception
+    * when the stream plans from it. */
   def parse(json: String): SegmentCountOffset = {
+    def invalid(why: String) = new IllegalArgumentException(
+      s"invalid graft-segments stream offset '$json' ($why): expected a JSON object " +
+        """{"n":N,"last":"key"} or a legacy non-negative integer""")
     val t = json.trim
     // an empty string satisfies forall(_.isDigit) — guard with nonEmpty so
     // a blank/garbage checkpoint fails with a descriptive error, not a raw
     // NumberFormatException from the legacy numeric branch
-    if (t.nonEmpty && t.forall(_.isDigit)) SegmentCountOffset(t.toLong) // pre-r4 checkpoints
+    if (t.nonEmpty && t.forall(_.isDigit)) // pre-r4 checkpoints
+      SegmentCountOffset(t.toIntOption.getOrElse(throw invalid("count out of range")).toLong)
     else if (t.startsWith("{")) {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(t)
-      SegmentCountOffset(node.get("n").asLong(),
-        Option(node.get("last")).map(_.asText()).getOrElse(""))
-    } else
-      throw new IllegalArgumentException(
-        s"invalid graft-segments stream offset '$json': expected a JSON object " +
-          """{"n":N,"last":"key"} or a legacy non-negative integer""")
+      val node =
+        try new com.fasterxml.jackson.databind.ObjectMapper().readTree(t)
+        catch { case e: com.fasterxml.jackson.core.JsonProcessingException =>
+          throw invalid(s"malformed JSON: ${e.getOriginalMessage}") }
+      val n = Option(node.get("n")).filter(v => v.isIntegralNumber && v.canConvertToInt)
+        .map(_.asInt).getOrElse(throw invalid("'n' missing, not an integer or out of range"))
+      val last = Option(node.get("last")) match {
+        case None                   => ""
+        case Some(v) if v.isTextual => v.asText
+        case Some(_)                => throw invalid("'last' is not a string")
+      }
+      if (n < 0) throw invalid("negative 'n'")
+      if (n == 0 && last.nonEmpty) throw invalid("'last' names a key but 'n' is 0")
+      SegmentCountOffset(n.toLong, last)
+    } else throw invalid("not a JSON object or an integer")
   }
 }
 
@@ -674,12 +713,13 @@ final class SegmentsMicroBatchStream(scan: SegmentsScan)
 
   /** Admission control (the Kafka-source `maxOffsetsPerTrigger` discipline
     * for an object store): `stream.maxSegmentsPerTrigger` caps the batch by
-    * partition count, `stream.maxBytesPerTrigger` by the Σ of `.log` object
-    * sizes — decided from storage METADATA only (one `size()` HEAD per
-    * candidate key, remembered for the stream's life by the scan's
-    * [[SegmentCatalog]]; no payload fetched, no manifest parsed). The byte cap
-    * always admits at least one segment past `start`, so a segment larger
-    * than the cap still makes progress instead of stalling the stream. */
+    * partition count, `stream.maxBytesPerTrigger` by the Σ of stored `.log`
+    * bytes — read from each candidate's manifest summary (the chunk index's
+    * transformed size, which `ScrubJob` checks against the object; one GET
+    * per key, remembered for the stream's life by the scan's
+    * [[SegmentCatalog]]; no payload fetched). The byte cap always admits at
+    * least one segment past `start`, so a segment larger than the cap still
+    * makes progress instead of stalling the stream. */
   override def getDefaultReadLimit: ReadLimit = {
     val c = scan.sourceConf
     val lims = Seq(
@@ -712,19 +752,20 @@ final class SegmentsMicroBatchStream(scan: SegmentsScan)
     while (end < keys.length && !stop) {
       if (maxSeg.exists(m => end - a >= m)) stop = true
       else {
-        // a size() failure must NOT count as 0 bytes: under a persistently
-        // failing metadata endpoint that silently degrades the byte cap to
+        // an unreadable manifest must NOT count as 0 bytes: a store of
+        // unreadable manifests would silently degrade the byte cap to
         // unlimited. Conservative instead: stop admitting for this trigger
         // (progress guarantee intact — the first segment past `start` is
         // always admitted, sized or not).
-        val sz = maxBytes.fold(Some(0L): Option[Long])(_ => scan.segmentCatalog.logSize(keys(end)))
+        val sz = maxBytes.fold(Some(0L): Option[Long])(_ =>
+          scan.segmentCatalog.summaryOf(keys(end)).map(_.storedBytes))
         sz match {
           case None =>
             SegmentsMicroBatchStream.log.warn(
-              s"graft-segments: size(${keys(end)}.log) failed; admitting " +
+              s"graft-segments: manifest of ${keys(end)} unreadable; admitting " +
                 (if (end == a) "it alone (progress guarantee) and " else "") +
                 "no further segments this trigger (stream.maxBytesPerTrigger " +
-                "cannot be enforced without metadata)")
+                "cannot be enforced without its stored size)")
             if (end == a) end += 1
             stop = true
           case Some(v) =>

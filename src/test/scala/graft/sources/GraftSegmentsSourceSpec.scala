@@ -319,41 +319,61 @@ class GraftSegmentsSourceSpec extends SparkSpec {
       info(s"$name: LIST $lists, manifest GETs per key ${gets.values.toSeq.sorted.mkString("[", ",", "]")}, " +
         s"size() per key ${sizes.values.toSeq.sorted.mkString("[", ",", "]")}")
     }
+    // the statistics and every pruning step read the manifests the catalog
+    // already GETs: planning never asks storage for an object's size
     seen.foreach { case (name, (lists, gets, sizes)) =>
       assert(lists == 1, s"$name: $lists LISTs")
       assert(gets.values.forall(_ <= 1), s"$name: manifest GETs per key $gets")
-      assert(sizes.values.forall(_ <= 1), s"$name: size() calls per key $sizes")
-    }
-    // the size estimate asks size() of the planned segments only
-    Seq("kafka.timestamp range" -> keys.last, "LIMIT" -> keys.head).foreach { case (name, planned) =>
-      val sized = seen.toMap.apply(name)._3.keySet
-      assert(sized == Set(s"$planned.log"), s"$name: size() on $sized, plans only $planned")
+      assert(sizes.isEmpty, s"$name: size() calls per key $sizes")
     }
   }
 
   test("estimateStatistics: pruned scans report the pruned byte size (r6)") {
     val (store, cfg, keys) = setup()
-    def statsOf(df: org.apache.spark.sql.DataFrame): Long = {
+    def statsOf(df: org.apache.spark.sql.DataFrame): (Long, Option[Long]) = {
       val rel = df.queryExecution.optimizedPlan.collectFirst {
         case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
       }.get
-      rel.computeStats().sizeInBytes.toLong
+      val st = rel.computeStats()
+      (st.sizeInBytes.toLong, st.rowCount.map(_.toLong))
     }
     val T0 = 1700000000000L
+    val pfx = keys.head.take(3)
+    // the decoded segment payloads, as uploaded: what the rows are made
+    // from, not the compressed and encrypted `.log` objects
+    val payload = keys.map(k => graft.operators.SegmentFetchJob
+      .fetchRange(cfg, k, graft.core.BytesRange(0L, Long.MaxValue - 1L)).length.toLong)
     val full = statsOf(reader(store, cfg).load())
-    val logSizes = keys.map(k => graft.sources.FileSystemStorage(store).size(s"$k.log"))
-    assert(full == logSizes.sum, s"full-scan estimate $full != sum of log sizes ${logSizes.sum}")
-    // each pruned shape reports the size of exactly the segment it plans:
-    // segment_key pruning, stats pruning (only the last segment's
-    // timestamps reach T0 + 20), and a LIMIT the first segment covers
+    assert(full == (payload.sum, Some(30L)), s"full-scan statistics $full")
+    // each pruned shape reports exactly the segments it plans and the rows
+    // the scan emits: segment_key pruning, stats pruning (only the last
+    // segment's timestamps reach T0 + 20), a LIMIT the first segment covers
+    // (the scan still emits that whole segment; Spark's limit sits on top),
+    // and an OFFSET 12 that skips segment 0 whole and 2 rows of segment 1
     Seq(
-      ("segment_key", reader(store, cfg).load().where(col("segment_key") === keys.head), 0),
-      ("kafka.timestamp range", reader(store, cfg).load().where(col("kafka.timestamp") >= T0 + 20), 2),
-      ("LIMIT", reader(store, cfg).load().limit(5), 0)).foreach { case (name, df, planned) =>
+      ("segment_key", reader(store, cfg).load().where(col("segment_key") === keys.head), Seq(0), 10L),
+      ("kafka.timestamp range", reader(store, cfg).load().where(col("kafka.timestamp") >= T0 + 20),
+        Seq(2), 10L),
+      ("LIMIT", reader(store, cfg).load().limit(5), Seq(0), 10L),
+      ("OFFSET + LIMIT with prefix", reader(store, cfg).option("prefix", pfx).load().offset(12).limit(5),
+        Seq(1, 2), 18L)).foreach { case (name, df, planned, rows) =>
       val est = statsOf(df)
-      assert(est == logSizes(planned), s"$name: estimate $est != planned log size ${logSizes(planned)}")
-      assert(est < full, name)
+      assert(est == (planned.map(payload).sum, Some(rows)),
+        s"$name: statistics $est, expected ${planned.map(payload).sum} bytes and $rows rows")
+      assert(est._1 < full._1, name)
     }
+    // a stats-less (reference-written) manifest: bytes still known, the
+    // row count is not
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def manifest(k: String) = java.nio.file.Paths.get(store, k + "." + ObjectKey.Suffix.Manifest.value)
+    val node = mapper.readTree(Files.readAllBytes(manifest(keys(1))))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.remove("recordStats")
+    Files.write(manifest(keys(1)), mapper.writeValueAsBytes(node))
+    assert(statsOf(reader(store, cfg).load()) == (payload.sum, None))
+    // an unreadable manifest adds 0 bytes and no row count
+    Files.write(manifest(keys(2)), kb("not json"))
+    assert(statsOf(reader(store, cfg).load()) == (payload(0) + payload(1), None))
   }
 
   test("column pruning: metadata-only scans never materialize payloads") {
@@ -508,9 +528,16 @@ class GraftSegmentsSourceSpec extends SparkSpec {
     assert(SegmentCountOffset.parse("2") == SegmentCountOffset(2L, ""))
     // blank/garbage checkpoints fail with a descriptive error, not a raw
     // NumberFormatException from the legacy numeric branch (r4 advice)
-    for (bad <- Seq("", "   ", "abc", "12x"))
+    // a malformed JSON offset fails at parse, not later as a raw exception
+    // (`{"last":"k"}` was a NullPointerException; a negative `n`, or one
+    // past Int.MaxValue, reached planInputPartitions and indexed keys(-4))
+    for (bad <- Seq("""{"last":"k"}""", """{"n":-3,"last":"k"}""", """{"n":"2","last":"k"}""",
+        """{"n":1.5,"last":"k"}""", """{"n":0,"last":"k"}""", """{"n":1,"last":7}""", "{",
+        """{"n":2147483648,"last":"k"}""", "", "   ", "abc", "12x", "2147483648"))
       assert(intercept[IllegalArgumentException](SegmentCountOffset.parse(bad))
-        .getMessage.contains("invalid graft-segments stream offset"))
+        .getMessage.contains("invalid graft-segments stream offset"), bad)
+    assert(SegmentCountOffset.parse("""{"n":0,"last":""}""") == SegmentCountOffset(0L))
+    assert(SegmentCountOffset.parse("""{"n":0}""") == SegmentCountOffset(0L))
     assert(stream.planInputPartitions(off0, off1).length == 3)
     // a NEW segment with an append-ordered key: normal progression
     val st = FileSystemStorage(store)
@@ -560,6 +587,26 @@ class GraftSegmentsSourceSpec extends SparkSpec {
     assert(stream.getDefaultReadLimit == ReadLimit.allAvailable())
     // reportLatestOffset is the TRUE head (progress metrics see the lag)
     assert(stream.reportLatestOffset().asInstanceOf[SegmentCountOffset].n == 3)
+  }
+
+  test("admission control: an unreadable manifest is admitted alone, never sized as 0 bytes") {
+    import graft.sources.v2._
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val (store, _, keys) = setup()
+    Files.write(java.nio.file.Paths.get(store, keys(1) + "." + ObjectKey.Suffix.Manifest.value),
+      kb("not json"))
+    val stream = new SegmentsScan(GraftSegments.SourceConf(store, "", "", ""),
+      GraftSegments.fullSchema, Array.empty).toMicroBatchStream("unused")
+      .asInstanceOf[SegmentsMicroBatchStream]
+    def next(from: SegmentCountOffset) =
+      stream.latestOffset(from, ReadLimit.maxBytes(Long.MaxValue)).asInstanceOf[SegmentCountOffset]
+    // an unlimited byte cap still stops in front of the segment it cannot size
+    val first = next(SegmentCountOffset(0L))
+    assert(first == SegmentCountOffset(1L, keys(0)))
+    // from there, the unreadable segment is admitted alone (progress guarantee)
+    val second = next(first)
+    assert(second == SegmentCountOffset(2L, keys(1)))
+    assert(next(second) == SegmentCountOffset(3L, keys(2)))
   }
 
   test("admission control end-to-end: maxSegmentsPerTrigger=1 drains as one-segment batches") {
