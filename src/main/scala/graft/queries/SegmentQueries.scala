@@ -98,9 +98,10 @@ object SegmentQueries {
     * Avro manifest list → Avro manifests → per-file record counts and
     * kafka.offset bounds. The DuckDB oracle recomputes the same numbers
     * straight from `documents`, so a pass certifies the whole chain:
-    * append txn → snapshot → AvroOcf encoding → spec field layout →
-    * bounds serialization → self-read. (Spec-level golden checks live in
-    * IcebergExportSpec; this row makes the loop driver-visible.) */
+    * append txn → snapshot → Avro manifest encoding (Apache Avro's
+    * `DataFileWriter`) → spec field layout → bounds serialization →
+    * self-read. (Spec-level golden checks live in IcebergExportSpec; this
+    * row puts the whole loop under the oracle.) */
   def r02IcebergStats(s: SparkSession, d: String): DataFrame = {
     import graft.records.{IcebergExport, RecordTable}
     val rows = documents(s, d).selectExpr(

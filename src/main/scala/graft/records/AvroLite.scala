@@ -14,14 +14,17 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Minimal Avro binary codec + Avro→Spark type conversion, written from the
   * public Avro 1.11 specification — the I2/I4/I12 surface of the reference
   * (`iceberg/data/RecordConverter.java:94-200`,
-  * `AvroSchemaRegistryStructureProvider.java:33-92`) without the Avro
-  * runtime dependency.
+  * `AvroSchemaRegistryStructureProvider.java:33-92`). It decodes registry
+  * payloads straight to Catalyst values ([[catalystReader]]), which Apache
+  * Avro's generic reader does not; the Iceberg manifest files go through
+  * Apache Avro's container-file API instead ([[IcebergExport]]).
   *
   * Supported types (the reference's full converter matrix,
   * `RecordConverter.java:105-166`): record, array, map(string keys), string,
-  * bytes, fixed, int, long, float, double, boolean, null, union[null,T],
-  * decimal (bytes/fixed logical), date, time-millis, timestamp-millis,
-  * timestamp-micros, uuid (string logical).
+  * bytes, fixed, int, long, float, double, boolean, null, unions of null
+  * and one other type (in either order), decimal (bytes/fixed logical),
+  * date, time-millis, timestamp-millis, timestamp-micros, uuid (string
+  * logical).
   */
 object AvroLite {
 
@@ -43,7 +46,9 @@ object AvroLite {
   case object AUuid extends Schema
   final case class AArray(items: Schema) extends Schema
   final case class AMap(values: Schema) extends Schema
-  final case class AUnionNullable(inner: Schema) extends Schema
+  /** A union of `null` and `inner`; `nullIndex` (0 or 1) is the null
+    * branch's position, which is the branch index on the wire. */
+  final case class AUnionNullable(inner: Schema, nullIndex: Int) extends Schema
   final case class AField(name: String, schema: Schema)
   final case class ARecord(name: String, fields: Vector[AField]) extends Schema
 
@@ -54,11 +59,11 @@ object AvroLite {
   private def parseNode(n: JsonNode): Schema = {
     if (n.isTextual) return primitive(n.asText())
     if (n.isArray) {
-      val parts = (0 until n.size()).map(i => n.get(i))
-      require(parts.size == 2 && parts.exists(p => p.isTextual && p.asText() == "null"),
-        s"only [null, T] unions supported, got $n")
-      val inner = parts.find(p => !(p.isTextual && p.asText() == "null")).get
-      return AUnionNullable(parseNode(inner))
+      val isNull = (0 until n.size()).map(i => n.get(i).isTextual && n.get(i).asText() == "null")
+      if (isNull.size != 2 || isNull.count(identity) != 1)
+        throw new IllegalArgumentException(s"only unions of null and one other type are supported, got $n")
+      val nullIndex = isNull.indexOf(true)
+      return AUnionNullable(parseNode(n.get(1 - nullIndex)), nullIndex)
     }
     val t = n.get("type").asText()
     val logical = Option(n.get("logicalType")).map(_.asText())
@@ -114,13 +119,13 @@ object AvroLite {
     case ATimestampMillis | ATimestampMicros => TimestampType
     case AArray(items) => ArrayType(toSparkType(items))
     case AMap(values) => MapType(StringType, toSparkType(values))
-    case AUnionNullable(inner) => toSparkType(inner)
+    case AUnionNullable(inner, _) => toSparkType(inner)
     case ARecord(_, fields) =>
       StructType(fields.map(f => StructField(f.name, toSparkType(f.schema), nullable = isNullable(f.schema))))
   }
 
   private def isNullable(s: Schema): Boolean = s match {
-    case AUnionNullable(_) | ANull => true
+    case AUnionNullable(_, _) | ANull => true
     case _ => false
   }
 
@@ -160,7 +165,8 @@ object AvroLite {
         out += (new String(readBytes(buf, readLength(buf, field)), "UTF-8") -> decode(values, buf, field))
       }
       out.result()
-    case AUnionNullable(inner) => if (unionPresent(buf, field)) decode(inner, buf, field) else null
+    case AUnionNullable(inner, nullIndex) =>
+      if (unionPresent(buf, nullIndex, field)) decode(inner, buf, field) else null
     case ARecord(_, fields) => Row(fields.map(f => decode(f.schema, buf, f.name)): _*)
   }
 
@@ -176,7 +182,7 @@ object AvroLite {
     throw new IllegalArgumentException(s"malformed avro in field '$field': $what")
 
   /** A bytes or string length prefix, checked against the bytes left. */
-  private[records] def readLength(buf: ByteBuffer, field: String): Int = {
+  private def readLength(buf: ByteBuffer, field: String): Int = {
     val len = Varint.readVarlong(buf)
     if (len < 0 || len > buf.remaining()) malformed(field, s"length $len, ${buf.remaining()} bytes left")
     len.toInt
@@ -191,7 +197,7 @@ object AvroLite {
     len
   }
 
-  private[records] def readBytes(buf: ByteBuffer, len: Int): Array[Byte] = {
+  private def readBytes(buf: ByteBuffer, len: Int): Array[Byte] = {
     val b = new Array[Byte](len)
     buf.get(b)
     b
@@ -202,16 +208,15 @@ object AvroLite {
     buf.position(buf.position() + len)
   }
 
-  /** A `[null, T]` union's branch: true when T follows. */
-  private def unionPresent(buf: ByteBuffer, field: String): Boolean =
-    Varint.readVarlong(buf) match {
-      case 0 => false
-      case 1 => true
-      case i => malformed(field, s"union index $i out of range")
-    }
+  /** A null-or-T union's branch: true when T follows. */
+  private def unionPresent(buf: ByteBuffer, nullIndex: Int, field: String): Boolean = {
+    val i = Varint.readVarlong(buf)
+    if (i != 0 && i != 1) malformed(field, s"union index $i out of range")
+    i != nullIndex
+  }
 
   /** The fewest bytes one value of `s` takes on the wire. */
-  private[records] def minBytes(s: Schema): Int = s match {
+  private def minBytes(s: Schema): Int = s match {
     case ANull => 0
     case AFloat => 4
     case ADouble => 8
@@ -225,8 +230,8 @@ object AvroLite {
     * fit in `bytesLeft` (`itemBytes` each, at least) and the running total
     * in [[MaxItems]], so a corrupt count fails at once instead of spinning.
     * Returns the new total. */
-  private[records] def checkCount(field: String, total: Long, count: Long,
-                                  itemBytes: Int, bytesLeft: Int): Long = {
+  private def checkCount(field: String, total: Long, count: Long,
+                         itemBytes: Int, bytesLeft: Int): Long = {
     if (count < 0) malformed(field, s"block count $count")
     if (count > MaxItems - total) malformed(field, s"$total + $count items, more than $MaxItems")
     if (count * itemBytes > bytesLeft) malformed(field, s"block of $count items, $bytesLeft bytes left")
@@ -237,8 +242,8 @@ object AvroLite {
     * checked by [[checkCount]]. With `skipSized`, a block that declares its
     * byte size (a negative count) is jumped over without visiting its
     * items. */
-  private[records] def readBlocks(buf: ByteBuffer, field: String, itemBytes: Int,
-                                  skipSized: Boolean = false)(item: => Unit): Unit = {
+  private def readBlocks(buf: ByteBuffer, field: String, itemBytes: Int,
+                         skipSized: Boolean = false)(item: => Unit): Unit = {
     var total = 0L
     var count = Varint.readVarlong(buf)
     while (count != 0) {
@@ -276,7 +281,7 @@ object AvroLite {
         skipBytes(buf, readLength(buf, field), field)
         skip(values, buf, field)
       }
-    case AUnionNullable(inner) => if (unionPresent(buf, field)) skip(inner, buf, field)
+    case AUnionNullable(inner, nullIndex) => if (unionPresent(buf, nullIndex, field)) skip(inner, buf, field)
     case ARecord(_, fields) => fields.foreach(f => skip(f.schema, buf, f.name))
   }
 
@@ -297,9 +302,9 @@ object AvroLite {
   def catalystReader(schema: Schema, selected: Option[Seq[Int]] = None): ByteBuffer => Any =
     (schema, selected) match {
       case (_, None) => catalystReader(schema, RootField)
-      case (AUnionNullable(inner), _) =>
+      case (AUnionNullable(inner, nullIndex), _) =>
         val read = catalystReader(inner, selected)
-        buf => if (unionPresent(buf, RootField)) read(buf) else null
+        buf => if (unionPresent(buf, nullIndex, RootField)) read(buf) else null
       case (ARecord(_, fields), Some(sel)) =>
         require(sel.nonEmpty && sel == sel.distinct.sorted && sel.last < fields.length,
           s"selection $sel is not ascending ordinals of ${fields.length} fields")
@@ -366,9 +371,9 @@ object AvroLite {
         readBlocks(buf, field, itemBytes) { ks += key(buf); vs += value(buf) }
         new ArrayBasedMapData(new GenericArrayData(ks.toArray), new GenericArrayData(vs.toArray))
       }
-    case AUnionNullable(inner) =>
+    case AUnionNullable(inner, nullIndex) =>
       val read = catalystReader(inner, field)
-      buf => if (unionPresent(buf, field)) read(buf) else null
+      buf => if (unionPresent(buf, nullIndex, field)) read(buf) else null
     case ARecord(_, fields) =>
       val readers = fields.map(f => catalystReader(f.schema, f.name)).toArray
       buf => {
@@ -432,9 +437,9 @@ object AvroLite {
         m.foreach { case (k, v) => writeBytes(k.getBytes("UTF-8"), out); encode(values, v, out) }
       }
       Varint.writeVarlong(0L, out)
-    case AUnionNullable(inner) =>
-      if (value == null) Varint.writeVarlong(0L, out)
-      else { Varint.writeVarlong(1L, out); encode(inner, value, out) }
+    case AUnionNullable(inner, nullIndex) =>
+      if (value == null) Varint.writeVarlong(nullIndex.toLong, out)
+      else { Varint.writeVarlong(1L - nullIndex, out); encode(inner, value, out) }
     case ARecord(_, fields) =>
       val row = value.asInstanceOf[Row]
       fields.zipWithIndex.foreach { case (f, i) => encode(f.schema, row.get(i), out) }

@@ -4,9 +4,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** In-engine consumer of the stock-Iceberg-v2 metadata tree
   * [[IcebergExport]] writes (r6, VERDICT r5 task 6): loads a table from
-  * ONLY `metadata/` — version-hint → `vN.metadata.json` → Avro OCF
-  * manifest list → manifests → data-file paths + stats — and serves it as
-  * a DataFrame / SQL view. Closes the export loop end-to-end: the same
+  * ONLY `metadata/` — version-hint → `vN.metadata.json` → Avro manifest
+  * list → manifests (both read by [[IcebergExport.readState]] through
+  * Apache Avro's `DataFileStream`) → data-file paths + stats — and serves
+  * it as a DataFrame / SQL view. Closes the export loop end-to-end: the same
   * files an external Iceberg runtime would read are readable back
   * in-engine with no reference to the native table's own manifest store.
   *

@@ -1,11 +1,15 @@
 package graft.records
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, IOException}
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.Row
+import org.apache.avro.{AvroRuntimeException, Schema}
+import org.apache.avro.file.{DataFileStream, DataFileWriter}
+import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.types._
 
 /** Stock-Iceberg-readable table metadata for [[RecordTable]] (round-4
@@ -34,8 +38,9 @@ import org.apache.spark.sql.types._
   *     for historical schemas, so a column keeps its id for its lifetime
   *     (the Iceberg column-identity rule).
   *
-  * Avro files are written by [[AvroOcf]] over the in-repo [[AvroLite]]
-  * codec — no Iceberg/Avro runtime dependency. The golden-layout spec
+  * The Avro files are written and read by Apache Avro's container-file
+  * API (`DataFileWriter`/`DataFileStream`, from Spark's own jars), each
+  * from the one JSON schema below. The golden-layout spec
   * (IcebergExportSpec) proves a reader consuming ONLY these files
   * reconstructs snapshot/file-list/schema parity with the native path. */
 object IcebergMetadata {
@@ -175,8 +180,7 @@ object IcebergMetadata {
   // --- manifest / manifest-list Avro shapes --------------------------------
 
   /** Manifest-list entry schema (spec "Manifest Lists", v2 required
-    * fields). JSON carries the spec field-ids; the ADT mirrors it for
-    * [[AvroLite]] encoding. */
+    * fields), with the spec field-ids. */
   val ManifestListSchemaJson: String =
     """{"type":"record","name":"manifest_file","fields":[
       |{"name":"manifest_path","type":"string","field-id":500},
@@ -194,15 +198,7 @@ object IcebergMetadata {
       |{"name":"deleted_rows_count","type":"long","field-id":514}
       |]}""".stripMargin.replace("\n", "")
 
-  import AvroLite._
-  val ManifestListAdt: Schema = ARecord("manifest_file", Vector(
-    AField("manifest_path", AString), AField("manifest_length", ALong),
-    AField("partition_spec_id", AInt), AField("content", AInt),
-    AField("sequence_number", ALong), AField("min_sequence_number", ALong),
-    AField("added_snapshot_id", ALong), AField("added_files_count", AInt),
-    AField("existing_files_count", AInt), AField("deleted_files_count", AInt),
-    AField("added_rows_count", ALong), AField("existing_rows_count", ALong),
-    AField("deleted_rows_count", ALong)))
+  val ManifestListSchema: Schema = new Schema.Parser().parse(ManifestListSchemaJson)
 
   /** Manifest entry schema (spec "Manifests": entry fields 0-4, data_file
     * fields 100-140; unpartitioned => empty r102 partition struct; bounds
@@ -226,31 +222,68 @@ object IcebergMetadata {
       |]}}
       |]}""".stripMargin.replace("\n", "")
 
-  private def boundsAdt(kName: String) =
-    AUnionNullable(AArray(ARecord(kName, Vector(AField("key", AInt), AField("value", ABytes)))))
+  val ManifestSchema: Schema = new Schema.Parser().parse(ManifestSchemaJson)
 
-  val ManifestAdt: Schema = ARecord("manifest_entry", Vector(
-    AField("status", AInt),
-    AField("snapshot_id", AUnionNullable(ALong)),
-    AField("sequence_number", AUnionNullable(ALong)),
-    AField("file_sequence_number", AUnionNullable(ALong)),
-    AField("data_file", ARecord("r2", Vector(
-      AField("content", AInt),
-      AField("file_path", AString),
-      AField("file_format", AString),
-      AField("partition", ARecord("r102", Vector.empty)),
-      AField("record_count", ALong),
-      AField("file_size_in_bytes", ALong),
-      AField("lower_bounds", boundsAdt("k126_v127")),
-      AField("upper_bounds", boundsAdt("k129_v130")))))))
+  /** A record of `schema` with the named field values. */
+  private[records] def record(schema: Schema, values: (String, Any)*): GenericRecord = {
+    val r = new GenericData.Record(schema)
+    values.foreach { case (k, v) => r.put(k, v) }
+    r
+  }
+
+  /** An Avro container file of `records`, uncompressed, with the MD5 of
+    * `schemaJson` as its sync marker: equal inputs give equal bytes. */
+  private[records] def avroFile(schemaJson: String, schema: Schema, records: Seq[GenericRecord],
+                                meta: Map[String, String]): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    val writer = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
+    meta.foreach { case (k, v) => writer.setMeta(k, v) }
+    writer.create(schema, out,
+      java.security.MessageDigest.getInstance("MD5").digest(schemaJson.getBytes("UTF-8")))
+    records.foreach(writer.append)
+    writer.close()
+    out.toByteArray
+  }
+
+  /** Every record of the Avro container file at `path`, read with `schema`
+    * as the reader schema: fields resolve by name, and a file whose writer
+    * schema does not resolve to it fails on its first record (so a corrupt
+    * row count cannot spin). Malformed input fails with an
+    * IllegalArgumentException naming the file. */
+  private[records] def readAvro(path: Path, schema: Schema): Vector[GenericRecord] = {
+    val bytes = Files.readAllBytes(path)
+    try {
+      new DataFileStream[GenericRecord](new ByteArrayInputStream(bytes),
+        new GenericDatumReader[GenericRecord](null, schema)).iterator().asScala.toVector
+    } catch {
+      case e @ (_: AvroRuntimeException | _: IOException) =>
+        throw new IllegalArgumentException(s"malformed Avro file $path: ${e.getMessage}", e)
+    }
+  }
+
+  /** One manifest entry as an [[IcebergDataFile]]. A null `snapshot_id` is
+    * inherited from the manifest's `added_snapshot_id` (spec "Snapshot ID
+    * Inheritance"). */
+  private[records] def dataFile(entry: GenericRecord, manifestSnapshotId: Long): IcebergDataFile = {
+    val df = entry.get("data_file").asInstanceOf[GenericRecord]
+    def bound(name: String): Option[Long] = Option(df.get(name)).map { xs =>
+      val value = xs.asInstanceOf[java.util.List[GenericRecord]].get(0).get("value")
+      value.asInstanceOf[ByteBuffer].duplicate().order(ByteOrder.LITTLE_ENDIAN).getLong
+    }
+    IcebergDataFile(
+      path = df.get("file_path").toString,
+      recordCount = df.get("record_count").asInstanceOf[Long],
+      fileSizeBytes = df.get("file_size_in_bytes").asInstanceOf[Long],
+      status = entry.get("status").asInstanceOf[Int],
+      addedSnapshotId = Option(entry.get("snapshot_id")).fold(manifestSnapshotId)(_.asInstanceOf[Long]),
+      lowerOffset = bound("lower_bounds"),
+      upperOffset = bound("upper_bounds"))
+  }
 
   /** Spec Appendix D single-value serialization for a long bound:
     * 8-byte little-endian. */
   def longBound(v: Long): Array[Byte] =
-    java.nio.ByteBuffer.allocate(8).order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(v).array()
-
-  def readLongBound(b: Array[Byte]): Long =
-    java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong
+    ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN).putLong(v).array()
 }
 
 /** One data file of the current snapshot as reconstructed from the Iceberg
@@ -321,32 +354,34 @@ final class IcebergExport(tableDir: String) {
       (snap, metas)
     }
 
+    val dataFileSchema = ManifestSchema.getField("data_file").schema()
+    def bounds(field: String, v: Long): Option[java.util.List[GenericRecord]] = offsetFieldId.map { fid =>
+      val item = dataFileSchema.getField(field).schema().getTypes.get(1).getElementType
+      java.util.List.of(record(item, "key" -> fid, "value" -> ByteBuffer.wrap(longBound(v))))
+    }
+
     val snapshotNodes = snapMeta.map { case (snap, metas) =>
       val uuid = commitUuid(snap.version)
-      val entries = metas.map { m =>
-        val added = firstSeen(m.file) == snap.version
-        val bounds = offsetFieldId.map { fid =>
-          (Vector(Row(fid, longBound(m.minOffset))), Vector(Row(fid, longBound(m.maxOffset))))
-        }
-        Row(
-          if (added) 1 else 0, // status ADDED/EXISTING
-          java.lang.Long.valueOf(firstSeen(m.file)),
-          java.lang.Long.valueOf(firstSeen(m.file)),
-          java.lang.Long.valueOf(firstSeen(m.file)),
-          Row(
-            0, // content = data
-            Paths.get(absTableDir).resolve(m.file).toString,
-            "PARQUET",
-            Row(), // unpartitioned
-            m.rowCount,
-            Files.size(Paths.get(tableDir).resolve(m.file)),
-            bounds.map(_._1).orNull,
-            bounds.map(_._2).orNull))
+      val added = metas.map(m => firstSeen(m.file) == snap.version)
+      val entries = metas.zip(added).map { case (m, isAdded) =>
+        val addedIn = firstSeen(m.file)
+        record(ManifestSchema,
+          "status" -> (if (isAdded) 1 else 0), // ADDED/EXISTING
+          "snapshot_id" -> addedIn, "sequence_number" -> addedIn, "file_sequence_number" -> addedIn,
+          "data_file" -> record(dataFileSchema,
+            "content" -> 0, // data
+            "file_path" -> Paths.get(absTableDir).resolve(m.file).toString,
+            "file_format" -> "PARQUET",
+            "partition" -> record(dataFileSchema.getField("partition").schema()), // unpartitioned
+            "record_count" -> m.rowCount,
+            "file_size_in_bytes" -> Files.size(Paths.get(tableDir).resolve(m.file)),
+            "lower_bounds" -> bounds("lower_bounds", m.minOffset).orNull,
+            "upper_bounds" -> bounds("upper_bounds", m.maxOffset).orNull))
       }
       val manifestPath = metadataDir.resolve(s"$uuid-m0.avro")
       val schemaNode = schemaJsonNodes(schemaIdOf(snap.schema.getOrElse(currentStruct)))
-      writeAtomically(manifestPath, AvroOcf.write(ManifestSchemaJson, ManifestAdt, entries,
-        extraMeta = Map(
+      writeAtomically(manifestPath, avroFile(ManifestSchemaJson, ManifestSchema, entries,
+        meta = Map(
           "schema" -> mapper.writeValueAsString(schemaNode),
           "schema-id" -> schemaIdOf(snap.schema.getOrElse(currentStruct)).toString,
           "partition-spec" -> "[]",
@@ -354,21 +389,20 @@ final class IcebergExport(tableDir: String) {
           "format-version" -> "2",
           "content" -> "data")))
 
-      val nAdded = entries.count(_.getInt(0) == 1)
-      val nExisting = entries.size - nAdded
-      val rowsAdded = metas.zip(entries).filter(_._2.getInt(0) == 1).map(_._1.rowCount).sum
-      val rowsExisting = metas.map(_.rowCount).sum - rowsAdded
+      val nAdded = added.count(identity)
+      val rowsAdded = metas.zip(added).collect { case (m, true) => m.rowCount }.sum
       val minSeq = if (metas.isEmpty) snap.version else metas.map(m => firstSeen(m.file)).min
-      val listEntry = Row(
-        metadataDir.toAbsolutePath.resolve(s"$uuid-m0.avro").toString,
-        Files.size(manifestPath),
-        0, 0, // spec-id, content=data
-        snap.version, minSeq, snap.version,
-        nAdded, nExisting, 0,
-        rowsAdded, rowsExisting, 0L)
+      val listEntry = record(ManifestListSchema,
+        "manifest_path" -> metadataDir.toAbsolutePath.resolve(s"$uuid-m0.avro").toString,
+        "manifest_length" -> Files.size(manifestPath),
+        "partition_spec_id" -> 0, "content" -> 0, // data
+        "sequence_number" -> snap.version, "min_sequence_number" -> minSeq, "added_snapshot_id" -> snap.version,
+        "added_files_count" -> nAdded, "existing_files_count" -> (metas.size - nAdded), "deleted_files_count" -> 0,
+        "added_rows_count" -> rowsAdded, "existing_rows_count" -> (metas.map(_.rowCount).sum - rowsAdded),
+        "deleted_rows_count" -> 0L)
       val listPath = metadataDir.resolve(s"snap-${snap.version}-1-$uuid.avro")
-      writeAtomically(listPath, AvroOcf.write(ManifestListSchemaJson, ManifestListAdt,
-        Seq(listEntry), extraMeta = Map(
+      writeAtomically(listPath, avroFile(ManifestListSchemaJson, ManifestListSchema,
+        Seq(listEntry), meta = Map(
           "snapshot-id" -> snap.version.toString,
           "sequence-number" -> snap.version.toString,
           "format-version" -> "2")))
@@ -475,23 +509,10 @@ final class IcebergExport(tableDir: String) {
       .find(_.get("snapshot-id").asLong() == currentId)
       .getOrElse(throw new IllegalStateException(s"current-snapshot-id $currentId not in snapshots"))
 
-    val list = AvroOcf.read(Files.readAllBytes(Paths.get(snapNode.get("manifest-list").asText())))
-    val files = list.rows.flatMap { case r: Row =>
-      val manifest = AvroOcf.read(Files.readAllBytes(Paths.get(r.getString(0))))
-      manifest.rows.map { case e: Row =>
-        val df = e.getStruct(4)
-        def bound(i: Int): Option[Long] = Option(df.get(i)).map { xs =>
-          readLongBound(xs.asInstanceOf[Seq[Row]].head.getAs[Array[Byte]](1))
-        }
-        IcebergDataFile(
-          path = df.getString(1),
-          recordCount = df.getLong(4),
-          fileSizeBytes = df.getLong(5),
-          status = e.getInt(0),
-          addedSnapshotId = e.getLong(1),
-          lowerOffset = bound(6),
-          upperOffset = bound(7))
-      }
+    val list = readAvro(Paths.get(snapNode.get("manifest-list").asText()), ManifestListSchema)
+    val files = list.flatMap { m =>
+      readAvro(Paths.get(m.get("manifest_path").toString), ManifestSchema)
+        .map(dataFile(_, m.get("added_snapshot_id").asInstanceOf[Long]))
     }
     IcebergTableState(
       formatVersion = md.get("format-version").asInt(),

@@ -3,6 +3,8 @@ package graft.records
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.avro.file.{DataFileConstants, DataFileStream}
+import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.spark.sql.functions._
 import graft.testkit.SparkSpec
 import KafkaWireCodec._
@@ -83,6 +85,16 @@ class IcebergExportSpec extends SparkSpec {
     assert(md.get("table-uuid").asText() == new IcebergExport(dir).tableUuid)
   }
 
+  /** A stock reader over the Avro container file at `p`, with no reader
+    * schema: it sees only what the file itself carries. */
+  private def ocf(p: java.nio.file.Path): DataFileStream[GenericRecord] =
+    new DataFileStream[GenericRecord](new java.io.ByteArrayInputStream(Files.readAllBytes(p)),
+      new GenericDatumReader[GenericRecord]())
+
+  private def avroFiles(dir: String): Vector[java.nio.file.Path] =
+    scala.util.Using.resource(Files.list(Paths.get(dir, "metadata")))(
+      _.iterator().asScala.filter(_.getFileName.toString.endsWith(".avro")).toVector).sorted
+
   test("manifest-list and manifest avros are real OCFs with spec field-ids") {
     val (dir, _) = makeTable()
     mapper.readTree(Files.readString(new IcebergExport(dir).export()))
@@ -90,19 +102,20 @@ class IcebergExportSpec extends SparkSpec {
     val lists = scala.util.Using.resource(Files.list(metaDir))(
       _.iterator().asScala.filter(_.getFileName.toString.startsWith("snap-")).toVector)
 
-    val listOcf = AvroOcf.read(Files.readAllBytes(lists.head))
-    assert(Files.readAllBytes(lists.head).take(4).sameElements(AvroOcf.Magic))
-    val listSchema = mapper.readTree(listOcf.schemaJson)
+    val listOcf = ocf(lists.head)
+    assert(Files.readAllBytes(lists.head).take(4).sameElements(DataFileConstants.MAGIC))
+    val listSchema = mapper.readTree(listOcf.getMetaString("avro.schema"))
     val listIds = listSchema.get("fields").elements().asScala
       .map(f => f.get("name").asText() -> f.get("field-id").asInt()).toMap
     assert(listIds("manifest_path") == 500 && listIds("manifest_length") == 501)
     assert(listIds("content") == 517 && listIds("sequence_number") == 515)
-    assert(listOcf.metaString("format-version").contains("2"))
+    assert(listOcf.getMetaString("format-version") == "2")
 
-    val mrow = listOcf.rows.head.asInstanceOf[org.apache.spark.sql.Row]
-    val manifestOcf = AvroOcf.read(Files.readAllBytes(Paths.get(mrow.getString(0))))
-    assert(mrow.getLong(1) == Files.size(Paths.get(mrow.getString(0)))) // manifest_length
-    val entrySchema = mapper.readTree(manifestOcf.schemaJson)
+    val mrow = listOcf.next()
+    val manifestPath = Paths.get(mrow.get("manifest_path").toString)
+    val manifestOcf = ocf(manifestPath)
+    assert(mrow.get("manifest_length") == Files.size(manifestPath))
+    val entrySchema = mapper.readTree(manifestOcf.getMetaString("avro.schema"))
     val entryIds = entrySchema.get("fields").elements().asScala
       .map(f => f.get("name").asText() -> f.get("field-id").asInt()).toMap
     assert(entryIds("status") == 0 && entryIds("data_file") == 2)
@@ -115,7 +128,7 @@ class IcebergExportSpec extends SparkSpec {
     assert(dfIds("content") == 134 && dfIds("lower_bounds") == 125 && dfIds("upper_bounds") == 128)
     // manifests carry the required key metadata
     for (k <- Seq("schema", "partition-spec", "partition-spec-id", "format-version", "content"))
-      assert(manifestOcf.metaString(k).isDefined, s"manifest OCF missing '$k'")
+      assert(manifestOcf.getMetaString(k) != null, s"manifest OCF missing '$k'")
   }
 
   test("self-reader parity: snapshot, file list, counts, offset bounds, schema") {
@@ -186,33 +199,95 @@ class IcebergExportSpec extends SparkSpec {
     assert(state.currentSnapshotId == table.snapshots().last.version)
   }
 
-  test("AvroOcf: write/read round-trip with only the embedded schema") {
-    import AvroLite._
-    val schema = ARecord("t", Vector(
-      AField("a", ALong), AField("b", AUnionNullable(AString)),
-      AField("c", AArray(AInt)), AField("d", AMap(ALong))))
-    val json =
-      """{"type":"record","name":"t","fields":[
-        |{"name":"a","type":"long"},{"name":"b","type":["null","string"]},
-        |{"name":"c","type":{"type":"array","items":"int"}},
-        |{"name":"d","type":{"type":"map","values":"long"}}]}""".stripMargin.replace("\n", "")
-    val rows = Seq(
-      org.apache.spark.sql.Row(1L, "x", Vector(1, 2, 3), Map("k" -> 9L)),
-      org.apache.spark.sql.Row(-5L, null, Vector.empty[Int], Map.empty[String, Long]))
-    val bytes = AvroOcf.write(json, schema, rows, Map("who" -> "spec"))
-    val back = AvroOcf.read(bytes)
-    assert(back.metaString("who").contains("spec"))
-    assert(back.rows.size == 2)
-    val r0 = back.rows.head.asInstanceOf[org.apache.spark.sql.Row]
-    assert(r0.getLong(0) == 1L && r0.getString(1) == "x")
-    assert(r0.get(2) == Vector(1, 2, 3) && r0.get(3) == Map("k" -> 9L))
-    val r1 = back.rows(1).asInstanceOf[org.apache.spark.sql.Row]
-    assert(r1.getLong(0) == -5L && r1.get(1) == null)
-    // deterministic: same inputs, same bytes (golden-file property)
-    assert(java.util.Arrays.equals(bytes, AvroOcf.write(json, schema, rows, Map("who" -> "spec"))))
-    // corrupted sync marker is detected
-    val bad = bytes.clone(); bad(bytes.length - 1) = (bad(bytes.length - 1) ^ 0x1).toByte
-    intercept[IllegalArgumentException](AvroOcf.read(bad))
+  test("re-export writes byte-identical manifest files that read back as written") {
+    val (dir, _) = makeTable()
+    val exp = new IcebergExport(dir)
+    exp.export()
+    val first = avroFiles(dir).map(p => p -> Files.readAllBytes(p))
+    assert(first.size == 6)
+    exp.export()
+    // deterministic: the same table state gives the same bytes (golden-file property)
+    assert(avroFiles(dir) == first.map(_._1))
+    first.foreach { case (p, bytes) => assert(java.util.Arrays.equals(Files.readAllBytes(p), bytes), p) }
+    // read with the expected schema, each file gives what a stock reader gets from its own
+    first.map(_._1).foreach { p =>
+      val schema = if (p.getFileName.toString.startsWith("snap-")) IcebergMetadata.ManifestListSchema
+        else IcebergMetadata.ManifestSchema
+      val stock = scala.util.Using.resource(ocf(p))(_.iterator().asScala.toVector)
+      assert(IcebergMetadata.readAvro(p, schema) == stock, p)
+    }
+  }
+
+  test("manifest files written by earlier builds' encoder decode to the same values") {
+    // Written by the in-repo Avro container codec this reader replaced
+    // (FIXTURES.md F9): the back-compat guarantee for exported tables.
+    import IcebergMetadata.{ManifestListSchema, ManifestSchema, dataFile, readAvro}
+    def fixture(name: String) = Paths.get(getClass.getResource(s"iceberg-fixture/$name").toURI)
+    def plain(v: Any): Any = v match {
+      case u: org.apache.avro.util.Utf8 => u.toString
+      case x => x
+    }
+    val list = readAvro(fixture("snap-7-1-fixture.avro"), ManifestListSchema)
+    assert(list.size == 1)
+    val want = Map[String, Any]("manifest_path" -> "/warehouse/events/metadata/fixture-m0.avro",
+      "manifest_length" -> 4242L, "partition_spec_id" -> 0, "content" -> 0, "sequence_number" -> 7L,
+      "min_sequence_number" -> 5L, "added_snapshot_id" -> 7L, "added_files_count" -> 1,
+      "existing_files_count" -> 2, "deleted_files_count" -> 0, "added_rows_count" -> 20L,
+      "existing_rows_count" -> 27L, "deleted_rows_count" -> 0L)
+    assert(ManifestListSchema.getFields.asScala.map(_.name).toSet == want.keySet)
+    want.foreach { case (k, v) => assert(plain(list.head.get(k)) == v, k) }
+
+    val entries = readAvro(fixture("fixture-m0.avro"), ManifestSchema)
+    for (f <- Seq("snapshot_id", "sequence_number", "file_sequence_number"))
+      assert(entries.map(e => Option(e.get(f))) == Seq(Some(7L), None, Some(5L)), f)
+    entries.foreach { e =>
+      val df = e.get("data_file").asInstanceOf[GenericRecord]
+      assert(df.get("content") == 0 && plain(df.get("file_format")) == "PARQUET")
+      assert(df.get("partition").asInstanceOf[GenericRecord].getSchema.getFields.isEmpty)
+      Option(df.get("lower_bounds")).foreach { b =>
+        assert(b.asInstanceOf[java.util.List[GenericRecord]].asScala.map(_.get("key")) == Seq(3))
+      }
+    }
+    // a null snapshot_id is inherited from the manifest list's added_snapshot_id
+    assert(entries.map(dataFile(_, 7L)) == Vector(
+      IcebergDataFile("/warehouse/events/data/seg-040.parquet", 20L, 3150L, 1, 7L, Some(40L), Some(59L)),
+      IcebergDataFile("/warehouse/events/data/seg-000.parquet", 15L, 2900L, 0, 7L, Some(0L), Some(14L)),
+      IcebergDataFile("/warehouse/events/data/seg-020.parquet", 12L, 2710L, 0, 5L, None, None)))
+  }
+
+  test("malformed manifest files fail fast with IllegalArgumentException naming the file") {
+    val (dir, _) = makeTable()
+    new IcebergExport(dir).export()
+    val list = avroFiles(dir).filter(_.getFileName.toString.startsWith("snap-")).head
+    val badLength = {
+      val out = new java.io.ByteArrayOutputStream()
+      out.write(DataFileConstants.MAGIC, 0, 4)
+      Varint.writeVarlong(1L, out) // one metadata entry,
+      Varint.writeVarlong(-3L, out) // whose key is -3 bytes long
+      out.write(Array.fill[Byte](8)(0), 0, 8)
+      out.toByteArray
+    }
+    val hugeCount = {
+      val header = IcebergMetadata.avroFile("\"null\"",
+        org.apache.avro.Schema.create(org.apache.avro.Schema.Type.NULL), Seq.empty, Map.empty)
+      val out = new java.io.ByteArrayOutputStream()
+      out.write(header, 0, header.length)
+      Varint.writeVarlong(1L << 40, out); Varint.writeVarlong(0L, out) // 2^40 rows in 0 bytes
+      out.write(header, header.length - 16, 16) // the sync marker
+      out.toByteArray
+    }
+    val badSync = {
+      val bytes = Files.readAllBytes(list)
+      bytes(bytes.length - 1) = (bytes(bytes.length - 1) ^ 0x1).toByte
+      bytes
+    }
+    Seq("bad-length" -> badLength, "huge-count" -> hugeCount, "bad-sync" -> badSync).foreach { case (name, bytes) =>
+      val p = Files.write(Paths.get(dir, s"$name.avro"), bytes)
+      val t0 = System.nanoTime()
+      val e = intercept[IllegalArgumentException](IcebergMetadata.readAvro(p, IcebergMetadata.ManifestListSchema))
+      assert(e.getMessage.contains(p.toString), e.getMessage)
+      assert(System.nanoTime() - t0 < 5000000000L, s"$name: a corrupt file must fail at once")
+    }
   }
 
   test("STOCK Apache Avro reads the manifest list and manifest (true interop)") {

@@ -191,6 +191,45 @@ class TypedDecodeSpec extends SparkSpec {
     }
   }
 
+  test("unions decode stock Avro bytes whichever branch is null, in every decoder") {
+    // Apache Avro's own writer makes the bytes, so the branch index on the
+    // wire is the schema's, not AvroLite's
+    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    import org.apache.avro.io.EncoderFactory
+    val reg = SchemaRegistry(Files.createTempDirectory("typed-decode-union").toString)
+    val unions = Seq(21 -> """["null","long"]""", 22 -> """["long","null"]""")
+    def schemaJson(union: String) =
+      s"""{"type":"record","name":"u","fields":[{"name":"x","type":$union},{"name":"y","type":"string"}]}"""
+    unions.foreach { case (id, u) => reg.register(id, schemaJson(u)) }
+    def stock(id: Int, union: String, x: java.lang.Long): Array[Byte] = {
+      val schema = new org.apache.avro.Schema.Parser().parse(schemaJson(union))
+      val rec = new GenericData.Record(schema)
+      rec.put("x", x); rec.put("y", "hello")
+      val out = new java.io.ByteArrayOutputStream()
+      out.write(0); out.write(java.nio.ByteBuffer.allocate(4).putInt(id).array())
+      val enc = EncoderFactory.get().binaryEncoder(out, null)
+      new GenericDatumWriter[GenericRecord](schema).write(rec, enc)
+      enc.flush()
+      out.toByteArray
+    }
+    for ((id, u) <- unions; x <- Seq[java.lang.Long](5L, null)) {
+      val p = stock(id, u, x)
+      val want = Row(x, "hello")
+      assert(reg.decode(p) == Some((id, want)), s"$u x=$x: decode")
+      assert(reg.encode(id, want).sameElements(p), s"$u x=$x: encode")
+      val body = () => java.nio.ByteBuffer.wrap(p, 5, p.length - 5).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      val full = AvroLite.catalystReader(reg.lookup(id).get)(body())
+        .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+      assert(full.isNullAt(0) == (x == null) && (x == null || full.getLong(0) == 5L), s"$u x=$x: catalystReader")
+      assert(full.getUTF8String(1).toString == "hello", s"$u x=$x: catalystReader")
+      val skipped = AvroLite.catalystReader(reg.lookup(id).get, Some(Seq(1)))(body())
+        .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+      assert(skipped.getUTF8String(0).toString == "hello", s"$u x=$x: skip")
+      val typed = TypedDecode.withDecoded(raw(Seq(p)), reg, id).select("value.x", "value.y").collect()
+      assert(typed.toSeq == Seq(want), s"$u x=$x: withDecoded")
+    }
+  }
+
   test("the rule leaves a plan without the decode untouched") {
     val df = spark.range(10).select((col("id") * 2).as("x")).groupBy("x").count()
     val plan = df.queryExecution.optimizedPlan
