@@ -347,6 +347,4 @@ object KafkaWireCodec {
       (records.size - 1).max(0), baseTimestamp, maxTs, producerId, producerEpoch,
       baseSequence, recs, 0)
   }
-
-  def gzip(b: Array[Byte]): Array[Byte] = BatchCompression.compress(CodecGzip, b)
 }

@@ -291,16 +291,14 @@ class KafkaWireCodecSpec extends AnyFunSuite {
   test("LZ4 frame decodes multi-block frames with stored blocks in place, every check intact") {
     import net.jpountz.lz4.LZ4FrameOutputStream
     import LZ4FrameOutputStream.{BLOCKSIZE, FLG}
-    val noise = new Array[Byte](140 * 1024); new java.util.Random(3).nextBytes(noise)
-    // compressible, incompressible (stored) and compressible 64 KiB blocks
-    val data = ("block one " * 15000).getBytes("UTF-8") ++ noise ++ ("block three " * 9000).getBytes("UTF-8")
+    val data = MixedLz4Body
     def decodeAt(frame: Array[Byte]): Array[Byte] = {
       // the frame sits inside a larger array, as a batch payload does
       val padded = Array.fill[Byte](5)(9) ++ frame ++ Array.fill[Byte](3)(9)
-      val b = Lz4Frame.decompress(padded, 5, frame.length, BatchCompression.maxDecompressed(frame.length))
+      val b = BatchCompression.decompressed(CodecLz4, padded, 5, frame.length)
       java.util.Arrays.copyOfRange(b.array(), b.position(), b.limit())
     }
-    val ours = Lz4Frame.compress(data)
+    val ours = BatchCompression.compress(CodecLz4, data)
     val sizeWords = {
       val b = ByteBuffer.wrap(ours).order(java.nio.ByteOrder.LITTLE_ENDIAN)
       b.position(7)
@@ -326,31 +324,70 @@ class KafkaWireCodecSpec extends AnyFunSuite {
     // a flipped content checksum fails after the decode
     val badContent = foreign.clone()
     badContent(foreign.length - 1) = (badContent(foreign.length - 1) ^ 0x01).toByte
-    assert(intercept[IllegalArgumentException](decodeAt(badContent)).getMessage.contains("content checksum"))
-    // a declared content size one byte short of the blocks' total fails:
-    // patch the size field (bytes 6-13) and re-seal the header checksum
-    val patched = foreign.clone()
-    ByteBuffer.wrap(patched).order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(6, data.length - 1L)
-    val xx = net.jpountz.xxhash.XXHashFactory.fastestInstance().hash32()
-    patched(14) = ((xx.hash(patched, 4, 10, 0) >> 8) & 0xFF).toByte
-    assert(intercept[IllegalArgumentException](decodeAt(patched)).getMessage.contains("content size mismatch"))
+    assert(intercept[IllegalArgumentException](decodeAt(badContent)).getMessage.contains("Content checksum mismatch"))
+    // a declared content size one byte short of the blocks' total fails
+    val patched = withDeclaredSize(foreign, data.length - 1L)
+    assert(intercept[IllegalArgumentException](decodeAt(patched)).getMessage.contains("Size check mismatch"))
   }
 
-  test("LZ4 bomb cap: a declared size past the cap fails up front, a decode past it fails mid-frame") {
-    val zeros = new Array[Byte](1 << 20)
-    val frame = Lz4Frame.compress(zeros) // 16 blocks of 64 KiB
-    assert(Lz4Frame.decompress(frame, 0, frame.length, 1L << 20).remaining() == (1 << 20))
-    val e = intercept[IllegalArgumentException](Lz4Frame.decompress(frame, 0, frame.length, 256L * 1024))
-    assert(e.getMessage.contains("exceeds 262144 bytes") && e.getMessage.contains("bomb"))
+  /** Compressible, incompressible (stored) and compressible 64 KiB blocks:
+    * seven blocks of an LZ4 frame. */
+  private lazy val MixedLz4Body: Array[Byte] = {
+    val noise = new Array[Byte](140 * 1024); new java.util.Random(3).nextBytes(noise)
+    ("block one " * 15000).getBytes("UTF-8") ++ noise ++ ("block three " * 9000).getBytes("UTF-8")
+  }
+
+  /** `frame` (which carries a content size field) declaring `size` bytes:
+    * the size field (bytes 6-13) patched and the header checksum re-sealed. */
+  private def withDeclaredSize(frame: Array[Byte], size: Long): Array[Byte] = {
+    val patched = frame.clone()
+    ByteBuffer.wrap(patched).order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(6, size)
+    val xx = net.jpountz.xxhash.XXHashFactory.fastestInstance().hash32()
+    patched(14) = ((xx.hash(patched, 4, 10, 0) >> 8) & 0xFF).toByte
+    patched
+  }
+
+  test("LZ4 bomb cap: a frame declaring 2^40 bytes fails fast, allocating nothing from the declared size") {
     import net.jpountz.lz4.LZ4FrameOutputStream
+    val zeros = new Array[Byte](1 << 20)
     val bos = new java.io.ByteArrayOutputStream()
     val fout = new LZ4FrameOutputStream(bos, LZ4FrameOutputStream.BLOCKSIZE.SIZE_64KB, zeros.length.toLong,
       LZ4FrameOutputStream.FLG.Bits.BLOCK_INDEPENDENCE, LZ4FrameOutputStream.FLG.Bits.CONTENT_SIZE)
     fout.write(zeros); fout.close()
     val declared = bos.toByteArray
-    val d = intercept[IllegalArgumentException](Lz4Frame.decompress(declared, 0, declared.length, 1L << 19))
-    assert(d.getMessage.contains("declares 1048576 bytes"))
-    assert(Lz4Frame.decompress(declared, 0, declared.length, 1L << 20).remaining() == (1 << 20))
+    assert(BatchCompression.decompress(CodecLz4, declared).length == (1 << 20))
+    val bomb = withDeclaredSize(declared, 1L << 40)
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalArgumentException](BatchCompression.decompress(CodecLz4, bomb))
+    assert(e.getMessage.contains("Size check mismatch"), e.getMessage)
+    assert(System.nanoTime() - t0 < 10L * 1000 * 1000 * 1000, "a declared 1 TiB must not be allocated or waited for")
+  }
+
+  test("LZ4 frames written by earlier builds: the writer reproduces them and the reader decodes them") {
+    // FIXTURES.md F10: frames from the hand-rolled LZ4 frame writer that
+    // lz4-java's frame streams replaced
+    val bodies = Seq(
+      "empty" -> Array.emptyByteArray,
+      "one-byte" -> Array[Byte](42),
+      "64k" -> Array.tabulate(64 * 1024)(i => (i % 251).toByte),
+      "mixed" -> MixedLz4Body)
+    bodies.foreach { case (name, body) =>
+      val frame = java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(getClass.getResource(s"lz4-frame/$name.lz4").toURI))
+      assert(java.util.Arrays.equals(BatchCompression.compress(CodecLz4, body), frame), s"$name: writer bytes")
+      assert(java.util.Arrays.equals(BatchCompression.decompress(CodecLz4, frame), body), s"$name: reader")
+    }
+  }
+
+  test("a truncated payload fails with IllegalArgumentException naming its codec, for every compressed codec") {
+    val body = (0 until 2000).flatMap(i => s"record $i value ${i * 7919 % 1000}|".getBytes("UTF-8")).toArray
+    AllCodecs.filter(_._1 != CodecNone).foreach { case (codec, name) =>
+      val payload = BatchCompression.compress(codec, body)
+      val cut = java.util.Arrays.copyOfRange(payload, 0, payload.length / 2)
+      val e = intercept[IllegalArgumentException](BatchCompression.decompress(codec, cut))
+      assert(e.getMessage.contains(name), s"$name: ${e.getMessage}")
+      assert(e.getCause.isInstanceOf[java.io.IOException], name)
+    }
   }
 
   test("codec payload round trip law: random bodies, all codecs") {
@@ -431,13 +468,13 @@ class KafkaWireCodecSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       BatchCompression.decompress(BatchCompression.Zstd, payload))
     assert(e.getMessage.contains("bomb"))
-    // an LZ4 frame DECLARING a bomb-sized content fails before decoding
-    val lz4 = Lz4Frame.compress(new Array[Byte](1024))
-    // patch FLG to claim a content size: simpler to assert the block-loop
-    // cap instead — legit frames under the floor still round-trip
+    // an LZ4 block expands at most ~255:1, so an LZ4 frame claims a bomb
+    // only through its declared content size ("LZ4 bomb cap"); legit
+    // frames under the floor round-trip
+    val lz4 = BatchCompression.compress(BatchCompression.Lz4, new Array[Byte](1024))
     assert(BatchCompression.decompress(BatchCompression.Lz4,
       BatchCompression.compress(BatchCompression.Lz4, new Array[Byte](1 << 20))).length == (1 << 20))
-    assert(lz4.nonEmpty)
+    assert(BatchCompression.decompress(BatchCompression.Lz4, lz4).sameElements(new Array[Byte](1024)))
     // legit sizes stay unconstrained: 4 MiB of zeros round-trips every codec
     val legit = new Array[Byte](4 << 20)
     for (c <- Seq(BatchCompression.Gzip, BatchCompression.Snappy, BatchCompression.Lz4, BatchCompression.Zstd))
