@@ -3,7 +3,14 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Distributed connected components over an edge list — the
+/** Connected components over an edge list, and the one owner of the
+  * driver/distributed crossover that every CC consumer goes through: the
+  * batch d07 family (`TextQueries.clusterLabels`: d07, t14, p01, p03) and
+  * the streaming funnel ([[graft.streaming.EventStreams.curationFunnel]]).
+  *
+  * [[components]] collects the edges and union-finds on the driver while
+  * they fit ([[MaxDriverEdges]]; LSH candidate sets are orders of magnitude
+  * smaller than the corpus), and past that runs [[labels]], the
   * large-star/small-star algorithm (Kiveris et al., "Connected Components
   * in MapReduce and Beyond"): alternating rounds of
   *
@@ -12,39 +19,52 @@ import org.apache.spark.sql.functions._
   *   small-star: attach u and its smaller neighbors to that minimum;
   *
   * converging (in rounds logarithmic in component diameter) to star graphs
-  * rooted at each component's minimum node id.
-  *
-  * This is the scale path behind [[graft.queries.TextQueries.d07DedupClusters]]:
-  * d07 collects the (small) LSH candidate edge set and union-finds on the
-  * driver, which is optimal while edges fit there; when they don't, this
-  * operator runs the SAME computation as alternating self-joins with no
-  * driver materialization. Both produce identical (node, min-id) labels —
-  * asserted against each other in ConnectedComponentsSpec.
+  * rooted at each component's minimum node id, with no driver
+  * materialization. Both branches label every node with its component's
+  * minimum id — asserted against each other in ConnectedComponentsSpec.
   */
 object ConnectedComponents {
 
-  /** Session conf overriding the driver/distributed crossover threshold
-    * (same key the d07 batch family reads — one knob for every CC
-    * consumer). Unset → the caller's threshold. */
+  /** Edge count above which [[components]] stops collecting to the driver
+    * and runs the distributed [[labels]] instead (~5M pairs ≈ 80 MB of
+    * longs — comfortably under driver limits, far above any real LSH
+    * candidate set at these SFs). */
+  val MaxDriverEdges = 5000000L
+
+  /** Session conf overriding [[MaxDriverEdges]] — `0` forces the
+    * distributed branch at any scale (CcGate's replica-scale gate, the
+    * specs). Unset → [[MaxDriverEdges]]. */
   val MaxDriverEdgesKey = "spark.graft.cc.maxDriverEdges"
 
-  /** Crossover wrapper: union-find on the driver while the edge set fits
-    * ([[maxDriverEdges]], overridable via [[MaxDriverEdgesKey]] — optimal
-    * at small candidate counts, one linear pass), self-actuating to the
-    * distributed [[labels]] beyond it (CCGATE.json proves the two
-    * multiset-identical at 10x/100x replica scale). Returns (node, rep)
-    * for every node appearing in `edges` — identical contract to
-    * [[labels]]. The driver path materializes only edge NODES, never any
-    * corpus-sized relation. */
-  def labelsAuto(s: SparkSession, edges: DataFrame, maxDriverEdges: Long): DataFrame = {
+  /** The crossover. `edges`: two integral columns (x, y), undirected.
+    * While the edge count is within the threshold, returns `Left` of the
+    * driver union-find's node → min-node-id map over every node in
+    * `edges` (one linear pass; only edge NODES are materialized, never a
+    * corpus-sized relation). Past it, returns `Right` of [[labels]]
+    * (node, rep) — CCGATE.json shows the two multiset-identical at
+    * 10x/100x replica scale. */
+  def components(s: SparkSession, edges: DataFrame): Either[Map[Long, Long], DataFrame] = {
     import s.implicits._
-    val eff = s.conf.get(MaxDriverEdgesKey, "") match {
-      case ""  => maxDriverEdges
-      case v   => v.toLong
+    val threshold = s.conf.get(MaxDriverEdgesKey, "") match {
+      case "" => MaxDriverEdges
+      case v  => v.toLong
     }
     val pairs = edges.selectExpr("CAST(x AS BIGINT) AS x", "CAST(y AS BIGINT) AS y")
-    if (pairs.count() > eff) return labels(pairs)
-    val es = pairs.as[(Long, Long)].collect()
+    if (pairs.count() > threshold) Right(labels(pairs))
+    else Left(unionFind(pairs.as[(Long, Long)].collect()))
+  }
+
+  /** [[components]] as a (node, rep) DataFrame over every node in `edges`
+    * — the contract of [[labels]] on either branch. */
+  def labelsAuto(s: SparkSession, edges: DataFrame): DataFrame = {
+    import s.implicits._
+    components(s, edges) match {
+      case Left(rep)   => rep.toSeq.toDF("node", "rep")
+      case Right(lbls) => lbls
+    }
+  }
+
+  private def unionFind(edges: Array[(Long, Long)]): Map[Long, Long] = {
     val parent = new scala.collection.mutable.HashMap[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -53,14 +73,14 @@ object ConnectedComponents {
       while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    es.foreach { case (a, b) =>
+    edges.foreach { case (a, b) =>
       parent.getOrElseUpdate(a, a)
       parent.getOrElseUpdate(b, b)
       val (ra, rb) = (find(a), find(b))
       // min-id root keeps "rep = min node id in component" exact
       if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-    parent.keys.toSeq.map(k => (k, find(k))).toDF("node", "rep")
+    parent.keys.map(k => k -> find(k)).toMap
   }
 
   /** `edges`: two integral columns (x, y), undirected, self-loops ignored.

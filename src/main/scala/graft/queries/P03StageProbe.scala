@@ -52,10 +52,7 @@ object P03StageProbe {
     val tok = stage("tok") { normToks(spark, dir) }
     val sig = stage("sig") { d02From(spark, tok) }
     val pairs = stage("pairs") { d03From(sig) }
-    val keepers = stage("cluster") {
-      clusterLabels(spark, pairs, tok.select(col("doc_id")), MaxDriverEdges)
-        .filter(col("doc_id") === col("cluster_rep")).select("doc_id")
-    }
+    val keepers = stage("cluster") { clusterKeepers(spark, pairs, tok.select(col("doc_id"))) }
     val s2 = stage("lang") {
       t03From(tok).filter(col("pred_lang") === col("lang")).select("doc_id")
     }

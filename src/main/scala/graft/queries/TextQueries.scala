@@ -515,7 +515,7 @@ object TextQueries {
     * over the full-signature template pairs — and a pipeline that runs
     * several graph cuts derives that graph ONCE per session, not once per
     * query (the shared derivation measured 16–22 s of each g-query's cost
-    * at the 100× replica; G01Profile attribution). Entries are the exact
+    * at the 100× replica, r11 per-phase timing). Entries are the exact
     * `localCheckpoint`ed relations the queries previously built inline, so
     * results are bit-identical — only the repeated signature scan + band
     * join disappears. Keyed by (session, normalized dir, kind); the
@@ -936,79 +936,43 @@ object TextQueries {
   /** d07: dedup CLUSTERS — connected components over the MinHash-LSH
     * candidate graph (d03), each document labeled with the minimum doc_id
     * of its component (the keeper). This is the final step of corpus
-    * dedup at scale: iterative min-label propagation, each round a
-    * broadcast-free equi-join + min-aggregate, converging in
-    * graph-diameter rounds (near-dup components are dense, so diameter is
-    * tiny). Singleton documents are their own cluster. Deterministic:
-    * min() is order-free. */
-  /** Edge count above which d07 stops collecting to the driver and runs
-    * the distributed large-star/small-star instead (~5M pairs ≈ 80 MB of
-    * longs — comfortably under driver limits, far above any real LSH
-    * candidate set at these SFs). */
-  val MaxDriverEdges = 5000000L
-
+    * dedup at scale; [[clusterLabels]] runs it through the one
+    * [[graft.operators.ConnectedComponents]] crossover. Singleton
+    * documents are their own cluster. Deterministic: both branches label
+    * with the component minimum. */
   def d07DedupClusters(s: SparkSession, d: String): DataFrame =
-    d07DedupClusters(s, d, MaxDriverEdges)
-
-  def d07DedupClusters(s: SparkSession, d: String, maxDriverEdges: Long): DataFrame =
     clusterLabels(s, d03MinHashPairs(s, d).localCheckpoint(true),
-      documents(s, d).select(col("doc_id")), maxDriverEdges)
+      documents(s, d).select(col("doc_id")))
 
-  /** Session override for the d07-family driver/distributed crossover —
-    * lets a gate run force the [[graft.operators.ConnectedComponents]]
-    * path at any scale (r8, VERDICT r7 task 5: the distributed operator
-    * must be exercised and label-equivalence-checked at replica scale,
-    * not only at toy sizes). Unset → the caller's threshold. */
-  val CcMaxDriverEdgesKey = "spark.graft.cc.maxDriverEdges"
-
-  private[queries] def clusterLabels(
-      s: SparkSession, pairs: DataFrame, docIds: DataFrame, maxDriverEdges: Long): DataFrame = {
+  /** (doc_id, cluster_rep) for every doc in `docIds`, given the candidate
+    * `pairs` (a, b). The candidate EDGE set after LSH banding is orders of
+    * magnitude smaller than the corpus (only near-dup pairs survive), so
+    * [[graft.operators.ConnectedComponents.components]] usually answers
+    * with a driver map: it is broadcast back and applied per-partition, so
+    * singleton docs (the overwhelming majority) never leave their
+    * partition. Past the crossover the distributed labels are left-joined
+    * instead. The corpus itself is never shuffled either way. */
+  private[queries] def clusterLabels(s: SparkSession, pairs: DataFrame, docIds: DataFrame): DataFrame = {
     import s.implicits._
-    val effMaxDriverEdges = s.conf.get(CcMaxDriverEdgesKey, "") match {
-      case "" => maxDriverEdges
-      case v  => v.toLong
+    graft.operators.ConnectedComponents.components(s, pairs.toDF("x", "y")) match {
+      case Left(rep) =>
+        val bc = s.sparkContext.broadcast(rep)
+        docIds.select(col("doc_id")).as[Long]
+          .mapPartitions { ids =>
+            val m = bc.value
+            ids.map(id => (id, m.getOrElse(id, id)))
+          }
+          .toDF("doc_id", "cluster_rep")
+      case Right(labels) =>
+        docIds
+          .join(labels, col("doc_id") === col("node"), "left")
+          .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("cluster_rep"))
     }
-    // The candidate EDGE set after LSH banding is orders of magnitude
-    // smaller than the corpus (only near-dup pairs survive), so connected
-    // components reduce to union-find over the collected edges — one linear
-    // pass, no iterative joins. The component→keeper map (near-dup docs
-    // only) is broadcast back and applied per-partition; singleton docs
-    // (the overwhelming majority) never leave their partition. The guard is
-    // SELF-ACTUATING: past [[MaxDriverEdges]] the same edge table routes
-    // through the distributed large-star/small-star operator
-    // ([[graft.operators.ConnectedComponents]], label-equivalent by spec) —
-    // the corpus itself is never shuffled either way.
-    if (pairs.count() > effMaxDriverEdges) {
-      val labels = graft.operators.ConnectedComponents.labels(pairs.toDF("x", "y"))
-      return docIds
-        .join(labels, col("doc_id") === col("node"), "left")
-        .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("cluster_rep"))
-    }
-    val edges = pairs.as[(Long, Long)].collect()
-    val parent = new scala.collection.mutable.HashMap[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    edges.foreach { case (a, b) =>
-      parent.getOrElseUpdate(a, a)
-      parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      // min-id root keeps "cluster_rep = min doc_id in component" exact
-      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-    }
-    val rep = parent.keys.map(k => k -> find(k)).toMap
-    val bc = s.sparkContext.broadcast(rep)
-    docIds.select(col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        val m = bc.value
-        ids.map(id => (id, m.getOrElse(id, id)))
-      }
-      .toDF("doc_id", "cluster_rep")
   }
+
+  /** The dedup keepers (doc_id): each cluster's rep, singletons included. */
+  private[queries] def clusterKeepers(s: SparkSession, pairs: DataFrame, docIds: DataFrame): DataFrame =
+    clusterLabels(s, pairs, docIds).filter(col("doc_id") === col("cluster_rep")).select("doc_id")
 
   /** Decontamination gram size — 3 on the synthetic corpus (short docs over
     * a tiny vocabulary); production decontamination uses 13-gram overlap. */
@@ -1675,8 +1639,7 @@ object TextQueries {
     // so each leg (and the composition) still matches its oracle exactly.
     val tok = normToks(s, d).localCheckpoint(true)
     val pairs = d03From(d02From(s, tok)).localCheckpoint(true)
-    val keepers = clusterLabels(s, pairs, tok.select(col("doc_id")), MaxDriverEdges)
-      .filter(col("doc_id") === col("cluster_rep")).select("doc_id")
+    val keepers = clusterKeepers(s, pairs, tok.select(col("doc_id")))
     val quality = t02From(tok).select("doc_id", "n_tokens", "ttr")
     val lang = t03From(tok)
       .filter(col("pred_lang") === col("lang")).select("doc_id", "lang")
@@ -1704,8 +1667,7 @@ object TextQueries {
   def p03CurationFunnel(s: SparkSession, d: String): DataFrame = {
     val tok = normToks(s, d).localCheckpoint(true)
     val pairs = d03From(d02From(s, tok)).localCheckpoint(true)
-    val keepers = clusterLabels(s, pairs, tok.select(col("doc_id")), MaxDriverEdges)
-      .filter(col("doc_id") === col("cluster_rep")).select("doc_id")
+    val keepers = clusterKeepers(s, pairs, tok.select(col("doc_id")))
     val quality = t02From(tok).select("doc_id", "n_tokens", "n_distinct", "ttr")
     // each stage is materialized once (r12): the five union branches below
     // are evaluated independently, so an un-checkpointed s2 would re-run

@@ -821,10 +821,11 @@ object EventStreams {
     *     any prefix;
     *  4. new edges + the previous trigger's STAR edges (each colliding
     *     doc → its component min) run through
-    *     [[graft.operators.ConnectedComponents.labelsAuto]] — the SAME
-    *     driver/distributed crossover the batch d07 family uses
-    *     (`spark.graft.cc.maxDriverEdges`), so at scale the merge is the
-    *     proven large-star/small-star operator, never a single task;
+    *     [[graft.operators.ConnectedComponents.labelsAuto]], an adapter
+    *     over the one crossover (`ConnectedComponents.components`) that the
+    *     batch d07 family's `clusterLabels` also calls, so at scale the
+    *     merge is the proven large-star/small-star operator, never a
+    *     single task;
     *  5. dedup = quality total − demoted, where demoted = quality
     *     COLLIDING docs whose component min is another doc (a later
     *     arrival can merge two clusters and retroactively demote an
@@ -925,8 +926,7 @@ object EventStreams {
     val ccIn = prevStars.filter(col("node") =!= col("rep"))
       .select(col("node").as("x"), col("rep").as("y"))
       .unionByName(edges.select(col("doc_id").as("x"), col("anchor_id").as("y")))
-    val newStars = graft.operators.ConnectedComponents
-      .labelsAuto(spark, ccIn, graft.queries.TextQueries.MaxDriverEdges)
+    val newStars = graft.operators.ConnectedComponents.labelsAuto(spark, ccIn)
       .localCheckpoint(true)
 
     // demoted = quality colliding docs whose component min is another doc

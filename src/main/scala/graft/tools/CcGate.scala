@@ -34,7 +34,7 @@ object CcGate {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val ccKey = graft.queries.TextQueries.CcMaxDriverEdgesKey
+    val ccKey = graft.operators.ConnectedComponents.MaxDriverEdgesKey
 
     def timedMaterialize(df: => DataFrame): (Double, DataFrame) = {
       val t0 = System.nanoTime()

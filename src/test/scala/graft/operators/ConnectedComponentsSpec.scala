@@ -79,11 +79,18 @@ class ConnectedComponentsSpec extends SparkSpec {
 
   test("d07's self-actuating fallback route produces identical labels") {
     val d = "/root/testdata/sf0.001"
-    val viaDriver = graft.queries.TextQueries.d07DedupClusters(spark, d).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // maxDriverEdges = 0 forces the distributed large-star/small-star route
-    val viaDistributed = graft.queries.TextQueries.d07DedupClusters(spark, d, maxDriverEdges = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaDistributed == viaDriver)
+    // d07 and two of its consumers: t14 (the broadcast-map plan) and p03
+    // (the keeper filter feeding the funnel counts)
+    Seq("d07_dedup_clusters", "t14_split_assign", "p03_curation_funnel").foreach { name =>
+      val q = graft.SparkEntry.queries(name)
+      val viaDriver = q(spark, d).collect().map(_.toString).sorted.toSeq
+      // the session hook at 0 forces the distributed large-star/small-star route
+      spark.conf.set(ConnectedComponents.MaxDriverEdgesKey, "0")
+      val viaDistributed =
+        try q(spark, d).collect().map(_.toString).sorted.toSeq
+        finally spark.conf.unset(ConnectedComponents.MaxDriverEdgesKey)
+      assert(viaDriver.nonEmpty, name)
+      assert(viaDistributed == viaDriver, s"$name: distributed route diverged from the driver route")
+    }
   }
 }

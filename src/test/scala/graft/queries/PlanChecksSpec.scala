@@ -491,6 +491,15 @@ class PlanChecksSpec extends SparkSpec {
     }
   }
 
+  test("d03: the band self-join plans as a broadcast hash join") {
+    // d03From's lazy localCheckpoint on `bands` relies on this plan: the
+    // broadcast build is a blocking job that persists the bands before
+    // the probe side reads them
+    val p = plan(TextQueries.d03MinHashPairs(spark, d))
+    assert(p.contains("BroadcastHashJoin"), p.take(3000))
+    assert(!p.contains("SortMergeJoin"), p.take(3000))
+  }
+
   test("t14: split assignment is leakage-free (cluster-atomic) and adds no exchange over d07") {
     val df = TextQueries.t14SplitAssign(spark, d)
     val p = plan(df)
