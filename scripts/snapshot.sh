@@ -9,7 +9,7 @@
 #   3. quiet bench leg at sf0.1        -> BENCH_DETAIL.json (+ canary gate)
 #   4. quiet bench leg at /tmp/sf1     -> merged into BENCH_sf1.json
 #   5. P03 per-stage probe at sf1+sf10 -> P03STAGES.json
-#   6. funnel state probe sf0.1+sf1    -> FUNNELSTATE.json
+#   6. state probe sf0.1(+sf1, sf10)   -> STATEPROBE.json
 #   7. (opt-in: SNAPSHOT_SF10_GATE=1)  -> CORRECTNESS_sf10.json at HEAD
 #   8. commit every artifact this script generated (r10, VERDICT r9
 #      "What's wrong" #4: uncommitted evidence gets clobbered by the
@@ -68,37 +68,22 @@ echo "== 5. p03 per-stage probe"
 } > P03STAGES.json
 python3 -m json.tool P03STAGES.json > /dev/null  # validate
 
-echo "== 6. funnel state probe"
+echo "== 6. state probe (curation funnel, bandStats, skyline)"
+# one JVM per scale; each replica leg runs where its replica exists
 {
-  printf '{"round":%s,"note":"streaming curation funnel state tables: max_rows_per_key must stay 1 at every scale (anchors keyed by band, collide/stars by doc, counters by source); collide/stars rows grow with COLLIDING docs only","legs":[' "$ROUND"
-  SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.tools.FunnelStateProbe /root/testdata/sf0.1 sf0.1" 2>/dev/null | grep '^{' | tr -d '\n'
-  printf ','
-  SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.tools.FunnelStateProbe /tmp/sf1 sf1-10x" 2>/dev/null | grep '^{' | tr -d '\n'
-  if [ -d /tmp/sf10 ]; then
-    printf ','
-    SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.tools.FunnelStateProbe /tmp/sf10 sf10-100x" 2>/dev/null | grep '^{' | tr -d '\n'
-  fi
-  printf ']}\n'
-} > FUNNELSTATE.json
-python3 -m json.tool FUNNELSTATE.json > /dev/null  # validate
-
-echo "== 6b. bandStats/skyline state-store probe"
-{
-  printf '{"round":%s,"note":"state-store shapes for the bandStats and skyline twins, measured through the statestore data source after driving the real queries: bandStats buckets spread across the time axis from the first trigger, every buffer obeys the two-window bound, the event-time timeout reclaims expired buckets; skyline holds ONE key of exactly the batch x08 frontier","legs":[' "$ROUND"
-  SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.tools.BandStateProbe /root/testdata/sf0.1 sf0.1" 2>/dev/null | grep '^{' | tr -d '\n'
+  printf '{"round":%s,"note":"streaming state shapes per scale. funnel: every state table holds max_rows_per_key 1 (anchors keyed by band, collide/stars by doc, counters by source); collide/stars rows grow with COLLIDING docs only. band: buckets spread across the time axis from the first trigger, every buffer obeys the two-window bound, the event-time timeout reclaims expired buckets. skyline: ONE state key of exactly the batch x08 frontier","legs":[' "$ROUND"
+  SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.tools.StateProbe /root/testdata/sf0.1 sf0.1" 2>/dev/null | grep '^{' | tr -d '\n'
   if [ -d /tmp/sf1 ]; then
     printf ','
-    SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.tools.BandStateProbe /tmp/sf1 sf1-10x" 2>/dev/null | grep '^{' | tr -d '\n'
+    SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.tools.StateProbe /tmp/sf1 sf1-10x" 2>/dev/null | grep '^{' | tr -d '\n'
   fi
-  # 100x leg (r12, VERDICT r11 "What's missing" #4): completes the
-  # funnel-parity treatment — same two-window/constant-buckets contract
   if [ -d /tmp/sf10 ]; then
     printf ','
-    SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.tools.BandStateProbe /tmp/sf10 sf10-100x" 2>/dev/null | grep '^{' | tr -d '\n'
+    SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.tools.StateProbe /tmp/sf10 sf10-100x" 2>/dev/null | grep '^{' | tr -d '\n'
   fi
   printf ']}\n'
-} > BANDSTATE.json
-python3 -m json.tool BANDSTATE.json > /dev/null  # validate
+} > STATEPROBE.json
+python3 -m json.tool STATEPROBE.json > /dev/null  # validate
 
 if [ "${SNAPSHOT_SF10_GATE:-0}" = "1" ] && [ -d /tmp/sf10 ]; then
   # The 100x strict gate takes hours (d09's exact all-pairs oracle alone
@@ -134,7 +119,7 @@ if ! git diff --cached --quiet; then
   exit 1
 fi
 SNAP_FILES=(PLANS.md BENCH_DETAIL.json BENCH_CANARY.json "BENCH_r${ROUND}.stdout" \
-  BENCH_sf1.json P03STAGES.json FUNNELSTATE.json BANDSTATE.json CORRECTNESS_sf10.json)
+  BENCH_sf1.json P03STAGES.json STATEPROBE.json CORRECTNESS_sf10.json)
 # Stage files INDIVIDUALLY (ADVICE r11, medium): a single `git add` with
 # every pathspec is all-or-nothing — one missing artifact (e.g. the opt-in
 # CORRECTNESS_sf10.json on a round that skipped step 7) made it stage

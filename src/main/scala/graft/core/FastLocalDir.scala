@@ -50,22 +50,4 @@ object FastLocalDir {
       } else None
     } catch { case _: Throwable => None }
   }
-
-  /** Applies the pick to a session builder; no-op when no fast dir.
-    *
-    * Also hardens the single-JVM rig against transient whole-JVM stalls
-    * (r12: a 173 s pause — host steal or full-GC thrash — tripped the
-    * 120 s heartbeat timeout mid-run, and HeartbeatReceiver KILLED the
-    * in-process executor, cascading into RpcEndpointNotFound for every
-    * remaining query). In local mode driver and executor share the JVM,
-    * so the heartbeat answers no real liveness question — a pause that
-    * stalls the executor stalls the receiver's clock source too; on a
-    * real cluster these values are operator-tuned per network. */
-  def configure(b: org.apache.spark.sql.SparkSession.Builder)
-      : org.apache.spark.sql.SparkSession.Builder = {
-    val hardened = b
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-    pick().fold(hardened)(d => hardened.config("spark.local.dir", d))
-  }
 }

@@ -224,6 +224,8 @@ object SegmentUploadJob {
       val manifestBytes = SegmentManifest(seg.index, segmentIndexes, doCompress, encMeta,
         cfg.compressionCodec, recordStatsOf(payload)).toJson.getBytes("UTF-8")
       storage.uploadBytes(manifestBytes, manifestKey)
+      // a re-upload (replay, task retry) rewrote the manifest and data key
+      SegmentFetchJob.forget(cfg.storageRoot, segKey)
       // broker-facing custom metadata: total remote size across all three
       // objects + the main path, in the reference's tagged-field wire form
       val indexesExtent = segmentIndexes.map { si =>
@@ -241,6 +243,7 @@ object SegmentUploadJob {
         // Compensating delete: never leave a partial segment behind.
         try { storage.delete(logKey); storage.delete(indexesKey); storage.delete(manifestKey) }
         catch { case _: Throwable => () }
+        SegmentFetchJob.forget(cfg.storageRoot, segKey)
         UploadResult(segKey, payload.length.toLong, -1L, -1, compressed = false,
           encrypted = cfg.encryption, success = false, error = String.valueOf(e.getMessage))
     }
@@ -324,13 +327,13 @@ object SegmentFetchJob {
   }
 
   /** Serving-path manifest cache mirroring the reference's
-    * `MemorySegmentManifestCache` (C6/R10, default 1000 entries): segments
-    * are immutable, so (parsed manifest + RSA-unwrapped data key) are
-    * cacheable forever — re-parsing JSON and, worse, an RSA private-key op
-    * per point read otherwise dominates small-range latency. Keyed by
-    * (root, [[SegmentJobConfig.keyDigest]], segment): the cached spec holds
-    * a data key unwrapped with one config's private key, so a reader with
-    * other key material must miss and unwrap for itself. */
+    * `MemorySegmentManifestCache` (C6/R10, default 1000 entries): caching
+    * (parsed manifest + RSA-unwrapped data key) saves re-parsing JSON and,
+    * worse, an RSA private-key op per point read, which otherwise dominate
+    * small-range latency. Keyed by (root, [[SegmentJobConfig.keyDigest]],
+    * segment): the cached spec holds a data key unwrapped with one
+    * config's private key, so a reader with other key material must miss
+    * and unwrap for itself. */
   private final val ManifestCacheEntries = 1000
   private val manifestCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), (SegmentManifest, TransformSpec)]()
@@ -339,9 +342,17 @@ object SegmentFetchJob {
     * `computeIfAbsent` mapping function violates the ConcurrentHashMap
     * contract (two threads evicting on different bins can deadlock), so the
     * miss path loads OUTSIDE the map operation and publishes with
-    * `putIfAbsent`. Concurrent misses may load the same manifest twice —
-    * manifests are immutable, so both loads produce the same value and
-    * first-publish wins; a benign trade against the deadlock. */
+    * `putIfAbsent`. Concurrent misses may load the same manifest twice;
+    * both loads produce the same value and first-publish wins, a benign
+    * trade against the deadlock.
+    *
+    * A segment key is NOT immutable: a replay or a task retry uploads it
+    * again, with a fresh data key and possibly other bytes. `uploadOne`
+    * therefore [[forget]]s the key's entries after its manifest PUT and
+    * after a compensating delete. That reaches this JVM's cache only: a
+    * reader in another JVM (another executor) keeps its cached spec for a
+    * re-uploaded key until its cache is cleared, and a read racing the
+    * upload here can still publish the old spec. */
   def readSpec(storage: StorageBackend, cfg: SegmentJobConfig,
                segKey: String): (SegmentManifest, TransformSpec) = {
     val key = (cfg.storageRoot, cfg.keyDigest, segKey)
@@ -352,6 +363,11 @@ object SegmentFetchJob {
     val prev = manifestCache.putIfAbsent(key, loaded)
     if (prev != null) prev else loaded
   }
+
+  /** Drops every cached spec of `segKey` under `root`, whatever key
+    * material read it. */
+  private[graft] def forget(root: String, segKey: String): Unit =
+    manifestCache.keySet().removeIf(k => k._1 == root && k._3 == segKey)
 
   /** Fetch chunk `c` of segment `segKey` (one ranged GET) and detransform
     * it, size-checked against the index. */

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.LocalSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-stage decomposition probe for the p03 curation funnel (r8, VERDICT
@@ -21,23 +22,11 @@ import org.apache.spark.sql.functions._
   * expressions p03 runs, not a reimplementation.
   */
 object P03StageProbe {
-  private def timed[A](f: => A): (Double, A) = {
-    val t0 = System.nanoTime()
-    val a = f
-    ((System.nanoTime() - t0) / 1e9, a)
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.length >= 1, "usage: P03StageProbe <sfDir>")
     val dir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.FastLocalDir.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.session(LocalSession.envCpus)
+    import LocalSession.timed
     import TextQueries._
 
     val out = scala.collection.mutable.LinkedHashMap[String, (Double, Long)]()

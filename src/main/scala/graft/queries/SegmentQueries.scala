@@ -193,7 +193,7 @@ object SegmentQueries {
     val store = r03Stores.computeIfAbsent(d, { _ =>
       val p = java.nio.file.Files.createTempDirectory("graft-r03")
       Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        graft.streaming.EventStreams.deleteTreePublic(p)))
+        graft.streaming.EventStreams.deleteTree(p)))
       rows.repartition(col("segment_key"))
         .write.format("graft-segments").option("root", p.toString).mode("append").save()
       p.toString

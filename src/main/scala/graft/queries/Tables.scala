@@ -46,14 +46,10 @@ object Tables {
   private def spread(s: SparkSession, dir: String, name: String): DataFrame = {
     val df = table(s, dir, name)
     val want = s.sparkContext.defaultParallelism
-    if (want > 1 && !noSpread &&
-        inputBytes(s, s"$dir/$name.parquet") <= maxSplitBytes(s))
+    if (want > 1 && inputBytes(s, s"$dir/$name.parquet") <= maxSplitBytes(s))
       df.repartition(want)
     else df
   }
-
-  /** A/B escape hatch for optimization measurements only. */
-  private def noSpread: Boolean = sys.env.get("SPARK_GRAFT_NO_SPREAD").contains("1")
 
   /** Memoized per resolved path for the process lifetime (ADVICE r12):
     * the size decides a plan shape and is probed at every table reference

@@ -92,6 +92,21 @@ object TextQueries {
   private def normToksPar(s: SparkSession, d: String): DataFrame =
     normToksFrom(withScanParallelism(s, documents(s, d)))
 
+  // The t02/t03 per-doc expressions over a `toks` column, written once for
+  // the batch queries and their streaming twin ([[cleanSignals]]).
+  private def stopHitsSql(words: Seq[String], as: String): String =
+    s"CAST(size(filter(toks, x -> array_contains(array(${sqlList(words)}), x))) AS BIGINT) AS $as"
+  private val NTokensSql = "CAST(size(toks) AS BIGINT) AS n_tokens"
+  private val NDistinctSql = "CAST(size(array_distinct(toks)) AS BIGINT) AS n_distinct"
+  private val TtrSql = "CAST(n_distinct AS DOUBLE) / n_tokens AS ttr"
+  private val LangHitsSql = Seq(stopHitsSql(StopEn, "en_hits"), stopHitsSql(StopDe, "de_hits"),
+    stopHitsSql(StopFr, "fr_hits"), stopHitsSql(StopEs, "es_hits"))
+  private val PredLangSql =
+    """CASE WHEN en_hits >= de_hits AND en_hits >= fr_hits AND en_hits >= es_hits THEN 'en'
+      |     WHEN de_hits >= fr_hits AND de_hits >= es_hits THEN 'de'
+      |     WHEN fr_hits >= es_hits THEN 'fr'
+      |     ELSE 'es' END AS pred_lang""".stripMargin
+
   /** t02: quality scoring — length, lexical diversity (type-token ratio),
     * stopword ratio, mean token length. */
   def t02Quality(s: SparkSession, d: String): DataFrame =
@@ -101,14 +116,10 @@ object TextQueries {
     tok
       .selectExpr("doc_id", "n_chars_txt", "toks")
       .selectExpr(
-        "doc_id", "n_chars_txt",
-        "CAST(size(toks) AS BIGINT) AS n_tokens",
-        "CAST(size(array_distinct(toks)) AS BIGINT) AS n_distinct",
-        s"CAST(size(filter(toks, x -> array_contains(array(${sqlList(StopEn)}), x))) AS BIGINT) AS n_stop",
+        "doc_id", "n_chars_txt", NTokensSql, NDistinctSql, stopHitsSql(StopEn, "n_stop"),
         "CAST(aggregate(transform(toks, x -> length(x)), 0, (a, x) -> a + x) AS BIGINT) AS sum_tok_len")
       .selectExpr(
-        "doc_id", "n_chars_txt", "n_tokens", "n_distinct", "n_stop", "sum_tok_len",
-        "CAST(n_distinct AS DOUBLE) / n_tokens AS ttr",
+        "doc_id", "n_chars_txt", "n_tokens", "n_distinct", "n_stop", "sum_tok_len", TtrSql,
         "CAST(n_stop AS DOUBLE) / n_tokens AS stop_ratio",
         "CAST(sum_tok_len AS DOUBLE) / n_tokens AS avg_tok_len")
 
@@ -120,18 +131,8 @@ object TextQueries {
   private[queries] def t03From(tok: DataFrame): DataFrame =
     tok
       .selectExpr("doc_id", "lang", "toks")
-      .selectExpr(
-        "doc_id", "lang",
-        s"CAST(size(filter(toks, x -> array_contains(array(${sqlList(StopEn)}), x))) AS BIGINT) AS en_hits",
-        s"CAST(size(filter(toks, x -> array_contains(array(${sqlList(StopDe)}), x))) AS BIGINT) AS de_hits",
-        s"CAST(size(filter(toks, x -> array_contains(array(${sqlList(StopFr)}), x))) AS BIGINT) AS fr_hits",
-        s"CAST(size(filter(toks, x -> array_contains(array(${sqlList(StopEs)}), x))) AS BIGINT) AS es_hits")
-      .selectExpr(
-        "doc_id", "lang", "en_hits", "de_hits", "fr_hits", "es_hits",
-        """CASE WHEN en_hits >= de_hits AND en_hits >= fr_hits AND en_hits >= es_hits THEN 'en'
-          |     WHEN de_hits >= fr_hits AND de_hits >= es_hits THEN 'de'
-          |     WHEN fr_hits >= es_hits THEN 'fr'
-          |     ELSE 'es' END AS pred_lang""".stripMargin)
+      .selectExpr(Seq("doc_id", "lang") ++ LangHitsSql: _*)
+      .selectExpr("doc_id", "lang", "en_hits", "de_hits", "fr_hits", "es_hits", PredLangSql)
 
   /** t04: document fingerprinting — full md5, normalized md5, token-bag md5
     * (order-independent), and min-shingle md5 (winnowing-style rolling
@@ -308,31 +309,42 @@ object TextQueries {
       .mapPartitions { rows =>
         val md = java.security.MessageDigest.getInstance("MD5")
         rows.map { case (id, norm) =>
-          // each 8-hex slice == one big-endian uint32 of a digest; track
-          // mins as ints (unsigned compare), format once per doc. The
-          // 0xFFFFFFFF start loses to every slice (a tie formats the same).
-          val mins = Array.fill(MinHashK)(-1)
-          foreachShingleDigestPair(md, norm) { (dgA, dgB) =>
-            var k = 0
-            while (k < 4) {
-              def be32(dg: Array[Byte]): Int =
-                ((dg(4 * k) & 0xff) << 24) | ((dg(4 * k + 1) & 0xff) << 16) |
-                  ((dg(4 * k + 2) & 0xff) << 8) | (dg(4 * k + 3) & 0xff)
-              val vA = be32(dgA)
-              if (java.lang.Integer.compareUnsigned(vA, mins(k)) < 0) mins(k) = vA
-              val vB = be32(dgB)
-              if (java.lang.Integer.compareUnsigned(vB, mins(k + 4)) < 0) mins(k + 4) = vB
-              k += 1
-            }
-          }
-          (id, f"${mins(0)}%08x", f"${mins(1)}%08x", f"${mins(2)}%08x", f"${mins(3)}%08x",
-            f"${mins(4)}%08x", f"${mins(5)}%08x", f"${mins(6)}%08x", f"${mins(7)}%08x")
+          val h = minHashHex(md, norm)
+          (id, h(0), h(1), h(2), h(3), h(4), h(5), h(6), h(7))
         }
       }
-      .toDF("doc_id", "h0", "h1", "h2", "h3", "h4", "h5", "h6", "h7")
-      .selectExpr("doc_id", "h0", "h1", "h2", "h3", "h4", "h5", "h6", "h7",
-        "md5(CAST(concat(h0, h1, h2, h3) AS BINARY)) AS band0",
-        "md5(CAST(concat(h4, h5, h6, h7) AS BINARY)) AS band1")
+      .toDF("doc_id" +: MinHashCols: _*)
+      .selectExpr(("doc_id" +: MinHashCols) ++ BandsSql: _*)
+  }
+
+  private val MinHashCols = Seq("h0", "h1", "h2", "h3", "h4", "h5", "h6", "h7")
+
+  /** d02's LSH band keys over the h0..h7 columns. */
+  private val BandsSql = Seq(
+    "md5(CAST(concat(h0, h1, h2, h3) AS BINARY)) AS band0",
+    "md5(CAST(concat(h4, h5, h6, h7) AS BINARY)) AS band1")
+
+  /** d02's per-doc MinHash kernel: the [[MinHashK]] signature slices of
+    * `norm` as 8-hex strings. Each 8-hex slice is one big-endian uint32 of
+    * a digest; mins are tracked as ints (unsigned compare) and formatted
+    * once per doc. The 0xFFFFFFFF start loses to every slice (a tie
+    * formats the same). */
+  private def minHashHex(md: java.security.MessageDigest, norm: String): Array[String] = {
+    val mins = Array.fill(MinHashK)(-1)
+    foreachShingleDigestPair(md, norm) { (dgA, dgB) =>
+      var k = 0
+      while (k < 4) {
+        def be32(dg: Array[Byte]): Int =
+          ((dg(4 * k) & 0xff) << 24) | ((dg(4 * k + 1) & 0xff) << 16) |
+            ((dg(4 * k + 2) & 0xff) << 8) | (dg(4 * k + 3) & 0xff)
+        val vA = be32(dgA)
+        if (java.lang.Integer.compareUnsigned(vA, mins(k)) < 0) mins(k) = vA
+        val vB = be32(dgB)
+        if (java.lang.Integer.compareUnsigned(vB, mins(k + 4)) < 0) mins(k + 4) = vB
+        k += 1
+      }
+    }
+    mins.map(m => f"$m%08x")
   }
 
   /** d03: MinHash+LSH candidate pairs — docs sharing any band key. The
@@ -1881,19 +1893,8 @@ object TextQueries {
   def cleanSignals(docs: DataFrame): DataFrame =
     docs
       .selectExpr("*", s"$toksExpr AS toks")
-      .selectExpr("*",
-        "CAST(size(toks) AS BIGINT) AS n_tokens",
-        "CAST(size(array_distinct(toks)) AS BIGINT) AS n_distinct",
-        s"CAST(size(filter(toks, x -> array_contains(array(${sqlList(StopEn)}), x))) AS BIGINT) AS en_hits",
-        s"CAST(size(filter(toks, x -> array_contains(array(${sqlList(StopDe)}), x))) AS BIGINT) AS de_hits",
-        s"CAST(size(filter(toks, x -> array_contains(array(${sqlList(StopFr)}), x))) AS BIGINT) AS fr_hits",
-        s"CAST(size(filter(toks, x -> array_contains(array(${sqlList(StopEs)}), x))) AS BIGINT) AS es_hits")
-      .selectExpr("*",
-        "CAST(n_distinct AS DOUBLE) / n_tokens AS ttr",
-        """CASE WHEN en_hits >= de_hits AND en_hits >= fr_hits AND en_hits >= es_hits THEN 'en'
-          |     WHEN de_hits >= fr_hits AND de_hits >= es_hits THEN 'de'
-          |     WHEN fr_hits >= es_hits THEN 'fr'
-          |     ELSE 'es' END AS pred_lang""".stripMargin)
+      .selectExpr(Seq("*", NTokensSql, NDistinctSql) ++ LangHitsSql: _*)
+      .selectExpr("*", TtrSql, PredLangSql)
       .drop("toks", "n_distinct", "en_hits", "de_hits", "fr_hits", "es_hits")
 
   /** Batch/stream-shared PER-DOC funnel signals (r8, the p03 streaming
@@ -1901,13 +1902,13 @@ object TextQueries {
     * text, …) emit one narrow row per doc —
     * (doc_id, source, pass_lang, pass_quality, band0, band1) — using the
     * EXACT batch kernels: [[cleanSignals]]' quality/language expressions
-    * with the p01/p03 thresholds, and the d02 MinHash shingle kernel +
-    * band hashing (same salted digest pair, same 8×32-bit mins, same
-    * md5-of-hex-concat band values), so the streaming funnel's dedup
-    * components are built from the SAME LSH buckets the batch d03 pair
-    * join keys on. Stateless and narrow — all state lives downstream. */
+    * with the p01/p03 thresholds, and d02's [[minHashHex]] kernel and
+    * band SQL, so the streaming funnel's dedup components are built from
+    * the SAME LSH buckets the batch d03 pair join keys on. Stateless and
+    * narrow — all state lives downstream. */
   private[graft] def funnelSignals(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
+    val flags = Seq("doc_id", "source", "pass_lang", "pass_quality")
     cleanSignals(docs)
       .selectExpr("doc_id", "source", s"$normExpr AS norm",
         "pred_lang = lang AS pass_lang",
@@ -1915,33 +1916,13 @@ object TextQueries {
       .as[(Long, String, String, Boolean, Boolean)]
       .mapPartitions { rows =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        val mdBand = java.security.MessageDigest.getInstance("MD5")
-        def bandHex(hexConcat: String): String = {
-          mdBand.reset()
-          mdBand.update(hexConcat.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          hex32(mdBand.digest())
-        }
         rows.map { case (id, src, norm, pl, pq) =>
-          val mins = Array.fill(MinHashK)(-1)
-          foreachShingleDigestPair(md, norm) { (dgA, dgB) =>
-            var k = 0
-            while (k < 4) {
-              def be32(dg: Array[Byte]): Int =
-                ((dg(4 * k) & 0xff) << 24) | ((dg(4 * k + 1) & 0xff) << 16) |
-                  ((dg(4 * k + 2) & 0xff) << 8) | (dg(4 * k + 3) & 0xff)
-              val vA = be32(dgA)
-              if (java.lang.Integer.compareUnsigned(vA, mins(k)) < 0) mins(k) = vA
-              val vB = be32(dgB)
-              if (java.lang.Integer.compareUnsigned(vB, mins(k + 4)) < 0) mins(k + 4) = vB
-              k += 1
-            }
-          }
-          val hex = mins.map(m => f"$m%08x")
-          (id, src, pl, pq,
-            bandHex(hex.take(4).mkString), bandHex(hex.drop(4).mkString))
+          val h = minHashHex(md, norm)
+          (id, src, pl, pq, h(0), h(1), h(2), h(3), h(4), h(5), h(6), h(7))
         }
       }
-      .toDF("doc_id", "source", "pass_lang", "pass_quality", "band0", "band1")
+      .toDF(flags ++ MinHashCols: _*)
+      .selectExpr(flags ++ BandsSql: _*)
   }
 
   /** Query terms for b01 — a fixed, broadcast-sized keyword set (real

@@ -86,8 +86,11 @@ object EventStreams {
       }
   }
 
-  /** Streaming exact-dedup — the streaming twin of the batch d01 query:
-    * rows keyed by content fingerprint, first-wins across micro-batches.
+  /** Streaming exact-dedup on the full-text fingerprint: rows keyed by
+    * `md5(text)`, first-wins across micro-batches, so only byte-identical
+    * texts collapse. (Batch d01 groups by the md5 of the sorted distinct
+    * token set instead, which also merges reordered or case-changed texts;
+    * this operator is not its twin.)
     * `dropDuplicatesWithinWatermark` evicts fingerprints once the event-time
     * watermark passes them, which is the contract that keeps dedup state
     * BOUNDED on an unbounded stream (plain dropDuplicates grows state
@@ -857,7 +860,7 @@ object EventStreams {
       .start()
 
   /** One funnel trigger (exposed for the spec's state-table assertions
-    * and the replica-scale [[graft.tools.FunnelStateProbe]]). */
+    * and the replica-scale [[graft.tools.StateProbe]]). */
   private[graft] def curationFunnelBatch(spark: SparkSession, batch: DataFrame,
                                          batchId: Long, stateDir: String): Unit = {
     import spark.implicits._
@@ -965,15 +968,14 @@ object EventStreams {
     }
   }
 
-  private def deleteTree(p: java.nio.file.Path): Unit = {
+  /** Recursive delete of a file or directory tree; also the scratch-dir
+    * cleanup for tools and probes. */
+  private[graft] def deleteTree(p: java.nio.file.Path): Unit = {
     import java.nio.file._
     if (Files.isDirectory(p))
       Files.list(p).iterator().asScala.foreach(deleteTree)
     Files.deleteIfExists(p)
   }
-
-  /** Scratch-dir cleanup for tools/probes (same recursive delete). */
-  private[graft] def deleteTreePublic(p: java.nio.file.Path): Unit = deleteTree(p)
 
   final case class TripletState(albl: Long, posId: Long, posCos: Double,
                                 negId: Long, negCos: Double,

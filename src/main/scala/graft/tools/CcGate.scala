@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.LocalSession
 
 /** Distributed-connected-components gate at replica scale (r8, VERDICT r7
   * task 5): the d07 family (d07 / t14 / p01 / p03) is DuckDB-excluded at
@@ -26,34 +26,21 @@ object CcGate {
     require(args.nonEmpty, "usage: CcGate <sfDir> [query...]")
     val dir = args.head
     val names = if (args.length > 1) args.tail.toSeq else DefaultQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.FastLocalDir.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.session(LocalSession.envCpus)
     val ccKey = graft.operators.ConnectedComponents.MaxDriverEdgesKey
-
-    def timedMaterialize(df: => DataFrame): (Double, DataFrame) = {
-      val t0 = System.nanoTime()
-      // by-name: the d07 family eagerly checkpoints its pair table inside
-      // the query builder, so construction must be inside the clock
-      val out = df.localCheckpoint(true)
-      ((System.nanoTime() - t0) / 1e9, out)
-    }
 
     val results = names.map { name =>
       val fn = graft.SparkEntry.queries.getOrElse(name,
         throw new IllegalArgumentException(s"unknown query $name"))
       // driver leg PINNED high (not merely unset): at the 100× replica the
       // edge count crosses the self-actuating threshold, and an unset conf
-      // would silently compare distributed-vs-distributed
+      // would silently compare distributed-vs-distributed. The query is
+      // built inside the clock: the d07 family eagerly checkpoints its pair
+      // table while building.
       spark.conf.set(ccKey, Long.MaxValue.toString)
-      val (tDrv, a) = timedMaterialize(fn(spark, dir))
+      val (tDrv, a) = LocalSession.timed(fn(spark, dir).localCheckpoint(true))
       spark.conf.set(ccKey, "0") // force the distributed operator
-      val (tDist, b) = timedMaterialize(fn(spark, dir))
+      val (tDist, b) = LocalSession.timed(fn(spark, dir).localCheckpoint(true))
       spark.conf.unset(ccKey)
       val na = a.count(); val nb = b.count()
       // equal counts + multiset a⊆b ⟹ multiset equality

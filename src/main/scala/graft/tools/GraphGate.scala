@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.core.LocalSession
 import scala.collection.mutable
 
 /** Graph-family gate at replica scale (r9): g01–g04's DuckDB oracles
@@ -26,19 +25,9 @@ object GraphGate {
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: GraphGate <sfDir>")
     val dir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.FastLocalDir.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.session(LocalSession.envCpus)
+    import LocalSession.timed
     import graft.queries.TextQueries
-
-    def timed[A](f: => A): (Double, A) = {
-      val t0 = System.nanoTime(); val a = f; ((System.nanoTime() - t0) / 1e9, a)
-    }
 
     // one signature scan feeds both edge derivations (collected once;
     // 3 scalars per doc — 500k rows at the 100× replica)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.LocalSession
 
 /** Writes PLANS.md: a per-query physical-plan audit (shuffle count, join
   * strategies, parquet pushdown, codegen) over the whole `SparkEntry.queries`
@@ -23,13 +23,8 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = graft.core.FastLocalDir.configure(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // local[4], like the specs: the plan locks are calibrated there too
+    val spark = LocalSession.session(4)
 
     def count(p: String, needle: String): Int = p.sliding(needle.length).count(_ == needle)
 

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.LocalSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -69,14 +70,7 @@ object ScaleGate {
   def main(args: Array[String]): Unit = {
     require(args.length >= 1, "usage: ScaleGate <sfDir>")
     val dir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.FastLocalDir.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.session(LocalSession.envCpus)
 
     val winUs = 3600L * 1000000
     // fine bins: ~2048 per window → residual candidates ≈ rpw/2048 per
@@ -184,7 +178,7 @@ object ScaleGate {
     // adaptive-crossover plan (i02) and the forced decomposition (i04) —
     // at high density they take different physical paths; each must agree
     // with the independent recomputation row-for-row =====
-    def countLeg(df: org.apache.spark.sql.DataFrame): (Long, Long, Long, Double) = {
+    def countLeg(df: DataFrame): (Long, Long, Long, Double) = {
       val t = System.nanoTime()
       val a = df.select(col("event_id").as("err_id"), col("n_window").as("nq"))
         .join(recomputedP.select(col("err_id"), col("n_window").as("n2")), Seq("err_id"), "full")

@@ -1,36 +1,24 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.LocalSession
 
 /** Timed probe of named SparkEntry queries against an arbitrary sf dir:
   * `runMain graft.tools.ScaleProbe <dir> <query>...` — min of 2 passes
   * after a warmup, one JSON line. Used with [[ScaleUp]] to measure runtime
-  * growth of the heavy-tail queries at 10× the bench scale factor.
+  * growth of the heavy-tail queries at 10× the bench scale factor. Each
+  * pass is [[graft.Bench]]'s timed pass; a failed pass fails the probe.
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ScaleProbe <sfDir> <query>...")
     val dir = args.head
     val names = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.FastLocalDir.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.session(LocalSession.envCpus)
     val results = names.map { name =>
       val fn = graft.SparkEntry.queries.getOrElse(name,
         throw new IllegalArgumentException(s"unknown query $name"))
-      def pass(): Double = {
-        // same discipline as Bench (r13): every timed pass computes from
-        // the parquet inputs — session caches dropped first
-        graft.queries.TextQueries.clearSessionCaches(spark)
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      def pass(): Double = graft.Bench.timedPass(spark, dir, name, fn)
+        .getOrElse(throw new IllegalStateException(s"$name failed; see stderr"))
       // SPARK_GRAFT_PROBE_PASSES=1 → one timed pass, no per-query warmup:
       // the full-coverage 100× BENCH leg (every query measured once) would
       // otherwise triple its multi-hour wall time for precision the

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.LocalSession
 import org.apache.spark.sql.functions._
 
 /** Scale-probe data generator: `runMain graft.tools.ScaleUp <src> <dst> <f>`
@@ -31,6 +31,11 @@ import org.apache.spark.sql.functions._
   * intrinsic pair growth from the operator's scaling.
   */
 object ScaleUp {
+  /** Part files per replica table. The layout decides `Tables.spread` and
+    * the scan task counts at sf1/sf10, so it is fixed here rather than
+    * following the session's thread count. */
+  private val ReplicaFiles = 16
+
   def main(args: Array[String]): Unit = {
     require(args.length == 3 || args.length == 4,
       "usage: ScaleUp <srcDir> <dstDir> <factor> [densify|stretch]")
@@ -38,13 +43,7 @@ object ScaleUp {
     val mode = if (args.length == 4) args(3) else "densify"
     require(mode == "densify" || mode == "stretch", s"unknown mode $mode")
     val f = fs.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.core.FastLocalDir.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.session(LocalSession.envCpus)
     // events.ts is parquet TIMESTAMP(NANOS); read it as raw long (the
     // copy is written back as int64, which Tables.events handles the same)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -53,7 +52,7 @@ object ScaleUp {
     def copies(name: String)(mk: (org.apache.spark.sql.DataFrame, Int) => org.apache.spark.sql.DataFrame): Unit = {
       val base = spark.read.parquet(s"$src/$name.parquet")
       val out = (0 until f).map(k => mk(base, k)).reduce(_ unionAll _)
-      out.repartition(Integer.parseInt(cpus))
+      out.repartition(ReplicaFiles)
         .write.mode("overwrite").parquet(s"$dst/$name.parquet")
       println(s"[scaleup] $name: ${base.count()} -> ${spark.read.parquet(s"$dst/$name.parquet").count()}")
     }

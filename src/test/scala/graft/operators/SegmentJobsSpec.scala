@@ -158,6 +158,40 @@ class SegmentJobsSpec extends SparkSpec {
     assert(java.util.Arrays.equals(SegmentFetchJob.fetchRange(cfgA, segKey, whole), payload))
   }
 
+  /** Uploads `payload` to `segKey` and reads it whole through the cached
+    * serving path. */
+  private def uploadAndRead(storage: FileSystemStorage, cfg: SegmentJobConfig,
+                            segKey: String, payload: Array[Byte]): Array[Byte] = {
+    val ring = if (cfg.encryption) cfg.ring else null
+    assert(SegmentUploadJob.uploadOne(storage, ring, None, cfg, segKey, payload).success)
+    SegmentFetchJob.fetchRange(cfg, segKey, BytesRange(0, payload.length - 1L))
+  }
+
+  test("a re-uploaded segment key serves the new upload, not a cached manifest and data key") {
+    val store = tmpDir("graft-reupload")
+    val storage = FileSystemStorage(store)
+    val cfg = SegmentJobConfig.withGeneratedKeys(store).copy(chunkSize = 4096)
+    val rnd = new java.util.Random(11)
+    val first, second = new Array[Byte](20000)
+    rnd.nextBytes(first); rnd.nextBytes(second)
+    assert(java.util.Arrays.equals(uploadAndRead(storage, cfg, "seg", first), first))
+    // other bytes: a fresh data key and a fresh chunk table
+    assert(java.util.Arrays.equals(uploadAndRead(storage, cfg, "seg", second), second))
+    // the same bytes again (an idempotent replay) still get a fresh data key
+    assert(java.util.Arrays.equals(uploadAndRead(storage, cfg, "seg", second), second))
+  }
+
+  test("an unencrypted re-upload is not clamped to the cached segment size") {
+    val store = tmpDir("graft-reupload-plain")
+    val storage = FileSystemStorage(store)
+    val cfg = SegmentJobConfig.withGeneratedKeys(store).copy(chunkSize = 4096, encryption = false)
+    val rnd = new java.util.Random(12)
+    val short = new Array[Byte](10000); val long = new Array[Byte](30000)
+    rnd.nextBytes(short); rnd.nextBytes(long)
+    assert(java.util.Arrays.equals(uploadAndRead(storage, cfg, "seg", short), short))
+    assert(java.util.Arrays.equals(uploadAndRead(storage, cfg, "seg", long), long))
+  }
+
   test("zstd-codec segments upload and serve ranged fetches byte-identically") {
     val in = tmpDir("graft-zstd-in")
     val store = tmpDir("graft-zstd-store")

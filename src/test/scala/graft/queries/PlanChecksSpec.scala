@@ -9,18 +9,6 @@ import graft.testkit.SparkSpec
 class PlanChecksSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
 
-  // Pin the environment the shuffle-count locks are calibrated against
-  // (ADVICE r12): the exact-equality locks below (s02 == 2, d05 == 2, …)
-  // count the adaptive scan spread's round-robin exchange, so running the
-  // suite with the A/B escape hatch set (or against inputs above one split
-  // size) would flip them all with a misleading message. Fail fast with
-  // the real reason instead.
-  test("plan locks precondition: scan spread active (SPARK_GRAFT_NO_SPREAD unset)") {
-    assert(!sys.env.get("SPARK_GRAFT_NO_SPREAD").contains("1"),
-      "PlanChecksSpec's shuffle-count locks are calibrated WITH the adaptive " +
-        "scan spread; unset SPARK_GRAFT_NO_SPREAD to run them")
-  }
-
   test("scan-spread size probe: a failed probe is not memoized") {
     // a path that does not exist yet answers "unknown" (never spread); once
     // it exists the next probe must see its real size, not the sentinel
